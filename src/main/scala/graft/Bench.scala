@@ -1,18 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Tune.Cpus
+    val spark = Tune.session()
     plans.TopKRewriteInstall.ensureInstalled(spark) // window top-k -> heap
     // Warm the JVM (parquet reader, codegen, shuffle paths) on the smallest
     // scale factor so the first timed query doesn't absorb ~5s of JIT cost.
@@ -36,7 +27,7 @@ object Bench {
     // timed OUTSIDE the per-query clocks and excluded from the total.
     def heatProbe(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 1L << 28, 1L, cpus.toInt)
+      spark.range(0L, 1L << 28, 1L, cpus)
         .selectExpr("sum((id * 2654435761) % 1000003)").collect()
       (System.nanoTime() - t0) / 1e9
     }
@@ -53,7 +44,7 @@ object Bench {
     // clocks, excluded from the total, like the scalar probe.
     def heatProbePar(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 1L << 22, 1L, cpus.toInt)
+      spark.range(0L, 1L << 22, 1L, cpus)
         .selectExpr("(id * 2654435761) % 1048576 AS k", "id % 1000003 AS v")
         .groupBy("k").agg(org.apache.spark.sql.functions.sum("v").as("sv"))
         .selectExpr("sum(hash(k, sv))").collect()
@@ -180,7 +171,7 @@ object Bench {
       def once(): Double = {
         val t0 = System.nanoTime()
         // term bounded < 1e6 so the 268M-term ANSI sum can't overflow
-        spark.range(0L, 1L << 28, 1L, cpus.toInt)
+        spark.range(0L, 1L << 28, 1L, cpus)
           .selectExpr("sum((id * 2654435761) % 1000003)").collect()
         (System.nanoTime() - t0) / 1e9
       }
@@ -201,7 +192,7 @@ object Bench {
     val calibPar = {
       def once(): Double = {
         val t0 = System.nanoTime()
-        spark.range(0L, 1L << 25, 1L, cpus.toInt)
+        spark.range(0L, 1L << 25, 1L, cpus)
           .selectExpr("(id * 2654435761) % 1048576 AS k", "id % 1000003 AS v")
           .groupBy("k").agg(org.apache.spark.sql.functions.sum("v").as("sv"))
           .selectExpr("sum(hash(k, sv))").collect()

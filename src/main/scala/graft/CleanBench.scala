@@ -2,7 +2,6 @@ package graft
 
 import graft.insurance.Cleaning
 import graft.sources.Ingest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Head-to-head with the reference's cleaning stage (scripts 02+03): same
@@ -17,15 +16,7 @@ object CleanBench {
     // which write next to their inputs)
     val staged = args.headOption.getOrElse("/root/reference/data/staged")
     val out = if (args.length > 1) args(1) else "/tmp/graft_clean"
-    val spark = Tune(SparkSession.builder())
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tune.session()
     val t0 = System.nanoTime()
     val contracts = Cleaning.cleanContracts(
       spark.read.parquet(s"$staged/contracts.parquet")

@@ -31,7 +31,7 @@ object CorpusPipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse("/tmp/graft_corpus")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = Tune.Cpus
     // Concurrency derived from heap-per-core (round 17): the derived
     // reducer count below clears the REDUCE-side working-set cliff, but
     // the labels build's MAP-side partial hash aggregates are a separate
@@ -45,16 +45,7 @@ object CorpusPipeline {
     // sizing; here it is derived so the default JVM never sits on the
     // edge. Env-independent: derived from -Xmx and the core count.
     val taskCpus = deriveTaskCpus(Runtime.getRuntime.maxMemory, cpus)
-    val spark = Tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.task.cpus", taskCpus)
-      .config("spark.sql.shuffle.partitions", cpus) // refined from data below
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tune.session("spark.task.cpus" -> taskCpus.toString)
     // Reducer count DERIVED from corpus size, decoupled from cores
     // (round 17 — the r16 fix landed env-only): the 8g/32-core labels
     // build OOMs at reducers=cores because the knee is per-TASK

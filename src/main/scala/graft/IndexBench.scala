@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Serve-path bench for the persistent indexes: build the ANN and BM25
@@ -24,15 +23,7 @@ object IndexBench {
       .map(_.split(",").map(_.trim).toSet)
     def section(name: String)(body: => Unit): Unit =
       if (sections.forall(_.contains(name))) body
-    val spark = Tune(SparkSession.builder())
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tune.session()
     import ops.{AnnIndex, TextIndex}
 
     val tmp = graft.TempDirs.create("graft-ixbench")
@@ -809,7 +800,6 @@ object IndexBench {
     // the same frame written in natural (l_orderkey) arrival order.
     // Reported: write cost, stats-touchable file counts for the 2-D box,
     // and the box-scan wall itself.
-    import graft.sources.Layout
     val li = Tables.lineitem(spark, sfDir).select(
       (col("l_orderkey") % 256).as("zx"), (col("l_partkey") % 256).as("zy"),
       col("l_quantity")).localCheckpoint()
@@ -818,7 +808,7 @@ object IndexBench {
     li.repartition(nParts).write.mode("overwrite").parquet(s"$tmp/lay_plain")
     println(f"IXBENCH lay_write_plain              ${(System.nanoTime() - t0) / 1e9}%.3f s")
     t0 = System.nanoTime()
-    Layout.writeZOrdered(li, col("zx"), col("zy"), 8, nParts, s"$tmp/lay_z")
+    sources.ZOrder.writeZOrdered(li, col("zx"), col("zy"), 8, nParts, s"$tmp/lay_z")
     println(f"IXBENCH lay_write_zorder             ${(System.nanoTime() - t0) / 1e9}%.3f s")
     // files a [32..47]x[64..79] box must touch, by per-file min/max
     def touched(dir: String): (Int, Int) = {

@@ -2,7 +2,6 @@ package graft
 
 import graft.insurance._
 import graft.sources.Ingest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end insurance warehouse build — the reference's scripts 01-08 as
@@ -31,15 +30,7 @@ object InsurancePipeline {
   def main(args: Array[String]): Unit = {
     val rawDir = args.headOption.getOrElse("/root/reference/data")
     val outDir = if (args.length > 1) args(1) else "/tmp/insurance_dw"
-    val spark = Tune(SparkSession.builder())
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tune.session()
 
     // Tables THIS run wrote. The summary/JDBC stages key off this set, not
     // File.exists() probes — a reused outDir can hold stale parquet from a

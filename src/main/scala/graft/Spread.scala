@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project, SubqueryAlias}
 
 /** Input-parallelism repair (round 19, guide §2.5 "input skew"): a
@@ -25,7 +26,12 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPla
   */
 object Spread {
 
+  /** Leaf + project/filter, with no subquery anywhere: executing a plan
+    * runs its subqueries first, so `df.rdd` on a filter by a scalar
+    * subquery would launch the subquery's jobs.
+    */
   private def narrowLeafOnly(p: LogicalPlan): Boolean = p match {
+    case _ if p.expressions.exists(SubqueryExpression.hasSubquery) => false
     case _: LeafNode => true
     case pr: Project => narrowLeafOnly(pr.child)
     case f: Filter => narrowLeafOnly(f.child)

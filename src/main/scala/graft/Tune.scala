@@ -26,8 +26,32 @@ object Tune {
   val ListParThreshold: String =
     sys.env.getOrElse("SPARK_GRAFT_LIST_PAR_THRESHOLD", "4200")
 
+  /** Local cores a session runs on (`SPARK_GRAFT_CPUS`, default 4). */
+  val Cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
   /** Apply the shared engine confs to a session builder. */
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.sources.parallelPartitionDiscovery.threshold",
       ListParThreshold)
+
+  /** The one session factory of every graft main and the test harness:
+    * `local[Cpus]` with one shuffle partition per core, plus the hard
+    * rules every session needs — UTC session time zone, `nanosAsLong`
+    * (a no-op on MICROS-typed `events.ts`, required if it regenerates
+    * as NANOS), AQE on, ANSI at the Spark 4 default — and [[apply]]'s
+    * engine confs. `conf` entries are applied last, so a caller can add
+    * or override any of them.
+    */
+  def session(conf: (String, String)*): SparkSession = {
+    val base = apply(SparkSession.builder())
+      .master(s"local[$Cpus]")
+      .config("spark.sql.shuffle.partitions", Cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+    val s = conf.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
-import graft.sources.Layout
+import graft.sources.ZOrder
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -378,7 +378,7 @@ object Advanced20 {
   private val ZBits = 8
 
   /** q197: Z-ORDER CLUSTERING KEY — the Morton interleave
-    * ([[graft.sources.Layout.zkey]]) that [[graft.sources.Layout.writeZOrdered]]
+    * ([[graft.sources.ZOrder.zkey]]) that [[graft.sources.ZOrder.writeZOrdered]]
     * lays files out by, verified per z-quadrant: bucketing the curve
     * into 16 blocks of 4096 keys must confine BOTH bucketed dimensions
     * of every block to one 64-wide quadrant (the property that makes
@@ -389,7 +389,7 @@ object Advanced20 {
   val zorderKey = Q(
     "q197_zorder_key",
     s"""WITH z AS (
-       |  SELECT ${Layout.zkeySql("l_orderkey % 256", "l_partkey % 256", ZBits)} AS zkey,
+       |  SELECT ${ZOrder.zkeySql("l_orderkey % 256", "l_partkey % 256", ZBits)} AS zkey,
        |    l_orderkey % 256 AS x, l_partkey % 256 AS y
        |  FROM lineitem)
        |SELECT CAST(zkey // 4096 AS BIGINT) AS zbucket,
@@ -398,7 +398,7 @@ object Advanced20 {
        |  CAST(MIN(y) AS BIGINT) AS min_y, CAST(MAX(y) AS BIGINT) AS max_y
        |FROM z GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
     Tables.lineitem(s, d)
-      .select(Layout.zkey(col("l_orderkey") % 256, col("l_partkey") % 256, ZBits)
+      .select(ZOrder.zkey(col("l_orderkey") % 256, col("l_partkey") % 256, ZBits)
           .as("zkey"),
         (col("l_orderkey") % 256).as("x"), (col("l_partkey") % 256).as("y"))
       .groupBy(expr("zkey div 4096").as("zbucket"))

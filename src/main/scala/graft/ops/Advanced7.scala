@@ -76,10 +76,11 @@ object Advanced7 {
       .orderBy(col("doc_id"), col("pos"))
   }
 
-  /** Z-order cell profile — oracle-checks `ZOrderWriter`'s Morton
-    * arithmetic cross-engine: both engines compute the identical bit
-    * spread (the write-side clustering is only as correct as this
-    * value), then profile row counts and revenue per coarse z cell.
+  /** Z-order cell profile — oracle-checks `sources.ZOrder`'s Morton
+    * arithmetic cross-engine: the oracle's magic-mask bit spread must
+    * equal [[graft.sources.ZOrder.zkey]]'s per-bit interleave over 16
+    * bits (the write-side clustering is only as correct as this value),
+    * then profile row counts and revenue per coarse z cell.
     * Everything is codegen'd bit ops; one scan, one partial-agg'd
     * groupBy.
     */
@@ -105,7 +106,7 @@ object Advanced7 {
     val xb = pmod(col("o_custkey"), lit(256))
     val yb = least(floor(col("o_totalprice") / 2500).cast("long"), lit(255L))
     Tables.orders(s, d)
-      .select(shiftright(graft.sources.ZOrderWriter.zValue(xb, yb), 8).as("z_cell"),
+      .select(shiftright(graft.sources.ZOrder.zkey(xb, yb, 16), 8).as("z_cell"),
         col("o_totalprice"))
       .groupBy(col("z_cell"))
       .agg(count(lit(1)).as("n"), graft.Det.dsum(col("o_totalprice")).as("revenue"))

@@ -82,7 +82,7 @@ object LmModel {
     * a batch's pruned model read stays byte-bounded. The HIGH floor is
     * measurement-backed, not caution: over-bucketing the largest
     * locally-buildable model (931k bigrams at 256 buckets,
-    * TextLmScaleBench round 11) cost 2.3x on build AND 2.2x on serve —
+    * BENCH.md round 11) cost 2.3x on build AND 2.2x on serve —
     * a scoring batch's grams hash into nearly every bucket, so below
     * the bytes-per-bucket knee extra directories are pure overhead on
     * both sides.

@@ -33,8 +33,7 @@ object MetaScalar {
       val p = new org.apache.hadoop.fs.Path(dir)
       val fs = p.getFileSystem(conf)
       if (!fs.exists(p)) return None
-      val files = fs.listStatus(p)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      val files = dataFiles(fs.listStatus(p))
       if (files.length != 1) return None
       val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile
@@ -72,19 +71,28 @@ object MetaScalar {
       val fs = p.getFileSystem(conf)
       if (!fs.exists(p)) return None
       val entries = fs.listStatus(p)
-      if (entries.exists(e => e.isDirectory && !e.getPath.getName.startsWith("_")))
-        return None
+      if (entries.exists(e => e.isDirectory && !hidden(e))) return None
       var total = 0L
-      entries.filter(e => e.isFile && e.getPath.getName.endsWith(".parquet"))
-        .foreach { f =>
-          val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
-          try rdr.getFooter.getBlocks.asScala.foreach(total += _.getRowCount)
-          finally rdr.close()
-        }
+      dataFiles(entries).foreach { f =>
+        val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
+        try rdr.getFooter.getBlocks.asScala.foreach(total += _.getRowCount)
+        finally rdr.close()
+      }
       Some(total)
     } catch { case scala.util.control.NonFatal(_) => None }
   }
+
+  /** Spark's hidden-file rule: a `.`- or `_`-prefixed name is not data
+    * (`.crc` siblings, `_SUCCESS`, a committer's in-flight files).
+    */
+  private def hidden(f: org.apache.hadoop.fs.FileStatus): Boolean = {
+    val n = f.getPath.getName
+    n.startsWith(".") || n.startsWith("_")
+  }
+
+  private def dataFiles(entries: Array[org.apache.hadoop.fs.FileStatus]) =
+    entries.filter(f => f.isFile && !hidden(f) && f.getPath.getName.endsWith(".parquet"))
 
   private implicit class JavaListOps[A](l: java.util.List[A]) {
     def asScala: Seq[A] = {

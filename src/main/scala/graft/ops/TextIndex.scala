@@ -68,7 +68,7 @@ object TextIndex {
 
   /** Target documents per term-hash bucket — [[DedupIndex.DocsPerBucket]]'s
     * bytes-per-bucket argument, CALIBRATED BY MEASUREMENT at the 5M-doc
-    * diversity rehearsal (TextLmScaleBench, BENCH.md round 11): unlike
+    * diversity rehearsal (BENCH.md round 11): unlike
     * the dedup bands, postings reads carry a `term IN` predicate that
     * dictionary-filters within a bucket, so 64 buckets at 5M docs
     * (~3M posting rows ≈ tens of MB per directory) served EQUAL to a
@@ -133,8 +133,8 @@ object TextIndex {
     // are batch-sized by the serve contract, so the checkpoint is
     // bounded; the corpus-sized build (mode = overwrite) keeps the
     // recompute — a corpus × ~100-token table must not land in block
-    // storage. Released before return (no lazy consumer survives the
-    // writes).
+    // storage. Released on every exit, a failed write included (no lazy
+    // consumer survives the writes).
     val t0 = toks(graft.Spread.lazyAuto(docs))
     val t = if (mode == "append") t0.localCheckpoint(true) else t0
     def stamp(df: DataFrame): DataFrame =
@@ -150,15 +150,16 @@ object TextIndex {
     // anti-join target), so a crash mid-batch leaves at worst orphan
     // postings/positions for doc_ids absent from doclens — invisible to
     // BM25 only if the replay re-writes them, which the marker ensures.
-    stamp(t.groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf")))
-      .withColumn("bkt", bktCol(nB)).transform(Layout.writeByBucket(_, col("bkt")))
-      .write.partitionBy("bkt").mode(mode).parquet(s"$dir/postings")
-    stamp(t.select(col("term"), col("doc_id"), col("pos")))
-      .withColumn("bkt", bktCol(nB)).transform(Layout.writeByBucket(_, col("bkt")))
-      .write.partitionBy("bkt").mode(mode).parquet(s"$dir/positions")
-    stamp(t.groupBy(col("doc_id")).agg(count(lit(1)).as("dl")))
-      .write.mode(mode).parquet(s"$dir/doclens")
-    if (mode == "append") graft.Reliable.release(t)
+    try {
+      stamp(t.groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf")))
+        .withColumn("bkt", bktCol(nB)).transform(Layout.writeByBucket(_, col("bkt")))
+        .write.partitionBy("bkt").mode(mode).parquet(s"$dir/postings")
+      stamp(t.select(col("term"), col("doc_id"), col("pos")))
+        .withColumn("bkt", bktCol(nB)).transform(Layout.writeByBucket(_, col("bkt")))
+        .write.partitionBy("bkt").mode(mode).parquet(s"$dir/positions")
+      stamp(t.groupBy(col("doc_id")).agg(count(lit(1)).as("dl")))
+        .write.mode(mode).parquet(s"$dir/doclens")
+    } finally if (mode == "append") graft.Reliable.release(t)
   }
 
   /** Epoch layouts stamp every row with its batch epoch
@@ -359,9 +360,11 @@ object TextIndex {
     // without the checkpoint each one lazily re-runs the anti-join and
     // whatever lineage `docs` carries (for Release upgrades, a semi-join
     // over the full new corpus — re-scanned 3x, the term that kept the
-    // upgrade rebuild-priced). Same recipe as [[DedupIndex.append]].
+    // upgrade rebuild-priced). Same recipe as [[DedupIndex.append]];
+    // released on every exit, like writeBatch's token checkpoint.
     val fresh = docs.join(done, Seq("doc_id"), "left_anti").localCheckpoint(true)
-    writeBatch(fresh, dir, "append", ep, readBuckets(s, dir))
+    try writeBatch(fresh, dir, "append", ep, readBuckets(s, dir))
+    finally graft.Reliable.release(fresh)
     refreshStats(s, dir)
     load(s, dir)
   }

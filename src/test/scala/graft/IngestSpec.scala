@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{Ingest, ShardWriter, ZOrderWriter}
+import graft.sources.{Ingest, ShardWriter, ZOrder}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -157,9 +157,9 @@ class IngestSpec extends SparkSuite {
   test("z-order write narrows per-file ranges on BOTH dims; 1-dim clustering doesn't") {
     // interleave sanity: z(3,0) spreads x bits to even positions = 0b101;
     // z(0,3) = 0b1010; z(0xFFFF,0xFFFF) fills 32 bits
-    val z = ZOrderWriter.zValue(lit(3), lit(0))
-    val z2 = ZOrderWriter.zValue(lit(0), lit(3))
-    val z3 = ZOrderWriter.zValue(lit(0xFFFF), lit(0xFFFF))
+    val z = ZOrder.zkey(lit(3), lit(0), 16)
+    val z2 = ZOrder.zkey(lit(0), lit(3), 16)
+    val z3 = ZOrder.zkey(lit(0xFFFF), lit(0xFFFF), 16)
     val Seq(a, b, c) = orders.limit(1).select(z, z2, z3).collect().head.toSeq.map(_.asInstanceOf[Long])
     assert(a == 5L && b == 10L && c == 0xFFFFFFFFL)
 
@@ -177,7 +177,7 @@ class IngestSpec extends SparkSuite {
       }
       ranges.sum / ranges.length
     }
-    ZOrderWriter.writeZOrdered(orders, s"$dir/zorder", 16, xb, yb)
+    ZOrder.writeZOrdered(orders, xb, yb, 16, 16, s"$dir/zorder")
     // both dimensions narrow: files cover a fraction of each dim's range
     assert(avgRange(s"$dir/zorder", "xb") < 0.5, s"xb ${avgRange(s"$dir/zorder", "xb")}")
     assert(avgRange(s"$dir/zorder", "yb") < 0.5, s"yb ${avgRange(s"$dir/zorder", "yb")}")

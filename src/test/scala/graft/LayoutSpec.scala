@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.Layout
+import graft.sources.ZOrder
 import org.apache.spark.sql.functions._
 
 /** Z-order layout contracts: the Morton interleave against a driver
@@ -18,11 +18,20 @@ class LayoutSpec extends SparkSuite {
   test("zkey matches the driver-side Morton reference and is bijective on the grid") {
     val pts = for (x <- 0L until 32L; y <- 0L until 32L) yield (x, y)
     val got = pts.toDF("x", "y")
-      .select($"x", $"y", Layout.zkey($"x", $"y", 5).as("z"))
+      .select($"x", $"y", ZOrder.zkey($"x", $"y", 5).as("z"))
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
     pts.foreach { case (x, y) => assert(got((x, y)) == mortonRef(x, y, 5), s"($x,$y)") }
     assert(got.values.toSet.size == pts.size, "interleave must be injective on the grid")
     assert(got.values.min == 0L && got.values.max == 1023L, "and fill [0, 4^bits)")
+  }
+
+  test("writeZOrdered rejects a non-positive file count") {
+    val df = spark.range(10).toDF("x")
+    Seq(0, -1).foreach { n =>
+      intercept[IllegalArgumentException] {
+        ZOrder.writeZOrdered(df, $"x", $"x", 4, n, "/tmp/graft_test_zorder_bad")
+      }
+    }
   }
 
   test("every 4096-key z-block confines both dimensions to a 64-wide quadrant") {
@@ -39,7 +48,7 @@ class LayoutSpec extends SparkSuite {
       .select($"l_orderkey", $"l_partkey", $"l_quantity")
     val zdir = "/tmp/graft_test_zorder"
     val xdir = "/tmp/graft_test_xsort"
-    Layout.writeZOrdered(li, $"l_orderkey" % 256, $"l_partkey" % 256, 8, 16, zdir)
+    ZOrder.writeZOrdered(li, $"l_orderkey" % 256, $"l_partkey" % 256, 8, 16, zdir)
     li.repartitionByRange(16, ($"l_orderkey" % 256).asc)
       .sortWithinPartitions(($"l_orderkey" % 256).asc)
       .write.mode("overwrite").parquet(xdir)

@@ -65,6 +65,21 @@ class MetaScalarSpec extends SparkSuite {
     assert(MetaScalar.rowCount(spark, s"$dir/part").isEmpty)
   }
 
+  test("rowCount skips hidden files, as Spark's reader does") {
+    val dir = TempDirs.create("graft_metascalar_hidden") + "/ledger"
+    Seq(1L, 2L, 3L).toDF("doc_id").repartition(1)
+      .write.mode("overwrite").parquet(dir)
+    // a hidden copy of the data file (an in-flight or aborted write's
+    // leftover): Spark's listing ignores `.`/`_`-prefixed names
+    val data = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-")).head
+    java.nio.file.Files.copy(data.toPath,
+      new java.io.File(dir, s".${data.getName}").toPath)
+    java.nio.file.Files.copy(data.toPath,
+      new java.io.File(dir, s"_${data.getName}").toPath)
+    assert(spark.read.parquet(dir).count() === 3L)
+    assert(MetaScalar.rowCount(spark, dir) === Some(3L))
+  }
+
   test("Tombstones.readEpoch via the fast path matches bumpEpoch sequence") {
     val dir = TempDirs.create("graft_metascalar3") + "/ix"
     val docs = Tables.documents(spark, sf0001).limit(50).localCheckpoint()

@@ -4,22 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared test harness: one SparkSession per JVM (suites reuse it via
-  * getOrCreate), configured identically to Verify/Bench.
+  * getOrCreate), built by the same factory as Verify/Bench.
   */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = graft.Tune(SparkSession.builder())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession =
+    Tune.session("spark.sql.warehouse.dir" -> "/tmp/graft_test_warehouse")
 
   val sf0001 = "/root/testdata/sf0.001"
 }

@@ -55,4 +55,36 @@ class SpreadSpec extends SparkSuite {
     assert(m.rdd.getNumPartitions >= spark.sparkContext.defaultParallelism / 2)
     assert(m.agg(sum(col("x"))).collect()(0).getLong(0) === 1275L)
   }
+
+  test("lazyAuto launches no job on a filter by a scalar subquery") {
+    val t = (1 to 100).toDF("x").coalesce(1).localCheckpoint(true)
+    t.createOrReplaceTempView("spread_subq")
+    val df = spark.sql(
+      "SELECT x FROM spread_subq WHERE x > (SELECT avg(x) FROM spread_subq)")
+    // the listener bus is FIFO: a marker job's start, once seen, means
+    // every earlier job start has been delivered too
+    val marker = "graft.test.marker"
+    val seen = new java.util.concurrent.Semaphore(0)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty(marker) != null)) seen.release()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    def drain(): Unit = {
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(0), 1).count() finally sc.setLocalProperty(marker, null)
+      seen.acquire()
+    }
+    sc.addSparkListener(listener)
+    try {
+      drain(); jobs.set(0)
+      val out = Spread.lazyAuto(df)
+      drain()
+      assert(jobs.get === 0, "lazyAuto ran the subquery to probe partitions")
+      assert(out eq df)
+    } finally sc.removeSparkListener(listener)
+    assert(df.count() === 50L)
+  }
 }

@@ -298,4 +298,20 @@ class TextIndexSpec extends SparkSuite {
     assert(got.sameElements(want),
       s"healed index diverged from union rebuild:\n got ${got.toSeq}\nwant ${want.toSeq}")
   }
+
+  test("a failed append write still releases the batch checkpoints") {
+    val dir = Files.createTempDirectory("graft-tix6").toString
+    TextIndex.write(spark, sf0001, dir)
+    val batch = Seq((9300L, "dup vector fail w", "en", "src", 17L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    // positions — the second of the batch's three writes — cannot land:
+    // a plain file sits where its directory belongs
+    val positions = new java.io.File(s"$dir/positions")
+    new scala.reflect.io.Directory(positions).deleteRecursively()
+    Files.writeString(positions.toPath, "not a directory")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception](TextIndex.append(spark, dir, batch))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"checkpoint RDDs left persisted: $leaked")
+  }
 }
