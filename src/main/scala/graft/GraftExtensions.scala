@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{CosineSim, Deletions, Deletions2, DotProduct, NGrams, OuterUpper, SimHash60, SqEncode}
+import graft.functions.{CosineSim, Deletions, Deletions2, DotProduct, NGrams, OuterUpper, SimHash60, SqEncode, VecSub}
 import graft.plans.{AsOfStrategy, TopKRewrite, TopKStrategy}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -60,6 +60,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[SqEncode].getName, "graft_sq8_encode"),
       (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         SqEncode(exprs.head, exprs(1), exprs(2))))
+    ext.injectFunction((
+      FunctionIdentifier("graft_vec_sub"),
+      new ExpressionInfo(classOf[VecSub].getName, "graft_vec_sub"),
+      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
+        VecSub(exprs.head, exprs(1))))
     ext.injectPlannerStrategy(_ => TopKStrategy)
     ext.injectPlannerStrategy(_ => AsOfStrategy)
     // rank-filter window idiom -> native bounded-heap top-k (the

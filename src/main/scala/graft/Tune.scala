@@ -11,9 +11,9 @@ object Tune {
   /** `spark.sql.sources.parallelPartitionDiscovery.threshold`: above this
     * many paths Spark lists a directory tree with a DISTRIBUTED JOB
     * instead of on the driver. The persisted-index layouts here are
-    * 64–4096 bucket directories (the [[ops.DedupIndex.bucketsFor]] /
-    * [[ops.TextIndex.bucketsFor]] clamps), so the default threshold of
-    * 32 made EVERY `read.parquet` of an index table pay a full job
+    * 64–4096 bucket directories (the [[ops.Tombstones.bucketsFor]]
+    * clamp), so the default threshold of 32 made EVERY `read.parquet`
+    * of an index table pay a full job
     * (~140–390 ms of scheduling for a millisecond of local listing);
     * q165's serve path alone carried 8 such jobs (~1.1–2 s, measured
     * round 19). 4200 covers the 4096-bucket clamp with slack: a driver

@@ -240,8 +240,7 @@ object AnnIndex {
       .write.partitionBy("c_id").mode("overwrite").parquet(s"$dir/codes")
     errStats(perVectorErrMicro(e, s.read.parquet(s"$dir/codebook")))
       .write.mode("overwrite").parquet(s"$dir/quantstats")
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    Tombstones.dropLedger(s, dir)
   }
 
   def load(s: SparkSession, dir: String): Index = {
@@ -250,18 +249,12 @@ object AnnIndex {
       codebook = s.read.parquet(s"$dir/codebook"),
       assigned = s.read.parquet(s"$dir/assigned"),
       codes = s.read.parquet(s"$dir/codes"))
-    val tombs = tombstones(s, dir)
-    if (tombs.isEmpty) raw
-    else raw.copy(
-      assigned = raw.assigned.join(tombs.get, Seq("vec_id"), "left_anti"),
-      codes = raw.codes.join(tombs.get, Seq("vec_id"), "left_anti"))
-  }
-
-  private def tombstones(s: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(s.read.parquet(p.toString).select(col("vec_id")))
-    else None
+    Tombstones.ledger(s, dir).fold(raw) { t =>
+      val ids = t.select(col("vec_id"))
+      raw.copy(
+        assigned = raw.assigned.join(ids, Seq("vec_id"), "left_anti"),
+        codes = raw.codes.join(ids, Seq("vec_id"), "left_anti"))
+    }
   }
 
   /** Delete vectors by id — the standard tombstone design: ids append to
@@ -277,19 +270,11 @@ object AnnIndex {
     * bounded without an operator remembering to compact.
     */
   def delete(s: SparkSession, dir: String, ids: DataFrame,
-      autoCompactAt: Long = Tombstones.AutoCompactRows): Index = {
-    // one ledger file per delete batch (round 18); repartition(1), not
-    // coalesce(1): coalesce propagates the single partition UP the
-    // narrow lineage, so computing a large delete batch's ids would run
-    // one-task (round-18 advice) — repartition confines the 1-partition
-    // constraint to the write itself
-    ids.select(col("vec_id")).repartition(1)
-      .write.mode("append").parquet(s"$dir/tombstones")
-    if (MetaScalar.rowCount(s, s"$dir/tombstones").getOrElse(
-        s.read.parquet(s"$dir/tombstones").count()) >= autoCompactAt)
+      autoCompactAt: Long = Tombstones.AutoCompactRows): Index =
+    // id-only ledger (no epoch): a tombstoned id stays blocked until compact
+    if (Tombstones.appendLedger(s, dir, ids.select(col("vec_id")), None, autoCompactAt))
       compact(s, dir)
     else load(s, dir)
-  }
 
   /** Fold accumulated tombstones into the index files: rewrite assigned
     * and codes without the deleted rows, then drop the tombstone table.
@@ -299,7 +284,7 @@ object AnnIndex {
     * requires compacting first.
     */
   def compact(s: SparkSession, dir: String): Index = {
-    tombstones(s, dir).foreach { _ =>
+    Tombstones.ledger(s, dir).foreach { _ =>
       val live = load(s, dir) // tombstones already anti-joined
       // localCheckpoint so the rewrite doesn't race its own input scan
       live.assigned.localCheckpoint(true)
@@ -307,8 +292,7 @@ object AnnIndex {
       live.codes.localCheckpoint(true)
         .transform(Layout.writeByBucket(_, col("c_id")))
         .write.partitionBy("c_id").mode("overwrite").parquet(s"$dir/codes")
-      val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      Tombstones.dropLedger(s, dir)
     }
     load(s, dir)
   }
@@ -451,7 +435,8 @@ object AnnIndex {
     * 0.100 as lists grew 45 → 142, BENCH.md round 10) — as the corpus
     * grows. Deriving nprobe from the persisted list count holds the
     * fraction, and therefore coverage, steady across corpus sizes; the
-    * centroid count read is parquet-footer metadata, not a scan. Probe
+    * centroid count is read from the parquet footers
+    * ([[MetaScalar.scanRowCount]]), not by a Spark job. Probe
     * cost stays sub-linear: probed rows ≈ frac · n while candidate
     * lists lengthen as √n. Coverage is the ONLY recall surface nprobe
     * controls: the round-11 10x measurement (BENCH.md) showed raw ADC
@@ -463,7 +448,7 @@ object AnnIndex {
     * held fraction.
     */
   def autoNprobe(ix: Index, frac: Double): Int = {
-    val n = ix.centroids.count()
+    val n = MetaScalar.scanRowCount(ix.centroids).getOrElse(ix.centroids.count())
     math.max(1L, math.min(n, math.ceil(frac * n).toLong)).toInt
   }
 
@@ -521,12 +506,13 @@ object AnnIndex {
     // code join, distance aggregation and rank window are dead work the
     // exact re-rank below recomputes anyway. Skip straight from the
     // candidate set (IDENTICAL probe/self/allow-list/DISTINCT semantics
-    // via probeCandidates) to the exact re-rank. The membership count is
-    // one count() of the (tombstone-folded) assigned table, paid only in
-    // the all-lists regime; results are bit-identical (the q209/q169
-    // oracles and RetrainFlowSpec gate both paths).
+    // via probeCandidates) to the exact re-rank. The membership count
+    // comes from the assigned table's parquet footers; only a
+    // tombstone-folded table pays a count(), and only in the all-lists
+    // regime. Results are bit-identical (the q209/q169 oracles and
+    // RetrainFlowSpec gate both paths).
     val exactCover = frac >= 0.999 &&
-      shortK.toLong >= ix.assigned.count()
+      shortK.toLong >= MetaScalar.scanRowCount(ix.assigned).getOrElse(ix.assigned.count())
     val short =
       if (exactCover)
         probeCandidates(s, ix, queries, np, excludeSelf, allowed)._2

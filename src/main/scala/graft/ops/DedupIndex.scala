@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *  - `bands/` (doc_id, b, s1, s2, ep), partitioned by `bkt =
   *    pmod(xxhash64(b, s1, s2), buckets)` with a CORPUS-SIZED bucket
   *    count (n/[[DocsPerBucket]] clamped to [64, 4096], persisted in
-  *    `meta/` — [[bucketsFor]]) — the LSH bucket table. Serve-time
+  *    `meta/` — [[Tombstones.bucketsFor]]) — the LSH bucket table. Serve-time
   *    batches name their band signatures, so bucketing turns the band
   *    equi-join into PARTITION pruning: a small batch (the interactive
   *    "is this document a near-dup?" case) opens ≤ 8·|batch| of the
@@ -26,13 +26,16 @@ import org.apache.spark.sql.functions._
   *    Jaccard verification of candidates, and [[append]]'s done-marker.
   *    Both reads prune to the ids they actually need (candidate ids /
   *    the arriving batch's ids), so the verification read is
-  *    candidate-bucket-bounded, not corpus-bounded. Pre-bucketed
-  *    layouts (no `sbkt` in the schema) fall back to the full read.
+  *    candidate-bucket-bounded, not corpus-bounded.
   *  - `tombstones/` (doc_id, te) + `epoch/` — [[delete]]'s O(batch)
   *    ledger and the [[Tombstones]] epoch marker: a row is live iff its
   *    `ep` postdates its id's newest tombstone, so delete-then-reappend
   *    needs no [[compact]] (the release-upgrade fast path); the ledger
   *    folds in at compaction.
+  *
+  * This is the only layout served: every read refuses a directory
+  * without `meta/` ([[Tombstones.readBuckets]]), which predates the
+  * current format and must be rebuilt with [[write]].
   *
   * The signature recipe is [[TextOps.sigsOf]]/[[TextOps.bandsOf]] —
   * the ONE definition shared with the live q32/q57 queries — so an
@@ -60,11 +63,6 @@ object DedupIndex {
 
   case class Index(bands: DataFrame, sigs: DataFrame, buckets: Int)
 
-  /** Bucket-count floor, and the assumed count for layouts written
-    * before the count was persisted (rounds ≤ 10 always wrote 64).
-    */
-  private[graft] val DefaultBuckets = 64
-
   /** Target documents per band bucket: ~160k docs ≈ 1.3M band rows ≈
     * tens of MB per bucket directory — the file-sizing argument, not
     * √n. A √n experiment (2237 buckets at the 5M-doc rehearsal) was
@@ -72,22 +70,11 @@ object DedupIndex {
     * explosion — partitionBy dirs × task count) and 100-doc query
     * 10.7 → 16.0 s (a wide batch names most buckets, so extra
     * directories only add listing/open overhead). Bytes-per-bucket is
-    * what actually bounds both the write and the pruned read.
+    * what actually bounds both the write and the pruned read. The
+    * 64-bucket floor binds below ~10M docs (every local bench keeps 64
+    * directories and pays no small-file tax).
     */
   private[graft] val DocsPerBucket = 160000L
-
-  /** CORPUS-SIZED band-bucket count: n/[[DocsPerBucket]] clamped to
-    * [64, 4096] — the floor binds below ~10M docs (every local bench
-    * keeps 64 directories and pays no small-file tax), and a corpus
-    * that outgrows it gets proportionally more buckets so pruned-bucket
-    * serve reads stay directory-bounded. Decided once at [[write]],
-    * persisted in `meta/`, and reused by every append/compact/serve —
-    * mixing counts within one layout would silently break the bucket
-    * equi-pruning (spec-covered via an override-built layout).
-    */
-  private[graft] def bucketsFor(nDocs: Long): Int =
-    math.max(DefaultBuckets.toLong,
-      math.min(4096L, nDocs / DocsPerBucket)).toInt
 
   private def bktCol(nB: Int): Column =
     pmod(xxhash64(col("b"), col("s1"), col("s2")), lit(nB.toLong)).cast("int")
@@ -95,130 +82,76 @@ object DedupIndex {
   private def sbktCol(nB: Int): Column =
     pmod(xxhash64(col("doc_id")), lit(nB.toLong)).cast("int")
 
-  /** Epoch layouts stamp every band/sig row with its batch epoch
-    * ([[Tombstones]]) so deferred deletes allow re-appends; pre-epoch
-    * layouts keep the legacy blocked-until-compact semantics.
-    */
-  private[graft] def isEpochLayout(s: SparkSession, dir: String): Boolean =
-    s.read.parquet(s"$dir/sigs").columns.contains("ep")
-
-  /** Ids of `ids` already present — and, on an epoch layout, LIVE — in
-    * the sigs done-marker: the pruned O(batch) replay check shared by
-    * [[append]] and the ingestion gate's sink-side marker. On epoch
-    * layouts a tombstoned id is NOT done (it re-appends at a fresh
-    * epoch); on legacy layouts presence alone blocks, the pre-epoch
-    * contract.
+  /** Ids of `ids` already present AND LIVE in the sigs done-marker:
+    * the pruned O(batch) replay check shared by [[append]] and the
+    * ingestion gate's sink-side marker. A tombstoned id is NOT done (it
+    * re-appends at a fresh epoch).
     */
   private[graft] def doneIds(s: SparkSession, dir: String,
-      ids: DataFrame): DataFrame = {
-    val sigs = s.read.parquet(s"$dir/sigs")
-    val present = pruneSigs(sigs, readBuckets(s, dir), ids)
-    val live =
-      if (sigs.columns.contains("ep"))
-        Tombstones.liveByEpoch(present, Tombstones.tombMax(s, dir, "doc_id"), "doc_id")
-      else present
-    live.join(ids.select(col("doc_id")), Seq("doc_id"), "left_semi")
+      ids: DataFrame): DataFrame =
+    Tombstones.liveByEpoch(
+        pruneSigs(s.read.parquet(s"$dir/sigs"), Tombstones.readBuckets(s, dir), ids),
+        Tombstones.tombMax(s, dir, "doc_id"), "doc_id")
+      .join(ids.select(col("doc_id")), Seq("doc_id"), "left_semi")
       .select(col("doc_id"))
-  }
 
-  /** Prune a bucketed sigs read to the partitions holding `ids` —
-    * driver-bounded (≤ the layout's bucket count distinct values). No-op
-    * on pre-bucketed layouts (no `sbkt` partition column).
+  /** Prune the sigs read to the partitions holding `ids` —
+    * driver-bounded (≤ the layout's bucket count distinct values).
     */
-  private def pruneSigs(sigs: DataFrame, nB: Int, ids: DataFrame): DataFrame =
-    if (!sigs.columns.contains("sbkt")) sigs
-    else {
-      val wanted = ids.select(sbktCol(nB).as("sbkt")).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      sigs.filter(col("sbkt").isin(wanted: _*))
-    }
-
-  private def writeMeta(s: SparkSession, dir: String, nB: Int): Unit = {
-    import s.implicits._
-    Seq(nB).toDF("buckets").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/meta")
+  private def pruneSigs(sigs: DataFrame, nB: Int, ids: DataFrame): DataFrame = {
+    val wanted = ids.select(sbktCol(nB).as("sbkt")).distinct()
+      .collect().map(_.getInt(0)).toSeq
+    sigs.filter(col("sbkt").isin(wanted: _*))
   }
 
-  /** The layout's bucket count — persisted at [[write]]; absent on
-    * pre-round-11 layouts, which were all written with 64.
-    */
-  private def readBuckets(s: SparkSession, dir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/meta")
-    if (p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      MetaScalar.scalarLong(s, p.toString, "buckets").map(_.toInt)
-        .getOrElse(s.read.parquet(p.toString).collect()(0).getInt(0))
-    else DefaultBuckets
-  }
-
-  /** `ep = None` writes the legacy (epoch-less) schema for a table —
-    * appends must match each existing table's columns, or mixed files
-    * under one root become unreadable. `bandsEp`/`sigsEp` are tracked
-    * separately for the same reason (a hand-downgraded sigs table must
-    * not force epoch-less band rows into an epoch-stamped bands dir).
+  /** Write one batch of signatures, every band/sig row stamped with
+    * epoch `ep`.
     */
   private def writeBatch(sigs: DataFrame, dir: String, mode: String,
-      nB: Int, sigsBucketed: Boolean = true,
-      bandsEp: Option[Long] = Some(0L), sigsEp: Option[Long] = Some(0L)): Unit = {
-    def stamp(df: DataFrame, ep: Option[Long]): DataFrame =
-      ep.fold(df)(e => df.withColumn("ep", lit(e)))
+      nB: Int, ep: Long): Unit = {
     // Repartition by the partition column before each dynamic-
     // partitioned write (round 18, guide §6): one file per bucket per
     // batch instead of (tasks × buckets) small files — the measured
     // layout carried ~4× the files, taxing every load's footer reads,
     // the release-upgrade clones, and the write commits themselves.
     // bands first, sigs LAST: sigs is append's done-marker (see object doc)
-    stamp(TextOps.bandsOf(sigs), bandsEp)
+    TextOps.bandsOf(sigs).withColumn("ep", lit(ep))
       .withColumn("bkt", bktCol(nB)).transform(Layout.writeByBucket(_, col("bkt")))
       .write.partitionBy("bkt").mode(mode).parquet(s"$dir/bands")
-    // appends must match the existing sigs layout — mixing flat files
-    // with sbkt= partition dirs under one root is unreadable; a flat
-    // (pre-round-10) layout stays flat until compact upgrades it whole
-    if (sigsBucketed)
-      stamp(sigs, sigsEp).withColumn("sbkt", sbktCol(nB))
-        .transform(Layout.writeByBucket(_, col("sbkt")))
-        .write.partitionBy("sbkt").mode(mode).parquet(s"$dir/sigs")
-    else stamp(sigs, sigsEp).write.mode(mode).parquet(s"$dir/sigs")
+    sigs.withColumn("ep", lit(ep)).withColumn("sbkt", sbktCol(nB))
+      .transform(Layout.writeByBucket(_, col("sbkt")))
+      .write.partitionBy("sbkt").mode(mode).parquet(s"$dir/sigs")
   }
 
   /** Build the index from `docs(doc_id, text)`, replacing anything at
     * `dir`. The signature pass is the same one-shuffle shape as live
     * q32: flat codegen'd shingle hashing, 16-min partial aggregation
     * before the exchange. The band layout gets a corpus-sized bucket
-    * count ([[bucketsFor]]), persisted for the layout's lifetime.
+    * count ([[Tombstones.bucketsFor]]), persisted for the layout's
+    * lifetime.
     */
   def write(s: SparkSession, docs: DataFrame, dir: String,
       bucketsOverride: Option[Int] = None): Index = {
     val sigs = TextOps.sigsOf(docs).localCheckpoint(true)
-    val nB = bucketsOverride.getOrElse(bucketsFor(sigs.count()))
-    writeMeta(s, dir, nB)
-    writeBatch(sigs, dir, "overwrite", nB)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val nB = bucketsOverride.getOrElse(
+      Tombstones.bucketsFor(sigs.count(), DocsPerBucket))
+    Tombstones.writeMeta(s, dir, nB)
+    writeBatch(sigs, dir, "overwrite", nB, 0L)
+    Tombstones.dropLedger(s, dir)
     Tombstones.writeEpoch(s, dir, 0L)
     load(s, dir)
   }
 
-  private def tombstones(s: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(s.read.parquet(p.toString).select(col("doc_id")))
-    else None
-  }
-
   /** Load the live index: both tables folded against the tombstone
-    * ledger (broadcast-sized until [[compact]] — epoch comparison per
-    * table when its rows carry `ep`, id anti-join otherwise).
+    * ledger by epoch (broadcast-sized until [[compact]]).
     */
   def load(s: SparkSession, dir: String): Index = {
-    lazy val tMax = Tombstones.tombMax(s, dir, "doc_id")
-    lazy val tIds = tombstones(s, dir)
-    def live(df: DataFrame): DataFrame =
-      if (df.columns.contains("ep")) Tombstones.liveByEpoch(df, tMax, "doc_id")
-      else tIds.fold(df)(ids => df.join(broadcast(ids), Seq("doc_id"), "left_anti"))
+    val nB = Tombstones.readBuckets(s, dir) // the format gate
+    val tMax = Tombstones.tombMax(s, dir, "doc_id")
     Index(
-      live(s.read.parquet(s"$dir/bands")),
-      live(s.read.parquet(s"$dir/sigs")),
-      readBuckets(s, dir))
+      Tombstones.liveByEpoch(s.read.parquet(s"$dir/bands"), tMax, "doc_id"),
+      Tombstones.liveByEpoch(s.read.parquet(s"$dir/sigs"), tMax, "doc_id"),
+      nB)
   }
 
   /** Append a document batch using the frozen hash recipe. Idempotent
@@ -227,40 +160,26 @@ object DedupIndex {
     * to batch-sized data by the semi-join, so replay cost is O(batch),
     * not O(index). A torn band write from a crashed append is re-written
     * whole (its doc_id never reached sigs); the duplicates it leaves are
-    * invisible to the DISTINCT candidate join. On an epoch layout a
-    * tombstoned id RE-APPENDS at a fresh epoch (the release-upgrade
-    * fast path); on a legacy layout it stays blocked until [[compact]],
-    * as in [[AnnIndex.append]].
+    * invisible to the DISTINCT candidate join. A tombstoned id
+    * RE-APPENDS at a fresh epoch (the release-upgrade fast path).
     */
   def append(s: SparkSession, dir: String, docs: DataFrame): Index = graft.Jobs.labeled(s, "dedup-index: append") {
+    val nB = Tombstones.readBuckets(s, dir) // the format gate
     val sigs = graft.Jobs.labeled(s, "dedup-index: append/sigsOf") {
       // the intake batch is serve-contract sized: one batch-bounded
       // exchange spreads the shingle hashing off its arrival
       // partitioning (round 19, guide §2.5)
       TextOps.sigsOf(graft.Spread.batch(docs)).localCheckpoint(true)
     }
-    val nB = readBuckets(s, dir)
-    val existing = s.read.parquet(s"$dir/sigs")
-    val epochMode = existing.columns.contains("ep")
-    // done-marker check reads only the batch ids' sig buckets; in epoch
-    // mode "done" means LIVE, so a deferred-deleted id re-appends
-    val present = pruneSigs(existing, nB, sigs)
-    val marker =
-      if (epochMode)
-        Tombstones.liveByEpoch(present, Tombstones.tombMax(s, dir, "doc_id"), "doc_id")
-      else present
-    val done = marker
-      .join(sigs.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"))
+    // done-marker check reads only the batch ids' sig buckets; "done"
+    // means LIVE, so a deferred-deleted id re-appends
+    val done = doneIds(s, dir, sigs)
     val fresh = graft.Jobs.labeled(s, "dedup-index: append/fresh") {
       sigs.join(done, Seq("doc_id"), "left_anti").localCheckpoint(true)
     }
-    val ep = if (epochMode) Some(Tombstones.bumpEpoch(s, dir)) else None
+    val ep = Tombstones.bumpEpoch(s, dir)
     graft.Jobs.labeled(s, "dedup-index: append/writeBatch") {
-      writeBatch(fresh, dir, "append", nB,
-        sigsBucketed = existing.columns.contains("sbkt"),
-        bandsEp = if (s.read.parquet(s"$dir/bands").columns.contains("ep")) ep else None,
-        sigsEp = ep)
+      writeBatch(fresh, dir, "append", nB, ep)
     }
     load(s, dir)
   }
@@ -270,51 +189,37 @@ object DedupIndex {
     * [[compact]] — which runs inline once the ledger outgrows
     * `autoCompactAt` rows ([[Tombstones.AutoCompactRows]]), so a long
     * delete sequence keeps the broadcast side bounded by construction.
-    * On an epoch layout the tombstone records the current epoch, so a
-    * later [[append]] re-adds the id without compacting.
+    * The tombstone records the current epoch, so a later [[append]]
+    * re-adds the id without compacting.
     */
   def delete(s: SparkSession, dir: String, ids: DataFrame,
       autoCompactAt: Long = Tombstones.AutoCompactRows): Index = graft.Jobs.labeled(s, "dedup-index: delete") {
-    val t = ids.select(col("doc_id"))
-    // one ledger file per delete batch (round 18); repartition(1), not
-    // coalesce(1): coalesce propagates the single partition UP the
-    // narrow lineage, so computing a large delete batch's ids would run
-    // one-task (round-18 advice) — repartition confines the 1-partition
-    // constraint to the write itself
-    (if (isEpochLayout(s, dir))
-       t.withColumn("te", lit(Tombstones.readEpoch(s, dir)))
-     else t).repartition(1).write.mode("append").parquet(s"$dir/tombstones")
-    if (MetaScalar.rowCount(s, s"$dir/tombstones").getOrElse(
-        s.read.parquet(s"$dir/tombstones").count()) >= autoCompactAt)
+    Tombstones.readBuckets(s, dir) // the format gate, before the ledger write
+    if (Tombstones.appendLedger(s, dir, ids.select(col("doc_id")),
+        Some(Tombstones.readEpoch(s, dir)), autoCompactAt))
       compact(s, dir)
     else load(s, dir)
   }
 
   /** Fold tombstones into rewritten band/sig files (keeping the
-    * band- and sig-bucket partitioning — a pre-bucketed sigs layout is
-    * upgraded in place here, since the rewrite re-derives `sbkt`) and
-    * drop the ledger. Also materializes the torn-append heal: duplicate
-    * band rows from replayed appends are collapsed by the rewrite's
-    * dropDuplicates.
+    * band- and sig-bucket partitioning) and drop the ledger. Also
+    * materializes the torn-append heal: duplicate band rows from
+    * replayed appends are collapsed by the rewrite's dropDuplicates.
     */
   def compact(s: SparkSession, dir: String): Index = {
-    tombstones(s, dir).foreach { _ =>
+    Tombstones.ledger(s, dir).foreach { _ =>
       val live = load(s, dir)
-      val nB = readBuckets(s, dir)
-      // the rewrite restarts epoch history at 0 (no tombstones survive
-      // it) and upgrades legacy/hand-downgraded tables to the epoch
-      // schema, since every row is re-stamped
+      // the rewrite restarts epoch history at 0 (no tombstones survive it)
       live.bands.dropDuplicates("doc_id", "b")
-        .drop("ep").withColumn("ep", lit(0L)).localCheckpoint(true)
+        .withColumn("ep", lit(0L)).localCheckpoint(true)
         .transform(Layout.writeByBucket(_, col("bkt")))
         .write.partitionBy("bkt").mode("overwrite").parquet(s"$dir/bands")
       live.sigs.select(col("doc_id"), col("sig")).dropDuplicates("doc_id")
         .withColumn("ep", lit(0L))
-        .withColumn("sbkt", sbktCol(nB)).localCheckpoint(true)
+        .withColumn("sbkt", sbktCol(live.buckets)).localCheckpoint(true)
         .transform(Layout.writeByBucket(_, col("sbkt")))
         .write.partitionBy("sbkt").mode("overwrite").parquet(s"$dir/sigs")
-      val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      Tombstones.dropLedger(s, dir)
       Tombstones.writeEpoch(s, dir, 0L)
     }
     load(s, dir)
@@ -374,12 +279,12 @@ object DedupIndex {
     * order.
     */
   def queryBatch(s: SparkSession, dir: String, batch: DataFrame): DataFrame = graft.Jobs.labeled(s, "dedup-index: queryBatch") {
+    val ix = load(s, dir) // the format gate; carries the persisted bucket count
     val bSigs = graft.Jobs.labeled(s, "dedup-index: queryBatch/sigsOf") {
       // batch-contract spread, as in [[append]] (round 19)
       TextOps.sigsOf(graft.Spread.batch(batch)).localCheckpoint(true)
     }
     val bBands = TextOps.bandsOf(bSigs)
-    val ix = load(s, dir) // carries the layout's persisted bucket count
     val bkts = bBands.select(bktCol(ix.buckets).as("bkt")).distinct()
       .collect().map(_.getInt(0)).toSeq // ≤ buckets values, driver-bounded
     val corpusBands = ix.bands.filter(col("bkt").isin(bkts: _*))

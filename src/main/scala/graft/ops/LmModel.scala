@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * count pages at serve time):
   *  - `bigrams/`  (gram, c12, p_cond, p_uni), partitioned by `bkt =
   *    pmod(xxhash64(gram), buckets)` with a MODEL-SIZED bucket count
-  *    ([[bucketsFor]], persisted in `meta/`) — λ-interpolation inputs
+  *    ([[Tombstones.bucketsFor]], persisted in `meta/`) — λ-interpolation inputs
   *    precomputed in exact ppm integers (q154's `bie`).
   *  - `unigrams/` (w, c, p_uni), partitioned by `bkt = pmod(
   *    xxhash64(w), buckets)` — the unigram backoff: a transition whose
@@ -28,8 +28,11 @@ import org.apache.spark.sql.functions._
   *    backoff behavior, not a silent zero; a w2 outside the training
   *    vocabulary scores 0 (maximally surprising).
   *  - `total/`    (n) — one row, the corpus token count.
-  * Layouts written before the count columns existed serve unchanged
-  * (same baked columns); they just cannot [[upgrade]].
+  *  - `meta/`     (buckets) — the persisted bucket count.
+  * This is the only layout served: [[scoreBatch]] and [[upgrade]]
+  * refuse a directory without `meta/` ([[Tombstones.readBuckets]]),
+  * which predates the current format and must be retrained with
+  * [[write]].
   *
   * The arithmetic is the ONE q154 recipe ([[Det.halfUpDiv]] ppm
   * integers, λ = 0.9), so LmModelSpec can pin saved-model
@@ -43,7 +46,7 @@ import org.apache.spark.sql.functions._
   * corpus distinct bigrams are far past any broadcast threshold — so
   * the serve path must NOT assume they broadcast. [[scoreBatch]]
   * therefore reads them through gram-hash PARTITION pruning (the
-  * [[TextIndex.DefaultBuckets]] recipe): the batch's transitions name their
+  * [[TextIndex]] recipe): the batch's transitions name their
   * bucket set, each model read opens only those directories, and the
   * join strategy is left to AQE — broadcast when the pruned slice is
   * small (every tested scale), shuffled hash when it is not, never a
@@ -63,17 +66,10 @@ object LmModel {
 
   private val Micro = 1000000L
 
-  /** Gram-hash partition count for the persisted tables — the
-    * [[TextIndex.DefaultBuckets]] rationale: coarse enough that a
-    * corpus-scale build writes large files per bucket, fine enough that
-    * a small batch's gram set prunes most of a diversity-sized model
-    * before any file is opened. Floor of the sized count, and the
-    * assumed count for layouts written before it was persisted (rounds
-    * ≤ 10 always wrote 64).
-    */
-  private[graft] val DefaultBuckets = 64
-
-  /** Target distinct bigrams per bucket — the model grows with content
+  /** Target distinct bigrams per gram-hash bucket — coarse enough that
+    * a corpus-scale build writes large files per bucket, fine enough
+    * that a small batch's gram set prunes most of a diversity-sized
+    * model before any file is opened. The model grows with content
     * DIVERSITY (verbatim copies add nothing), so the sizing driver is
     * the bigram-table row count, not the corpus: ~1M bigram rows ≈
     * ~20 MB per bucket directory (measured 18.1 MB for 931k rows,
@@ -85,39 +81,13 @@ object LmModel {
     * BENCH.md round 11) cost 2.3x on build AND 2.2x on serve —
     * a scoring batch's grams hash into nearly every bucket, so below
     * the bytes-per-bucket knee extra directories are pure overhead on
-    * both sides.
+    * both sides. The sized count is decided at [[write]] (and
+    * re-derived at [[upgrade]], which rewrites every row anyway).
     */
   private[graft] val GramsPerBucket = 1000000L
 
-  /** MODEL-SIZED bucket count, clamped to [64, 4096] — decided at
-    * [[write]] (and re-derived at [[upgrade]], which rewrites every
-    * row anyway), persisted in `meta/`, and used by every
-    * [[scoreBatch]] so serve-side pruning hashes with the layout's
-    * actual count.
-    */
-  private[graft] def bucketsFor(nGrams: Long): Int =
-    math.max(DefaultBuckets.toLong,
-      math.min(4096L, nGrams / GramsPerBucket)).toInt
-
   private def bktOf(c: Column, nB: Int): Column =
     pmod(xxhash64(c), lit(nB.toLong)).cast("int")
-
-  private def writeMeta(s: SparkSession, dir: String, nB: Int): Unit = {
-    import s.implicits._
-    Seq(nB).toDF("buckets").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  /** The layout's bucket count — persisted at [[write]]; absent on
-    * pre-round-11 layouts, which were all written with 64.
-    */
-  private def readBuckets(s: SparkSession, dir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/meta")
-    if (p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      MetaScalar.scalarLong(s, p.toString, "buckets").map(_.toInt)
-        .getOrElse(s.read.parquet(p.toString).collect()(0).getInt(0))
-    else DefaultBuckets
-  }
 
   /** Distinct partition buckets of the batch's grams and w2 tokens under
     * the SAME xxhash64 expression the write side uses — one job, and
@@ -204,7 +174,7 @@ object LmModel {
     // stays exactly the distribution ADC serves against and is retained.
     val ss = new org.apache.hadoop.fs.Path(s"$dir/scorestats")
     ss.getFileSystem(s.sparkContext.hadoopConfiguration).delete(ss, true)
-    writeMeta(s, dir, nB)
+    Tombstones.writeMeta(s, dir, nB)
     val tot = uni.agg(coalesce(sum(col("c")), lit(0L)).as("n"))
     // repartition by the partition column before the dynamic-partitioned
     // writes (round 18, guide §6): one file per bucket, not tasks x buckets
@@ -221,7 +191,7 @@ object LmModel {
   }
 
   /** Train on `docs` and persist under `dir`, gram-hash partitioned
-    * with a model-sized bucket count ([[bucketsFor]]) so [[scoreBatch]]
+    * with a model-sized bucket count ([[Tombstones.bucketsFor]]) so [[scoreBatch]]
     * prunes before it reads. Overwrites. The bigram table is
     * checkpointed (model-table-sized) so the sizing count and the write
     * share one corpus aggregation.
@@ -230,14 +200,9 @@ object LmModel {
       bucketsOverride: Option[Int] = None): Unit = {
     val (bi0, uni) = countTables(docs)
     val bi = bi0.localCheckpoint(true)
-    writeTables(s, dir, bi, uni, bucketsOverride.getOrElse(bucketsFor(bi.count())))
+    writeTables(s, dir, bi, uni, bucketsOverride.getOrElse(
+      Tombstones.bucketsFor(bi.count(), GramsPerBucket)))
   }
-
-  /** Layouts written before the count columns existed serve fine but
-    * carry no counts for the release algebra.
-    */
-  private[graft] def isLegacyLayout(s: SparkSession, dir: String): Boolean =
-    !s.read.parquet(s"$dir/bigrams").columns.contains("c12")
 
   /** Roll the persisted model to a corpus release by exact count
     * algebra: subtract `removeDocs`' transition/token counts, add
@@ -247,13 +212,10 @@ object LmModel {
     * columns from the merged counts. The merge reads and rewrites the
     * model tables once (model-table-sized I/O, never the corpus) —
     * [[Release.upgradeLmModel]] measures this against a fresh retrain.
-    * Requires the count layout; legacy baked-only layouts must retrain
-    * (their rows do not carry the counts the algebra needs).
     */
   def upgrade(s: SparkSession, dir: String, addDocs: DataFrame,
       removeDocs: DataFrame): Unit = {
-    require(!isLegacyLayout(s, dir),
-      s"$dir is a baked-probability layout without counts; retrain with write() instead")
+    Tombstones.readBuckets(s, dir) // the format gate
     def delta(docs: DataFrame, sign: Int): (DataFrame, DataFrame) = {
       val (bi, uni) = countTables(docs)
       (bi.select(col("gram"), (col("c12") * sign).as("c12")),
@@ -275,7 +237,7 @@ object LmModel {
     // writeTables' shared tail also deletes any scorestats baseline —
     // the upgrade retrains the probabilities, so the old distribution
     // would alert wrong (re-run [[writeScoreStats]] after the roll)
-    writeTables(s, dir, bi, uni, bucketsFor(bi.count()))
+    writeTables(s, dir, bi, uni, Tombstones.bucketsFor(bi.count(), GramsPerBucket))
   }
 
   /** Score a document batch against the persisted model: q154's output
@@ -287,19 +249,13 @@ object LmModel {
     * AQE-chosen joins.
     */
   def scoreBatch(s: SparkSession, dir: String, docs: DataFrame): DataFrame = {
+    val nB = Tombstones.readBuckets(s, dir) // the format gate
     val t = transitions(graft.Spread.batch(docs))
       .withColumn("w2", split(col("gram"), " ").getItem(1))
       .localCheckpoint() // batch-sized; feeds bucket discovery + the score join
-    val (bg, bw) = bucketsOf(t, readBuckets(s, dir))
-    // bucket pruning only on layouts that carry the partition column — a
-    // pre-bkt (flat) layout falls back to the full-table read, the
-    // [[DedupIndex.pruneSigs]] pattern (serving it is the object doc's
-    // "pre-count layouts serve unchanged" contract)
-    def pruned(table: String, bkts: Seq[Int]): DataFrame = {
-      val raw = s.read.parquet(s"$dir/$table")
-      if (raw.columns.contains("bkt")) raw.filter(col("bkt").isin(bkts: _*))
-      else raw
-    }
+    val (bg, bw) = bucketsOf(t, nB)
+    def pruned(table: String, bkts: Seq[Int]): DataFrame =
+      s.read.parquet(s"$dir/$table").filter(col("bkt").isin(bkts: _*))
     val bie = pruned("bigrams", bg).select(col("gram"), col("p_cond"), col("p_uni"))
     val uniP = pruned("unigrams", bw).select(col("w"), col("p_uni"))
     scoreTransitions(bie, uniP, t)

@@ -1,10 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
-/** Driver-side scalar read of the tiny one-row metadata tables the
-  * persisted-index family keeps next to its data (`meta/buckets`,
-  * `epoch/`, LmModel's `meta/`) — round 18, guide §1.2 "per-task work
+/** Driver-side reads of parquet FOOTERS in place of Spark jobs: the
+  * tiny one-row metadata tables the persisted-index family keeps next
+  * to its data (`meta/`, `epoch/`), the tombstone-ledger size, and the
+  * row count of a bare index-table scan — round 18, guide §1.2 "per-task work
   * only after the algorithm is right" applied to the serve paths'
   * FIXED overhead: each `spark.read.parquet(...).collect()` of a
   * one-row marker is a full Spark job (~0.1–0.3 s of scheduling for
@@ -16,10 +19,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Strictly an optimization: ANY deviation from the expected shape
   * (several data files, several row groups, missing/invalid
-  * statistics, nulls) returns None and the caller falls back to the
-  * Spark read, so layouts written by other tools or older code read
-  * exactly as before. MetaScalarSpec pins footer-read == Spark-read
-  * on every marker shape the repo writes.
+  * statistics, nulls, a partitioned directory, a plan that is more
+  * than a scan) returns None and the caller falls back to the Spark
+  * read. MetaScalarSpec pins footer-read == Spark-read on every shape
+  * the repo writes.
   */
 object MetaScalar {
 
@@ -60,9 +63,8 @@ object MetaScalar {
     * — a driver-side metadata read replacing a `read.parquet().count()`
     * Spark job (~100 ms of scheduling per call on the delete paths'
     * auto-compact checks, round 19). None when the directory is absent,
-    * contains subdirectories (a partitioned layout — callers of this
-    * only ever point it at the flat tombstone ledgers), or any footer
-    * is unreadable; callers fall back to the Spark count.
+    * contains subdirectories (a partitioned layout), or any footer is
+    * unreadable; callers fall back to the Spark count.
     */
   def rowCount(s: SparkSession, dir: String): Option[Long] = {
     try {
@@ -81,6 +83,22 @@ object MetaScalar {
       }
       Some(total)
     } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** [[rowCount]] of `df` when its analyzed plan is a bare parquet scan
+    * of one flat directory — the sizing probe behind
+    * [[AnnIndex.autoNprobe]] and the exact-cover gate — and None for any
+    * other plan (a filter, a join such as a folded tombstone ledger, a
+    * partitioned or multi-path scan), where the caller counts instead.
+    */
+  def scanRowCount(df: DataFrame): Option[Long] = df.queryExecution.analyzed match {
+    case r: LogicalRelation => r.relation match {
+      case h: HadoopFsRelation if h.fileFormat.isInstanceOf[ParquetFileFormat] &&
+          h.partitionSchema.isEmpty && h.location.rootPaths.size == 1 =>
+        rowCount(df.sparkSession, h.location.rootPaths.head.toString)
+      case _ => None
+    }
+    case _ => None
   }
 
   /** Spark's hidden-file rule: a `.`- or `_`-prefixed name is not data

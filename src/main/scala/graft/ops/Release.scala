@@ -17,16 +17,16 @@ import org.apache.spark.sql.functions._
   *    the new corpus, encoded with the index's frozen quantizers /
   *    serve-time df arithmetic.
   *
-  * Text/dedup upgrades are O(delta) END TO END on epoch-aware layouts
-  * ([[Tombstones]]): a tombstone records the epoch it was laid at, so
-  * changed ids re-append at a fresh epoch WITHOUT a compaction, and the
-  * table rewrite amortizes across releases via the auto-compact
-  * threshold instead of landing on every one. That replaces the
-  * original compact-per-release recipe, which BENCH.md round 10
-  * measured REBUILD-PRICED for text/dedup (the postings/bands rewrite
-  * is corpus-order I/O — the one linear term dominated everything the
-  * delta math saved). Legacy (pre-epoch) layouts keep the eager
-  * compact, which also upgrades them in place. ANN keeps
+  * Text/dedup upgrades are O(delta) END TO END ([[Tombstones]]): a
+  * tombstone records the epoch it was laid at, so changed ids re-append
+  * at a fresh epoch WITHOUT a compaction, and the table rewrite
+  * amortizes across releases via the auto-compact threshold instead of
+  * landing on every one. That replaces the original compact-per-release
+  * recipe, which BENCH.md round 10 measured REBUILD-PRICED for
+  * text/dedup (the postings/bands rewrite is corpus-order I/O — the one
+  * linear term dominated everything the delta math saved). Every
+  * upgrade takes the current index format only; an older layout is
+  * refused by the [[Tombstones.readBuckets]] format gate. ANN keeps
   * compact-per-release deliberately: its compaction rewrites 4-byte
   * codes (a genuinely reduced table, 100-1000× smaller I/O than the
   * vectors) and the upgrade already beats a fresh rebuild because the
@@ -67,20 +67,16 @@ object Release {
 
   /** Roll a persisted [[TextIndex]] from the old corpus to `newCorpus`:
     * tombstone removed ∪ changed, then append added ∪ changed rows
-    * semi-joined from the new corpus — O(delta) on an epoch layout (no
-    * compaction; see object doc), with the eager compact kept only for
-    * legacy layouts (where it is required for the re-append AND
-    * upgrades the layout in place). Returns the upgraded index —
+    * semi-joined from the new corpus — O(delta), no compaction (see
+    * object doc). Returns the upgraded index —
     * bit-identical to `TextIndex.write` over `newCorpus` (spec-pinned).
     */
   def upgradeTextIndex(s: SparkSession, dir: String, newCorpus: DataFrame,
       d: Delta): TextIndex.Index = {
     val gone = d.removed.unionByName(d.changed).select(col("id").as("doc_id"))
-    val epochMode = TextIndex.isEpochLayout(s, dir)
     // refresh = false: the append below refreshes stats from the
     // post-append live set; nothing serves between the two (round 18)
     TextIndex.delete(s, dir, gone, Tombstones.AutoCompactRows, refresh = false)
-    if (!epochMode) TextIndex.compact(s, dir)
     val freshIds = d.added.unionByName(d.changed).select(col("id").as("doc_id"))
     TextIndex.append(s, dir, newCorpus.join(freshIds, Seq("doc_id"), "left_semi"))
   }
@@ -99,8 +95,7 @@ object Release {
   }
 
   /** Roll a persisted [[DedupIndex]] to `newCorpus`: tombstone, then
-    * append — O(delta) on an epoch layout, eager compact only for
-    * legacy layouts (as in [[upgradeTextIndex]]). The signature hash is
+    * append — O(delta), as in [[upgradeTextIndex]]. The signature hash is
     * stateless (no trained quantizer), so the upgraded index serves
     * EXACTLY as a fresh `DedupIndex.write` over `newCorpus` —
     * ReleaseSpec pins bit-identical [[DedupIndex.queryBatch]] results.
@@ -108,9 +103,7 @@ object Release {
   def upgradeDedupIndex(s: SparkSession, dir: String, newCorpus: DataFrame,
       d: Delta): DedupIndex.Index = {
     val gone = d.removed.unionByName(d.changed).select(col("id").as("doc_id"))
-    val epochMode = DedupIndex.isEpochLayout(s, dir)
     DedupIndex.delete(s, dir, gone)
-    if (!epochMode) DedupIndex.compact(s, dir)
     val freshIds = d.added.unionByName(d.changed).select(col("id").as("doc_id"))
     DedupIndex.append(s, dir, newCorpus.join(freshIds, Seq("doc_id"), "left_semi"))
   }

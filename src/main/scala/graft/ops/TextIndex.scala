@@ -16,8 +16,13 @@ import org.apache.spark.sql.types.DecimalType
   *  - `doclens/`   (doc_id, dl, ep)        — per-document token counts
   *  - `stats/`     (n_docs, n_toks)        — one row of corpus aggregates
   *  - `positions/` (term, doc_id, pos, ep) — positional postings ([[phraseSearch]])
+  *  - `meta/`     (buckets)               — the persisted bucket count
   *  - `epoch/`, `tombstones/` — the [[Tombstones]] epoch marker and
   *    ledger (epoch-aware deletes: re-append without compaction)
+  *
+  * This is the only layout served: [[load]] and [[append]] refuse a
+  * directory without `meta/` ([[Tombstones.readBuckets]]), which
+  * predates the current format and must be rebuilt with [[write]].
   *
   * [[search]] filters `postings` by the query terms FIRST — an `IN`
   * predicate that reaches the parquet scan, so serve cost is
@@ -40,7 +45,7 @@ import org.apache.spark.sql.types.DecimalType
   *
   * At 100 TB: postings ≈ one row per distinct (term, doc) — written once
   * per corpus build, PARTITIONED by a corpus-sized term hash (64-way
-  * floor; [[bucketsFor]], persisted in `meta/`), so a query's term
+  * floor; [[Tombstones.bucketsFor]], persisted in `meta/`), so a query's term
   * predicate prunes to its buckets' directories before any file is
   * opened; doclens is #docs rows; stats is one row. Serving never scans
   * the corpus.
@@ -48,7 +53,7 @@ import org.apache.spark.sql.types.DecimalType
 object TextIndex {
 
   case class Index(postings: DataFrame, doclens: DataFrame, stats: DataFrame,
-    positions: DataFrame, buckets: Int = DefaultBuckets)
+    positions: DataFrame, buckets: Int)
 
   /** q146's whitespace tokenization, verbatim — parity is the contract;
     * positions carried for the phrase index.
@@ -57,16 +62,11 @@ object TextIndex {
     docs.select(col("doc_id"),
       posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
 
-  /** Term-hash partition count for the postings/positions layout. Serve
-    * queries name their terms, so bucketing by `xxhash64(term)` turns
-    * the term predicate into PARTITION pruning — each query term opens
-    * one directory of the index, never the whole postings table.
-    * Bucket-count floor, and the assumed count for layouts written
-    * before the count was persisted (rounds ≤ 10 always wrote 64).
-    */
-  private[graft] val DefaultBuckets = 64
-
-  /** Target documents per term-hash bucket — [[DedupIndex.DocsPerBucket]]'s
+  /** Target documents per term-hash bucket of the postings/positions
+    * layout. Serve queries name their terms, so bucketing by
+    * `xxhash64(term)` turns the term predicate into PARTITION pruning —
+    * each query term opens one directory of the index, never the whole
+    * postings table. The size follows [[DedupIndex.DocsPerBucket]]'s
     * bytes-per-bucket argument, CALIBRATED BY MEASUREMENT at the 5M-doc
     * diversity rehearsal (BENCH.md round 11): unlike
     * the dedup bands, postings reads carry a `term IN` predicate that
@@ -81,34 +81,8 @@ object TextIndex {
     */
   private[graft] val DocsPerBucket = 80000L
 
-  /** CORPUS-SIZED bucket count, clamped to [64, 4096] — decided once at
-    * [[writeDocs]], persisted in `meta/`, reused by every
-    * append/compact/serve (mixing counts within one layout would break
-    * the serve-time bucket equi-pruning).
-    */
-  private[graft] def bucketsFor(nDocs: Long): Int =
-    math.max(DefaultBuckets.toLong,
-      math.min(4096L, nDocs / DocsPerBucket)).toInt
-
   private def bktCol(nB: Int): Column =
     pmod(xxhash64(col("term")), lit(nB.toLong)).cast("int")
-
-  private def writeMeta(s: SparkSession, dir: String, nB: Int): Unit = {
-    import s.implicits._
-    Seq(nB).toDF("buckets").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  /** The layout's bucket count — persisted at [[writeDocs]]; absent on
-    * pre-round-11 layouts, which were all written with 64.
-    */
-  private def readBuckets(s: SparkSession, dir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/meta")
-    if (p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      MetaScalar.scalarLong(s, p.toString, "buckets").map(_.toInt)
-        .getOrElse(s.read.parquet(p.toString).collect()(0).getInt(0))
-    else DefaultBuckets
-  }
 
   /** Partition buckets of the query terms — computed with the SAME
     * xxhash64 expression the write side uses, via a row-per-term local
@@ -120,11 +94,9 @@ object TextIndex {
       .collect().map(_.getInt(0)).toSeq
   }
 
-  /** `ep = None` writes the legacy (epoch-less) schema — appends to a
-    * pre-epoch layout must match its files' columns.
-    */
+  /** Write one batch, every row stamped with epoch `ep`. */
   private def writeBatch(docs: DataFrame, dir: String, mode: String,
-      ep: Option[Long], nB: Int): Unit = graft.Jobs.labeled(docs.sparkSession, "text-index: writeBatch") {
+      ep: Long, nB: Int): Unit = graft.Jobs.labeled(docs.sparkSession, "text-index: writeBatch") {
     // spread a skinny scan/checkpoint input before tokenizing (round 19,
     // guide §2.5); no-op on already-parallel or exchange-bearing inputs.
     // For APPENDS the token table is additionally checkpointed: the
@@ -137,8 +109,7 @@ object TextIndex {
     // consumer survives the writes).
     val t0 = toks(graft.Spread.lazyAuto(docs))
     val t = if (mode == "append") t0.localCheckpoint(true) else t0
-    def stamp(df: DataFrame): DataFrame =
-      ep.fold(df)(e => df.withColumn("ep", lit(e)))
+    def stamp(df: DataFrame): DataFrame = df.withColumn("ep", lit(ep))
     // Repartition by the partition column before every dynamic-
     // partitioned write (round 18, guide §6): without it each write
     // task emits a file per bucket it happens to hold (tasks × buckets
@@ -162,37 +133,13 @@ object TextIndex {
     } finally if (mode == "append") graft.Reliable.release(t)
   }
 
-  /** Epoch layouts stamp every row with its batch epoch
-    * ([[Tombstones]]); pre-epoch layouts keep the legacy id-only
-    * tombstone semantics until a [[compact]] upgrades them.
-    */
-  private[graft] def isEpochLayout(s: SparkSession, dir: String): Boolean =
-    s.read.parquet(s"$dir/doclens").columns.contains("ep")
-
-  private def tombstones(s: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(s.read.parquet(p.toString).select(col("doc_id")))
-    else None
-  }
-
-  /** The layout-appropriate liveness fold: epoch comparison on epoch
-    * layouts, id anti-join on legacy ones. Applied BEFORE any
-    * dedup-on-read, since an id re-appended after a deferred delete has
-    * rows at several epochs and only the liveness filter knows which
-    * one serves.
-    */
-  private def liveFold(s: SparkSession, dir: String, epochMode: Boolean)(
-      df: DataFrame): DataFrame =
-    if (epochMode) Tombstones.liveByEpoch(df, Tombstones.tombMax(s, dir, "doc_id"), "doc_id")
-    else tombstones(s, dir).fold(df)(t => df.join(t, Seq("doc_id"), "left_anti"))
-
-  /** doclens minus tombstones — the live document set every statistic
-    * must be computed from once deletes exist.
+  /** doclens rows whose epoch postdates their id's newest tombstone —
+    * the live document set every statistic is computed from, and
+    * [[append]]'s done-marker.
     */
   private def liveDoclens(s: SparkSession, dir: String): DataFrame =
-    liveFold(s, dir, isEpochLayout(s, dir))(s.read.parquet(s"$dir/doclens"))
-      .dropDuplicates("doc_id")
+    Tombstones.liveByEpoch(s.read.parquet(s"$dir/doclens"),
+      Tombstones.tombMax(s, dir, "doc_id"), "doc_id")
 
   /** Recompute the one-row stats from the LIVE doclens (doc-count rows —
     * one long pair per document, not corpus-sized) after a build, append,
@@ -201,7 +148,7 @@ object TextIndex {
     * over the remaining corpus (TextIndexSpec).
     */
   private def refreshStats(s: SparkSession, dir: String): Unit = graft.Jobs.labeled(s, "text-index: refreshStats") {
-    val agg = liveDoclens(s, dir)
+    val agg = liveDoclens(s, dir).dropDuplicates("doc_id")
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("n_toks"))
       .collect()(0)
     import s.implicits._
@@ -224,11 +171,11 @@ object TextIndex {
     */
   def writeDocs(s: SparkSession, docs: DataFrame, dir: String,
       bucketsOverride: Option[Int] = None): Unit = {
-    val nB = bucketsOverride.getOrElse(bucketsFor(docs.count()))
-    writeMeta(s, dir, nB)
-    writeBatch(docs, dir, "overwrite", Some(0L), nB)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val nB = bucketsOverride.getOrElse(
+      Tombstones.bucketsFor(docs.count(), DocsPerBucket))
+    Tombstones.writeMeta(s, dir, nB)
+    writeBatch(docs, dir, "overwrite", 0L, nB)
+    Tombstones.dropLedger(s, dir)
     Tombstones.writeEpoch(s, dir, 0L)
     refreshStats(s, dir)
   }
@@ -241,14 +188,16 @@ object TextIndex {
     * [[search]]'s term filter still pushes below it to the scan.
     */
   def load(s: SparkSession, dir: String): Index = {
+    val nB = Tombstones.readBuckets(s, dir) // the format gate
     // Liveness folds FIRST (deleted docs vanish from every serve
-    // surface — on epoch layouts a re-appended id also has dead
-    // lower-epoch rows that must not reach the dedup), then the
-    // defensive dedup. `bkt` is functionally determined by `term`, but
-    // including it in the dedup keys is what lets the serve-time bucket
-    // predicate push BELOW the dedup to the scan as a partition filter;
-    // the term/bucket predicates also push below the liveness join.
-    val live = liveFold(s, dir, isEpochLayout(s, dir)) _
+    // surface — a re-appended id also has dead lower-epoch rows that
+    // must not reach the dedup), then the defensive dedup. `bkt` is
+    // functionally determined by `term`, but including it in the dedup
+    // keys is what lets the serve-time bucket predicate push BELOW the
+    // dedup to the scan as a partition filter; the term/bucket
+    // predicates also push below the liveness join.
+    val tMax = Tombstones.tombMax(s, dir, "doc_id")
+    def live(df: DataFrame): DataFrame = Tombstones.liveByEpoch(df, tMax, "doc_id")
     Index(
       postings = live(s.read.parquet(s"$dir/postings"))
         .dropDuplicates("bkt", "term", "doc_id"),
@@ -256,20 +205,18 @@ object TextIndex {
       stats = s.read.parquet(s"$dir/stats"),
       positions = live(s.read.parquet(s"$dir/positions"))
         .dropDuplicates("bkt", "term", "doc_id", "pos"),
-      buckets = readBuckets(s, dir))
+      buckets = nB)
   }
 
   /** Delete documents by id — [[AnnIndex.delete]]'s tombstone design on
     * the lexical index: ids append to a `tombstones/` table, [[load]]
-    * anti-joins it onto postings/doclens/positions (BM25, phrase and df
+    * folds it onto postings/doclens/positions (BM25, phrase and df
     * all serve from the live set), and the one-row stats refresh from
     * the live doclens so idf/avgdl shift exactly as a rebuild's would.
     * O(batch + #docs) per delete — index files untouched until
-    * [[compact]]. On an epoch layout the tombstone records the current
-    * epoch, so a later [[append]] RE-ADDS the id without compacting
-    * (the release-upgrade fast path); on a legacy layout a tombstoned
-    * id blocks entirely until compact, as in [[AnnIndex]]. Once the
-    * ledger outgrows `autoCompactAt` rows
+    * [[compact]]. The tombstone records the current epoch, so a later
+    * [[append]] RE-ADDS the id without compacting (the release-upgrade
+    * fast path). Once the ledger outgrows `autoCompactAt` rows
     * ([[Tombstones.AutoCompactRows]]) the delete compacts inline, so
     * the broadcast side stays bounded over any delete sequence.
     */
@@ -286,17 +233,9 @@ object TextIndex {
     */
   private[ops] def delete(s: SparkSession, dir: String, ids: DataFrame,
       autoCompactAt: Long, refresh: Boolean): Index = graft.Jobs.labeled(s, "text-index: delete") {
-    val t = ids.select(col("doc_id"))
-    // one ledger file per delete batch (round 18); repartition(1), not
-    // coalesce(1): coalesce propagates the single partition UP the
-    // narrow lineage, so computing a large delete batch's ids would run
-    // one-task (round-18 advice) — repartition confines the 1-partition
-    // constraint to the write itself
-    (if (isEpochLayout(s, dir))
-       t.withColumn("te", lit(Tombstones.readEpoch(s, dir)))
-     else t).repartition(1).write.mode("append").parquet(s"$dir/tombstones")
-    if (MetaScalar.rowCount(s, s"$dir/tombstones").getOrElse(
-        s.read.parquet(s"$dir/tombstones").count()) >= autoCompactAt)
+    Tombstones.readBuckets(s, dir) // the format gate, before the ledger write
+    if (Tombstones.appendLedger(s, dir, ids.select(col("doc_id")),
+        Some(Tombstones.readEpoch(s, dir)), autoCompactAt))
       return compact(s, dir) // refreshes stats itself after the rewrite
     if (refresh) refreshStats(s, dir)
     load(s, dir)
@@ -309,12 +248,10 @@ object TextIndex {
     * torn-append rows. Run when the tombstone set outgrows a broadcast.
     */
   def compact(s: SparkSession, dir: String): Index = {
-    tombstones(s, dir).foreach { _ =>
+    Tombstones.ledger(s, dir).foreach { _ =>
       val live = load(s, dir) // tombstones already folded, rows deduped
-      // the rewrite restarts epoch history at 0 (no tombstones survive
-      // it) — this is also where a legacy layout upgrades to the epoch
-      // schema, since every row is re-stamped
-      def ep0(df: DataFrame): DataFrame = df.drop("ep").withColumn("ep", lit(0L))
+      // the rewrite restarts epoch history at 0 (no tombstones survive it)
+      def ep0(df: DataFrame): DataFrame = df.withColumn("ep", lit(0L))
       // localCheckpoint so each rewrite doesn't race its own input scan
       ep0(live.postings).localCheckpoint(true)
         .transform(Layout.writeByBucket(_, col("bkt")))
@@ -324,8 +261,7 @@ object TextIndex {
         .write.partitionBy("bkt").mode("overwrite").parquet(s"$dir/positions")
       ep0(live.doclens).localCheckpoint(true)
         .write.mode("overwrite").parquet(s"$dir/doclens")
-      val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      Tombstones.dropLedger(s, dir)
       Tombstones.writeEpoch(s, dir, 0L)
       refreshStats(s, dir)
     }
@@ -340,22 +276,14 @@ object TextIndex {
     * IDEMPOTENT under at-least-once replay: doc_ids already present in
     * doclens (written last — the batch's done-marker) are skipped, and a
     * torn batch's partial rows are healed by [[load]]'s dedup once the
-    * replay completes them. On an epoch layout "present" means LIVE —
-    * a tombstoned id re-appends at a fresh epoch (its dead rows stay
-    * invisible behind the tombstone); on a legacy layout it stays
-    * blocked until [[compact]].
+    * replay completes them. "Present" means LIVE — a tombstoned id
+    * re-appends at a fresh epoch (its dead rows stay invisible behind
+    * the tombstone).
     */
   def append(s: SparkSession, dir: String, docs: DataFrame): Index = graft.Jobs.labeled(s, "text-index: append") {
-    val epochMode = isEpochLayout(s, dir)
-    // epoch mode: done = LIVE ids (a tombstoned id re-appends); legacy:
-    // done = ids ever written (tombstoned ids stay blocked — the
-    // pre-epoch contract, byte-identical behavior)
-    val done =
-      if (epochMode)
-        liveFold(s, dir, epochMode)(s.read.parquet(s"$dir/doclens"))
-          .select(col("doc_id"))
-      else s.read.parquet(s"$dir/doclens").select(col("doc_id"))
-    val ep = if (epochMode) Some(Tombstones.bumpEpoch(s, dir)) else None
+    val nB = Tombstones.readBuckets(s, dir) // the format gate
+    val done = liveDoclens(s, dir).select(col("doc_id"))
+    val ep = Tombstones.bumpEpoch(s, dir)
     // batch-sized materialization: writeBatch runs THREE writes, and
     // without the checkpoint each one lazily re-runs the anti-join and
     // whatever lineage `docs` carries (for Release upgrades, a semi-join
@@ -363,7 +291,7 @@ object TextIndex {
     // upgrade rebuild-priced). Same recipe as [[DedupIndex.append]];
     // released on every exit, like writeBatch's token checkpoint.
     val fresh = docs.join(done, Seq("doc_id"), "left_anti").localCheckpoint(true)
-    try writeBatch(fresh, dir, "append", ep, readBuckets(s, dir))
+    try writeBatch(fresh, dir, "append", ep, nB)
     finally graft.Reliable.release(fresh)
     refreshStats(s, dir)
     load(s, dir)

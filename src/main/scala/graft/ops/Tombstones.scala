@@ -1,36 +1,39 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared tombstone-ledger policy for the persisted-index family
-  * ([[AnnIndex]], [[TextIndex]], [[DedupIndex]]). Each index's `delete`
-  * appends ids to a `tombstones/` parquet ledger that `load` folds
-  * (broadcast) onto every serve surface — O(batch) deletes, but the
-  * ledger grows unboundedly between compacts.
+/** The persisted-index family's shared layout module: the `meta/`
+  * bucket count, the `epoch/` marker and the `tombstones/` ledger, for
+  * [[AnnIndex]], [[TextIndex]], [[DedupIndex]] and (`meta/` only)
+  * [[LmModel]]. Each index's `delete` appends ids to a `tombstones/`
+  * parquet ledger that `load` folds (broadcast) onto every serve
+  * surface — O(batch) deletes, with the ledger bounded by the
+  * [[AutoCompactRows]] trip wire.
   *
-  * EPOCH-AWARE tombstones (round 10): layouts written by the current
-  * `write`/`compact` stamp every data row with the batch's epoch (`ep`,
-  * a monotone long handed out by the `epoch/` one-row marker), and
-  * tombstones record the epoch they were laid at (`te`). A row is live
-  * iff `ep > te` of its id's newest tombstone — so delete-then-reappend
-  * of an id works WITHOUT a compaction: the re-appended rows carry a
-  * higher epoch than the tombstone that killed the old ones. This is
-  * what makes a corpus-release upgrade O(delta): the eager
-  * compact-per-release (measured rebuild-priced on text/dedup — the
-  * postings/bands rewrite is corpus-order I/O, BENCH.md round 10) is
-  * replaced by the [[AutoCompactRows]] amortization. The marker is
-  * bumped BEFORE a batch's data lands, so a tombstone laid at the
-  * current marker always covers every row already written; the
-  * remaining at-least-once caveat (shared with the pre-epoch design) is
-  * that interleaving a delete between an append's crash and its replay
-  * re-lands the batch — the single-writer intake contract replays a
-  * failed batch before proceeding.
+  * EPOCH-AWARE tombstones (Text/Dedup): `write`/`compact` stamp every
+  * data row with the batch's epoch (`ep`, a monotone long handed out by
+  * the `epoch/` one-row marker), and tombstones record the epoch they
+  * were laid at (`te`). A row is live iff `ep > te` of its id's newest
+  * tombstone — so delete-then-reappend of an id works WITHOUT a
+  * compaction: the re-appended rows carry a higher epoch than the
+  * tombstone that killed the old ones. This is what makes a
+  * corpus-release upgrade O(delta): the table rewrite amortizes across
+  * releases via [[AutoCompactRows]] instead of landing on every one.
+  * The marker is bumped BEFORE a batch's data lands, so a tombstone
+  * laid at the current marker always covers every row already written;
+  * the remaining at-least-once caveat is that interleaving a delete
+  * between an append's crash and its replay re-lands the batch — the
+  * single-writer intake contract replays a failed batch before
+  * proceeding. [[AnnIndex]] keeps an id-only ledger: a tombstoned id is
+  * blocked until its compact.
   *
-  * Layouts written before the epoch column existed (no `ep` in the
-  * data, id-only tombstones) keep the legacy semantics end-to-end:
-  * anti-join liveness, re-append blocked until compact — and a compact
-  * upgrades them to the epoch layout in place.
+  * ONE on-disk format: every Text/Dedup/LM layout carries `meta/`, and
+  * [[readBuckets]] is the format gate — a directory without it
+  * predates the current format (epoch-less tables, `te`-less ledgers,
+  * flat sigs/bigrams all do) and is refused with a named error instead
+  * of being served under guessed semantics. Rebuild it with `write()`.
   */
 object Tombstones {
 
@@ -45,9 +48,38 @@ object Tombstones {
     */
   val AutoCompactRows = 1000000L
 
+  /** Layout-sized bucket count: `n / perBucket` clamped to [64, 4096].
+    * Each family passes its own bytes-per-bucket constant; the count is
+    * decided once at `write`, persisted by [[writeMeta]], and reused by
+    * every append/compact/serve (mixing counts within one layout would
+    * break the serve-time bucket equi-pruning).
+    */
+  def bucketsFor(n: Long, perBucket: Long): Int =
+    math.max(64L, math.min(4096L, n / perBucket)).toInt
+
+  /** Persist the layout's bucket count as the one-row `meta/` table. */
+  def writeMeta(s: SparkSession, dir: String, buckets: Int): Unit = {
+    import s.implicits._
+    Seq(buckets).toDF("buckets").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/meta")
+  }
+
+  /** The layout's persisted bucket count — and the family's format
+    * gate: a layout without `meta/` predates the current index format
+    * and fails here, before anything reads its tables.
+    */
+  def readBuckets(s: SparkSession, dir: String): Int = {
+    val p = new Path(s"$dir/meta")
+    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
+      throw new IllegalStateException(
+        s"$dir predates the current index format (no meta/); rebuild it with write()")
+    MetaScalar.scalarLong(s, p.toString, "buckets").map(_.toInt)
+      .getOrElse(s.read.parquet(p.toString).collect()(0).getInt(0))
+  }
+
   /** Highest epoch handed out for writing at `dir` — 0 if no marker
-    * exists (fresh or legacy layout). Falls back to the staging copy
-    * ([[writeEpoch]]'s `epoch.tmp`) when the final marker is missing: a
+    * exists. Falls back to the staging copy ([[writeEpoch]]'s
+    * `epoch.tmp`) when the final marker is missing: a
     * crash between writeEpoch's delete and rename leaves exactly that
     * state, and the staging copy was fully written before the delete —
     * without the fallback the epoch would silently reset to 0, letting
@@ -57,8 +89,8 @@ object Tombstones {
     * epoch reset, so the marker write itself must be crash-safe.
     */
   def readEpoch(s: SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/epoch")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/epoch.tmp")
+    val p = new Path(s"$dir/epoch")
+    val tmp = new Path(s"$dir/epoch.tmp")
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     // footer-stats fast path (MetaScalar, round 18): the marker is a
     // coalesce(1) one-row write, so min==max==value in the file footer
@@ -81,8 +113,8 @@ object Tombstones {
     */
   def writeEpoch(s: SparkSession, dir: String, e: Long): Unit = graft.Jobs.labeled(s, "tombstones: writeEpoch") {
     import s.implicits._
-    val p = new org.apache.hadoop.fs.Path(s"$dir/epoch")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/epoch.tmp")
+    val p = new Path(s"$dir/epoch")
+    val tmp = new Path(s"$dir/epoch.tmp")
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     Seq(e).toDF("epoch").coalesce(1)
       .write.mode("overwrite").parquet(tmp.toString)
@@ -99,24 +131,49 @@ object Tombstones {
     next
   }
 
+  /** The `tombstones/` ledger as written (ids, plus `te` on epoch
+    * layouts), or None when no ledger exists.
+    */
+  def ledger(s: SparkSession, dir: String): Option[DataFrame] = {
+    val p = new Path(s"$dir/tombstones")
+    if (p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
+      Some(s.read.parquet(p.toString))
+    else None
+  }
+
   /** The newest tombstone epoch per id — the broadcast side of every
     * epoch-aware liveness join. None when no ledger exists.
     */
-  def tombMax(s: SparkSession, dir: String, idCol: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    if (p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)) {
-      val raw = s.read.parquet(p.toString)
-      // a legacy (te-less) ledger row kills the id at EVERY epoch —
-      // exactly the pre-epoch anti-join semantics it was written under
-      val te = if (raw.columns.contains("te")) raw
-        else raw.withColumn("te", lit(Long.MaxValue))
-      Some(te.groupBy(col(idCol)).agg(max(col("te")).as("te")))
-    } else None
+  def tombMax(s: SparkSession, dir: String, idCol: String): Option[DataFrame] =
+    ledger(s, dir).map(_.groupBy(col(idCol)).agg(max(col("te")).as("te")))
+
+  /** Append `ids` to the ledger — one file per delete batch, stamped
+    * `te = epoch` when an epoch is given — and report whether the
+    * ledger has reached `autoCompactAt` rows (a footer count, not a
+    * scan), i.e. whether the caller must compact now.
+    * repartition(1), not coalesce(1): coalesce propagates the single
+    * partition UP the narrow lineage, so computing a large delete
+    * batch's ids would run one-task — repartition confines the
+    * 1-partition constraint to the write itself.
+    */
+  def appendLedger(s: SparkSession, dir: String, ids: DataFrame,
+      epoch: Option[Long], autoCompactAt: Long): Boolean = {
+    val p = s"$dir/tombstones"
+    epoch.fold(ids)(e => ids.withColumn("te", lit(e)))
+      .repartition(1).write.mode("append").parquet(p)
+    MetaScalar.rowCount(s, p).getOrElse(s.read.parquet(p).count()) >= autoCompactAt
+  }
+
+  /** Drop the ledger — after a `compact` folded it, or before a `write`
+    * that replaces the index.
+    */
+  def dropLedger(s: SparkSession, dir: String): Unit = {
+    val p = new Path(s"$dir/tombstones")
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
   /** Epoch-aware liveness: keep rows whose `ep` postdates their id's
-    * newest tombstone (or that have no tombstone at all). Same
-    * broadcast-join cost class as the legacy anti-join.
+    * newest tombstone (or that have no tombstone at all).
     */
   def liveByEpoch(df: DataFrame, tomb: Option[DataFrame],
       idCol: String): DataFrame =

@@ -405,6 +405,29 @@ class AnnIndexSpec extends SparkSuite {
       s"exact-cover path diverged:\n fast ${fast.toSeq}\nlegacy ${legacy.toSeq}")
   }
 
+  test("searchRerank sizes itself from parquet footers on an index without tombstones") {
+    // autoNprobe's list count and the exact-cover gate's membership come
+    // from the file footers, so building the frame launches no count()
+    val dir = java.nio.file.Files.createTempDirectory("graft-annfooter").toString
+    AnnIndex.writeScaled(spark, sf0001, dir, nListsOverride = Some(16))
+    val ix = AnnIndex.load(spark, dir)
+    val e = Tables.embeddings(spark, sf0001)
+      .select($"vec_id", graft.functions.VectorFunctions.asDouble($"embedding").as("v"))
+      .localCheckpoint(true)
+    val queries = e.filter($"vec_id" < 5).select($"vec_id".as("qid"), $"v")
+    // exact cover: every list probed, shortlist covers the index
+    val (_, coverJobs) = jobsDuring(AnnIndex.searchRerank(spark, ix, e, queries,
+      k = 6, frac = 1.0, shortlistPerProbe = 100000, excludeSelf = true))
+    assert(coverJobs === 0)
+    // ADC shortlist path: only search's own probed-list collect runs
+    val (_, adcJobs) = jobsDuring(AnnIndex.searchRerank(spark, ix, e, queries,
+      k = 6, frac = 0.15, excludeSelf = true))
+    val np = AnnIndex.autoNprobe(ix, 0.15)
+    val (_, searchJobs) = jobsDuring(AnnIndex.search(spark, ix, queries,
+      nprobe = np, k = 64 * np, excludeSelf = true))
+    assert(searchJobs > 0 && adcJobs === searchJobs)
+  }
+
   test("streaming appends maintain the index incrementally (foreachBatch)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-annix7").toString
     AnnIndex.write(spark, sf0001, dir)

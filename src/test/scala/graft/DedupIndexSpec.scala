@@ -140,9 +140,10 @@ class DedupIndexSpec extends SparkSuite {
     import spark.implicits._
     // the sizing function: floor below ~10M docs, proportional above,
     // capped where directory counts stop paying for themselves
-    assert(graft.ops.DedupIndex.bucketsFor(10000L) == 64)
-    assert(graft.ops.DedupIndex.bucketsFor(20000000L) == 125)
-    assert(graft.ops.DedupIndex.bucketsFor(Long.MaxValue / 2) == 4096)
+    def bucketsFor(n: Long) = graft.ops.Tombstones.bucketsFor(n, DedupIndex.DocsPerBucket)
+    assert(bucketsFor(10000L) == 64)
+    assert(bucketsFor(20000000L) == 125)
+    assert(bucketsFor(Long.MaxValue / 2) == 4096)
     // a NON-default layout (override stands in for a >10M-doc corpus):
     // every serve path must honor the persisted count, because bands
     // hashed mod 100 are invisible to a reader assuming 64
@@ -169,32 +170,6 @@ class DedupIndexSpec extends SparkSuite {
           .localCheckpoint(true)).collect()
     assert(got2.exists(r => r.getLong(1) == 950000L && r.getDouble(2) == 1.0),
       s"appended doc not served through the sized layout: ${got2.toSeq}")
-  }
-
-  test("a pre-bucketed sigs layout (no sbkt) serves identically through the fallback read") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-dix-compat").toString
-    DedupIndex.write(spark, corpus, dir)
-    val probe = corpus.limit(8)
-      .withColumn("doc_id", col("doc_id") + 700000L).localCheckpoint(true)
-    val expected = DedupIndex.queryBatch(spark, dir, probe).collect().toSeq
-    assert(expected.nonEmpty, "probe found no pairs — compat test needs matches")
-    // rewrite sigs/ WITHOUT the sbkt partitioning, simulating a layout
-    // written before round 10's sig bucketing
-    val flat = spark.read.parquet(s"$dir/sigs")
-      .select(col("doc_id"), col("sig")).localCheckpoint(true)
-    flat.write.mode("overwrite").parquet(s"$dir/sigs")
-    assert(!spark.read.parquet(s"$dir/sigs").columns.contains("sbkt"))
-    val got = DedupIndex.queryBatch(spark, dir, probe).collect().toSeq
-    assert(got == expected, s"fallback read diverged: $got vs $expected")
-    // and append still round-trips on the downgraded layout
-    DedupIndex.append(spark, dir,
-      Seq((770000L, "ppqa ppqb ppqc ppqd ppqe")).toDF("doc_id", "text"))
-    val got2 = DedupIndex.queryBatch(spark, dir,
-        Seq((780000L, "ppqa ppqb ppqc ppqd ppqe")).toDF("doc_id", "text")
-          .localCheckpoint(true)).collect()
-    assert(got2.exists(r => r.getLong(1) == 770000L && r.getDouble(2) == 1.0),
-      s"append through the downgraded layout not served: ${got2.toSeq}")
   }
 
   test("queryBatch reads only the batch's band buckets (partition filter reaches the scan)") {

@@ -47,6 +47,10 @@ class ExtensionsSpec extends AnyFunSuite {
         "SELECT graft_outer_upper(array(2.0d, 3.0d)) AS o").collect().head
       assert(row3.getSeq[Double](0) == Seq(4.0, 6.0, 9.0))
       assert(row2.getSeq[String](3).toSet == Set("abc", "bc", "ac", "ab", "c", "b", "a"))
+      // the residual kernel ResidualPQ encodes with
+      val row4 = spark.sql(
+        "SELECT graft_vec_sub(array(5.0d, 3.0d), array(1.0d, 4.0d)) AS r").collect().head
+      assert(row4.getSeq[Double](0) == Seq(4.0, -1.0))
       // planner strategy injected too: the native top-k node plans
       val topk = plans.TopK.perGroup(
         Tables.lineitem(spark, "/root/testdata/sf0.001")

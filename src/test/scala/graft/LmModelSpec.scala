@@ -102,44 +102,6 @@ class LmModelSpec extends SparkSuite {
     assert(!analyzed.toLowerCase.contains("hint"), analyzed.take(3000))
   }
 
-  test("a legacy baked-probability layout serves identically; upgrade refuses it") {
-    // reconstruct the HISTORICAL pre-round-10 layout: bigrams carrying
-    // p_cond/p_uni ppm, unigrams carrying p_uni, and NO bkt partition
-    // column at all (flat tables — bucket partitioning arrived with the
-    // counts), byte-for-byte the old write's arithmetic. Serving it
-    // exercises scoreBatch's no-bkt fallback read.
-    val legacy = Files.createTempDirectory("graft_lm_legacy").toString
-    val hud = graft.Det.halfUpDiv _
-    val uni = spark.read.parquet(s"$dir/unigrams").select($"w", $"c")
-    val n = lit(spark.read.parquet(s"$dir/total").collect()(0).getLong(0))
-    spark.read.parquet(s"$dir/bigrams").select($"gram", $"c12")
-      .withColumn("w1", split($"gram", " ").getItem(0))
-      .withColumn("w2", split($"gram", " ").getItem(1))
-      .join(uni.select($"w".as("w1"), $"c".as("c1")), Seq("w1"))
-      .join(uni.select($"w".as("w2"), $"c".as("c2")), Seq("w2"))
-      .select($"gram", hud($"c12" * 1000000L, $"c1").as("p_cond"),
-        hud($"c2" * 1000000L, n).as("p_uni"))
-      .write.mode("overwrite").parquet(s"$legacy/bigrams")
-    uni.select($"w", hud($"c" * 1000000L, n).as("p_uni"))
-      .write.mode("overwrite").parquet(s"$legacy/unigrams")
-    val batch = Tables.documents(spark, sf0001).limit(60)
-      .unionByName(Seq((9400001L, "the zzleg quick", "en", "src", 17L))
-        .toDF("doc_id", "text", "lang", "source", "n_chars"))
-      .localCheckpoint(true)
-    val got = LmModel.scoreBatch(spark, legacy, batch)
-      .orderBy($"doc_id").collect().toSeq
-    val want = LmModel.scoreBatch(spark, dir, batch)
-      .orderBy($"doc_id").collect().toSeq
-    assert(got.nonEmpty && got == want, "legacy layout served differently")
-    // the count algebra has nothing to merge into baked probabilities
-    val ex = intercept[IllegalArgumentException] {
-      LmModel.upgrade(spark, legacy,
-        Seq((1L, "a b")).toDF("doc_id", "text"),
-        Seq.empty[(Long, String)].toDF("doc_id", "text"))
-    }
-    assert(ex.getMessage.contains("retrain"))
-  }
-
   test("a model-sized (non-64) bucket layout scores identically and prunes with the persisted count") {
     // bucketsFor only leaves its 64 floor past ~64M distinct bigrams —
     // unreachable at oracle scale — so a non-default count is exercised
@@ -233,8 +195,8 @@ class LmModelSpec extends SparkSuite {
     // re-baselining against the upgraded model restores the monitor
     LmModel.writeScoreStats(spark, d, docs)
     assert(LmModel.scoreDrift(spark, d, docs).count() == 2L)
-    // write() is the other documented retrain path (upgrade's require
-    // message sends legacy layouts to it) — an in-place retrain must
+    // write() is the other documented retrain path (the format gate
+    // sends pre-meta layouts to it) — an in-place retrain must
     // invalidate the baseline through the same shared tail
     LmModel.write(spark, docs.limit(50), d)
     val ex2 = intercept[Exception] { LmModel.scoreDrift(spark, d, docs).count() }

@@ -57,12 +57,20 @@ class MetaScalarSpec extends SparkSuite {
       .write.mode("append").parquet(s"$dir/flat")
     assert(MetaScalar.rowCount(spark, s"$dir/flat") ===
       Some(spark.read.parquet(s"$dir/flat").count()))
+    // scanRowCount: the same count for a bare scan of the dir; None for
+    // any plan beyond the scan (a filter, a folded tombstone ledger)
+    val scan = spark.read.parquet(s"$dir/flat")
+    assert(MetaScalar.scanRowCount(scan) === Some(scan.count()))
+    assert(MetaScalar.scanRowCount(scan.filter(col("doc_id") > 2)).isEmpty)
+    assert(MetaScalar.scanRowCount(
+      scan.join(Seq(2L).toDF("doc_id"), Seq("doc_id"), "left_anti")).isEmpty)
     // empty-but-existing dir shape is not written by this repo; absent → None
     assert(MetaScalar.rowCount(spark, s"$dir/absent").isEmpty)
     // partitioned layout (subdirectories) → None, caller falls back
     Seq((1L, 0), (2L, 1)).toDF("doc_id", "bkt")
       .write.partitionBy("bkt").mode("overwrite").parquet(s"$dir/part")
     assert(MetaScalar.rowCount(spark, s"$dir/part").isEmpty)
+    assert(MetaScalar.scanRowCount(spark.read.parquet(s"$dir/part")).isEmpty)
   }
 
   test("rowCount skips hidden files, as Spark's reader does") {

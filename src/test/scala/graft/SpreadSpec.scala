@@ -61,30 +61,9 @@ class SpreadSpec extends SparkSuite {
     t.createOrReplaceTempView("spread_subq")
     val df = spark.sql(
       "SELECT x FROM spread_subq WHERE x > (SELECT avg(x) FROM spread_subq)")
-    // the listener bus is FIFO: a marker job's start, once seen, means
-    // every earlier job start has been delivered too
-    val marker = "graft.test.marker"
-    val seen = new java.util.concurrent.Semaphore(0)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty(marker) != null)) seen.release()
-        else jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    def drain(): Unit = {
-      sc.setLocalProperty(marker, "1")
-      try sc.parallelize(Seq(0), 1).count() finally sc.setLocalProperty(marker, null)
-      seen.acquire()
-    }
-    sc.addSparkListener(listener)
-    try {
-      drain(); jobs.set(0)
-      val out = Spread.lazyAuto(df)
-      drain()
-      assert(jobs.get === 0, "lazyAuto ran the subquery to probe partitions")
-      assert(out eq df)
-    } finally sc.removeSparkListener(listener)
+    val (out, jobs) = jobsDuring(Spread.lazyAuto(df))
+    assert(jobs === 0, "lazyAuto ran the subquery to probe partitions")
+    assert(out eq df)
     assert(df.count() === 50L)
   }
 }

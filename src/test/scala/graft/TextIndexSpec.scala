@@ -227,41 +227,6 @@ class TextIndexSpec extends SparkSuite {
     assert(after.sameElements(got), "compact changed epoch-served results")
   }
 
-  test("a legacy (epoch-less) layout keeps blocked-until-compact semantics end-to-end") {
-    val dir = Files.createTempDirectory("graft-tix-legacy").toString
-    TextIndex.write(spark, sf0001, dir)
-    // downgrade in place: strip ep from every table, drop the marker —
-    // exactly what a pre-round-10 layout looks like on disk
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq("postings", "positions").foreach { t =>
-      val flat = spark.read.parquet(s"$dir/$t").drop("ep").localCheckpoint(true)
-      flat.write.partitionBy("bkt").mode("overwrite").parquet(s"$dir/$t")
-    }
-    val dl = spark.read.parquet(s"$dir/doclens").drop("ep").localCheckpoint(true)
-    dl.write.mode("overwrite").parquet(s"$dir/doclens")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/epoch"), true)
-    // legacy contract: a tombstoned id is blocked from append until compact
-    TextIndex.delete(spark, dir, Seq(10L).toDF("doc_id"))
-    val revised = Seq((10L, "dup dup vector revised", "en", "src", 22L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    TextIndex.append(spark, dir, revised)
-    // raw-file check (the live view hides doc 10 either way): the append
-    // must not have written a second row for the blocked id
-    assert(spark.read.parquet(s"$dir/doclens")
-      .filter(col("doc_id") === 10L).count() == 1,
-      "legacy layout must block a tombstoned id until compact")
-    // compact upgrades the layout to epoch schema; the re-append now lands
-    val upgraded = TextIndex.compact(spark, dir)
-    assert(upgraded.doclens.columns.contains("ep") ||
-      spark.read.parquet(s"$dir/doclens").columns.contains("ep"),
-      "compact should upgrade a legacy layout to the epoch schema")
-    val ix = TextIndex.append(spark, dir, revised)
-    assert(TextIndex.search(spark, ix, Seq("revised"), 5)
-      .collect().map(_.getLong(1)).contains(10L),
-      "post-compact re-append not served on the upgraded layout")
-  }
-
   test("append is idempotent under replay and heals a torn batch") {
     val dir = Files.createTempDirectory("graft-tix5").toString
     TextIndex.write(spark, sf0001, dir)

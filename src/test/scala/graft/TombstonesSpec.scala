@@ -1,16 +1,44 @@
 package graft
 
-import graft.ops.Tombstones
+import graft.ops.{DedupIndex, LmModel, TextIndex, Tombstones}
 import java.nio.file.Files
 
 /** The epoch marker's crash-safety: writeEpoch stages at `epoch.tmp`
   * then delete-and-renames into place, and readEpoch falls back to the
   * staging copy — so no intermediate crash state can silently reset the
   * epoch to 0 (which would let later tombstones land at te=0, never
-  * killing live rows, and re-appends land wrongly dead).
+  * killing live rows, and re-appends land wrongly dead). And the format
+  * gate: a layout without `meta/` is refused, not served.
   */
 class TombstonesSpec extends SparkSuite {
   import spark.implicits._
+
+  test("a layout without meta/ fails the format gate on the serve, delete and upgrade entry points") {
+    val root = Files.createTempDirectory("graft-format-gate").toString
+    val docs = Tables.documents(spark, sf0001).select($"doc_id", $"text")
+      .limit(60).localCheckpoint(true)
+    TextIndex.writeDocs(spark, docs, s"$root/text")
+    DedupIndex.write(spark, docs, s"$root/dedup")
+    LmModel.write(spark, docs, s"$root/lm")
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("text", "dedup", "lm").foreach(t =>
+      assert(fs.delete(new org.apache.hadoop.fs.Path(s"$root/$t/meta"), true)))
+    def refused(f: => Any): Unit = {
+      val ex = intercept[IllegalStateException](f)
+      assert(ex.getMessage.contains("predates the current index format"), ex.getMessage)
+    }
+    refused(TextIndex.load(spark, s"$root/text"))
+    refused(DedupIndex.queryBatch(spark, s"$root/dedup", docs))
+    refused(LmModel.scoreBatch(spark, s"$root/lm", docs))
+    refused(LmModel.upgrade(spark, s"$root/lm", docs, docs.limit(0)))
+    val ids = docs.select($"doc_id").limit(2)
+    refused(TextIndex.delete(spark, s"$root/text", ids))
+    refused(DedupIndex.delete(spark, s"$root/dedup", ids))
+    Seq("text", "dedup").foreach(t => assert(
+      !fs.exists(new org.apache.hadoop.fs.Path(s"$root/$t/tombstones")),
+      s"a refused delete wrote a ledger into $t"))
+  }
 
   test("writeEpoch roundtrips and bumpEpoch is monotone") {
     val dir = Files.createTempDirectory("graft-ts-rt").toString
