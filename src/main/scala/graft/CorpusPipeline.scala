@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.CosineSim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -188,7 +189,6 @@ object CorpusPipeline {
       println("[corpus] semantic_dedup        skipped (no embeddings table)")
       purged
     } else {
-      functions.CosineSim.register(spark)
       val alive = purged.select(col("doc_id").as("vec_id"))
       // hot-cluster guard (same shape as the LSH band joins): one huge
       // embedding cluster would fan O(n²) cosine pairs — cap membership
@@ -207,7 +207,7 @@ object CorpusPipeline {
       val drops = e.select(col("label").as("la"), col("vec_id").as("ida"), col("v").as("va"))
         .join(e.select(col("label").as("lb"), col("vec_id").as("idb"), col("v").as("vb")),
           col("la") === col("lb") && col("ida") < col("idb"))
-        .filter(expr("graft_cosine(va, vb)") >= 0.35)
+        .filter(CosineSim.cosine(col("va"), col("vb")) >= 0.35)
         .select(col("idb").as("doc_id"))
         .distinct()
       purged.join(drops, Seq("doc_id"), "left_anti")

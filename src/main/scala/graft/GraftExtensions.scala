@@ -4,67 +4,36 @@ import graft.functions.{CosineSim, Deletions, Deletions2, DotProduct, NGrams, Ou
 import graft.plans.{AsOfStrategy, TopKRewrite, TopKStrategy}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Deployment entry point: install every graft Catalyst extension into a
   * session at build time, the way a cluster operator ships a library —
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * (or `.withExtensions(new GraftExtensions)` on a builder). Injects the
-  * codegen'd vector expressions into the function registry (visible to
-  * pure-SQL users, unlike per-session temp registration) and the
-  * top-k-per-group planner strategy. The per-session `register` helpers
-  * on each function remain for harness-owned sessions that can't set
-  * builder config.
+  * (or `.withExtensions(new GraftExtensions)` on a builder). This is the
+  * only place the `graft_*` SQL names exist: it injects the nine
+  * codegen'd expressions into the function registry for pure-SQL users,
+  * plus the top-k-per-group and as-of planner strategies and the
+  * top-k rewrite rule. Library code never resolves a kernel by name — it
+  * builds the expression through each companion's Column entry point
+  * (`DotProduct.dot`, `NGrams.ngrams`, ...), so it works on any session
+  * and leaves the caller's registry untouched.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProduct(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSim].getName, "graft_cosine"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CosineSim(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_ngrams"),
-      new ExpressionInfo(classOf[NGrams].getName, "graft_ngrams"),
-      NGrams.fromExprs _))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash60"),
-      new ExpressionInfo(classOf[SimHash60].getName, "graft_simhash60"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimHash60(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_deletions"),
-      new ExpressionInfo(classOf[Deletions].getName, "graft_deletions"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Deletions(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_outer_upper"),
-      new ExpressionInfo(classOf[OuterUpper].getName, "graft_outer_upper"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        OuterUpper(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_deletions2"),
-      new ExpressionInfo(classOf[Deletions2].getName, "graft_deletions2"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Deletions2(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_sq8_encode"),
-      new ExpressionInfo(classOf[SqEncode].getName, "graft_sq8_encode"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SqEncode(exprs.head, exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_vec_sub"),
-      new ExpressionInfo(classOf[VecSub].getName, "graft_vec_sub"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VecSub(exprs.head, exprs(1))))
+    def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression): Unit =
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    fn("graft_dot", classOf[DotProduct])(e => DotProduct(e(0), e(1)))
+    fn("graft_cosine", classOf[CosineSim])(e => CosineSim(e(0), e(1)))
+    fn("graft_vec_sub", classOf[VecSub])(e => VecSub(e(0), e(1)))
+    fn("graft_sq8_encode", classOf[SqEncode])(e => SqEncode(e(0), e(1), e(2)))
+    fn("graft_outer_upper", classOf[OuterUpper])(e => OuterUpper(e(0)))
+    fn("graft_ngrams", classOf[NGrams])(NGrams.fromExprs)
+    fn("graft_simhash60", classOf[SimHash60])(e => SimHash60(e(0)))
+    fn("graft_deletions", classOf[Deletions])(e => Deletions(e(0)))
+    fn("graft_deletions2", classOf[Deletions2])(e => Deletions2(e(0)))
     ext.injectPlannerStrategy(_ => TopKStrategy)
     ext.injectPlannerStrategy(_ => AsOfStrategy)
     // rank-filter window idiom -> native bounded-heap top-k (the

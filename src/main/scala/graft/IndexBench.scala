@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.CosineSim
 import org.apache.spark.sql.functions._
 
 /** Serve-path bench for the persistent indexes: build the ANN and BM25
@@ -86,7 +87,6 @@ object IndexBench {
     // quality — a degenerate quantizer (all vectors in one list) would
     // stay fast; recall is the signal that the trained lists actually
     // partition the space at this corpus.
-    graft.functions.CosineSim.register(spark)
     def bruteTop10(corpus: org.apache.spark.sql.DataFrame,
         qs: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
       import org.apache.spark.sql.expressions.Window
@@ -94,7 +94,7 @@ object IndexBench {
       qs.as("q").crossJoin(corpus.as("c"))
         .filter(col("q.qid") =!= col("c.vec_id"))
         .select(col("q.qid").as("qid"), col("c.vec_id").as("vec_id"),
-          expr("graft_cosine(q.v, c.v)").as("sim"))
+          CosineSim.cosine(col("q.v"), col("c.v")).as("sim"))
         .withColumn("rnk", row_number().over(wq))
         .filter(col("rnk") <= 10)
         .select(col("qid"), col("vec_id"))
@@ -123,7 +123,7 @@ object IndexBench {
       val probes = queries.crossJoin(
           broadcast(ix.centroids.select(col("cid").as("c_id"), col("cv"))))
         .select(col("qid"), col("c_id"),
-          round(expr("graft_cosine(v, cv)"), 6).as("ca"))
+          round(CosineSim.cosine(col("v"), col("cv")), 6).as("ca"))
         .withColumn("crank", row_number().over(wAff))
         .filter(col("crank") <= nprobe)
         .select(col("qid"), col("c_id"))
@@ -144,7 +144,7 @@ object IndexBench {
         .select(col("qid"), col("cand"))
         .join(e.select(col("vec_id").as("qid"), col("v").as("qv")), Seq("qid"))
         .join(e.select(col("vec_id").as("cand"), col("v").as("cv")), Seq("cand"))
-        .select(col("qid"), col("cand"), expr("graft_cosine(qv, cv)").as("sim"))
+        .select(col("qid"), col("cand"), CosineSim.cosine(col("qv"), col("cv")).as("sim"))
         .withColumn("rnk", row_number().over(wr)).filter(col("rnk") <= 10)
         .select(col("qid"), col("cand"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -252,7 +252,7 @@ object IndexBench {
       val rerTop = shortlist
         .join(eP.select(col("vec_id").as("qid"), col("v").as("qv")), Seq("qid"))
         .join(eP.select(col("vec_id").as("cand"), col("v").as("cv")), Seq("cand"))
-        .select(col("qid"), col("cand"), expr("graft_cosine(qv, cv)").as("sim"))
+        .select(col("qid"), col("cand"), CosineSim.cosine(col("qv"), col("cv")).as("sim"))
         .withColumn("rnk", row_number().over(wr)).filter(col("rnk") <= 10)
         .select(col("qid"), col("cand"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -776,7 +776,6 @@ object IndexBench {
     // is C(4096,2) ≈ 8.4M pairs and finishes in seconds, the dropped
     // memberships are logged, and every retained copy is flagged
     // against the rank-1 original.
-    functions.CosineSim.register(spark)
     val u = array((1 to 64).map(i => lit(i * 0.1)): _*)
     // SPARK_GRAFT_SEMDEDUP_DEGEN_N sizes the collapsed corpus (default
     // 200k; 1M exercises the cap's one residual scale term — the

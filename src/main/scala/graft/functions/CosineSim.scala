@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -8,10 +8,12 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Fused cosine similarity: dot(a,b) / (‖a‖·‖b‖) with all three
   * accumulators folded in ONE pass over the arrays — the composed form
-  * (three graft_dot calls) traverses both arrays three times. Each
+  * (three DotProduct calls) traverses both arrays three times. Each
   * accumulator sums in identical element order to its standalone loop, so
   * results are bit-identical to the composed expression; only the memory
-  * traffic changes (3× fewer array scans in the kNN hot loop).
+  * traffic changes (3× fewer array scans in the kNN hot loop). Called as
+  * [[CosineSim.cosine]]; `graft_cosine` is the SQL name on
+  * [[graft.GraftExtensions]] sessions.
   */
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -57,8 +59,7 @@ case class CosineSim(left: Expression, right: Expression)
 }
 
 object CosineSim {
-  /** Idempotently register `graft_cosine` alongside `graft_dot`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSim(exprs.head, exprs(1)), "scala_udf")
+  /** Column-level entry point: `cosine(a, b)`. */
+  def cosine(a: Column, b: Column): Column =
+    GraftPlanBridge.column(CosineSim(GraftPlanBridge.expr(a), GraftPlanBridge.expr(b)))
 }

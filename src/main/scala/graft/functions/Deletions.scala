@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.GraftPlanBridge
+import org.apache.spark.sql.{Column, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -58,11 +57,6 @@ object Deletions {
   /** Column-level entry point: `deletions(name)`. */
   def deletions(s: Column): Column =
     GraftPlanBridge.column(Deletions(GraftPlanBridge.expr(s)))
-
-  /** Idempotently register `graft_deletions(str)` for SQL callers. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_deletions", exprs => Deletions(exprs.head), "scala_udf")
 }
 
 /** Depth-2 symmetric-delete neighborhood: the string, every single
@@ -137,9 +131,4 @@ object Deletions2 {
   /** Column-level entry point: `deletions2(name)`. */
   def deletions2(s: Column): Column =
     GraftPlanBridge.column(Deletions2(GraftPlanBridge.expr(s)))
-
-  /** Idempotently register `graft_deletions2(str)` for SQL callers. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_deletions2", exprs => Deletions2(exprs.head), "scala_udf")
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -15,7 +15,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * "works" and "works at 100 TB" for a kNN scan over billions of vectors.
   *
   * Elements are assumed non-null (embedding vectors); a null array yields
-  * null via BinaryExpression's default null handling.
+  * null via BinaryExpression's default null handling. Library code calls
+  * it as [[DotProduct.dot]]; `graft_dot` is its plan name and, on
+  * [[graft.GraftExtensions]] sessions only, its SQL name.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -56,11 +58,7 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-  /** Idempotently register `graft_dot` in the session's function registry
-    * so `expr("graft_dot(a, b)")` resolves regardless of how the session
-    * was built (harness sessions are driver-owned).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs.head, exprs(1)), "scala_udf")
+  /** Column-level entry point: `dot(a, b)`. */
+  def dot(a: Column, b: Column): Column =
+    GraftPlanBridge.column(DotProduct(GraftPlanBridge.expr(a), GraftPlanBridge.expr(b)))
 }

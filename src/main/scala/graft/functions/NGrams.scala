@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.GraftPlanBridge
+import org.apache.spark.sql.{Column, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -80,9 +79,8 @@ object NGrams {
   def ngrams(toks: Column, n: Int): Column =
     GraftPlanBridge.column(NGrams(GraftPlanBridge.expr(toks), n))
 
-  /** SQL-registration builder (shared by the temp-function path and
-    * [[graft.GraftExtensions]] so the literal-int contract can't drift
-    * between the two): `graft_ngrams(toks, n)` with a literal `n`.
+  /** SQL builder for [[graft.GraftExtensions]]: `graft_ngrams(toks, n)`
+    * with a literal `n`.
     */
   def fromExprs(exprs: Seq[Expression]): NGrams =
     NGrams(exprs.head, exprs(1) match {
@@ -90,11 +88,4 @@ object NGrams {
       case other => throw new IllegalArgumentException(
         s"graft_ngrams(toks, n) needs a literal int n, got $other")
     })
-
-  /** Idempotently register `graft_ngrams(toks, n)` (n a literal) so the
-    * SQL interface resolves it on any session.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ngrams", fromExprs, "scala_udf")
 }

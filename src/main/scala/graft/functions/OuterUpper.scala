@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -22,7 +22,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * double BEFORE the multiply, exactly like `CAST(x AS DOUBLE)` in the
   * oracle — no interpreted `transform` upcast pass needed); elements are
   * assumed non-null. A null array yields null via UnaryExpression's
-  * default null handling.
+  * default null handling. Called as [[OuterUpper.outerUpper]];
+  * `graft_outer_upper` is the SQL name on [[graft.GraftExtensions]]
+  * sessions.
   */
 case class OuterUpper(child: Expression) extends UnaryExpression {
 
@@ -81,10 +83,7 @@ case class OuterUpper(child: Expression) extends UnaryExpression {
 }
 
 object OuterUpper {
-  /** Idempotently register `graft_outer_upper` for harness-owned sessions
-    * (GraftExtensions registers it permanently for builder-owned ones).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_outer_upper", exprs => OuterUpper(exprs.head), "scala_udf")
+  /** Column-level entry point: `outerUpper(v)`. */
+  def outerUpper(v: Column): Column =
+    GraftPlanBridge.column(OuterUpper(GraftPlanBridge.expr(v)))
 }

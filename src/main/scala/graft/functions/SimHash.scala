@@ -2,8 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.GraftPlanBridge
+import org.apache.spark.sql.{Column, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -92,9 +91,4 @@ object SimHash60 {
     */
   def simhash60(toks: Column, bits: Int = 60): Column =
     GraftPlanBridge.column(SimHash60(GraftPlanBridge.expr(toks), bits))
-
-  /** Idempotently register `graft_simhash60(toks)` for SQL callers. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash60", exprs => SimHash60(exprs.head), "scala_udf")
 }

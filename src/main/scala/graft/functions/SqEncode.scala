@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -25,7 +25,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * same call `RoundBase` makes — in both the interpreted and generated
   * paths, so swapping the projection form cannot move a code by one.
   * Elements are assumed non-null; a null array yields null via
-  * TernaryExpression's default null handling.
+  * TernaryExpression's default null handling. Called as
+  * [[SqEncode.sq8Encode]]; `graft_sq8_encode` is the SQL name on
+  * [[graft.GraftExtensions]] sessions.
   */
 case class SqEncode(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression {
@@ -33,9 +35,9 @@ case class SqEncode(first: Expression, second: Expression, third: Expression)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "graft_sq8_encode"
 
-  // analysis-time type check: without it a wrong-typed call to the
-  // SQL-registered function (array<float>, a scalar, ...) surfaces as an
-  // executor-side ClassCastException instead of an analysis error
+  // analysis-time type check: without it a wrong-typed call (array<float>,
+  // a scalar, ...) surfaces as an executor-side ClassCastException
+  // instead of an analysis error
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     val bad = children.map(_.dataType).exists {
       case ArrayType(DoubleType, _) => false
@@ -95,10 +97,8 @@ case class SqEncode(first: Expression, second: Expression, third: Expression)
 }
 
 object SqEncode {
-  /** Idempotently register `graft_sq8_encode` for harness-owned sessions
-    * (GraftExtensions registers it permanently for builder-owned ones).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sq8_encode", exprs => SqEncode(exprs.head, exprs(1), exprs(2)), "scala_udf")
+  /** Column-level entry point: `sq8Encode(v, mns, mxs)`. */
+  def sq8Encode(v: Column, mns: Column, mxs: Column): Column =
+    GraftPlanBridge.column(SqEncode(
+      GraftPlanBridge.expr(v), GraftPlanBridge.expr(mns), GraftPlanBridge.expr(mxs)))
 }

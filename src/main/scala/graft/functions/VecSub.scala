@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression: elementwise difference of two
-  * array<double> columns (`graft_vec_sub`) — the residual kernel for
+  * array<double> columns — the residual kernel for
   * IVF-PQ encoding (v − assigned coarse centroid, q144).
   *
   * The declarative form (`zip_with(a, b, (x, y) -> x - y)`) evaluates
@@ -21,6 +21,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   *
   * Output length is min(len(a), len(b)); elements assumed non-null
   * (embedding vectors), null arrays yield null via BinaryExpression.
+  * Called as [[VecSub.vecSub]]; `graft_vec_sub` is the SQL name on
+  * [[graft.GraftExtensions]] sessions.
   */
 case class VecSub(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -59,10 +61,7 @@ case class VecSub(left: Expression, right: Expression)
 }
 
 object VecSub {
-  /** Idempotently register `graft_vec_sub` (the [[DotProduct.register]]
-    * recipe).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vec_sub", exprs => VecSub(exprs.head, exprs(1)), "scala_udf")
+  /** Column-level entry point: `vecSub(a, b)`. */
+  def vecSub(a: Column, b: Column): Column =
+    GraftPlanBridge.column(VecSub(GraftPlanBridge.expr(a), GraftPlanBridge.expr(b)))
 }

@@ -45,14 +45,13 @@ object Advanced11 {
       |            FROM range(0, 64) a(i), range(0, 64) b(j) WHERE a.i <= b.j) p
       |GROUP BY p.i, p.j
       |ORDER BY i, j""".stripMargin) { (s, d) =>
-    OuterUpper.register(s)
     val dim = 64
     val pairs = (for { i <- 0 until dim; j <- i until dim } yield (i, j)).zipWithIndex
       .map { case ((i, j), k) => (k, i, j) }
     val coords = s.createDataFrame(pairs).toDF("pos", "i", "j")
     Tables.embeddings(s, d)
       .filter(size(col("embedding")) === dim)
-      .select(posexplode(expr("graft_outer_upper(embedding)")).as(Seq("pos", "p")))
+      .select(posexplode(OuterUpper.outerUpper(col("embedding"))).as(Seq("pos", "p")))
       .groupBy(col("pos"))
       .agg(sum(round(col("p") * 1000000).cast("long")).as("sum_micro"),
         count(lit(1)).as("n_vectors"))
@@ -165,7 +164,6 @@ object Advanced11 {
       |FROM e LEFT JOIN drops dr ON dr.label = e.label AND dr.vec_id = e.vec_id
       |GROUP BY e.label
       |ORDER BY e.label""".stripMargin) { (s, d) =>
-    CosineSim.register(s)
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("label"),
       col("embedding").cast("array<double>").as("v"))
     // hot-cluster guard (CorpusPipeline stage 3b's shape): cap membership
@@ -181,7 +179,7 @@ object Advanced11 {
     val a = ec.select(col("label").as("la"), col("vec_id").as("ida"), col("v").as("va"))
     val b = ec.select(col("label").as("lb"), col("vec_id").as("idb"), col("v").as("vb"))
     val drops = a.join(b, col("la") === col("lb") && col("ida") < col("idb"))
-      .filter(expr("graft_cosine(va, vb)") >= 0.35)
+      .filter(CosineSim.cosine(col("va"), col("vb")) >= 0.35)
       .select(col("lb").as("label"), col("idb").as("vec_id"))
       .distinct()
     e.select(col("label"), col("vec_id"))

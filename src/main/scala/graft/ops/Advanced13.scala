@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Shared, Tables}
+import graft.functions.{DotProduct, SqEncode}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,7 +37,6 @@ object Advanced13 {
   private val Dim = 64
 
   private def embV(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     Tables.embeddings(s, d).select(col("vec_id"),
       graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
   }
@@ -72,12 +72,11 @@ object Advanced13 {
     */
   private[graft] def sqCodes(s: SparkSession, d: String): DataFrame =
     Shared.materialized(s, s"sq8-codes@$d") {
-      graft.functions.SqEncode.register(s)
       embV(s, d)
         .crossJoin(broadcast(sqParams(s, d)))
-        .select(col("vec_id"), expr("graft_sq8_encode(v, mns, mxs)").as("cv"))
+        .select(col("vec_id"), SqEncode.sq8Encode(col("v"), col("mns"), col("mxs")).as("cv"))
         .select(col("vec_id"), col("cv"),
-          expr("graft_dot(cv, cv)").cast("long").as("n2"))
+          DotProduct.dot(col("cv"), col("cv")).cast("long").as("n2"))
     }
 
   /** Oracle CTE chain for the SQ8 code ranking, through `r(qid, cand,
@@ -120,7 +119,7 @@ object Advanced13 {
     val scoped = if (excludeSelf) base.filter(col("cand") =!= col("qid")) else base
     scoped
       .select(col("qid"), col("cand"),
-        (col("qn2") + col("n2") - lit(2) * expr("graft_dot(qv, cv)"))
+        (col("qn2") + col("n2") - lit(2) * DotProduct.dot(col("qv"), col("cv")))
           .cast("long").as("sqdist"))
       .withColumn("rnk", row_number().over(wk))
       .filter(col("rnk") <= k)

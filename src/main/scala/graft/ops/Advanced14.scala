@@ -72,8 +72,8 @@ object Advanced14 {
     e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cand"),
-        round(expr("graft_dot(qv, qv)") + expr("graft_dot(v, v)")
-          - lit(2) * expr("graft_dot(qv, v)"), 6).as("rdist"))
+        round(DotProduct.dot(col("qv"), col("qv")) + DotProduct.dot(col("v"), col("v"))
+          - lit(2) * DotProduct.dot(col("qv"), col("v")), 6).as("rdist"))
       .withColumn("ernk", row_number().over(we))
       .filter(col("ernk") <= k)
       .select(col("qid"), col("cand"))
@@ -115,8 +115,6 @@ object Advanced14 {
        |    CAST(ROW_NUMBER() OVER (ORDER BY rrf DESC, doc_id) AS INTEGER) AS rnk
        |  FROM fused QUALIFY rnk <= 10)
        |SELECT rnk, doc_id, rrf, lex_rnk, sem_rnk FROM r ORDER BY rnk""".stripMargin) { (s, d) =>
-    DotProduct.register(s)
-    CosineSim.register(s)
     val wl = Window.orderBy(col("bm25").desc, col("doc_id"))
     val lex = Advanced13.bm25Scores(s, d)
       .withColumn("lex_rnk", row_number().over(wl))
@@ -127,7 +125,7 @@ object Advanced14 {
     val qv = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
     val ws = Window.orderBy(col("sim").desc, col("vec_id"))
     val sem = e.crossJoin(broadcast(qv))
-      .select(col("vec_id"), round(expr("graft_cosine(v, qv)"), 6).as("sim"))
+      .select(col("vec_id"), round(CosineSim.cosine(col("v"), col("qv")), 6).as("sim"))
       .withColumn("sem_rnk", row_number().over(ws))
       .filter(col("sem_rnk") <= ListDepth)
       .select(col("vec_id").as("s_id"), col("sem_rnk"))
@@ -181,7 +179,7 @@ object Advanced14 {
        |          FROM pk GROUP BY vec_id, b),
        |dtab AS (
        |  SELECT s.vec_id AS qid, b, cid,
-       |    ${Advanced8.distMicroSql("sv", "cv", "list_dot_product")} AS dm
+       |    ${Advanced8.distMicroSql("sv", "cv")} AS dm
        |  FROM sub s JOIN ${Quantizer.pqFinal} USING (b) WHERE s.vec_id < 1),
        |ad AS (
        |  SELECT x.qid, x.cand, CAST(SUM(d.dm) AS BIGINT) AS adist_micro
@@ -205,8 +203,6 @@ object Advanced14 {
        |    CAST(ROW_NUMBER() OVER (ORDER BY rrf DESC, doc_id) AS INTEGER) AS rnk
        |  FROM fused QUALIFY rnk <= 10)
        |SELECT rnk, doc_id, rrf, lex_rnk, sem_rnk FROM r ORDER BY rnk""").stripMargin) { (s, d) =>
-    DotProduct.register(s)
-    CosineSim.register(s)
     val lex = TextIndex.search(s, TextIndex.load(s, sharedTextIndexDir(s, d)),
         Advanced13.BmQueryTerms, ListDepth)
       .select(col("doc_id").as("l_id"), col("rnk").as("lex_rnk"))
@@ -238,8 +234,6 @@ object Advanced14 {
       |    CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, cand) AS INTEGER) AS rnk
       |  FROM sims QUALIFY rnk <= 3)
       |SELECT qid, rnk, cand, sim FROM r ORDER BY qid, rnk""".stripMargin) { (s, d) =>
-    DotProduct.register(s)
-    CosineSim.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
     val q = e.filter(col("vec_id") < 5)
@@ -247,7 +241,7 @@ object Advanced14 {
     val sims = e.join(broadcast(q),
         col("label") === col("qlabel") && col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cand"),
-        round(expr("graft_cosine(qv, v)"), 6).as("sim"))
+        round(CosineSim.cosine(col("qv"), col("v")), 6).as("sim"))
     val wk = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cand"))
     sims.withColumn("rnk", row_number().over(wk))
       .filter(col("rnk") <= 3)
@@ -345,7 +339,6 @@ object Advanced14 {
        |    ROUND(SUM(hit) / 3.0, 6) AS recall3
        |  FROM hits GROUP BY qid)
        |SELECT qid, rr, recall3 FROM m ORDER BY qid""".stripMargin) { (s, d) =>
-    DotProduct.register(s)
     val sys = Advanced13.sq8Ranking(s, d, nq = 5, k = 3, excludeSelf = true)
       .select(col("qid"), col("rnk"), col("cand"))
     val e = Tables.embeddings(s, d)

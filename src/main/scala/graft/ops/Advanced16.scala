@@ -47,15 +47,13 @@ import org.apache.spark.sql.types.DecimalType
   *    6 − exact_rank; every contribution is 6-decimal-rounded and summed
   *    as DECIMAL so DCG is order-independent cross-engine.
   *
-  * All cosine/dot math uses the codegen'd `graft_dot`/`graft_cosine`
+  * All cosine/dot math uses the codegen'd [[DotProduct]]/[[CosineSim]]
   * expressions (double, sequential summation — bit-identical to DuckDB's
   * `list_dot_product`), rounded at 6 decimals before any ordering or sum.
   */
 object Advanced16 {
 
   private def emb(s: SparkSession, d: String): DataFrame = {
-    DotProduct.register(s)
-    CosineSim.register(s)
     Tables.embeddings(s, d).select(col("vec_id"), asDouble(col("embedding")).as("v"))
   }
 
@@ -68,15 +66,12 @@ object Advanced16 {
     * exact DECIMAL(18,6) addition, cast double. One flat expression —
     * 64 sub-dots, 8 `greatest`, 7 adds — all inside whole-stage codegen.
     */
-  private def maxSimCol(q: String, c: String): Column = {
-    val terms = (0 until SubVecs).map { qt =>
-      val dots = (0 until SubVecs).map { dt =>
-        s"round(graft_dot(slice($q, ${qt * SubDim + 1}, $SubDim), " +
-          s"slice($c, ${dt * SubDim + 1}, $SubDim)), 6)"
-      }.mkString(", ")
-      s"CAST(greatest($dots) AS DECIMAL(18,6))"
-    }.mkString(" + ")
-    expr(s"CAST($terms AS DOUBLE)")
+  private def maxSimCol(q: Column, c: Column): Column = {
+    def sub(v: Column, i: Int) = slice(v, i * SubDim + 1, SubDim)
+    (0 until SubVecs).map { qt =>
+      greatest((0 until SubVecs).map(dt =>
+        round(DotProduct.dot(sub(q, qt), sub(c, dt)), 6)): _*).cast(DecimalType(18, 6))
+    }.reduce(_ + _).cast("double")
   }
 
   /** Identical algebra in DuckDB list syntax (1-based inclusive slices). */
@@ -100,7 +95,7 @@ object Advanced16 {
     val scored = cands.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cand"),
-        maxSimCol("qv", "v").as("maxsim"))
+        maxSimCol(col("qv"), col("v")).as("maxsim"))
     val w = Window.partitionBy(col("qid")).orderBy(col("maxsim").desc, col("cand"))
     scored.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
@@ -150,7 +145,7 @@ object Advanced16 {
         .select(col("qid"), expr(s"slice(qv, 1, $prefixDims)").as("qp"))))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cand"),
-        round(expr("graft_cosine(qp, vp)"), 6).as("psim"))
+        round(CosineSim.cosine(col("qp"), col("vp")), 6).as("psim"))
       .withColumn("prnk", row_number().over(wp))
       .filter(col("prnk") <= shortlist)
     val wf = Window.partitionBy(col("qid")).orderBy(col("fsim").desc, col("cand"))
@@ -158,7 +153,7 @@ object Advanced16 {
       .join(e.select(col("vec_id").as("cand"), col("v").as("cv")), Seq("cand"))
       .join(queries, Seq("qid"))
       .select(col("qid"), col("cand"), col("psim"),
-        round(expr("graft_cosine(qv, cv)"), 6).as("fsim"))
+        round(CosineSim.cosine(col("qv"), col("cv")), 6).as("fsim"))
       .withColumn("rnk", row_number().over(wf))
       .filter(col("rnk") <= k)
       .select(col("qid"), col("rnk"), col("cand"), col("fsim"), col("psim"))
@@ -294,7 +289,7 @@ object Advanced16 {
     val short = e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("doc_id"),
-        round(expr("graft_cosine(qv, v)"), 6).as("sim"))
+        round(CosineSim.cosine(col("qv"), col("v")), 6).as("sim"))
       .withColumn("rnk", row_number().over(wr))
       .filter(col("rnk") <= PackShortlist)
     val toks = Tables.documents(s, d)
@@ -357,7 +352,7 @@ object Advanced16 {
     val sys = e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cand"),
-        round(expr(s"graft_cosine(slice(qv, 1, $PrefixDims), slice(v, 1, $PrefixDims))"), 6)
+        round(CosineSim.cosine(slice(col("qv"), 1, PrefixDims), slice(col("v"), 1, PrefixDims)), 6)
           .as("psim"))
       .withColumn("rnk", row_number().over(wp))
       .filter(col("rnk") <= EvalK)
@@ -366,7 +361,7 @@ object Advanced16 {
     val truth = e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cand"),
-        round(expr("graft_cosine(qv, v)"), 6).as("fsim"))
+        round(CosineSim.cosine(col("qv"), col("v")), 6).as("fsim"))
       .withColumn("ernk", row_number().over(we))
       .filter(col("ernk") <= EvalK)
       .select(col("qid"), col("cand"), (lit(EvalK + 1) - col("ernk")).as("grade"),
@@ -399,7 +394,6 @@ object Advanced16 {
   private[graft] def maxSimRerank(s: SparkSession, ix: AnnIndex.Index,
       vectors: DataFrame, queries: DataFrame, k: Int, frac: Double,
       shortlistPerProbe: Int, excludeSelf: Boolean): DataFrame = {
-    DotProduct.register(s)
     val np = AnnIndex.autoNprobe(ix, frac)
     val shortK = math.max(k, shortlistPerProbe * np)
     val short = AnnIndex.search(s, ix, queries, np, shortK, excludeSelf)
@@ -408,7 +402,7 @@ object Advanced16 {
       .join(queries.select(col("qid"), col("v").as("qv")), Seq("qid")))
     val er = withQ
       .join(vectors.select(col("vec_id").as("cand"), col("v").as("cv")), Seq("cand"))
-      .select(col("qid"), col("cand"), maxSimCol("qv", "cv").as("maxsim"))
+      .select(col("qid"), col("cand"), maxSimCol(col("qv"), col("cv")).as("maxsim"))
     val w = Window.partitionBy(col("qid")).orderBy(col("maxsim").desc, col("cand"))
     er.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
@@ -441,7 +435,7 @@ object Advanced16 {
       |          FROM pk GROUP BY vec_id, b),
       |dtab AS (
       |  SELECT s.vec_id AS qid, b, cid,
-      |    ${Advanced8.distMicroSql("sv", "cv", "list_dot_product")} AS dm
+      |    ${Advanced8.distMicroSql("sv", "cv")} AS dm
       |  FROM sub s JOIN ${Quantizer.pqFinal} USING (b) WHERE s.vec_id < 5),
       |ad AS (
       |  SELECT x.qid, x.cand, CAST(SUM(d.dm) AS BIGINT) AS adist_micro

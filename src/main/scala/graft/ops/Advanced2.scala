@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Det, Q, Tables}
-import graft.functions.{CosineSim, DotProduct}
+import graft.functions.CosineSim
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -64,8 +64,6 @@ object Advanced2 {
   private[ops] def ivfAffinity(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     graft.Shared.materialized(s, s"ivf-aff@$d") {
-      DotProduct.register(s)
-      CosineSim.register(s)
       val e = Tables.embeddings(s, d).select(col("vec_id"),
         graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
       val cent = Quantizer.ivfCentroids(s, d)
@@ -73,7 +71,7 @@ object Advanced2 {
       val wAff = Window.partitionBy(col("vec_id")).orderBy(col("ca").desc, col("c_id"))
       e.crossJoin(broadcast(cent))
         .select(col("vec_id"), col("c_id"),
-          round(expr("graft_cosine(v, cv)"), 6).as("ca"))
+          round(CosineSim.cosine(col("v"), col("cv")), 6).as("ca"))
         .withColumn("crank", row_number().over(wAff))
     }
 
@@ -114,8 +112,6 @@ object Advanced2 {
       |  FROM sims) t
       |WHERE rank <= 3
       |ORDER BY q_id, rank""".stripMargin) { (s, d) =>
-    DotProduct.register(s)
-    CosineSim.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
     val aff = ivfAffinity(s, d)
@@ -125,7 +121,7 @@ object Advanced2 {
     val cand = broadcast(probes)
       .join(assigned.as("a"), col("probe_c_id") === col("a.c_id") && col("a.vec_id") =!= col("q_id"))
       .select(col("q_id"), col("a.vec_id").as("c_vec")).distinct()
-    val simCos = round(expr("graft_cosine(qv, cv2)"), 6)
+    val simCos = round(CosineSim.cosine(col("qv"), col("cv2")), 6)
     val sims = cand
       .join(e.select(col("vec_id").as("q_id"), col("v").as("qv")), Seq("q_id"))
       .join(e.select(col("vec_id").as("c_vec"), col("v").as("cv2")), Seq("c_vec"))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import graft.functions.CosineSim
 import graft.sources.ZOrder
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -505,7 +506,7 @@ object Advanced20 {
   private[graft] def assignCosine(e: DataFrame, cents: DataFrame): DataFrame =
     e.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("v"),
-        struct((round(expr("graft_cosine(v, cv)"), 6) * -1).as("nca"),
+        struct((round(CosineSim.cosine(col("v"), col("cv")), 6) * -1).as("nca"),
           col("cid")).as("dc"))
       .groupBy(col("vec_id"))
       .agg(min(col("dc")).as("m"), first(col("v")).as("v")) // v constant per vec_id
@@ -545,7 +546,7 @@ object Advanced20 {
     val a = capped.select(col("vec_id").as("da"), col("c_id"), col("v").as("va"))
     val b = capped.select(col("vec_id").as("db"), col("c_id").as("c2"), col("v").as("vb"))
     a.join(b, col("c_id") === col("c2") && col("da") < col("db"))
-      .withColumn("sim_raw", expr("graft_cosine(va, vb)"))
+      .withColumn("sim_raw", CosineSim.cosine(col("va"), col("vb")))
       .filter(col("sim_raw") >= tau)
       .groupBy(col("db").as("vec_id"), col("c_id"))
       .agg(count(lit(1)).as("n_dominating"),
@@ -750,7 +751,7 @@ object Advanced20 {
     val members = corpusVecs.select(col("vec_id").as("mv"), col("v").as("vm"))
       .join(cappedAsg, Seq("mv"))
     basg.join(members, col("c_id") === col("mc"))
-      .withColumn("sim_raw", expr("graft_cosine(vb, vm)"))
+      .withColumn("sim_raw", CosineSim.cosine(col("vb"), col("vm")))
       .filter(col("sim_raw") >= tau)
       .groupBy(col("bv").as("vec_id"), col("c_id"))
       .agg(count(lit(1)).as("n_dominating"),

@@ -185,7 +185,6 @@ object Advanced4 {
       |SELECT cid, COUNT(*) AS n_members,
       |  CAST(SUM(CAST(dist AS DECIMAL(28,6))) AS DOUBLE) AS inertia
       |FROM a2 GROUP BY cid ORDER BY cid""".stripMargin) { (s, d) =>
-    DotProduct.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("v"))
     val c0 = e.filter(col("vec_id") < 8)
@@ -204,12 +203,12 @@ object Advanced4 {
     // (inside the broadcast build), so the k-wide inner loop computes a
     // single dot product per pair — (vv - 2·v·c) + cc associates exactly
     // like the oracle's inline form, so the rounded dist is bit-identical.
-    val eVv = e.withColumn("vv", expr("graft_dot(v, v)"))
+    val eVv = e.withColumn("vv", DotProduct.dot(col("v"), col("v")))
     def assign(cent: DataFrame): DataFrame =
-      eVv.crossJoin(broadcast(cent.withColumn("cc", expr("graft_dot(cv, cv)"))))
+      eVv.crossJoin(broadcast(cent.withColumn("cc", DotProduct.dot(col("cv"), col("cv")))))
         .select(col("vec_id"), col("v"),
           struct(
-            round(col("vv") - expr("2*graft_dot(v,cv)") + col("cc"), 6).as("dist"),
+            round(col("vv") - lit(2) * DotProduct.dot(col("v"), col("cv")) + col("cc"), 6).as("dist"),
             col("cid")).as("dc"))
         .groupBy(col("vec_id"))
         .agg(min(col("dc")).as("m"), first(col("v")).as("v")) // v constant per vec_id

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Det, Q, Tables}
-import graft.functions.NGrams
+import graft.functions.{DotProduct, NGrams}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -375,17 +375,23 @@ object Advanced8 {
       .orderBy(col("event_type"))
   }
 
-  /** Micro-unit sub-block distance ||x - c||² as a BIGINT — `x`/`c` name
+  /** Micro-unit sub-block distance ||x - c||² as a BIGINT — `x`/`c` are
     * 16-dim array<double> columns (a vector block and its trained
-    * sub-centroid from [[Quantizer.pqCodebook]]). Identical text on both
-    * engines modulo the dot product spelling (graft_dot /
-    * list_dot_product — both sequential folds, parity proven by q80).
+    * sub-centroid from [[Quantizer.pqCodebook]]). The same algebra as
+    * [[distMicroSql]]: [[DotProduct]] and DuckDB's `list_dot_product` are
+    * both sequential folds (parity proven by q80).
     */
-  private[ops] def distMicroSql(x: String, c: String, dot: String): String =
-    s"CAST(ROUND(($dot($x, $x) - 2 * $dot($x, $c) + $dot($c, $c)) * 1000000) AS BIGINT)"
+  private[ops] def distMicro(x: Column, c: Column): Column = {
+    import DotProduct.dot
+    round((dot(x, x) - lit(2) * dot(x, c) + dot(c, c)) * 1000000).cast("long")
+  }
+
+  /** [[distMicro]] in DuckDB SQL over the columns named `x` and `c`. */
+  private[ops] def distMicroSql(x: String, c: String): String =
+    s"CAST(ROUND((list_dot_product($x, $x) - 2 * list_dot_product($x, $c) + " +
+      s"list_dot_product($c, $c)) * 1000000) AS BIGINT)"
 
   private def embV(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     Tables.embeddings(s, d).select(col("vec_id"),
       graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
   }
@@ -403,7 +409,7 @@ object Advanced8 {
       val sub = Quantizer.subBlocks(embV(s, d))
       sub.join(broadcast(Quantizer.pqCodebook(s, d)), Seq("b"))
         .select(col("vec_id"), col("b"),
-          (expr(distMicroSql("sv", "cv", "graft_dot")) * 100 + col("cid")).as("pk"))
+          (distMicro(col("sv"), col("cv")) * 100 + col("cid")).as("pk"))
         .groupBy(col("vec_id"), col("b"))
         .agg(min(col("pk")).as("mk"))
     }
@@ -414,7 +420,7 @@ object Advanced8 {
     */
   private[ops] def pqPkCteSql: String =
     s"""pk AS (
-       |  SELECT s.vec_id, s.b, ${distMicroSql("sv", "cv", "list_dot_product")} * 100 + cid AS pk
+       |  SELECT s.vec_id, s.b, ${distMicroSql("sv", "cv")} * 100 + cid AS pk
        |  FROM sub s JOIN ${Quantizer.pqFinal} USING (b))""".stripMargin
 
   /** Product-quantization encoding — the ANN compression layer between
@@ -475,7 +481,7 @@ object Advanced8 {
        |          FROM pk GROUP BY vec_id, b),
        |dtab AS (
        |  SELECT s.vec_id AS qid, b, cid,
-       |    ${distMicroSql("sv", "cv", "list_dot_product")} AS dm
+       |    ${distMicroSql("sv", "cv")} AS dm
        |  FROM sub s JOIN ${Quantizer.pqFinal} USING (b) WHERE s.vec_id < 5),
        |ad AS (
        |  SELECT d.qid, cd.vec_id AS cand, CAST(SUM(d.dm) AS BIGINT) AS adist_micro
@@ -493,7 +499,7 @@ object Advanced8 {
     val dtab = Quantizer.subBlocks(embV(s, d)).filter(col("vec_id") < 5)
       .join(broadcast(Quantizer.pqCodebook(s, d)), Seq("b"))
       .select(col("vec_id").as("qid"), col("b"), col("cid"),
-        expr(distMicroSql("sv", "cv", "graft_dot")).as("dm"))
+        distMicro(col("sv"), col("cv")).as("dm"))
     val ad = codes.as("cd")
       .join(broadcast(dtab.as("dt")),
         col("cd.b") === col("dt.b") && col("cd.code") === col("dt.cid"))
@@ -536,7 +542,7 @@ object Advanced8 {
        |          FROM pk GROUP BY vec_id, b),
        |dtab AS (
        |  SELECT s.vec_id AS qid, b, cid,
-       |    ${distMicroSql("sv", "cv", "list_dot_product")} AS dm
+       |    ${distMicroSql("sv", "cv")} AS dm
        |  FROM sub s JOIN ${Quantizer.pqFinal} USING (b) WHERE s.vec_id < 5),
        |ad AS (
        |  SELECT x.qid, x.cand, CAST(SUM(d.dm) AS BIGINT) AS adist_micro
@@ -568,7 +574,6 @@ object Advanced8 {
     * per-query distance table.
     */
   private def ivfAdcDistances(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
     val aff = Advanced2.ivfAffinity(s, d)
     val assigned = aff.filter(col("crank") === 1).select(col("vec_id"), col("c_id"))
     val probes = aff.filter(col("crank") <= 2 && col("vec_id") < 5)
@@ -582,7 +587,7 @@ object Advanced8 {
     val dtab = Quantizer.subBlocks(embV(s, d)).filter(col("vec_id") < 5)
       .join(broadcast(Quantizer.pqCodebook(s, d)), Seq("b"))
       .select(col("vec_id").as("dqid"), col("b").as("db"), col("cid"),
-        expr(distMicroSql("sv", "cv", "graft_dot")).as("dm"))
+        distMicro(col("sv"), col("cv")).as("dm"))
     candp.as("x")
       .join(codes.as("cd"), col("cd.vec_id") === col("x.cand"))
       .join(broadcast(dtab),
@@ -617,7 +622,7 @@ object Advanced8 {
        |          FROM pk GROUP BY vec_id, b),
        |dtab AS (
        |  SELECT s.vec_id AS qid, b, cid,
-       |    ${distMicroSql("sv", "cv", "list_dot_product")} AS dm
+       |    ${distMicroSql("sv", "cv")} AS dm
        |  FROM sub s JOIN ${Quantizer.pqFinal} USING (b) WHERE s.vec_id < 5),
        |ad AS (
        |  SELECT x.qid, x.cand, CAST(SUM(d.dm) AS BIGINT) AS adist_micro
@@ -632,7 +637,7 @@ object Advanced8 {
        |  FROM ad QUALIFY srnk <= 32),
        |er AS (
        |  SELECT sh.qid, sh.cand,
-       |    ${distMicroSql("q.v", "c.v", "list_dot_product")} AS edist_micro
+       |    ${distMicroSql("q.v", "c.v")} AS edist_micro
        |  FROM short sh JOIN e q ON q.vec_id = sh.qid JOIN e c ON c.vec_id = sh.cand),
        |r AS (
        |  SELECT qid, cand, edist_micro,
@@ -655,7 +660,7 @@ object Advanced8 {
     val er = withQ
       .join(e.select(col("vec_id").as("cand"), col("v").as("cv3")), Seq("cand"))
       .select(col("qid"), col("cand"),
-        expr(distMicroSql("qv2", "cv3", "graft_dot")).as("edist_micro"))
+        distMicro(col("qv2"), col("cv3")).as("edist_micro"))
     val wR = Window.partitionBy(col("qid")).orderBy(col("edist_micro"), col("cand"))
     er.withColumn("rnk", row_number().over(wR))
       .filter(col("rnk") <= 3)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Q
+import graft.functions.{CosineSim, DotProduct}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -76,8 +77,6 @@ object AnnIndex {
     */
   def writeScaled(s: SparkSession, d: String, dir: String,
       nListsOverride: Option[Int] = None): Unit = {
-    graft.functions.DotProduct.register(s)
-    graft.functions.CosineSim.register(s)
     val e = graft.Tables.embeddings(s, d).select(col("vec_id"),
       graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
       .localCheckpoint()
@@ -134,7 +133,7 @@ object AnnIndex {
     val wAff = Window.partitionBy(col("vec_id")).orderBy(col("ca").desc, col("c_id"))
     batch.crossJoin(broadcast(cent))
       .select(col("vec_id"), col("c_id"),
-        round(expr("graft_cosine(v, cv)"), 6).as("ca"))
+        round(CosineSim.cosine(col("v"), col("cv")), 6).as("ca"))
       .withColumn("crank", row_number().over(wAff))
       .filter(col("crank") === 1)
       .select(col("vec_id"), col("c_id"))
@@ -149,7 +148,7 @@ object AnnIndex {
     Quantizer.subBlocks(batch.select(col("vec_id"), col("v")))
       .join(broadcast(codebook), Seq("b"))
       .select(col("vec_id"), col("b"),
-        (expr(Advanced8.distMicroSql("sv", "cv", "graft_dot")) * 100 +
+        (Advanced8.distMicro(col("sv"), col("cv")) * 100 +
           col("cid")).as("pk"))
       .groupBy(col("vec_id"), col("b"))
       .agg(min(col("pk")).as("mk"))
@@ -165,7 +164,7 @@ object AnnIndex {
     Quantizer.subBlocks(batch.select(col("vec_id"), col("v")))
       .join(broadcast(codebook), Seq("b"))
       .select(col("vec_id"), col("b"),
-        (expr(Advanced8.distMicroSql("sv", "cv", "graft_dot")) * 100 +
+        (Advanced8.distMicro(col("sv"), col("cv")) * 100 +
           col("cid")).as("pk"))
       .groupBy(col("vec_id"), col("b"))
       .agg(min(col("pk")).as("mk"))
@@ -191,8 +190,6 @@ object AnnIndex {
     */
   private def writeCore(s: SparkSession, d: String, dir: String,
       centroids: DataFrame): Unit = {
-    graft.functions.DotProduct.register(s)
-    graft.functions.CosineSim.register(s)
     centroids.write.mode("overwrite").parquet(s"$dir/centroids")
     Quantizer.pqCodebook(s, d)
       .write.mode("overwrite").parquet(s"$dir/codebook")
@@ -221,8 +218,6 @@ object AnnIndex {
     * replaces anything at `dir`, including a previous tombstone ledger.
     */
   def writeVectors(s: SparkSession, e0: DataFrame, dir: String): Unit = {
-    graft.functions.DotProduct.register(s)
-    graft.functions.CosineSim.register(s)
     // materialize at healthy parallelism: the frame feeds two Lloyd
     // trainers, the assignment, the encode and the error stats (round 19)
     val e = graft.Spread.materialized(e0.select(col("vec_id"), col("v")))
@@ -320,8 +315,6 @@ object AnnIndex {
     * skips any id it already holds.
     */
   def append(s: SparkSession, dir: String, batch: DataFrame): Index = {
-    graft.functions.DotProduct.register(s)
-    graft.functions.CosineSim.register(s)
     val ix = load(s, dir)
     val cent = ix.centroids.select(col("cid").as("c_id"), col("cv"))
     val newAssigned = assignVectors(batch, cent)
@@ -361,17 +354,15 @@ object AnnIndex {
     * DISTINCT) without paying the ADC stage. Returns (probes(qid, c_id),
     * candp(qid, cand)).
     */
-  private def probeCandidates(s: SparkSession, ix: Index, queries: DataFrame,
+  private def probeCandidates(ix: Index, queries: DataFrame,
       nprobe: Int, excludeSelf: Boolean,
       allowed: Option[DataFrame]): (DataFrame, DataFrame) = {
-    graft.functions.DotProduct.register(s)
-    graft.functions.CosineSim.register(s)
     val cent = ix.centroids.select(col("cid").as("c_id"), col("cv"))
     // probe the nprobe nearest lists by cosine (the affinity recipe)
     val wAff = Window.partitionBy(col("qid")).orderBy(col("ca").desc, col("c_id"))
     val probes = queries.crossJoin(broadcast(cent))
       .select(col("qid"), col("c_id"),
-        round(expr("graft_cosine(v, cv)"), 6).as("ca"))
+        round(CosineSim.cosine(col("v"), col("cv")), 6).as("ca"))
       .withColumn("crank", row_number().over(wAff))
       .filter(col("crank") <= nprobe)
       .select(col("qid"), col("c_id"))
@@ -390,12 +381,12 @@ object AnnIndex {
       k: Int, excludeSelf: Boolean = false,
       allowed: Option[DataFrame] = None): DataFrame = {
     val (probes, candp) =
-      probeCandidates(s, ix, queries, nprobe, excludeSelf, allowed)
+      probeCandidates(ix, queries, nprobe, excludeSelf, allowed)
     // per-query block-distance table to the codebook
     val dtab = Quantizer.subBlocks(queries.select(col("qid"), col("v")), Seq("qid"))
       .join(broadcast(ix.codebook), Seq("b"))
       .select(col("qid").as("dqid"), col("b").as("db"), col("cid"),
-        expr(Advanced8.distMicroSql("sv", "cv", "graft_dot")).as("dm"))
+        Advanced8.distMicro(col("sv"), col("cv")).as("dm"))
     // probed list ids, collected once: the codes scan prunes to those
     // PARTITION directories — the physical "read only probed lists"
     val probedLists = probes.select(col("c_id")).distinct()
@@ -488,7 +479,6 @@ object AnnIndex {
       queries: DataFrame, k: Int, frac: Double = 0.15,
       shortlistPerProbe: Int = 64, excludeSelf: Boolean = false,
       allowed: Option[DataFrame] = None): DataFrame = {
-    graft.functions.DotProduct.register(s)
     val np = autoNprobe(ix, frac)
     // Long math, clamped (round-17 advice): the exact gate's corpus-
     // covering spp × a frac=1.0 probe count overflows Int past ~2.1B —
@@ -515,7 +505,7 @@ object AnnIndex {
       shortK.toLong >= MetaScalar.scanRowCount(ix.assigned).getOrElse(ix.assigned.count())
     val short =
       if (exactCover)
-        probeCandidates(s, ix, queries, np, excludeSelf, allowed)._2
+        probeCandidates(ix, queries, np, excludeSelf, allowed)._2
       else search(s, ix, queries, np, shortK, excludeSelf, allowed)
         .select(col("qid"), col("cand"))
     // The broadcast hints hold for SERVE-sized shortlists (the static
@@ -532,7 +522,7 @@ object AnnIndex {
     val er = withQ
       .join(vectors.select(col("vec_id").as("cand"), col("v").as("cv3")), Seq("cand"))
       .select(col("qid"), col("cand"),
-        expr(Advanced8.distMicroSql("qv2", "cv3", "graft_dot")).as("edist_micro"))
+        Advanced8.distMicro(col("qv2"), col("cv3")).as("edist_micro"))
     val wR = Window.partitionBy(col("qid")).orderBy(col("edist_micro"), col("cand"))
     er.withColumn("rnk", row_number().over(wR))
       .filter(col("rnk") <= k)
@@ -559,7 +549,6 @@ object AnnIndex {
     * baseline and drifted-batch strictly above it.
     */
   def quantizationDrift(s: SparkSession, dir: String, batch: DataFrame): DataFrame = {
-    graft.functions.DotProduct.register(s)
     val cols = Seq(col("side"), col("n_vecs"), col("mean_err_micro"),
       col("p95_err_micro"))
     val ix = load(s, dir)
@@ -596,7 +585,7 @@ object AnnIndex {
       |  FROM bt CROSS JOIN (VALUES (0),(1),(2),(3)) bb(b)),
       |tpk AS (
       |  SELECT s.vec_id, s.b,
-      |    ${Advanced8.distMicroSql("sv", "cv", "list_dot_product")} * 100 + cid AS pk
+      |    ${Advanced8.distMicroSql("sv", "cv")} * 100 + cid AS pk
       |  FROM tsub s JOIN ${Quantizer.pqFinal} USING (b)),
       |tmk AS (SELECT vec_id, b, MIN(pk) AS mk FROM tpk GROUP BY vec_id, b),
       |tev AS (SELECT vec_id, CAST(SUM(mk // 100) AS BIGINT) AS err FROM tmk GROUP BY vec_id),
@@ -668,7 +657,6 @@ object AnnIndex {
       |  ROUND(list_dot_product(cv, cv), 6) AS cnorm
       |FROM cents c LEFT JOIN cnt USING (cid)
       |ORDER BY cid""".stripMargin) { (s, d) =>
-    graft.functions.DotProduct.register(s)
     val e = graft.Tables.embeddings(s, d).select(col("vec_id"),
       graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
       .localCheckpoint()
@@ -677,7 +665,7 @@ object AnnIndex {
       .groupBy(col("cid")).agg(count(lit(1)).as("n"))
     cents.join(counts, Seq("cid"), "left")
       .select(col("cid"), coalesce(col("n"), lit(0L)).as("n_members"),
-        round(expr("graft_dot(cv, cv)"), 6).as("cnorm"))
+        round(DotProduct.dot(col("cv"), col("cv")), 6).as("cnorm"))
       .orderBy(col("cid"))
   }
 
@@ -729,7 +717,7 @@ object AnnIndex {
       |          FROM pk GROUP BY vec_id, b),
       |dtab AS (
       |  SELECT s.vec_id AS qid, b, cid,
-      |    ${Advanced8.distMicroSql("sv", "cv", "list_dot_product")} AS dm
+      |    ${Advanced8.distMicroSql("sv", "cv")} AS dm
       |  FROM sub s JOIN ${Quantizer.pqFinal} USING (b) WHERE s.vec_id < 5),
       |ad AS (
       |  SELECT x.qid, x.cand, CAST(SUM(d.dm) AS BIGINT) AS adist_micro
@@ -780,7 +768,7 @@ object AnnIndex {
       |          FROM pk GROUP BY vec_id, b),
       |dtab AS (
       |  SELECT s.vec_id AS qid, b, cid,
-      |    ${Advanced8.distMicroSql("sv", "cv", "list_dot_product")} AS dm
+      |    ${Advanced8.distMicroSql("sv", "cv")} AS dm
       |  FROM sub s JOIN ${Quantizer.pqFinal} USING (b) WHERE s.vec_id < 5),
       |ad AS (
       |  SELECT x.qid, x.cand, CAST(SUM(d.dm) AS BIGINT) AS adist_micro
@@ -795,7 +783,7 @@ object AnnIndex {
       |  FROM ad QUALIFY srnk <= ${64 * math.ceil(0.2 * 32).toInt}),
       |er AS (
       |  SELECT sh.qid, sh.cand,
-      |    ${Advanced8.distMicroSql("q.v", "c.v", "list_dot_product")} AS edist_micro
+      |    ${Advanced8.distMicroSql("q.v", "c.v")} AS edist_micro
       |  FROM short sh JOIN e q ON q.vec_id = sh.qid JOIN e c ON c.vec_id = sh.cand),
       |r AS (
       |  SELECT qid, cand, edist_micro,

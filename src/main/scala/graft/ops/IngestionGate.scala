@@ -179,7 +179,6 @@ object IngestionGate {
         // kernel (min doc_id survives — [[Advanced20.dominatedBy]],
         // so the cap and drop-logging apply here too). Still O(batch):
         // both join sides are the batch.
-        graft.functions.CosineSim.register(s)
         val cents = s.read.parquet(s"$sd/ann/centroids")
           .select(col("cid"), col("cv"))
         // caller-owned materialization (round-17 advice): the sweep's
@@ -633,18 +632,8 @@ object IngestionGate {
       // on its own, so they build CONCURRENTLY (round 17, the q206
       // one-shot item): Spark's scheduler interleaves jobs submitted
       // from separate threads, and the builds write to distinct output
-      // dirs. Expression registration: the eager register calls below
-      // run before the fan-out, but writeSemantic -> AnnIndex
-      // .writeVectors RE-REGISTERS the same functions inside its
-      // Future, concurrent with the other builds' analysis — safe
-      // because SimpleFunctionRegistry's methods are synchronized and
-      // createOrReplaceTempFunction re-binds an identical function
-      // (round 18, the r17 advice: the safety comes from the
-      // registry's internal lock, not from registration ordering).
-      // The serving artifact is identical to the sequential build —
+      // dirs. The serving artifact is identical to the sequential build —
       // only wall-clock changes.
-      graft.functions.DotProduct.register(s)
-      graft.functions.CosineSim.register(s)
       def corpus = Tables.documents(s, d).filter(col("doc_id") < 400)
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Shared, Tables}
+import graft.functions.DotProduct
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,7 +35,6 @@ object Quantizer {
   // ---------------------------------------------------------------- Spark
 
   private def emb(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     // spread the single-file scan before the Lloyd distance passes
     // (round 19, guide §2.5) — the trainers otherwise run one-task
     graft.Spread.lazyAuto(
@@ -58,10 +58,10 @@ object Quantizer {
     * (q80's plan shape).
     */
   private[ops] def assignFull(e: DataFrame, cent: DataFrame): DataFrame = {
-    val eVv = e.withColumn("vv", expr("graft_dot(v, v)"))
-    eVv.crossJoin(broadcast(cent.withColumn("cc", expr("graft_dot(cv, cv)"))))
+    val eVv = e.withColumn("vv", DotProduct.dot(col("v"), col("v")))
+    eVv.crossJoin(broadcast(cent.withColumn("cc", DotProduct.dot(col("cv"), col("cv")))))
       .select(col("vec_id"), col("v"),
-        struct(round(col("vv") - expr("2*graft_dot(v,cv)") + col("cc"), 6).as("dist"),
+        struct(round(col("vv") - lit(2) * DotProduct.dot(col("v"), col("cv")) + col("cc"), 6).as("dist"),
           col("cid")).as("dc"))
       .groupBy(col("vec_id"))
       .agg(min(col("dc")).as("m"), first(col("v")).as("v")) // v constant per vec_id
@@ -84,10 +84,10 @@ object Quantizer {
     * sub-codebooks in ONE pass over the block table.
     */
   private def assignBlocks(sub: DataFrame, cb: DataFrame): DataFrame = {
-    val subVv = sub.withColumn("vv", expr("graft_dot(sv, sv)"))
-    subVv.join(broadcast(cb.withColumn("cc", expr("graft_dot(cv, cv)"))), Seq("b"))
+    val subVv = sub.withColumn("vv", DotProduct.dot(col("sv"), col("sv")))
+    subVv.join(broadcast(cb.withColumn("cc", DotProduct.dot(col("cv"), col("cv")))), Seq("b"))
       .select(col("vec_id"), col("b"), col("sv"),
-        struct(round(col("vv") - expr("2*graft_dot(sv,cv)") + col("cc"), 6).as("dist"),
+        struct(round(col("vv") - lit(2) * DotProduct.dot(col("sv"), col("cv")) + col("cc"), 6).as("dist"),
           col("cid")).as("dc"))
       .groupBy(col("vec_id"), col("b"))
       .agg(min(col("dc")).as("m"), first(col("sv")).as("sv"))

@@ -332,7 +332,7 @@ object Release {
       |  FROM v2 CROSS JOIN (VALUES (0),(1),(2),(3)) bb(b)),
       |pk2 AS (
       |  SELECT s.vec_id, s.b,
-      |    ${Advanced8.distMicroSql("sv", "cv", "list_dot_product")} * 100 + cid AS pk
+      |    ${Advanced8.distMicroSql("sv", "cv")} * 100 + cid AS pk
       |  FROM sub2 s JOIN ${Quantizer.pqFinal} USING (b)),
       |codes AS (
       |  SELECT vec_id, b, CAST(MIN(pk) % 100 AS INTEGER) AS code
@@ -341,8 +341,6 @@ object Release {
       |  CAST(c.b AS INTEGER) AS b, c.code
       |FROM codes c JOIN asg a USING (vec_id)
       |ORDER BY vec_id, b""".stripMargin) { (s, d) =>
-    graft.functions.DotProduct.register(s)
-    graft.functions.CosineSim.register(s)
     val v1 = graft.Shared.materialized(s, s"relver-emb-v1@$d") {
       Tables.embeddings(s, d).select(col("vec_id"),
           graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Shared, Tables}
+import graft.functions.VecSub
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,8 +33,6 @@ import org.apache.spark.sql.functions._
 object ResidualPQ {
 
   private def embV(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
-    graft.functions.VecSub.register(s)
     Tables.embeddings(s, d).select(col("vec_id"),
       graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
   }
@@ -49,7 +48,7 @@ object ResidualPQ {
       .filter(col("crank") === 1).select(col("vec_id"), col("c_id"))
     embV(s, d).join(assigned, Seq("vec_id"))
       .join(broadcast(cent(s, d)), Seq("c_id"))
-      .select(col("vec_id"), expr("graft_vec_sub(v, cv)").as("v"))
+      .select(col("vec_id"), VecSub.vecSub(col("v"), col("cv")).as("v"))
   }
 
   /** Residual sub-codebooks (b, cid, cv) — Lloyd-trained on residual
@@ -69,7 +68,7 @@ object ResidualPQ {
       Quantizer.subBlocks(residuals(s, d))
         .join(broadcast(resCodebook(s, d)), Seq("b"))
         .select(col("vec_id"), col("b"),
-          (expr(Advanced8.distMicroSql("sv", "cv", "graft_dot")) * 100 +
+          (Advanced8.distMicro(col("sv"), col("cv")) * 100 +
             col("cid")).as("pk"))
         .groupBy(col("vec_id"), col("b"))
         .agg(min(col("pk")).as("mk"))
@@ -99,7 +98,7 @@ object ResidualPQ {
        |  FROM qres CROSS JOIN (VALUES (0),(1),(2),(3)) bb(b)),
        |dtab AS (
        |  SELECT qid, c_id, b, cid,
-       |    ${Advanced8.distMicroSql("sv", "cv", "list_dot_product")} AS dm
+       |    ${Advanced8.distMicroSql("sv", "cv")} AS dm
        |  FROM qrsub JOIN ${Quantizer.pqFinal} USING (b)),
        |ad AS (
        |  SELECT x.qid, x.cand, CAST(SUM(d.dm) AS BIGINT) AS adist_micro
@@ -115,7 +114,6 @@ object ResidualPQ {
        |  FROM ad QUALIFY rnk <= 3)
        |SELECT qid, rnk, cand, adist_micro / 1000000.0 AS approx_dist
        |FROM r ORDER BY qid, rnk""".stripMargin) { (s, d) =>
-    graft.functions.CosineSim.register(s)
     val aff = Advanced2.ivfAffinity(s, d)
     val assigned = aff.filter(col("crank") === 1).select(col("vec_id"), col("c_id"))
     val probes = aff.filter(col("crank") <= 2 && col("vec_id") < 5)
@@ -130,11 +128,11 @@ object ResidualPQ {
     val qres = probes
       .join(e.select(col("vec_id").as("qid"), col("v").as("qv")), Seq("qid"))
       .join(broadcast(cent(s, d)), Seq("c_id"))
-      .select(col("qid"), col("c_id"), expr("graft_vec_sub(qv, cv)").as("v"))
+      .select(col("qid"), col("c_id"), VecSub.vecSub(col("qv"), col("cv")).as("v"))
     val dtab = Quantizer.subBlocks(qres, Seq("qid", "c_id"))
       .join(broadcast(resCodebook(s, d)), Seq("b"))
       .select(col("qid"), col("c_id"), col("b"), col("cid"),
-        expr(Advanced8.distMicroSql("sv", "cv", "graft_dot")).as("dm"))
+        Advanced8.distMicro(col("sv"), col("cv")).as("dm"))
     val ad = candp.as("x")
       .join(resCodes(s, d).as("cd"), col("cd.vec_id") === col("x.cand"))
       .join(broadcast(dtab.as("dt")),

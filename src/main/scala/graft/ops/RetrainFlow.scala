@@ -443,7 +443,7 @@ object RetrainFlow {
       |  FROM bt CROSS JOIN (VALUES (0),(1),(2),(3)) bb(b)),
       |tpk AS (
       |  SELECT s.vec_id, s.b,
-      |    ${Advanced8.distMicroSql("sv", "cv", "list_dot_product")} * 100 + cid AS pk
+      |    ${Advanced8.distMicroSql("sv", "cv")} * 100 + cid AS pk
       |  FROM tsub s JOIN ${Quantizer.pqFinal} USING (b)),
       |tmk AS (SELECT vec_id, b, MIN(pk) AS mk FROM tpk GROUP BY vec_id, b),
       |tev AS (SELECT vec_id, CAST(SUM(mk // 100) AS BIGINT) AS err FROM tmk GROUP BY vec_id),
@@ -457,7 +457,7 @@ object RetrainFlow {
       |${Quantizer.pqTrainCtes(8, "u", "v", "nw")},
       |npk AS (
       |  SELECT s.vec_id, s.b,
-      |    ${Advanced8.distMicroSql("sv", "cv", "list_dot_product")} * 100 + cid AS pk
+      |    ${Advanced8.distMicroSql("sv", "cv")} * 100 + cid AS pk
       |  FROM nwsub s JOIN ${Quantizer.pqFinalP("nw")} USING (b)),
       |nmk AS (SELECT vec_id, b, MIN(pk) AS mk FROM npk GROUP BY vec_id, b),
       |nev AS (SELECT vec_id, CAST(SUM(mk // 100) AS BIGINT) AS err FROM nmk GROUP BY vec_id),
@@ -473,7 +473,7 @@ object RetrainFlow {
       |        FROM nbp, ntp),
       |pr AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 16),
       |er AS (SELECT qid, u.vec_id AS cand,
-      |         ${Advanced8.distMicroSql("qv", "u.v", "list_dot_product")} AS edist_micro
+      |         ${Advanced8.distMicroSql("qv", "u.v")} AS edist_micro
       |       FROM pr, u),
       |top AS (SELECT qid, cand, edist_micro,
       |          CAST(ROW_NUMBER() OVER (PARTITION BY qid

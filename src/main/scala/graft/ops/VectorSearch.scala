@@ -22,19 +22,17 @@ import org.apache.spark.sql.expressions.Window
   * All math in double (float inputs upcast) so the DuckDB oracle
   * (list_dot_product over DOUBLE[]) agrees to < 1e-12, then rounded to 6.
   * Dot products use the codegen'd [[graft.functions.DotProduct]] expression
-  * (registered as `graft_dot`) rather than interpreted zip_with/aggregate
+  * (`DotProduct.dot`) rather than interpreted zip_with/aggregate
   * lambdas — same sequential summation order, ~2× faster scan.
   */
 object VectorSearch {
 
   private[ops] def emb(s: SparkSession, d: String): DataFrame = {
-    DotProduct.register(s) // codegen'd graft_dot; see functions.DotProduct
-    CosineSim.register(s)  // fused one-pass cosine; see functions.CosineSim
     Tables.embeddings(s, d).select(col("vec_id"), asDouble(col("embedding")).as("v"))
   }
 
   private def cosExpr(a: String, b: String) =
-    round(expr(s"graft_cosine($a, $b)"), 6)
+    round(CosineSim.cosine(col(a), col(b)), 6)
 
   /** Brute-force cosine top-5 neighbors for query vectors vec_id < 10. */
   val annBruteForce = Q(
@@ -116,7 +114,7 @@ object VectorSearch {
     // mechanism — the per-run band-table constant).
     val bands = e.crossJoin(broadcast(planes))
       .select(col("vec_id"), col("p_id"),
-        when(expr("graft_dot(v, pv)") > 0, 1).otherwise(0).as("bit"))
+        when(DotProduct.dot(col("v"), col("pv")) > 0, 1).otherwise(0).as("bit"))
       .groupBy(col("vec_id"), expr("p_id div 2").cast("long").as("b"))
       .agg(sum(expr("shiftleft(bit, CAST(p_id % 2 AS INT))")).as("bsig"))
       .localCheckpoint(true)
@@ -231,7 +229,7 @@ object VectorSearch {
       threshold: Double, bucketCap: Int = LshGuard.BucketCap): DataFrame = {
     val bands = e.crossJoin(broadcast(planes))
       .select(col("vec_id"), col("p_id"),
-        when(expr("graft_dot(v, pv)") > 0, 1).otherwise(0).as("bit"))
+        when(DotProduct.dot(col("v"), col("pv")) > 0, 1).otherwise(0).as("bit"))
       .groupBy(col("vec_id"), expr(s"p_id div $bandBits").cast("long").as("b"))
       .agg(sum(expr(s"shiftleft(bit, CAST(p_id % $bandBits AS INT))")).as("bsig"))
     // hot-bucket guard: embeddings clustered around a dominant direction
@@ -247,7 +245,7 @@ object VectorSearch {
     cand
       .join(e.select(col("vec_id").as("da"), col("v").as("va")), Seq("da"))
       .join(e.select(col("vec_id").as("db"), col("v").as("vb")), Seq("db"))
-      .withColumn("sim_raw", expr("graft_cosine(va, vb)"))
+      .withColumn("sim_raw", CosineSim.cosine(col("va"), col("vb")))
       .filter(col("sim_raw") >= threshold)
       .select(col("da"), col("db"), round(col("sim_raw"), 6).as("sim"))
   }
@@ -316,7 +314,7 @@ object VectorSearch {
     val b = e.select(col("vec_id").as("db"), col("v").as("vb"))
     a.crossJoin(broadcast(b))
       .filter(col("da") < col("db"))
-      .withColumn("sim_raw", expr("graft_cosine(va, vb)"))
+      .withColumn("sim_raw", CosineSim.cosine(col("va"), col("vb")))
       .filter(col("sim_raw") >= 0.4)
       .select(col("da"), col("db"), round(col("sim_raw"), 6).as("sim"))
       .orderBy(col("da"), col("db"))

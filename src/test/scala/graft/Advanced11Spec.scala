@@ -17,13 +17,12 @@ class Advanced11Spec extends SparkSuite {
   import spark.implicits._
 
   test("law: graft_outer_upper enumerates exactly the upper-triangle products") {
-    OuterUpper.register(spark)
     val vecs = Seq(
       Array(1.0, -2.0, 3.0, 0.5),
       Array(0.0, 0.0, 0.0, 0.0),
       Array(-1.5, 2.25, -3.125, 4.0))
     val got = vecs.toDF("v")
-      .select(expr("graft_outer_upper(v)").as("o"))
+      .select(OuterUpper.outerUpper(col("v")).as("o"))
       .collect().map(_.getSeq[Double](0).toArray)
     vecs.zip(got).foreach { case (v, o) =>
       val n = v.length
@@ -37,10 +36,9 @@ class Advanced11Spec extends SparkSuite {
   }
 
   test("law: float input upcasts per element exactly like CAST AS DOUBLE") {
-    OuterUpper.register(spark)
     val f = Array(0.1f, -2.7f, 3.14159f)
     val got = Seq(Tuple1(f)).toDF("v")
-      .select(expr("graft_outer_upper(v)").as("o"))
+      .select(OuterUpper.outerUpper(col("v")).as("o"))
       .collect().head.getSeq[Double](0)
     val d = f.map(_.toDouble)
     val want = for { i <- 0 until 3; j <- i until 3 } yield d(i) * d(j)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.DotProduct
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -33,15 +34,14 @@ class Advanced13Spec extends SparkSuite {
   }
 
   test("q145 SQ8 top-3 matches the exact double-precision scan (recall)") {
-    graft.functions.DotProduct.register(spark)
     val emb = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
     val q = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val exact = emb.crossJoin(broadcast(q))
       .select(col("qid"), col("vec_id").as("cand"),
-        (expr("graft_dot(qv, qv)") + expr("graft_dot(v, v)")
-          - lit(2) * expr("graft_dot(qv, v)")).as("dist"))
+        (DotProduct.dot(col("qv"), col("qv")) + DotProduct.dot(col("v"), col("v"))
+          - lit(2) * DotProduct.dot(col("qv"), col("v"))).as("dist"))
       .withColumn("rnk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
           .orderBy(col("dist"), col("cand"))))

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.CosineSim
 import org.apache.spark.sql.functions._
 
 /** Hybrid RRF fusion and filtered ANN: fusion arithmetic verified row by
@@ -99,7 +100,6 @@ class Advanced14Spec extends SparkSuite {
   }
 
   test("q148 equals an independently-built same-label exact ranking") {
-    graft.functions.CosineSim.register(spark)
     val got = ops.Advanced14.filteredAnn.run(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     // independent construction: crossJoin then filter (vs the impl's
@@ -110,7 +110,7 @@ class Advanced14Spec extends SparkSuite {
       .select($"vec_id".as("qid"), $"label".as("qlabel"), $"v".as("qv"))
     val want = e.crossJoin(q)
       .filter($"label" === $"qlabel" && $"vec_id" =!= $"qid")
-      .select($"qid", $"vec_id".as("cand"), round(expr("graft_cosine(qv, v)"), 6).as("sim"))
+      .select($"qid", $"vec_id".as("cand"), round(CosineSim.cosine(col("qv"), col("v")), 6).as("sim"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).toSeq.flatMap { case (qid, rows) =>
         rows.sortBy(r => (-r._3, r._2)).take(3).zipWithIndex

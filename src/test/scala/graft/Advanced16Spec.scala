@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.CosineSim
 import org.apache.spark.sql.functions._
 
 /** Round-11 retrieval/export surfaces: MaxSim verified against an
@@ -99,13 +100,12 @@ class Advanced16Spec extends SparkSuite {
     // shortlist, then check tightness per query
     val e = Tables.embeddings(spark, sf0001)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-    graft.functions.CosineSim.register(spark)
     val q = e.filter($"vec_id" < 5).select($"vec_id".as("qid"), $"v".as("qv"))
     val wr = org.apache.spark.sql.expressions.Window
       .partitionBy($"qid").orderBy($"sim".desc, $"doc_id")
     val short = e.crossJoin(broadcast(q)).filter($"vec_id" =!= $"qid")
       .select($"qid", $"vec_id".as("doc_id"),
-        round(expr("graft_cosine(qv, v)"), 6).as("sim"))
+        round(CosineSim.cosine(col("qv"), col("v")), 6).as("sim"))
       .withColumn("rnk", row_number().over(wr)).filter($"rnk" <= 20)
     val toks = Tables.documents(spark, sf0001)
       .select($"doc_id", size(split($"text", " ")).cast("long").as("n_toks"))

@@ -57,7 +57,6 @@ class Advanced8Spec extends SparkSuite {
 
   test("q109 ADC search: recall@3 vs the exact L2 top-3 is non-degenerate") {
     import graft.functions.{DotProduct, VectorFunctions}
-    DotProduct.register(spark)
     val adc = Advanced8.pqAdcSearch.run(spark, sf0001)
       .select($"qid", $"cand").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
@@ -68,7 +67,8 @@ class Advanced8Spec extends SparkSuite {
       .partitionBy($"qid").orderBy($"dist", $"cand")
     val exact = q.crossJoin(e)
       .select($"qid", $"vec_id".as("cand"),
-        expr("graft_dot(qv,qv) - 2*graft_dot(qv,v) + graft_dot(v,v)").as("dist"))
+        (DotProduct.dot(col("qv"), col("qv")) - lit(2) * DotProduct.dot(col("qv"), col("v")) +
+          DotProduct.dot(col("v"), col("v"))).as("dist"))
       .withColumn("rnk", row_number().over(w)).filter($"rnk" <= 3)
       .select($"qid", $"cand").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
@@ -81,8 +81,6 @@ class Advanced8Spec extends SparkSuite {
 
   test("q140 IVF+ADC: candidates confined to probed lists; recall vs exact") {
     import graft.functions.{CosineSim, DotProduct, VectorFunctions}
-    DotProduct.register(spark)
-    CosineSim.register(spark)
     val res = Advanced8.ivfAdcSearch.run(spark, sf0001)
       .select($"qid", $"cand").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
@@ -95,7 +93,7 @@ class Advanced8Spec extends SparkSuite {
     val wAff = org.apache.spark.sql.expressions.Window
       .partitionBy($"vec_id").orderBy($"ca".desc, $"c_id")
     val aff = e.crossJoin(cent)
-      .select($"vec_id", $"c_id", round(expr("graft_cosine(v, cv)"), 6).as("ca"))
+      .select($"vec_id", $"c_id", round(CosineSim.cosine(col("v"), col("cv")), 6).as("ca"))
       .withColumn("crank", row_number().over(wAff))
     val assigned = aff.filter($"crank" === 1).select($"vec_id", $"c_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -115,7 +113,8 @@ class Advanced8Spec extends SparkSuite {
     val exact = e.filter($"vec_id" < 5).select($"vec_id".as("qid"), $"v".as("qv"))
       .crossJoin(e).filter($"qid" =!= $"vec_id")
       .select($"qid", $"vec_id".as("cand"),
-        expr("graft_dot(qv,qv) - 2*graft_dot(qv,v) + graft_dot(v,v)").as("dist"))
+        (DotProduct.dot(col("qv"), col("qv")) - lit(2) * DotProduct.dot(col("qv"), col("v")) +
+          DotProduct.dot(col("v"), col("v"))).as("dist"))
       .withColumn("rnk", row_number().over(w)).filter($"rnk" <= 3)
       .select($"qid", $"cand").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap

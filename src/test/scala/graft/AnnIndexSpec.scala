@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.DotProduct
 import graft.ops.{Advanced8, AnnIndex}
 import org.apache.spark.sql.functions._
 
@@ -365,14 +366,13 @@ class AnnIndexSpec extends SparkSuite {
       .orderBy($"qid", $"rnk")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     // exact oracle: q143's integer micro-unit distance, brute force
-    graft.functions.DotProduct.register(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"qid").orderBy($"edist_micro", $"cand")
     val want = queries.as("q").crossJoin(e.as("c"))
       .filter($"q.qid" =!= $"c.vec_id")
       .select($"q.qid".as("qid"), $"c.vec_id".as("cand"),
-        expr("CAST(ROUND((graft_dot(q.v, q.v) - 2 * graft_dot(q.v, c.v) + graft_dot(c.v, c.v)) * 1000000) AS BIGINT)")
-          .as("edist_micro"))
+        round((DotProduct.dot($"q.v", $"q.v") - lit(2) * DotProduct.dot($"q.v", $"c.v") +
+          DotProduct.dot($"c.v", $"c.v")) * 1000000).cast("long").as("edist_micro"))
       .withColumn("rnk", row_number().over(w)).filter($"rnk" <= 4)
       .select($"qid", $"rnk", $"cand", ($"edist_micro" / 1000000.0).as("exact_dist"))
       .orderBy($"qid", $"rnk")

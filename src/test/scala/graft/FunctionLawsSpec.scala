@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{Deletions, Deletions2, NGrams}
+import graft.functions.{Deletions, Deletions2, DotProduct, NGrams, SqEncode}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -111,9 +111,8 @@ class FunctionLawsSpec extends SparkSuite {
   test("law: graft_dot equals the sequential reference fold exactly") {
     val vecGen = Gen.listOfN(16, Gen.choose(-10.0, 10.0)).map(_.toArray)
     val pairs = seeded(Gen.listOfN(100, Gen.zip(vecGen, vecGen)))
-    graft.functions.DotProduct.register(spark)
     val got = pairs.toDF("a", "b")
-      .select(expr("graft_dot(a, b)").as("d"))
+      .select(DotProduct.dot(col("a"), col("b")).as("d"))
       .collect().map(_.getDouble(0))
     val want = pairs.map { case (a, b) =>
       var s = 0.0; var i = 0
@@ -124,14 +123,13 @@ class FunctionLawsSpec extends SparkSuite {
   }
 
   test("graft_sq8_encode rejects wrong-typed arguments at analysis, not on an executor") {
-    graft.functions.SqEncode.register(spark)
     val df = Seq((Array(1.0, 2.0), "nope")).toDF("v", "s")
     val ex = intercept[org.apache.spark.sql.AnalysisException] {
-      df.select(expr("graft_sq8_encode(v, v, s)")).collect()
+      df.select(SqEncode.sq8Encode(col("v"), col("v"), col("s"))).collect()
     }
     assert(ex.getMessage.contains("array<double>"), ex.getMessage)
     // the well-typed call still works (constant dim encodes as 0)
-    val ok = df.select(expr("graft_sq8_encode(v, v, v)").as("c"))
+    val ok = df.select(SqEncode.sq8Encode(col("v"), col("v"), col("v")).as("c"))
       .collect()(0).getSeq[Double](0)
     assert(ok == Seq(0.0, 0.0))
   }

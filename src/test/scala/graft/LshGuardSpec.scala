@@ -35,8 +35,6 @@ class LshGuardSpec extends SparkSuite {
   }
 
   test("bucket cap bounds degenerate-bucket candidates and observes drops") {
-    graft.functions.DotProduct.register(spark)
-    graft.functions.CosineSim.register(spark)
     val pairs = VectorSearch.nearDupPairs(degenerate, planes,
       bandBits = 4, threshold = 0.9, bucketCap = 8).collect()
     // only the first 8 members of each (identical) bucket pair up: C(8,2)
@@ -62,8 +60,6 @@ class LshGuardSpec extends SparkSuite {
   }
 
   test("per-task fan-out stays bounded under the cap (no quadratic bucket)") {
-    graft.functions.DotProduct.register(spark)
-    graft.functions.CosineSim.register(spark)
     class MaxShuffleWrite extends SparkListener {
       @volatile var maxWrite = 0L
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
@@ -119,8 +115,6 @@ class LshGuardSpec extends SparkSuite {
   }
 
   test("default cap is non-binding on real testdata (oracle-protecting)") {
-    graft.functions.DotProduct.register(spark)
-    graft.functions.CosineSim.register(spark)
     val e = Tables.embeddings(spark, sf0001).select($"vec_id",
       graft.functions.VectorFunctions.asDouble($"embedding").as("v"))
     val planes16 = e.filter($"vec_id" < 16)
@@ -132,8 +126,6 @@ class LshGuardSpec extends SparkSuite {
   }
 
   test("q141's auto banding resolves to the static oracle recipe at testdata scale") {
-    graft.functions.DotProduct.register(spark)
-    graft.functions.CosineSim.register(spark)
     // The registered q141 runs nearDupPairsAuto while its DuckDB oracle is
     // the STATIC 4-bands x 4-bit / first-16-planes recipe. That is only
     // sound while the formula resolves to 4 bits at every testdata SF
@@ -160,8 +152,6 @@ class LshGuardSpec extends SparkSuite {
   }
 
   test("auto banding refuses a corpus smaller than its seed-plane budget") {
-    graft.functions.DotProduct.register(spark)
-    graft.functions.CosineSim.register(spark)
     // 10 vectors < 4 bands x 4 bits = 16 planes: silently proceeding with
     // fewer planes would weaken banding below what bandBits implies
     // (round-8 advice) — the builder must be told, loudly.
@@ -175,8 +165,6 @@ class LshGuardSpec extends SparkSuite {
   }
 
   test("auto banding holds candidate volume ~linear where fixed bits go quadratic") {
-    graft.functions.DotProduct.register(spark)
-    graft.functions.CosineSim.register(spark)
     val base = Tables.embeddings(spark, sf0001).select($"vec_id",
       graft.functions.VectorFunctions.asDouble($"embedding").as("v"))
     // the round-8 10x-rehearsal shape: many verbatim copies under

@@ -63,13 +63,6 @@ class NGramsSpec extends SparkSuite {
     assert(viaExpr.exceptAll(viaHof).isEmpty && viaHof.exceptAll(viaExpr).isEmpty)
   }
 
-  test("graft_ngrams resolves through the SQL registry") {
-    NGrams.register(spark)
-    val r = spark.sql("SELECT graft_ngrams(array('p', 'q', 'r'), 2) AS g")
-      .head().getSeq[String](0)
-    assert(r == Seq("p q", "q r"))
-  }
-
   test("the projection stays inside whole-stage codegen") {
     val p = Tables.documents(spark, sf0001)
       .select(NGrams.ngrams(split($"text", " "), 5).as("g"))

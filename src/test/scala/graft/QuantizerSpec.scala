@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.DotProduct
 import graft.ops.Quantizer
 import org.apache.spark.sql.functions._
 
@@ -71,7 +72,6 @@ class QuantizerSpec extends SparkSuite {
       r.getSeq[Double](2).toArray).toMap
 
   test("Lloyd-trained PQ codebook recovers cluster structure the seed codebook cannot") {
-    graft.functions.DotProduct.register(spark)
     val e = corpus.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }
       .toSeq.toDF("vec_id", "v")
     val sub = Quantizer.subBlocks(e)
@@ -89,7 +89,6 @@ class QuantizerSpec extends SparkSuite {
   }
 
   test("training reduces total quantization error monotonically in iterations") {
-    graft.functions.DotProduct.register(spark)
     val e = corpus.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }
       .toSeq.toDF("vec_id", "v")
     val sub = Quantizer.subBlocks(e)
@@ -114,15 +113,14 @@ class QuantizerSpec extends SparkSuite {
   }
 
   test("trained coarse centroids partition the clustered corpus into pure lists") {
-    graft.functions.DotProduct.register(spark)
     val e = corpus.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }
       .toSeq.toDF("vec_id", "v")
     val cent = Quantizer.trainCentroids(e, K, Quantizer.Iters)
     // assign every vector to its nearest trained centroid (L2, cid ties)
-    val eVv = e.withColumn("vv", expr("graft_dot(v, v)"))
-    val asg = eVv.crossJoin(broadcast(cent.withColumn("cc", expr("graft_dot(cv, cv)"))))
+    val eVv = e.withColumn("vv", DotProduct.dot(col("v"), col("v")))
+    val asg = eVv.crossJoin(broadcast(cent.withColumn("cc", DotProduct.dot(col("cv"), col("cv")))))
       .select($"vec_id",
-        struct(round($"vv" - expr("2*graft_dot(v,cv)") + $"cc", 6).as("dist"),
+        struct(round($"vv" - lit(2) * DotProduct.dot(col("v"), col("cv")) + $"cc", 6).as("dist"),
           $"cid").as("dc"))
       .groupBy($"vec_id").agg(min($"dc").as("m"))
       .select($"vec_id", $"m.cid".as("cid"))

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.{DotProduct, VecSub}
 import graft.ops.{Advanced8, ResidualPQ}
 import org.apache.spark.sql.functions._
 
@@ -14,11 +15,10 @@ class ResidualPQSpec extends SparkSuite {
   import spark.implicits._
 
   test("graft_vec_sub equals the interpreted zip_with form") {
-    graft.functions.VecSub.register(spark)
     val df = Seq((Seq(1.0, 2.5, -3.0), Seq(0.5, 2.5, 4.0)))
       .toDF("a", "b")
     val r = df.select(
-      expr("graft_vec_sub(a, b)").as("fast"),
+      VecSub.vecSub(col("a"), col("b")).as("fast"),
       expr("zip_with(a, b, (x, y) -> x - y)").as("ref")).head()
     assert(r.getSeq[Double](0) == r.getSeq[Double](1))
     assert(r.getSeq[Double](0) == Seq(0.5, 0.0, -7.0))
@@ -46,8 +46,6 @@ class ResidualPQSpec extends SparkSuite {
     // ordering (cluster = i % 32) makes the first-32 coarse seeds one
     // per cluster — this test isolates the residual effect, QuantizerSpec
     // covers bad seeding.
-    graft.functions.DotProduct.register(spark)
-    graft.functions.VecSub.register(spark)
     val K = 32; val Per = 12; val Dim = 64
     val rnd = new scala.util.Random(19)
     val centers = Array.fill(K, Dim)(rnd.nextGaussian())
@@ -56,22 +54,23 @@ class ResidualPQSpec extends SparkSuite {
       (i.toLong, c.toIndexedSeq.map(x => x + 0.1 * rnd.nextGaussian()))
     }.toDF("vec_id", "v")
     val cent = ops.Quantizer.trainCentroids(corpus, K, ops.Quantizer.Iters)
-    val eVv = corpus.withColumn("vv", expr("graft_dot(v, v)"))
+    val eVv = corpus.withColumn("vv", DotProduct.dot(col("v"), col("v")))
     val assigned = eVv
-      .crossJoin(broadcast(cent.withColumn("cc", expr("graft_dot(cv, cv)"))))
+      .crossJoin(broadcast(cent.withColumn("cc", DotProduct.dot(col("cv"), col("cv")))))
       .select($"vec_id", $"v",
-        struct(round($"vv" - expr("2*graft_dot(v,cv)") + $"cc", 6).as("dist"),
+        struct(round($"vv" - lit(2) * DotProduct.dot(col("v"), col("cv")) + $"cc", 6).as("dist"),
           $"cid").as("dc"))
       .groupBy($"vec_id").agg(min($"dc").as("m"), first($"v").as("v"))
       .select($"vec_id", $"m.cid".as("cid"), $"v")
     val residuals = assigned.join(broadcast(cent), Seq("cid"))
-      .select($"vec_id", expr("graft_vec_sub(v, cv)").as("v"))
+      .select($"vec_id", VecSub.vecSub(col("v"), col("cv")).as("v"))
     def codeErr(e: org.apache.spark.sql.DataFrame): Double = {
       val sub = ops.Quantizer.subBlocks(e)
       val cb = ops.Quantizer.trainPqBlocks(sub, 8, ops.Quantizer.Iters)
       sub.join(broadcast(cb), Seq("b"))
         .select($"vec_id", $"b",
-          expr("graft_dot(sv,sv) - 2*graft_dot(sv,cv) + graft_dot(cv,cv)").as("d"))
+          (DotProduct.dot(col("sv"), col("sv")) - lit(2) * DotProduct.dot(col("sv"), col("cv")) +
+            DotProduct.dot(col("cv"), col("cv"))).as("d"))
         .groupBy($"vec_id", $"b").agg(min($"d").as("md"))
         .agg(sum($"md")).head().getDouble(0)
     }
@@ -83,8 +82,6 @@ class ResidualPQSpec extends SparkSuite {
   }
 
   test("q144 search: probe-confined candidates, recall not below raw-code ADC") {
-    graft.functions.DotProduct.register(spark)
-    graft.functions.CosineSim.register(spark)
     val res = ResidualPQ.ivfPqResidual.run(spark, sf0001)
       .select($"qid", $"cand").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
@@ -96,7 +93,8 @@ class ResidualPQSpec extends SparkSuite {
     val exact = e.filter($"vec_id" < 5).select($"vec_id".as("qid"), $"v".as("qv"))
       .crossJoin(e).filter($"qid" =!= $"vec_id")
       .select($"qid", $"vec_id".as("cand"),
-        expr("graft_dot(qv,qv) - 2*graft_dot(qv,v) + graft_dot(v,v)").as("dist"))
+        (DotProduct.dot(col("qv"), col("qv")) - lit(2) * DotProduct.dot(col("qv"), col("v")) +
+          DotProduct.dot(col("v"), col("v"))).as("dist"))
       .withColumn("rnk", row_number().over(w)).filter($"rnk" <= 3)
       .select($"qid", $"cand").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap

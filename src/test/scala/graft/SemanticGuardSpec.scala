@@ -31,7 +31,6 @@ class SemanticGuardSpec extends SparkSuite {
   }
 
   test("degenerate cluster: pair volume bounded by cap(cap-1)/2, dedup inside the cap intact") {
-    graft.functions.CosineSim.register(spark)
     val rows = Advanced20.dominatedBy(identicalCluster(3000), 0.4, cap = 64)
       .orderBy($"vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getLong(4)))
@@ -62,7 +61,6 @@ class SemanticGuardSpec extends SparkSuite {
   }
 
   test("without the cap the same fixture goes quadratic (fixture honesty)") {
-    graft.functions.CosineSim.register(spark)
     val rows = Advanced20.dominatedBy(identicalCluster(400), 0.4, cap = Int.MaxValue)
       .collect()
     assert(rows.map(_.getLong(2)).sum == 400L * 399 / 2,
@@ -70,8 +68,6 @@ class SemanticGuardSpec extends SparkSuite {
   }
 
   test("default cap is non-binding on real testdata (oracle-protecting)") {
-    graft.functions.DotProduct.register(spark)
-    graft.functions.CosineSim.register(spark)
     val e = Tables.embeddings(spark, sf0001).select($"vec_id",
       graft.functions.VectorFunctions.asDouble($"embedding").as("v"))
     val assigned = Advanced20.assignCosine(e,
@@ -83,8 +79,6 @@ class SemanticGuardSpec extends SparkSuite {
   }
 
   test("semanticDedupBatch caps the member side of a hot corpus cluster") {
-    graft.functions.DotProduct.register(spark)
-    graft.functions.CosineSim.register(spark)
     val rnd = new scala.util.Random(17)
     val u = Array.fill(64)(rnd.nextGaussian())
     // 200 identical corpus vectors (the hot cluster) + 50 spread ones

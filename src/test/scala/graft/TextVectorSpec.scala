@@ -94,9 +94,7 @@ class TextVectorSpec extends SparkSuite {
 
   test("q141 bucketed near-dup: exact subset of ground truth, usable recall") {
     import graft.ops.VectorSearch
-    import graft.functions.{CosineSim, DotProduct, VectorFunctions}
-    DotProduct.register(spark)
-    CosineSim.register(spark)
+    import graft.functions.{CosineSim, VectorFunctions}
     // the primary (unbounded, bucketed) form over the full sf0.001 corpus
     val got = VectorSearch.nearDupBucketed.run(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
@@ -106,7 +104,7 @@ class TextVectorSpec extends SparkSuite {
     val want = e.select(col("vec_id").as("da"), col("v").as("va"))
       .crossJoin(e.select(col("vec_id").as("db"), col("v").as("vb")))
       .filter(col("da") < col("db"))
-      .withColumn("sim_raw", expr("graft_cosine(va, vb)"))
+      .withColumn("sim_raw", CosineSim.cosine(col("va"), col("vb")))
       .filter(col("sim_raw") >= 0.4)
       .select(col("da"), col("db"), round(col("sim_raw"), 6).as("sim"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
