@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 /** Job labeling (guide §1.5): wrap an operator phase so every Spark job
   * it launches carries a readable description in the UI / listeners —
@@ -15,5 +16,21 @@ object Jobs {
     sc.setJobDescription(label)
     try body
     finally sc.setJobDescription(prev)
+  }
+
+  /** The distinct rows of a small-cardinality frame (bucket ids, list
+    * ids) on the driver, without the exchange `distinct().collect()`
+    * plans: duplicates are removed per partition, then again on the
+    * driver, so the driver receives at most (distinct rows × partitions)
+    * rows. A frame that is already driver-local (a projection of a
+    * local relation) is collected without launching a job. Row order is
+    * unspecified.
+    */
+  def distinctRows(df: DataFrame): Seq[Row] = {
+    val rows = df.queryExecution.optimizedPlan match {
+      case _: LocalRelation => df.collect()
+      case _ => df.mapPartitions(_.toSet.iterator)(Encoders.row(df.schema)).collect()
+    }
+    rows.toSeq.distinct
   }
 }

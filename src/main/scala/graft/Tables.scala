@@ -22,7 +22,8 @@ object Tables {
       // MICROS/MILLIS data. Either physical type is handled by `tsUs` below.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     }
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    // schema from the footer on the driver: no inference job per open
+    graft.ops.MetaScalar.open(spark, s"$sfDir/$name.parquet")
   }
 
   /** Canonical epoch-MICROseconds from the events `ts` column, adaptive to

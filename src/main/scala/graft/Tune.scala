@@ -21,7 +21,11 @@ object Tune {
     * local/HDFS-class filesystems. Deployments on high-latency object
     * stores with wider tables should lower it via
     * `SPARK_GRAFT_LIST_PAR_THRESHOLD` — that is the regime the
-    * distributed listing exists for.
+    * distributed listing exists for. With the listing job gone, the
+    * schema-inference job that every schema-less `read.parquet` ran
+    * went too: the engine opens its tables with
+    * [[ops.MetaScalar.open]] (schema from one footer on the driver), so
+    * opening an index table launches no job at all.
     */
   val ListParThreshold: String =
     sys.env.getOrElse("SPARK_GRAFT_LIST_PAR_THRESHOLD", "4200")

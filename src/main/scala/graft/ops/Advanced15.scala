@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.{Det, Q, Tables}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Round-9 batch: the three curation-loop steps between "score the
   * corpus" and "ship the shards" that were still missing — interpolated

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.{Q, Tables}
 import graft.functions.NGrams
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

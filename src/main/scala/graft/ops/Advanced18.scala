@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-11 continuation: the two tokenization-adjacent reshapes every

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Det, Q, Tables}
+import graft.{Q, Tables}
 import graft.functions.CosineSim
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.{Q, Tables}
 import graft.functions.{DotProduct, SimHash60, VectorFunctions}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 

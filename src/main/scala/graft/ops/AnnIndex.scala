@@ -196,16 +196,16 @@ object AnnIndex {
     val e = graft.Spread.lazyAuto(
       graft.Tables.embeddings(s, d).select(col("vec_id"),
         graft.functions.VectorFunctions.asDouble(col("embedding")).as("v")))
-    val cent = s.read.parquet(s"$dir/centroids")
+    val cent = MetaScalar.open(s, s"$dir/centroids")
       .select(col("cid").as("c_id"), col("cv"))
     assignVectors(e, cent)
       .write.mode("overwrite").parquet(s"$dir/assigned")
     Advanced8.pqAssign(s, d)
       .select(col("vec_id"), col("b"), (col("mk") % 100).cast("int").as("code"))
-      .join(s.read.parquet(s"$dir/assigned"), Seq("vec_id"))
+      .join(MetaScalar.open(s, s"$dir/assigned"), Seq("vec_id"))
       .transform(Layout.writeByBucket(_, col("c_id")))
       .write.partitionBy("c_id").mode("overwrite").parquet(s"$dir/codes")
-    errStats(perVectorErrMicro(e, s.read.parquet(s"$dir/codebook")))
+    errStats(perVectorErrMicro(e, MetaScalar.open(s, s"$dir/codebook")))
       .write.mode("overwrite").parquet(s"$dir/quantstats")
   }
 
@@ -225,25 +225,25 @@ object AnnIndex {
       .write.mode("overwrite").parquet(s"$dir/centroids")
     Quantizer.trainPqBlocks(Quantizer.subBlocks(e), 8, Quantizer.Iters)
       .write.mode("overwrite").parquet(s"$dir/codebook")
-    val cent = s.read.parquet(s"$dir/centroids")
+    val cent = MetaScalar.open(s, s"$dir/centroids")
       .select(col("cid").as("c_id"), col("cv"))
     assignVectors(e, cent)
       .write.mode("overwrite").parquet(s"$dir/assigned")
-    encodeVectors(e, s.read.parquet(s"$dir/codebook"))
-      .join(s.read.parquet(s"$dir/assigned"), Seq("vec_id"))
+    encodeVectors(e, MetaScalar.open(s, s"$dir/codebook"))
+      .join(MetaScalar.open(s, s"$dir/assigned"), Seq("vec_id"))
       .transform(Layout.writeByBucket(_, col("c_id")))
       .write.partitionBy("c_id").mode("overwrite").parquet(s"$dir/codes")
-    errStats(perVectorErrMicro(e, s.read.parquet(s"$dir/codebook")))
+    errStats(perVectorErrMicro(e, MetaScalar.open(s, s"$dir/codebook")))
       .write.mode("overwrite").parquet(s"$dir/quantstats")
     Tombstones.dropLedger(s, dir)
   }
 
   def load(s: SparkSession, dir: String): Index = {
     val raw = Index(
-      centroids = s.read.parquet(s"$dir/centroids"),
-      codebook = s.read.parquet(s"$dir/codebook"),
-      assigned = s.read.parquet(s"$dir/assigned"),
-      codes = s.read.parquet(s"$dir/codes"))
+      centroids = MetaScalar.open(s, s"$dir/centroids"),
+      codebook = MetaScalar.open(s, s"$dir/codebook"),
+      assigned = MetaScalar.open(s, s"$dir/assigned"),
+      codes = MetaScalar.open(s, s"$dir/codes"))
     Tombstones.ledger(s, dir).fold(raw) { t =>
       val ids = t.select(col("vec_id"))
       raw.copy(
@@ -322,7 +322,7 @@ object AnnIndex {
     // ids already COMPLETE in codes (all blocks present): the groupBy is
     // confined to batch-sized data by the semi-join, so replay cost is
     // O(batch), not O(index)
-    val codeIds = s.read.parquet(s"$dir/codes")
+    val codeIds = MetaScalar.open(s, s"$dir/codes")
       .join(batch.select(col("vec_id")), Seq("vec_id"), "left_semi")
       .groupBy(col("vec_id"))
       .agg(countDistinct(col("b")).as("nb"))
@@ -332,7 +332,7 @@ object AnnIndex {
       .join(newAssigned, Seq("vec_id"))
       .transform(Layout.writeByBucket(_, col("c_id")))
       .write.partitionBy("c_id").mode("append").parquet(s"$dir/codes")
-    val assignedIds = s.read.parquet(s"$dir/assigned").select(col("vec_id"))
+    val assignedIds = MetaScalar.open(s, s"$dir/assigned").select(col("vec_id"))
     newAssigned.join(assignedIds, Seq("vec_id"), "left_anti")
       .write.mode("append").parquet(s"$dir/assigned")
     load(s, dir)
@@ -379,7 +379,7 @@ object AnnIndex {
 
   def search(s: SparkSession, ix: Index, queries: DataFrame, nprobe: Int,
       k: Int, excludeSelf: Boolean = false,
-      allowed: Option[DataFrame] = None): DataFrame = {
+      allowed: Option[DataFrame] = None): DataFrame = graft.Jobs.labeled(s, "ann-index: search") {
     val (probes, candp) =
       probeCandidates(ix, queries, nprobe, excludeSelf, allowed)
     // per-query block-distance table to the codebook
@@ -389,8 +389,7 @@ object AnnIndex {
         Advanced8.distMicro(col("sv"), col("cv")).as("dm"))
     // probed list ids, collected once: the codes scan prunes to those
     // PARTITION directories — the physical "read only probed lists"
-    val probedLists = probes.select(col("c_id")).distinct()
-      .collect().map(_.get(0)).toSeq
+    val probedLists = graft.Jobs.distinctRows(probes.select(col("c_id"))).map(_.get(0))
     // Candidate-confined code rows, deduped per (cand, block): a torn
     // append heals by re-writing a vector's full block set next to its
     // stale partial rows (see [[append]]), and those leftovers are exact
@@ -478,7 +477,7 @@ object AnnIndex {
   def searchRerank(s: SparkSession, ix: Index, vectors: DataFrame,
       queries: DataFrame, k: Int, frac: Double = 0.15,
       shortlistPerProbe: Int = 64, excludeSelf: Boolean = false,
-      allowed: Option[DataFrame] = None): DataFrame = {
+      allowed: Option[DataFrame] = None): DataFrame = graft.Jobs.labeled(s, "ann-index: searchRerank") {
     val np = autoNprobe(ix, frac)
     // Long math, clamped (round-17 advice): the exact gate's corpus-
     // covering spp × a frac=1.0 probe count overflows Int past ~2.1B —
@@ -552,7 +551,7 @@ object AnnIndex {
     val cols = Seq(col("side"), col("n_vecs"), col("mean_err_micro"),
       col("p95_err_micro"))
     val ix = load(s, dir)
-    s.read.parquet(s"$dir/quantstats").withColumn("side", lit("baseline"))
+    MetaScalar.open(s, s"$dir/quantstats").withColumn("side", lit("baseline"))
       .select(cols: _*)
       .unionByName(errStats(perVectorErrMicro(batch, ix.codebook))
         .withColumn("side", lit("batch")).select(cols: _*))

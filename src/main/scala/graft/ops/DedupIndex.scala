@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.Q
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -90,7 +90,7 @@ object DedupIndex {
   private[graft] def doneIds(s: SparkSession, dir: String,
       ids: DataFrame): DataFrame =
     Tombstones.liveByEpoch(
-        pruneSigs(s.read.parquet(s"$dir/sigs"), Tombstones.readBuckets(s, dir), ids),
+        pruneSigs(MetaScalar.open(s, s"$dir/sigs"), Tombstones.readBuckets(s, dir), ids),
         Tombstones.tombMax(s, dir, "doc_id"), "doc_id")
       .join(ids.select(col("doc_id")), Seq("doc_id"), "left_semi")
       .select(col("doc_id"))
@@ -99,8 +99,7 @@ object DedupIndex {
     * driver-bounded (≤ the layout's bucket count distinct values).
     */
   private def pruneSigs(sigs: DataFrame, nB: Int, ids: DataFrame): DataFrame = {
-    val wanted = ids.select(sbktCol(nB).as("sbkt")).distinct()
-      .collect().map(_.getInt(0)).toSeq
+    val wanted = graft.Jobs.distinctRows(ids.select(sbktCol(nB).as("sbkt"))).map(_.getInt(0))
     sigs.filter(col("sbkt").isin(wanted: _*))
   }
 
@@ -149,8 +148,8 @@ object DedupIndex {
     val nB = Tombstones.readBuckets(s, dir) // the format gate
     val tMax = Tombstones.tombMax(s, dir, "doc_id")
     Index(
-      Tombstones.liveByEpoch(s.read.parquet(s"$dir/bands"), tMax, "doc_id"),
-      Tombstones.liveByEpoch(s.read.parquet(s"$dir/sigs"), tMax, "doc_id"),
+      Tombstones.liveByEpoch(MetaScalar.open(s, s"$dir/bands"), tMax, "doc_id"),
+      Tombstones.liveByEpoch(MetaScalar.open(s, s"$dir/sigs"), tMax, "doc_id"),
       nB)
   }
 
@@ -285,8 +284,8 @@ object DedupIndex {
       TextOps.sigsOf(graft.Spread.batch(batch)).localCheckpoint(true)
     }
     val bBands = TextOps.bandsOf(bSigs)
-    val bkts = bBands.select(bktCol(ix.buckets).as("bkt")).distinct()
-      .collect().map(_.getInt(0)).toSeq // ≤ buckets values, driver-bounded
+    val bkts = graft.Jobs.distinctRows(bBands.select(bktCol(ix.buckets).as("bkt")))
+      .map(_.getInt(0)) // ≤ buckets values per partition, driver-bounded
     val corpusBands = ix.bands.filter(col("bkt").isin(bkts: _*))
     // candidate-sized (cap-bounded) — checkpointed because the pair set
     // is consumed twice: once to name the sig buckets it needs, once in

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Det, Q, Tables}
+import graft.{Q, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -89,7 +89,7 @@ object Dimensional {
       |  strftime(d, '%A') AS day_name, strftime(d, '%B') AS month_name,
       |  dayofweek(d) IN (0, 6) AS is_weekend
       |FROM (SELECT unnest(generate_series(DATE '2020-01-01', DATE '2021-12-31', INTERVAL 1 DAY)) AS d)
-      |ORDER BY date_key""".stripMargin) { (s, d) =>
+      |ORDER BY date_key""".stripMargin) { (s, _) =>
     calendar(s)
       .filter(col("year").isin(2020, 2021))
       .orderBy(col("date_key"))

@@ -95,7 +95,7 @@ object IngestionGate {
     * mutating [[gateBatch]] composes.
     */
   def decide(s: SparkSession, cfg: Config, batch: DataFrame): DataFrame =
-    decideWithHandles(s, cfg, batch)._1
+    graft.Jobs.labeled(s, "ingestion-gate: decide")(decideWithHandles(s, cfg, batch)._1)
 
   /** [[decide]] plus the internal eager checkpoints the lazy result
     * reads through (round 18, the r17 block-accretion advice): the
@@ -164,7 +164,7 @@ object IngestionGate {
         "semanticDir is set but the batch has no `v` embedding column")
       val dominated = Advanced20.semanticDedupBatch(s, s"$sd/ann",
           lexAdmitted.select(col("doc_id").as("vec_id"), col("v")),
-          s.read.parquet(s"$sd/vecs").dropDuplicates("vec_id"),
+          MetaScalar.open(s, s"$sd/vecs").dropDuplicates("vec_id"),
           cfg.semanticTau)
         .select(col("vec_id").as("doc_id"))
       val corpusClean = lexAdmitted.join(dominated, Seq("doc_id"), "left_anti")
@@ -179,7 +179,7 @@ object IngestionGate {
         // kernel (min doc_id survives — [[Advanced20.dominatedBy]],
         // so the cap and drop-logging apply here too). Still O(batch):
         // both join sides are the batch.
-        val cents = s.read.parquet(s"$sd/ann/centroids")
+        val cents = MetaScalar.open(s, s"$sd/ann/centroids")
           .select(col("cid"), col("cv"))
         // caller-owned materialization (round-17 advice): the sweep's
         // cap reads its input three times (pass 1 + both pair sides),
@@ -254,7 +254,7 @@ object IngestionGate {
     * append replays into a duplicate sink row).
     */
   def accepted(s: SparkSession, cfg: Config): DataFrame =
-    s.read.parquet(cfg.acceptedDir).dropDuplicates("doc_id")
+    MetaScalar.open(s, cfg.acceptedDir).dropDuplicates("doc_id")
 
   /** ONE drift readout for an arriving batch against every frozen
     * model this gate serves with — the monitor trio ([[LmModel
@@ -326,6 +326,23 @@ object IngestionGate {
       annGateShortlist: Option[Int] = None,
       annGateRecallPpm: Long = 1000000L)
 
+  /** Exact-gate shortlist per list for [[maintain]]'s ANN cycle: cover
+    * the UNION corpus (`store` plus the batch's vectors `bv`) across the
+    * serving index's ACTUAL list count (round-16 advice — the old 2n/16
+    * hardcoded writeVectors' fixed-16 layout and overflowed Int at
+    * multi-billion n; Long until the final clamp). The list and store
+    * counts are footer row counts ([[MetaScalar.scanRowCount]]); only a
+    * store that is more than a bare scan, and the batch, are counted by
+    * Spark.
+    */
+  private[graft] def exactShortlist(s: SparkSession, sd: String, store: DataFrame,
+      bv: DataFrame): Int = {
+    val cents = MetaScalar.open(s, s"$sd/ann/centroids")
+    val nLists = math.max(1L, MetaScalar.scanRowCount(cents).getOrElse(cents.count()))
+    val union = MetaScalar.scanRowCount(store).getOrElse(store.count()) + bv.count()
+    math.min((union + nLists - 1L) / nLists, Int.MaxValue.toLong).toInt
+  }
+
   /** Close the loop [[monitor]] → [[RetrainFlow]]: read each configured
     * stage's drift against its persisted baseline and, past that
     * stage's threshold, run ITS retrain cycle against the gate's own
@@ -373,25 +390,15 @@ object IngestionGate {
     val sem = cfg.semanticDir.map { sd =>
       require(b.columns.contains("v"),
         "semanticDir is set but the batch has no `v` embedding column")
-      val store = s.read.parquet(s"$sd/vecs")
+      val store = MetaScalar.open(s, s"$sd/vecs")
       val bv = b.select(col("doc_id").as("vec_id"), col("v"))
       val probes = annProbes.getOrElse(store.orderBy(col("vec_id")).limit(16)
         .select(col("vec_id").as("qid"), col("v"))).localCheckpoint(true)
-      // Exact-gate shortlist: cover the UNION corpus across the serving
-      // index's ACTUAL list count (round-16 advice — the old 2n/16
-      // hardcoded writeVectors' fixed-16 layout and overflowed Int at
-      // multi-billion n; Long until the final clamp). BY-NAME into
-      // annCycle, so a healthy batch never pays the store count. A
-      // policy-bounded shortlist switches to the sampled-probe gate.
-      def sppExact: Int = {
-        val nLists = math.max(1L,
-          s.read.parquet(s"$sd/ann/centroids").count())
-        val union = store.count() + bv.count()
-        math.min((union + nLists - 1L) / nLists, Int.MaxValue.toLong).toInt
-      }
+      // BY-NAME into annCycle, so a healthy batch never pays the sizing.
+      // A policy-bounded shortlist switches to the sampled-probe gate.
       val r = RetrainFlow.annCycle(s, s"$sd/ann", store, bv, probes,
         policy.annK, policy.annFrac, policy.semanticRatioPpm,
-        policy.annGateShortlist.getOrElse(sppExact),
+        policy.annGateShortlist.getOrElse(exactShortlist(s, sd, store, bv)),
         recallPpm = policy.annGateRecallPpm,
         beforeSwap = newVecs => {
           // STORE-FIRST swap ordering (round-16 advice): the union store

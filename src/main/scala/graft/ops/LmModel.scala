@@ -90,17 +90,17 @@ object LmModel {
     pmod(xxhash64(c), lit(nB.toLong)).cast("int")
 
   /** Distinct partition buckets of the batch's grams and w2 tokens under
-    * the SAME xxhash64 expression the write side uses — one job, and
-    * the two sets are collected SEPARATELY (each ≤ nB ≤ 4096 rows):
-    * collecting distinct (bg, bw) PAIRS would be nB²-bounded, a driver
-    * hazard once the count is model-sized.
+    * the SAME xxhash64 expression the write side uses — one job with no
+    * exchange, and the two sets are collected SEPARATELY (each ≤ nB ≤
+    * 4096 rows per partition): collecting distinct (bg, bw) PAIRS would
+    * be nB²-bounded, a driver hazard once the count is model-sized.
     */
   private def bucketsOf(trans: DataFrame, nB: Int): (Seq[Int], Seq[Int]) = {
-    val rows = trans.select(bktOf(col("gram"), nB).as("b"), lit(0).as("side"))
-      .unionByName(trans.select(bktOf(col("w2"), nB).as("b"), lit(1).as("side")))
-      .distinct().collect()
-    (rows.filter(_.getInt(1) == 0).map(_.getInt(0)).toSeq,
-      rows.filter(_.getInt(1) == 1).map(_.getInt(0)).toSeq)
+    val rows = graft.Jobs.distinctRows(
+      trans.select(bktOf(col("gram"), nB).as("b"), lit(0).as("side"))
+        .unionByName(trans.select(bktOf(col("w2"), nB).as("b"), lit(1).as("side"))))
+    (rows.filter(_.getInt(1) == 0).map(_.getInt(0)),
+      rows.filter(_.getInt(1) == 1).map(_.getInt(0)))
   }
 
   /** The corpus transition stream: codegen'd 2-grams ("w1 w2") —
@@ -223,11 +223,11 @@ object LmModel {
     }
     val (addBi, addUni) = delta(addDocs, 1)
     val (remBi, remUni) = delta(removeDocs, -1)
-    val bi = s.read.parquet(s"$dir/bigrams").select(col("gram"), col("c12"))
+    val bi = MetaScalar.open(s, s"$dir/bigrams").select(col("gram"), col("c12"))
       .unionByName(addBi).unionByName(remBi)
       .groupBy(col("gram")).agg(sum(col("c12")).as("c12"))
       .filter(col("c12") > 0).localCheckpoint(true)
-    val uni = s.read.parquet(s"$dir/unigrams").select(col("w"), col("c"))
+    val uni = MetaScalar.open(s, s"$dir/unigrams").select(col("w"), col("c"))
       .unionByName(addUni).unionByName(remUni)
       .groupBy(col("w")).agg(sum(col("c")).as("c"))
       .filter(col("c") > 0).localCheckpoint(true)
@@ -248,14 +248,14 @@ object LmModel {
     * baked ppm columns (column pruning skips the count pages),
     * AQE-chosen joins.
     */
-  def scoreBatch(s: SparkSession, dir: String, docs: DataFrame): DataFrame = {
+  def scoreBatch(s: SparkSession, dir: String, docs: DataFrame): DataFrame = graft.Jobs.labeled(s, "lm-model: scoreBatch") {
     val nB = Tombstones.readBuckets(s, dir) // the format gate
     val t = transitions(graft.Spread.batch(docs))
       .withColumn("w2", split(col("gram"), " ").getItem(1))
       .localCheckpoint() // batch-sized; feeds bucket discovery + the score join
     val (bg, bw) = bucketsOf(t, nB)
     def pruned(table: String, bkts: Seq[Int]): DataFrame =
-      s.read.parquet(s"$dir/$table").filter(col("bkt").isin(bkts: _*))
+      MetaScalar.open(s, s"$dir/$table").filter(col("bkt").isin(bkts: _*))
     val bie = pruned("bigrams", bg).select(col("gram"), col("p_cond"), col("p_uni"))
     val uniP = pruned("unigrams", bw).select(col("w"), col("p_uni"))
     scoreTransitions(bie, uniP, t)
@@ -345,7 +345,7 @@ object LmModel {
   def scoreDrift(s: SparkSession, dir: String, batch: DataFrame): DataFrame = {
     val cols = Seq(col("side"), col("n_docs"), col("mean_doc_ppm"),
       col("p05_doc_ppm"))
-    s.read.parquet(s"$dir/scorestats").withColumn("side", lit("baseline"))
+    MetaScalar.open(s, s"$dir/scorestats").withColumn("side", lit("baseline"))
       .select(cols: _*)
       .unionByName(docStats(scoreBatch(s, dir, batch))
         .withColumn("side", lit("batch")).select(cols: _*))

@@ -64,15 +64,20 @@ object QualityModel {
 
   /** Score `docs(doc_id, text, …)` against the persisted model:
     * (doc_id, score_ppm, keep) in total order. One projection over the
-    * batch — the 1-row model is read to the driver and inlined as
-    * literals, so the scoring plan has no join at all. `keep` is
-    * q158's score-proportional deterministic sample decision
-    * (keep-rate = score/2).
+    * batch — the 1-row model is read on the driver (from its footer
+    * statistics, no job) and inlined as literals, so the scoring plan
+    * has no join at all. `keep` is q158's score-proportional
+    * deterministic sample decision (keep-rate = score/2).
     */
-  def scoreBatch(s: SparkSession, dir: String, docs: DataFrame): DataFrame = {
-    val m = s.read.parquet(s"$dir/model").collect()(0)
-    val w = Array(m.getLong(0), m.getLong(1), m.getLong(2), m.getLong(3))
-    val mus = Array(m.getLong(4), m.getLong(5), m.getLong(6))
+  def scoreBatch(s: SparkSession, dir: String, docs: DataFrame): DataFrame = graft.Jobs.labeled(s, "quality-model: scoreBatch") {
+    // the 1-row model from its footer statistics (no job), else collected
+    val m = MetaScalar.scalarLongs(s, s"$dir/model", "w1", "w2", "w3", "wb", "m1", "m2", "m3")
+      .getOrElse {
+        val r = MetaScalar.open(s, s"$dir/model").collect()(0)
+        (0 until 7).map(r.getLong)
+      }
+    val w = m.take(4).toArray
+    val mus = m.drop(4).toArray
     val centered = Advanced15.lqcRawFeatures(docs).select(col("doc_id"),
       (col("r1") - mus(0)).as("f1"), (col("r2") - mus(1)).as("f2"),
       (col("r3") - mus(2)).as("f3"))
@@ -171,7 +176,7 @@ object QualityModel {
   def scoreDrift(s: SparkSession, dir: String, batch: DataFrame): DataFrame = {
     val cols = Seq(col("side"), col("n_docs"), col("mean_score_ppm"),
       col("p05_score_ppm"))
-    s.read.parquet(s"$dir/scorestats").withColumn("side", lit("baseline"))
+    MetaScalar.open(s, s"$dir/scorestats").withColumn("side", lit("baseline"))
       .select(cols: _*)
       .unionByName(scoreStats(s, dir, batch)
         .withColumn("side", lit("batch")).select(cols: _*))

@@ -521,7 +521,7 @@ object Release {
           .collect { case n if n.startsWith("e") => n.drop(1).toLong }
       else Seq.empty
     val base = epochs.filter(_ < batchId).sorted.lastOption match {
-      case Some(e) => s.read.parquet(s"$dir/manifest/e$e").localCheckpoint(true)
+      case Some(e) => MetaScalar.open(s, s"$dir/manifest/e$e").localCheckpoint(true)
       case None =>
         import s.implicits._
         Seq.empty[(Long, Long, Long, Long)]
@@ -564,7 +564,7 @@ object Release {
           .collect { case n if n.startsWith("e") => n.drop(1).toLong }
       else Seq.empty
     epochs.sorted.lastOption match {
-      case Some(e) => s.read.parquet(s"$dir/manifest/e$e")
+      case Some(e) => MetaScalar.open(s, s"$dir/manifest/e$e")
       case None =>
         import s.implicits._
         Seq.empty[(Long, Long, Long, Long)]

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Det, Q, Tables}
+import graft.{Q, Tables}
 import graft.streaming.EventStream
 import org.apache.spark.sql.functions._
 

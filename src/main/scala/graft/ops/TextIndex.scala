@@ -86,12 +86,12 @@ object TextIndex {
 
   /** Partition buckets of the query terms — computed with the SAME
     * xxhash64 expression the write side uses, via a row-per-term local
-    * projection (no scan, no shuffle).
+    * projection the optimizer folds into a local relation (no scan, no
+    * shuffle, no job).
     */
   private def bucketsOf(s: SparkSession, terms: Seq[String], nB: Int): Seq[Int] = {
     import s.implicits._
-    terms.toDF("term").select(bktCol(nB).as("b")).distinct()
-      .collect().map(_.getInt(0)).toSeq
+    graft.Jobs.distinctRows(terms.toDF("term").select(bktCol(nB).as("b"))).map(_.getInt(0))
   }
 
   /** Write one batch, every row stamped with epoch `ep`. */
@@ -138,7 +138,7 @@ object TextIndex {
     * [[append]]'s done-marker.
     */
   private def liveDoclens(s: SparkSession, dir: String): DataFrame =
-    Tombstones.liveByEpoch(s.read.parquet(s"$dir/doclens"),
+    Tombstones.liveByEpoch(MetaScalar.open(s, s"$dir/doclens"),
       Tombstones.tombMax(s, dir, "doc_id"), "doc_id")
 
   /** Recompute the one-row stats from the LIVE doclens (doc-count rows —
@@ -199,11 +199,11 @@ object TextIndex {
     val tMax = Tombstones.tombMax(s, dir, "doc_id")
     def live(df: DataFrame): DataFrame = Tombstones.liveByEpoch(df, tMax, "doc_id")
     Index(
-      postings = live(s.read.parquet(s"$dir/postings"))
+      postings = live(MetaScalar.open(s, s"$dir/postings"))
         .dropDuplicates("bkt", "term", "doc_id"),
-      doclens = live(s.read.parquet(s"$dir/doclens")).dropDuplicates("doc_id"),
-      stats = s.read.parquet(s"$dir/stats"),
-      positions = live(s.read.parquet(s"$dir/positions"))
+      doclens = live(MetaScalar.open(s, s"$dir/doclens")).dropDuplicates("doc_id"),
+      stats = MetaScalar.open(s, s"$dir/stats"),
+      positions = live(MetaScalar.open(s, s"$dir/positions"))
         .dropDuplicates("bkt", "term", "doc_id", "pos"),
       buckets = nB)
   }

@@ -73,7 +73,7 @@ object Tombstones {
     if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
       throw new IllegalStateException(
         s"$dir predates the current index format (no meta/); rebuild it with write()")
-    MetaScalar.scalarLong(s, p.toString, "buckets").map(_.toInt)
+    MetaScalar.scalarLongs(s, p.toString, "buckets").map(_.head.toInt)
       .getOrElse(s.read.parquet(p.toString).collect()(0).getInt(0))
   }
 
@@ -96,10 +96,10 @@ object Tombstones {
     // coalesce(1) one-row write, so min==max==value in the file footer
     // — a driver-side read instead of a Spark job per epoch check
     if (fs.exists(p))
-      MetaScalar.scalarLong(s, p.toString, "epoch")
+      MetaScalar.scalarLongs(s, p.toString, "epoch").map(_.head)
         .getOrElse(s.read.parquet(p.toString).collect()(0).getLong(0))
     else if (fs.exists(tmp))
-      MetaScalar.scalarLong(s, tmp.toString, "epoch")
+      MetaScalar.scalarLongs(s, tmp.toString, "epoch").map(_.head)
         .getOrElse(s.read.parquet(tmp.toString).collect()(0).getLong(0))
     else 0L
   }
@@ -137,7 +137,7 @@ object Tombstones {
   def ledger(s: SparkSession, dir: String): Option[DataFrame] = {
     val p = new Path(s"$dir/tombstones")
     if (p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      Some(s.read.parquet(p.toString))
+      Some(MetaScalar.open(s, p.toString))
     else None
   }
 

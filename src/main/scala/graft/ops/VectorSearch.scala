@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
-import graft.functions.{CosineSim, DotProduct, VectorFunctions}
+import graft.functions.{CosineSim, DotProduct}
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._

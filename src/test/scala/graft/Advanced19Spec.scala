@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 
 /** Source-cap and epoch-recipe laws: both replayed driver-side, plus
   * the admission-monotonicity and recipe-bound properties.

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** Semantics of the round-4 corpus-statistics batch on a crafted corpus

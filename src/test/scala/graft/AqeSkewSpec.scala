@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** AQE skew rehearsal — the 100×-scale claim checked with EVIDENCE

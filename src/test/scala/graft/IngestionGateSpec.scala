@@ -59,6 +59,14 @@ class IngestionGateSpec extends SparkSuite {
       (9800001L, acceptA, vecOf(ids(7))),
       (9800002L, acceptB, vecOf(-999L))
     ).toDF("doc_id", "text", "v")
+    // maintain's exact-gate sizing reads the list and store counts from
+    // parquet footers: it costs exactly what counting the batch costs
+    val store = ops.MetaScalar.open(spark, s"$base/sem/vecs")
+    val bv = batch.select(col("doc_id").as("vec_id"), col("v"))
+    val (spp, sppJobs) = jobsDuring(IngestionGate.exactShortlist(spark, s"$base/sem", store, bv))
+    assert(sppJobs === jobsDuring(bv.count())._2)
+    val nLists = spark.read.parquet(s"$base/sem/ann/centroids").count()
+    assert(spp === ((store.count() + bv.count() + nLists - 1L) / nLists).toInt)
     def admits(c: IngestionGate.Config, b: DataFrame): Set[Long] =
       IngestionGate.decide(spark, c, b)
         .select(col("doc_id")).collect().map(_.getLong(0)).toSet

@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.KthSmallest
 import org.apache.spark.sql.{DataFrame, GraftPlanBridge}
-import org.apache.spark.sql.functions._
 
 /** Laws of the bounded-heap k-th-smallest aggregate behind the two-pass
   * hot-bucket cap: exact agreement with a sorted reference across real

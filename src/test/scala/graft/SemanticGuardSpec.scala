@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.{AnnIndex, Advanced20, LshGuard}
-import org.apache.spark.sql.functions._
 
 /** Hot-cluster guard evidence for the SEMANTIC sweep family (round-14
   * verdict item 1): `dominatedBy` — the kernel shared by q199/q200/q202

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.{Advanced20, AnnIndex}
-import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** The round-13 semantic-dedup serve tier, spec-pinned (round-14 verdict

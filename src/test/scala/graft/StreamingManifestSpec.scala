@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Release
-import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** Streaming receipt maintenance: a foreachBatch intake stream folding
