@@ -193,17 +193,12 @@ object CorpusPipeline {
       // hot-cluster guard (same shape as the LSH band joins): one huge
       // embedding cluster would fan O(n²) cosine pairs — cap membership
       // per cluster label before the self-join; drops are observed+logged
-      // materialize=false (round 17, aligning with LshGuard's documented
-      // heuristic): the input is the bare embeddings scan semi-confined
-      // by `alive` — re-reading that columnar scan per cap pass beats
-      // copying the wide vector table into block storage at exactly the
-      // corpus sizes where this pipeline's resident set is the knee
       val e = ops.LshGuard.capBuckets(spark,
         Tables.embeddings(spark, sfDir)
           .select(col("vec_id"), col("label"),
             col("embedding").cast("array<double>").as("v"))
           .join(alive, Seq("vec_id")), // confine pairs to surviving docs
-        Seq("label"), "vec_id", tag = "semdedup", materialize = false)
+        Seq("label"), "vec_id", tag = "semdedup")
       val drops = e.select(col("label").as("la"), col("vec_id").as("ida"), col("v").as("va"))
         .join(e.select(col("label").as("lb"), col("vec_id").as("idb"), col("v").as("vb")),
           col("la") === col("lb") && col("ida") < col("idb"))

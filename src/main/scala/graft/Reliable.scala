@@ -19,6 +19,10 @@ import org.apache.spark.sql.DataFrame
   * beforehand wins. (Session-lifetime caches — [[Shared]] — stay
   * executor-local on purpose: they are rebuildable per session, and
   * reliable checkpoint files are not reclaimed until application end.)
+  *
+  * It is also the one owner of a call's intermediate checkpoints:
+  * [[owned]] registers them with the innermost [[scoped]] block, which
+  * [[release]]s them when the block exits.
   */
 object Reliable {
 
@@ -140,6 +144,46 @@ object Reliable {
           case None => throw e
         }
     }
+
+  // The scopes open on the current thread, innermost first. A plain
+  // ThreadLocal, not a DynamicVariable: an inheritable value would leak
+  // into pool threads created inside a scope, whose frames would then
+  // register with a scope that closes without waiting for them.
+  private val scopes = new ThreadLocal[List[scala.collection.mutable.ArrayBuffer[DataFrame]]] {
+    override def initialValue(): List[scala.collection.mutable.ArrayBuffer[DataFrame]] = Nil
+  }
+
+  /** A call's intermediate: `df.localCheckpoint(true)`, owned by the
+    * innermost [[scoped]] block open on this thread, which releases it
+    * when the block exits. With no scope open the blocks live for the
+    * session, as a plain `localCheckpoint` does.
+    */
+  def owned(df: DataFrame): DataFrame = adopt(df.localCheckpoint(true))
+
+  /** Register an already-checkpointed frame with the innermost open
+    * scope (for a [[checkpoint]] that must stay reliable under
+    * [[ConfKey]]); returns it unchanged.
+    */
+  private[graft] def adopt(checkpointed: DataFrame): DataFrame = {
+    scopes.get.headOption.foreach(_ += checkpointed)
+    checkpointed
+  }
+
+  /** Run `body`, then [[release]] every frame [[owned]] inside it on
+    * this thread, whether `body` returns or throws. A nested scope
+    * releases only its own frames. `body`'s result must not read an
+    * owned frame lazily: return `Unit`, a frame over written files, a
+    * driver-local frame, or a checkpoint the caller owns.
+    */
+  def scoped[A](body: => A): A = {
+    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    scopes.set(frames :: scopes.get)
+    try body
+    finally {
+      scopes.set(scopes.get.tail)
+      frames.foreach(release)
+    }
+  }
 
   /** Truncate `df`'s lineage eagerly: reliably when [[ConfKey]] is set,
     * executor-locally otherwise.

@@ -57,6 +57,13 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame    = table(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
+
+  /** The embeddings as `(vec_id, v)`, `v` upcast to `array<double>` —
+    * the frame every vector kernel reads.
+    */
+  def vectors(s: SparkSession, d: String): DataFrame =
+    embeddings(s, d).select(col("vec_id"),
+      graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
 }
 
 /** Shared Column helpers enforcing cross-engine determinism. */

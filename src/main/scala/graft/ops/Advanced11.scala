@@ -169,13 +169,8 @@ object Advanced11 {
     // hot-cluster guard (CorpusPipeline stage 3b's shape): cap membership
     // per cluster before the pairwise join — the uncapped e still counts
     // n_vecs, so the cap only bounds the comparison fan-out
-    // materialize=false (round 17, aligning with LshGuard's documented
-    // heuristic): `e` is a bare columnar embeddings scan + cast —
-    // cheaper to re-read per cap pass than to copy the whole wide
-    // vector table into block storage per run (A/B'd: steady
-    // neutral-or-better, and the per-run block accretion goes away)
     val ec = LshGuard.capBuckets(s, e, Seq("label"), "vec_id",
-      tag = "semdedup-q133", materialize = false)
+      tag = "semdedup-q133")
     val a = ec.select(col("label").as("la"), col("vec_id").as("ida"), col("v").as("va"))
     val b = ec.select(col("label").as("lb"), col("vec_id").as("idb"), col("v").as("vb"))
     val drops = a.join(b, col("la") === col("lb") && col("ida") < col("idb"))

@@ -36,11 +36,6 @@ object Advanced13 {
 
   private val Dim = 64
 
-  private def embV(s: SparkSession, d: String): DataFrame = {
-    Tables.embeddings(s, d).select(col("vec_id"),
-      graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
-  }
-
   /** Per-dimension (min, max) quantizer parameters, pivoted into two
     * 64-slot arrays in a single broadcastable row. Trained in one
     * map-side-combined aggregation pass; the pivot (collect_list over 64
@@ -48,7 +43,7 @@ object Advanced13 {
     */
   private[graft] def sqParams(s: SparkSession, d: String): DataFrame =
     Shared.materialized(s, s"sq8-params@$d") {
-      embV(s, d)
+      Tables.vectors(s, d)
         .select(posexplode(col("v")).as(Seq("i", "x")))
         .groupBy(col("i"))
         .agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
@@ -72,7 +67,7 @@ object Advanced13 {
     */
   private[graft] def sqCodes(s: SparkSession, d: String): DataFrame =
     Shared.materialized(s, s"sq8-codes@$d") {
-      embV(s, d)
+      Tables.vectors(s, d)
         .crossJoin(broadcast(sqParams(s, d)))
         .select(col("vec_id"), SqEncode.sq8Encode(col("v"), col("mns"), col("mxs")).as("cv"))
         .select(col("vec_id"), col("cv"),

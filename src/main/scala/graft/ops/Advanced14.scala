@@ -120,8 +120,7 @@ object Advanced14 {
       .withColumn("lex_rnk", row_number().over(wl))
       .filter(col("lex_rnk") <= ListDepth)
       .select(col("doc_id").as("l_id"), col("lex_rnk"))
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val e = Tables.vectors(s, d)
     val qv = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
     val ws = Window.orderBy(col("sim").desc, col("vec_id"))
     val sem = e.crossJoin(broadcast(qv))
@@ -341,8 +340,7 @@ object Advanced14 {
        |SELECT qid, rr, recall3 FROM m ORDER BY qid""".stripMargin) { (s, d) =>
     val sys = Advanced13.sq8Ranking(s, d, nq = 5, k = 3, excludeSelf = true)
       .select(col("qid"), col("rnk"), col("cand"))
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val e = Tables.vectors(s, d)
     rankingMetrics(sys, exactTopK(e, nq = 5, k = 3), k = 3).orderBy(col("qid"))
   }
 

@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.{Q, Tables}
 import graft.functions.{CosineSim, DotProduct}
-import graft.functions.VectorFunctions.asDouble
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -52,10 +51,6 @@ import org.apache.spark.sql.types.DecimalType
   * `list_dot_product`), rounded at 6 decimals before any ordering or sum.
   */
 object Advanced16 {
-
-  private def emb(s: SparkSession, d: String): DataFrame = {
-    Tables.embeddings(s, d).select(col("vec_id"), asDouble(col("embedding")).as("v"))
-  }
 
   // ---------------------------------------------------------------- q170
 
@@ -118,7 +113,7 @@ object Advanced16 {
        |    CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY maxsim DESC, cand) AS INTEGER) AS rnk
        |  FROM scored QUALIFY rnk <= 10)
        |SELECT qid, rnk, cand, maxsim FROM r ORDER BY qid, rnk""".stripMargin) { (s, d) =>
-    val e = emb(s, d)
+    val e = Tables.vectors(s, d)
     val q = e.filter(col("vec_id") < 3)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     lateInteractionTopK(e, q, 10).orderBy(col("qid"), col("rnk"))
@@ -184,7 +179,7 @@ object Advanced16 {
        |    CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY fsim DESC, cand) AS INTEGER) AS rnk
        |  FROM s2 QUALIFY rnk <= 5)
        |SELECT qid, rnk, cand, fsim, psim FROM r ORDER BY qid, rnk""".stripMargin) { (s, d) =>
-    val e = emb(s, d)
+    val e = Tables.vectors(s, d)
     val q = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     matryoshkaSearch(e, q, PrefixDims, Shortlist, 5).orderBy(col("qid"), col("rnk"))
@@ -282,7 +277,7 @@ object Advanced16 {
        |  FROM short s JOIN toks t USING (doc_id))
        |SELECT qid, rnk, doc_id, n_toks, cum_toks, sim FROM packed
        |WHERE cum_toks <= $PackBudget ORDER BY qid, rnk""".stripMargin) { (s, d) =>
-    val e = emb(s, d)
+    val e = Tables.vectors(s, d)
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val wr = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("doc_id"))
@@ -345,7 +340,7 @@ object Advanced16 {
        |SELECT dcg.qid, dcg.dcg AS dcg, idcg.idcg AS idcg,
        |  ROUND(dcg.dcg / idcg.idcg, 6) AS ndcg
        |FROM dcg JOIN idcg ON idcg.qid = dcg.qid ORDER BY dcg.qid""".stripMargin) { (s, d) =>
-    val e = emb(s, d)
+    val e = Tables.vectors(s, d)
     val q = e.filter(col("vec_id") < EvalNq)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val wp = Window.partitionBy(col("qid")).orderBy(col("psim").desc, col("cand"))
@@ -458,7 +453,7 @@ object Advanced16 {
       |  FROM er QUALIFY rnk <= 3)
       |SELECT qid, rnk, cand, maxsim FROM r ORDER BY qid, rnk""".stripMargin) { (s, d) =>
     val ix = AnnIndex.load(s, AnnIndex.sharedScaledDir(s, d, 32))
-    val e = emb(s, d)
+    val e = Tables.vectors(s, d)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("v"))
     maxSimRerank(s, ix, e, queries, k = 3, frac = 0.2,

@@ -39,9 +39,6 @@ import org.apache.spark.sql.functions._
   */
 object Advanced17 {
 
-  private def withToks(df: DataFrame): DataFrame =
-    df.withColumn("toks", split(col("text"), " "))
-
   // ---------------------------------------------------------------- q175
 
   private val TopTokMax  = 0.20
@@ -53,7 +50,7 @@ object Advanced17 {
     * scope (callers admit them unconditionally).
     */
   private[graft] def repetitionProfile(docs: DataFrame): DataFrame = {
-    val base = withToks(docs)
+    val base = TextOps.withToks(docs)
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), size(col("toks")).as("len"),
         posexplode(concat(
@@ -131,7 +128,7 @@ object Advanced17 {
     * text)`; score = round(tf · ln(N/df), 6); ties break on the term.
     */
   private[graft] def tfIdfKeywords(docs: DataFrame, k: Int): DataFrame = {
-    val tf = withToks(docs)
+    val tf = TextOps.withToks(docs)
       .select(col("doc_id"), explode(col("toks")).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))

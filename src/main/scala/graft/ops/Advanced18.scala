@@ -31,9 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object Advanced18 {
 
-  private def withToks(df: DataFrame): DataFrame =
-    df.withColumn("toks", split(col("text"), " "))
-
   // ---------------------------------------------------------------- q179
 
   private val ChunkSize   = 64
@@ -46,7 +43,7 @@ object Advanced18 {
     require(stride >= 1 && chunk >= stride,
       s"need 1 <= stride <= chunk, got chunk=$chunk stride=$stride")
     // nc = 1 + max(0, ceil((n - chunk)/stride)) = 1 + max(0, (n - chunk + stride - 1) div stride)
-    val withN = withToks(docs)
+    val withN = TextOps.withToks(docs)
       .select(col("doc_id"), col("toks"), size(col("toks")).as("n"))
       .withColumn("nc",
         lit(1) + greatest(lit(0), expr(s"(n - $chunk + ${stride - 1}) div $stride")))
@@ -225,7 +222,7 @@ object Advanced18 {
       |  ROUND(COUNT(DISTINCT CASE WHEN n = 2 THEN gram END) * 1.0
       |    / NULLIF(SUM(CASE WHEN n = 2 THEN 1 ELSE 0 END), 0), 6) AS distinct2
       |FROM g GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
-    val base = withToks(Tables.documents(s, d))
+    val base = TextOps.withToks(Tables.documents(s, d))
       .select(col("source"), size(col("toks")).as("len"),
         posexplode(concat(
           graft.functions.NGrams.ngrams(col("toks"), 1),

@@ -64,8 +64,7 @@ object Advanced2 {
   private[ops] def ivfAffinity(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     graft.Shared.materialized(s, s"ivf-aff@$d") {
-      val e = Tables.embeddings(s, d).select(col("vec_id"),
-        graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
+      val e = Tables.vectors(s, d)
       val cent = Quantizer.ivfCentroids(s, d)
         .select(col("cid").as("c_id"), col("cv"))
       val wAff = Window.partitionBy(col("vec_id")).orderBy(col("ca").desc, col("c_id"))
@@ -112,8 +111,7 @@ object Advanced2 {
       |  FROM sims) t
       |WHERE rank <= 3
       |ORDER BY q_id, rank""".stripMargin) { (s, d) =>
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
+    val e = Tables.vectors(s, d)
     val aff = ivfAffinity(s, d)
     val assigned = aff.filter(col("crank") === 1).select(col("vec_id"), col("c_id"))
     val probes = aff.filter(col("crank") <= 2 && col("vec_id") < 10)

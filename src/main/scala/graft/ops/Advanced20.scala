@@ -160,14 +160,11 @@ object Advanced20 {
       |FROM p GROUP BY 1, 2 ORDER BY 1, 2""").stripMargin) { (s, d) =>
     val sigs = TextOps.minhashSigs(s, d)
     val cand = TextOps.minhashCandidates(s, d)
-    val agree = (1 to 16).map { i =>
-      when(element_at(col("sa.sig"), i) === element_at(col("sb.sig"), i), 1).otherwise(0)
-    }.reduce(_ + _)
     val src = Tables.documents(s, d).select(col("doc_id"), col("source"))
     cand
       .join(sigs.as("sa"), col("da") === col("sa.doc_id"))
       .join(sigs.as("sb"), col("db") === col("sb.doc_id"))
-      .select(col("da"), col("db"), round(agree / lit(16.0), 6).as("est"))
+      .select(col("da"), col("db"), TextOps.estJaccard.as("est"))
       .filter(col("est") >= DupThreshold)
       .join(src.as("x"), col("da") === col("x.doc_id"))
       .join(src.as("y"), col("db") === col("y.doc_id"))
@@ -252,13 +249,10 @@ object Advanced20 {
       |FROM deg GROUP BY degree ORDER BY degree""").stripMargin) { (s, d) =>
     val sigs = TextOps.minhashSigs(s, d)
     val cand = TextOps.minhashCandidates(s, d)
-    val agree = (1 to 16).map { i =>
-      when(element_at(col("sa.sig"), i) === element_at(col("sb.sig"), i), 1).otherwise(0)
-    }.reduce(_ + _)
     val pairsRaw = cand
       .join(sigs.as("sa"), col("da") === col("sa.doc_id"))
       .join(sigs.as("sb"), col("db") === col("sb.doc_id"))
-      .select(col("da"), col("db"), round(agree / lit(16.0), 6).as("est"))
+      .select(col("da"), col("db"), TextOps.estJaccard.as("est"))
       .filter(col("est") >= DupThreshold)
     val pairs = graft.Reliable.checkpoint(pairsRaw) // pair-sized; feeds both union branches
     pairs.select(col("da").as("doc_id"))
@@ -539,10 +533,9 @@ object Advanced20 {
     * equality AND the degenerate-corpus bound).
     */
   private[graft] def dominatedBy(assigned: DataFrame, tau: Double,
-      cap: Int = LshGuard.BucketCap, tag: String = "semsweep",
-      materialize: Boolean = true): DataFrame = {
+      cap: Int = LshGuard.BucketCap, tag: String = "semsweep"): DataFrame = {
     val capped = LshGuard.capBuckets(assigned.sparkSession, assigned,
-      Seq("c_id"), "vec_id", cap, tag, materialize)
+      Seq("c_id"), "vec_id", cap, tag)
     val a = capped.select(col("vec_id").as("da"), col("c_id"), col("v").as("va"))
     val b = capped.select(col("vec_id").as("db"), col("c_id").as("c2"), col("v").as("vb"))
     a.join(b, col("c_id") === col("c2") && col("da") < col("db"))
@@ -569,11 +562,9 @@ object Advanced20 {
     // by default, reliable under spark.graft.checkpointDir (a lost
     // executor otherwise kills the job at exactly the corpus sizes this
     // scaled path exists for)
-    val e = graft.Reliable.checkpoint(VectorSearch.emb(s, d))
+    val e = graft.Reliable.checkpoint(Tables.vectors(s, d))
     val cents = AnnIndex.scaledSampleCentroids(e, k, perList)
-    // assigned is already Reliable-checkpointed — the cap must not copy it
-    dominatedBy(graft.Reliable.checkpoint(assignCosine(e, cents)), tau,
-        materialize = false)
+    dominatedBy(graft.Reliable.checkpoint(assignCosine(e, cents)), tau)
       .orderBy(col("vec_id"))
   }
 
@@ -589,7 +580,7 @@ object Advanced20 {
     */
   def semanticDedupScaled(s: org.apache.spark.sql.SparkSession, d: String,
       tau: Double = SemTau): DataFrame = {
-    val e = VectorSearch.emb(s, d)
+    val e = Tables.vectors(s, d)
     val n = e.count()
     val k = math.max(16L, math.min(65536L,
       math.ceil(math.sqrt(n.toDouble)).toLong)).toInt
@@ -612,13 +603,10 @@ object Advanced20 {
     */
   def semanticDedupFromIndex(s: org.apache.spark.sql.SparkSession, d: String,
       indexDir: String, tau: Double = SemTau): DataFrame = {
-    val e = VectorSearch.emb(s, d)
+    val e = Tables.vectors(s, d)
     val asg = AnnIndex.load(s, indexDir).assigned.select(col("vec_id"), col("c_id"))
-    // materialize=false (round 17): the sweep input is two parquet scans
-    // joined by id — re-reading columnar scans per cap pass beats a
-    // per-run block copy that is never unpersisted (the cap-leak advice)
     dominatedBy(e.join(asg, Seq("vec_id")).select(col("vec_id"), col("c_id"), col("v")),
-      tau, materialize = false).orderBy(col("vec_id"))
+      tau).orderBy(col("vec_id"))
   }
 
   // ---------------------------------------------------------------- q200
@@ -659,12 +647,12 @@ object Advanced20 {
        |${Quantizer.ivfProbeCtes(1, 1)},
        |ev AS (SELECT a.vec_id, a.c_id, e.v FROM assigned a JOIN e USING (vec_id))""" +
       sweepOracleTailSql).stripMargin) { (s, d) =>
-    val e = VectorSearch.emb(s, d)
+    val e = Tables.vectors(s, d)
     // reduced (id, cluster, vec); feeds both pair sides — Reliable so a
     // conf-bearing cluster survives executor loss (default unchanged)
     val assigned = graft.Reliable.checkpoint(
       assignCosine(e, Quantizer.ivfCentroids(s, d)))
-    dominatedBy(assigned, SemTau, materialize = false).orderBy(col("vec_id"))
+    dominatedBy(assigned, SemTau).orderBy(col("vec_id"))
   }
 
   // ---------------------------------------------------------------- q202
@@ -741,13 +729,9 @@ object Advanced20 {
     val ix = AnnIndex.load(s, indexDir)
     val basg = assignCosine(batch, ix.centroids.select(col("cid"), col("cv")))
       .select(col("vec_id").as("bv"), col("c_id"), col("v").as("vb"))
-    // materialize=false: the input is the index's bare two-long-column
-    // parquet scan — at corpus scale, reading that skinny columnar table
-    // twice (cap pass 1 + probe) per intake batch is cheaper than copying
-    // it into block storage per batch
     val cappedAsg = LshGuard.capBuckets(s,
       ix.assigned.select(col("vec_id").as("mv"), col("c_id").as("mc")),
-      Seq("mc"), "mv", cap, tag = "semintake", materialize = false)
+      Seq("mc"), "mv", cap, tag = "semintake")
     val members = corpusVecs.select(col("vec_id").as("mv"), col("v").as("vm"))
       .join(cappedAsg, Seq("mv"))
     basg.join(members, col("c_id") === col("mc"))
@@ -811,7 +795,7 @@ object Advanced20 {
        |  MAX(sim) AS max_sim, CAST(MIN(mv) AS BIGINT) AS dominator
        |FROM p GROUP BY bv, c_id ORDER BY vec_id""").stripMargin) { (s, d) =>
     import s.implicits._
-    val e = VectorSearch.emb(s, d)
+    val e = Tables.vectors(s, d)
     val corpus = e.filter(col("vec_id") % 10 =!= 7)
     val batch = e.filter(col("vec_id") % 10 === 7)
     val dir = graft.Shared.materialized(s, s"annix-corpus-v-$d") {
@@ -865,7 +849,7 @@ object Advanced20 {
        |SELECT CAST(c_id AS INTEGER) AS c_id, CAST(rnk AS BIGINT) AS rnk,
        |  vec_id, ca AS aff
        |FROM r WHERE rnk <= 3 ORDER BY c_id, rnk""").stripMargin) { (s, d) =>
-    val a = assignCosine(VectorSearch.emb(s, d), Quantizer.ivfCentroids(s, d))
+    val a = assignCosine(Tables.vectors(s, d), Quantizer.ivfCentroids(s, d))
     val w = Window.partitionBy(col("c_id")).orderBy(col("aff"), col("vec_id"))
     // int rank below the filter, BIGINT cast above: the TopK rewrite's
     // Project(Filter(Window)) pattern with the rank kept — heap-emitted

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
-import graft.functions.{DotProduct, SimHash60, VectorFunctions}
+import graft.functions.{DotProduct, SimHash60}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -185,8 +185,7 @@ object Advanced4 {
       |SELECT cid, COUNT(*) AS n_members,
       |  CAST(SUM(CAST(dist AS DECIMAL(28,6))) AS DOUBLE) AS inertia
       |FROM a2 GROUP BY cid ORDER BY cid""".stripMargin) { (s, d) =>
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("v"))
+    val e = Tables.vectors(s, d)
     val c0 = e.filter(col("vec_id") < 8)
       .select(col("vec_id").cast("int").as("cid"), col("v").as("cv"))
 

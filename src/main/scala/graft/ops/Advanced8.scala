@@ -391,11 +391,6 @@ object Advanced8 {
     s"CAST(ROUND((list_dot_product($x, $x) - 2 * list_dot_product($x, $c) + " +
       s"list_dot_product($c, $c)) * 1000000) AS BIGINT)"
 
-  private def embV(s: SparkSession, d: String): DataFrame = {
-    Tables.embeddings(s, d).select(col("vec_id"),
-      graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
-  }
-
   /** Per-(vector, block) packed minima mk = dist_micro·100 + cid over the
     * TRAINED sub-codebooks (the PQ assignment table) — computed once per
     * session via [[graft.Shared]] (q108 reports it, q109/q140 search over
@@ -406,7 +401,7 @@ object Advanced8 {
     */
   private[ops] def pqAssign(s: SparkSession, d: String): DataFrame =
     graft.Shared.materialized(s, s"pq-assign@$d") {
-      val sub = Quantizer.subBlocks(embV(s, d))
+      val sub = Quantizer.subBlocks(Tables.vectors(s, d))
       sub.join(broadcast(Quantizer.pqCodebook(s, d)), Seq("b"))
         .select(col("vec_id"), col("b"),
           (distMicro(col("sv"), col("cv")) * 100 + col("cid")).as("pk"))
@@ -496,7 +491,7 @@ object Advanced8 {
        |FROM r ORDER BY qid, rnk""".stripMargin) { (s, d) =>
     val codes = pqAssign(s, d)
       .select(col("vec_id"), col("b"), (col("mk") % 100).cast("int").as("code"))
-    val dtab = Quantizer.subBlocks(embV(s, d)).filter(col("vec_id") < 5)
+    val dtab = Quantizer.subBlocks(Tables.vectors(s, d)).filter(col("vec_id") < 5)
       .join(broadcast(Quantizer.pqCodebook(s, d)), Seq("b"))
       .select(col("vec_id").as("qid"), col("b"), col("cid"),
         distMicro(col("sv"), col("cv")).as("dm"))
@@ -584,7 +579,7 @@ object Advanced8 {
       .select(col("qid"), col("a.vec_id").as("cand")).distinct()
     val codes = pqAssign(s, d)
       .select(col("vec_id"), col("b"), (col("mk") % 100).cast("int").as("code"))
-    val dtab = Quantizer.subBlocks(embV(s, d)).filter(col("vec_id") < 5)
+    val dtab = Quantizer.subBlocks(Tables.vectors(s, d)).filter(col("vec_id") < 5)
       .join(broadcast(Quantizer.pqCodebook(s, d)), Seq("b"))
       .select(col("vec_id").as("dqid"), col("b").as("db"), col("cid"),
         distMicro(col("sv"), col("cv")).as("dm"))
@@ -651,7 +646,7 @@ object Advanced8 {
     val short = ad.withColumn("srnk", row_number().over(wS))
       .filter(col("srnk") <= 32)
       .select(col("qid"), col("cand"))
-    val e = embV(s, d)
+    val e = Tables.vectors(s, d)
     // BOTH rerank joins broadcast the shortlist side: the post-join
     // intermediate loses the hint otherwise, and a planner estimate
     // could shuffle the whole vector store for a queries×32-row lookup

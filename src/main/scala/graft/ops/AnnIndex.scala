@@ -77,9 +77,7 @@ object AnnIndex {
     */
   def writeScaled(s: SparkSession, d: String, dir: String,
       nListsOverride: Option[Int] = None): Unit = {
-    val e = graft.Tables.embeddings(s, d).select(col("vec_id"),
-      graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
-      .localCheckpoint()
+    val e = graft.Tables.vectors(s, d).localCheckpoint()
     val n = e.count()
     val nLists = nListsOverride.getOrElse(math.max(16L, math.min(65536L,
       math.ceil(math.sqrt(n.toDouble)).toLong)).toInt)
@@ -193,9 +191,7 @@ object AnnIndex {
     centroids.write.mode("overwrite").parquet(s"$dir/centroids")
     Quantizer.pqCodebook(s, d)
       .write.mode("overwrite").parquet(s"$dir/codebook")
-    val e = graft.Spread.lazyAuto(
-      graft.Tables.embeddings(s, d).select(col("vec_id"),
-        graft.functions.VectorFunctions.asDouble(col("embedding")).as("v")))
+    val e = graft.Spread.lazyAuto(graft.Tables.vectors(s, d))
     val cent = MetaScalar.open(s, s"$dir/centroids")
       .select(col("cid").as("c_id"), col("cv"))
     assignVectors(e, cent)
@@ -278,13 +274,13 @@ object AnnIndex {
     * tombstoned id blocks that id entirely — re-adding it via [[append]]
     * requires compacting first.
     */
-  def compact(s: SparkSession, dir: String): Index = {
+  def compact(s: SparkSession, dir: String): Index = graft.Reliable.scoped {
     Tombstones.ledger(s, dir).foreach { _ =>
       val live = load(s, dir) // tombstones already anti-joined
       // localCheckpoint so the rewrite doesn't race its own input scan
-      live.assigned.localCheckpoint(true)
+      graft.Reliable.owned(live.assigned)
         .write.mode("overwrite").parquet(s"$dir/assigned")
-      live.codes.localCheckpoint(true)
+      graft.Reliable.owned(live.codes)
         .transform(Layout.writeByBucket(_, col("c_id")))
         .write.partitionBy("c_id").mode("overwrite").parquet(s"$dir/codes")
       Tombstones.dropLedger(s, dir)
@@ -656,9 +652,7 @@ object AnnIndex {
       |  ROUND(list_dot_product(cv, cv), 6) AS cnorm
       |FROM cents c LEFT JOIN cnt USING (cid)
       |ORDER BY cid""".stripMargin) { (s, d) =>
-    val e = graft.Tables.embeddings(s, d).select(col("vec_id"),
-      graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
-      .localCheckpoint()
+    val e = graft.Tables.vectors(s, d).localCheckpoint()
     val cents = scaledSampleCentroids(e, nLists = 32, perList = 2L)
     val counts = Quantizer.assignFull(e, cents)
       .groupBy(col("cid")).agg(count(lit(1)).as("n"))
@@ -792,8 +786,7 @@ object AnnIndex {
       |SELECT qid, rnk, cand, edist_micro / 1000000.0 AS exact_dist
       |FROM r ORDER BY qid, rnk""".stripMargin) { (s, d) =>
     val ix = load(s, sharedScaledDir(s, d, 32))
-    val e = graft.Tables.embeddings(s, d).select(col("vec_id"),
-      graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
+    val e = graft.Tables.vectors(s, d)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("v"))
     searchRerank(s, ix, e, queries, k = 3, frac = 0.2,

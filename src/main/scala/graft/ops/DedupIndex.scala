@@ -130,8 +130,8 @@ object DedupIndex {
     * lifetime.
     */
   def write(s: SparkSession, docs: DataFrame, dir: String,
-      bucketsOverride: Option[Int] = None): Index = {
-    val sigs = TextOps.sigsOf(docs).localCheckpoint(true)
+      bucketsOverride: Option[Int] = None): Index = graft.Reliable.scoped {
+    val sigs = graft.Reliable.owned(TextOps.sigsOf(docs))
     val nB = bucketsOverride.getOrElse(
       Tombstones.bucketsFor(sigs.count(), DocsPerBucket))
     Tombstones.writeMeta(s, dir, nB)
@@ -162,25 +162,27 @@ object DedupIndex {
     * invisible to the DISTINCT candidate join. A tombstoned id
     * RE-APPENDS at a fresh epoch (the release-upgrade fast path).
     */
-  def append(s: SparkSession, dir: String, docs: DataFrame): Index = graft.Jobs.labeled(s, "dedup-index: append") {
-    val nB = Tombstones.readBuckets(s, dir) // the format gate
-    val sigs = graft.Jobs.labeled(s, "dedup-index: append/sigsOf") {
-      // the intake batch is serve-contract sized: one batch-bounded
-      // exchange spreads the shingle hashing off its arrival
-      // partitioning (round 19, guide §2.5)
-      TextOps.sigsOf(graft.Spread.batch(docs)).localCheckpoint(true)
+  def append(s: SparkSession, dir: String, docs: DataFrame): Index = graft.Reliable.scoped {
+    graft.Jobs.labeled(s, "dedup-index: append") {
+      val nB = Tombstones.readBuckets(s, dir) // the format gate
+      val sigs = graft.Jobs.labeled(s, "dedup-index: append/sigsOf") {
+        // the intake batch is serve-contract sized: one batch-bounded
+        // exchange spreads the shingle hashing off its arrival
+        // partitioning (round 19, guide §2.5)
+        graft.Reliable.owned(TextOps.sigsOf(graft.Spread.batch(docs)))
+      }
+      // done-marker check reads only the batch ids' sig buckets; "done"
+      // means LIVE, so a deferred-deleted id re-appends
+      val done = doneIds(s, dir, sigs)
+      val fresh = graft.Jobs.labeled(s, "dedup-index: append/fresh") {
+        graft.Reliable.owned(sigs.join(done, Seq("doc_id"), "left_anti"))
+      }
+      val ep = Tombstones.bumpEpoch(s, dir)
+      graft.Jobs.labeled(s, "dedup-index: append/writeBatch") {
+        writeBatch(fresh, dir, "append", nB, ep)
+      }
+      load(s, dir)
     }
-    // done-marker check reads only the batch ids' sig buckets; "done"
-    // means LIVE, so a deferred-deleted id re-appends
-    val done = doneIds(s, dir, sigs)
-    val fresh = graft.Jobs.labeled(s, "dedup-index: append/fresh") {
-      sigs.join(done, Seq("doc_id"), "left_anti").localCheckpoint(true)
-    }
-    val ep = Tombstones.bumpEpoch(s, dir)
-    graft.Jobs.labeled(s, "dedup-index: append/writeBatch") {
-      writeBatch(fresh, dir, "append", nB, ep)
-    }
-    load(s, dir)
   }
 
   /** O(batch) delete: tombstone append; rows vanish from [[load]] (and
@@ -205,17 +207,16 @@ object DedupIndex {
     * materializes the torn-append heal: duplicate band rows from
     * replayed appends are collapsed by the rewrite's dropDuplicates.
     */
-  def compact(s: SparkSession, dir: String): Index = {
+  def compact(s: SparkSession, dir: String): Index = graft.Reliable.scoped {
     Tombstones.ledger(s, dir).foreach { _ =>
       val live = load(s, dir)
       // the rewrite restarts epoch history at 0 (no tombstones survive it)
-      live.bands.dropDuplicates("doc_id", "b")
-        .withColumn("ep", lit(0L)).localCheckpoint(true)
+      graft.Reliable.owned(live.bands.dropDuplicates("doc_id", "b")
+          .withColumn("ep", lit(0L)))
         .transform(Layout.writeByBucket(_, col("bkt")))
         .write.partitionBy("bkt").mode("overwrite").parquet(s"$dir/bands")
-      live.sigs.select(col("doc_id"), col("sig")).dropDuplicates("doc_id")
-        .withColumn("ep", lit(0L))
-        .withColumn("sbkt", sbktCol(live.buckets)).localCheckpoint(true)
+      graft.Reliable.owned(live.sigs.select(col("doc_id"), col("sig")).dropDuplicates("doc_id")
+          .withColumn("ep", lit(0L)).withColumn("sbkt", sbktCol(live.buckets)))
         .transform(Layout.writeByBucket(_, col("sbkt")))
         .write.partitionBy("sbkt").mode("overwrite").parquet(s"$dir/sigs")
       Tombstones.dropLedger(s, dir)
@@ -249,17 +250,8 @@ object DedupIndex {
     val confined = corpusBands.join(
       broadcast(batchBands.select(col("b"), col("s1"), col("s2")).distinct()),
       Seq("b", "s1", "s2"), "left_semi")
-    // materialize=false (round 17 — the q161 carried flag + the
-    // per-batch block-accretion advice): every caller's corpus side is
-    // a bucket-pruned parquet scan (queryBatch), a projection of an
-    // already-checkpointed batch (the gate's self pass), or a
-    // projection of a session-shared signature checkpoint (q153) — all
-    // cheaper to read twice through the broadcast semi-join than to
-    // copy into block storage, and this join runs ONCE PER INTAKE
-    // BATCH: an internal localCheckpoint here accretes a batch-count's
-    // worth of session-lifetime executor blocks on the serve path.
     val capped = LshGuard.capBuckets(s, confined, Seq("b", "s1", "s2"),
-      "doc_id", tag = tag, materialize = false)
+      "doc_id", tag = tag)
     batchBands.as("q")
       .join(capped.as("c"),
         col("q.b") === col("c.b") && col("q.s1") === col("c.s1") &&
@@ -281,7 +273,7 @@ object DedupIndex {
     val ix = load(s, dir) // the format gate; carries the persisted bucket count
     val bSigs = graft.Jobs.labeled(s, "dedup-index: queryBatch/sigsOf") {
       // batch-contract spread, as in [[append]] (round 19)
-      TextOps.sigsOf(graft.Spread.batch(batch)).localCheckpoint(true)
+      graft.Reliable.owned(TextOps.sigsOf(graft.Spread.batch(batch)))
     }
     val bBands = TextOps.bandsOf(bSigs)
     val bkts = graft.Jobs.distinctRows(bBands.select(bktCol(ix.buckets).as("bkt")))
@@ -291,18 +283,15 @@ object DedupIndex {
     // is consumed twice: once to name the sig buckets it needs, once in
     // the verification join itself
     val pairs = graft.Jobs.labeled(s, "dedup-index: queryBatch/pairs") {
-      candidatePairs(s, corpusBands, bBands).localCheckpoint(true)
+      graft.Reliable.owned(candidatePairs(s, corpusBands, bBands))
     }
     val corpusSigs = pruneSigs(ix.sigs, ix.buckets,
       pairs.select(col("corpus_id").as("doc_id")))
-    val agree = (1 to 16).map { i =>
-      when(element_at(col("sa.sig"), i) === element_at(col("sb.sig"), i), 1).otherwise(0)
-    }.reduce(_ + _)
     pairs
       .join(bSigs.as("sa"), col("batch_id") === col("sa.doc_id"))
       .join(corpusSigs.as("sb"), col("corpus_id") === col("sb.doc_id"))
       .select(col("batch_id"), col("corpus_id"),
-        round(agree / lit(16.0), 6).as("est_jaccard"))
+        TextOps.estJaccard.as("est_jaccard"))
       .orderBy(col("batch_id"), col("corpus_id"))
   }
 
@@ -339,14 +328,11 @@ object DedupIndex {
     val batchSigs = sigs.filter(col("doc_id") >= 400)
     val pairs = candidatePairs(s,
       TextOps.bandsOf(corpusSigs), TextOps.bandsOf(batchSigs))
-    val agree = (1 to 16).map { i =>
-      when(element_at(col("sa.sig"), i) === element_at(col("sb.sig"), i), 1).otherwise(0)
-    }.reduce(_ + _)
     pairs
       .join(sigs.as("sa"), col("batch_id") === col("sa.doc_id"))
       .join(sigs.as("sb"), col("corpus_id") === col("sb.doc_id"))
       .select(col("batch_id"), col("corpus_id"),
-        round(agree / lit(16.0), 6).as("est_jaccard"))
+        TextOps.estJaccard.as("est_jaccard"))
       .orderBy(col("batch_id"), col("corpus_id"))
   }
 

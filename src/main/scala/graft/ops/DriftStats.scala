@@ -26,14 +26,14 @@ private[ops] object DriftStats {
     * the caller's so each monitor keeps its domain vocabulary.
     *
     * EAGER, and storage-clean by construction (round 15): the single
-    * percentile row is collected here and the two-phase rank's
-    * checkpoint released immediately ([[GlobalOrder.WithTotals.release]])
-    * — a long-lived intake loop reading a drift monitor per batch
+    * percentile row is collected here inside a [[graft.Reliable.scoped]]
+    * block, which releases the two-phase rank's checkpoint on return —
+    * a long-lived intake loop reading a drift monitor per batch
     * (IngestionGate.monitor) retains no executor-storage blocks per
     * read. The returned 1-row frame is a local relation.
     */
   def stats(df: DataFrame, value: Column, id: Column, pct: Int,
-      nName: String, meanName: String, pctName: String): DataFrame = {
+      nName: String, meanName: String, pctName: String): DataFrame = graft.Reliable.scoped {
     val rt = GlobalOrder.rankAndRunningSumT(df, Seq(value, id), value,
       "rnk", "cum")
     val n = rt.totalCount
@@ -44,10 +44,8 @@ private[ops] object DriftStats {
     // the generic kernel a future SIGNED-metric monitor would reach
     // for, and truncation would silently diverge there.
     val mean = Math.floorDiv(2 * rt.totalSum + n, 2 * n)
-    val pctVal =
-      try rt.df.filter(col("rnk") === lit((pct * n + 99) / 100))
-        .select(value.cast("long")).collect()(0).getLong(0)
-      finally rt.release()
+    val pctVal = rt.df.filter(col("rnk") === lit((pct * n + 99) / 100))
+      .select(value.cast("long")).collect()(0).getLong(0)
     val s = df.sparkSession
     import s.implicits._
     Seq((n, mean, pctVal)).toDF(nName, meanName, pctName)

@@ -55,28 +55,9 @@ object GlobalOrder {
   private val Pid = "__go_pid"
 
   /** A two-phase result: the augmented frame plus the exact global
-    * totals (free by-products of the phase-2 partials fold) and the
-    * phase-1 checkpoint's storage handle.
+    * totals (free by-products of the phase-2 partials fold).
     */
-  final case class WithTotals(df: DataFrame, totalCount: Long, totalSum: Long,
-      private val checkpointed: Option[DataFrame] = None) {
-
-    /** Free the phase-1 checkpoint's executor-storage blocks (round-15
-      * storage hygiene: without this, a long-lived serve session running
-      * many GlobalOrder queries accumulates one retained block set per
-      * call). Call AFTER the last action over `df` — the checkpoint is
-      * lineage-free, so any later action on `df` will fail rather than
-      * silently recompute. Idempotent; a no-op on the reliable-
-      * checkpoint path (its files are reclaimed at application end).
-      */
-    def release(): Unit = checkpointed.foreach { c =>
-      c.queryExecution.analyzed.collectLeaves().foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = true)
-        case _ => ()
-      }
-    }
-  }
+  final case class WithTotals(df: DataFrame, totalCount: Long, totalSum: Long)
 
   /** Global 1-based row rank by `order` as LONG column `rankCol`. */
   def rank(df: DataFrame, order: Seq[Column], rankCol: String,
@@ -151,14 +132,13 @@ object GlobalOrder {
     // `spark.graft.checkpointDir` set the blocks are RELIABLE — a
     // preempted executor on a real cluster cannot recompute a local
     // checkpoint's lineage-free blocks, and this one sits under the
-    // whole selection/packing/percentile family. The blocks live until
-    // released: a long-lived session running many GlobalOrder queries
-    // calls WithTotals.release() after its last action over the result
-    // (GlobalOrderSpec pins no-net-growth across repeated calls), or
-    // sets the conf (reliable files are reclaimed at application end).
-    val ranged = graft.Reliable.checkpoint(
+    // whole selection/packing/percentile family. The checkpoint belongs
+    // to the caller's Reliable.scoped block, released when it closes
+    // (GlobalOrderSpec pins no-net-growth across repeated scoped calls);
+    // with no scope open it lives for the session.
+    val ranged = graft.Reliable.adopt(graft.Reliable.checkpoint(
       df.repartitionByRange(parts, order: _*)
-        .withColumn(Pid, spark_partition_id()))
+        .withColumn(Pid, spark_partition_id())))
     // Partition-count-bounded driver read (≤ `parts` rows).
     val partials = ranged.groupBy(col(Pid))
       .agg(count(lit(1L)).as("pcnt"), sum(value).cast("long").as("psum"))
@@ -181,7 +161,6 @@ object GlobalOrder {
     if (wantSum)
       out = out.withColumn(sumCol,
         (sum(value).over(wSum) + col("__go_soff")).cast("long"))
-    WithTotals(out.drop(Pid, "__go_coff", "__go_soff"), cAcc, sAcc,
-      checkpointed = Some(ranged))
+    WithTotals(out.drop(Pid, "__go_coff", "__go_soff"), cAcc, sAcc)
   }
 }

@@ -83,8 +83,8 @@ object IngestionGate {
     * store the exact-cosine sweep reads (the index holds ids + codes;
     * tombstones on the index side govern liveness for both).
     */
-  def writeSemantic(s: SparkSession, corpusVecs: DataFrame, dir: String): Unit = {
-    val v = corpusVecs.select(col("vec_id"), col("v")).localCheckpoint(true)
+  def writeSemantic(s: SparkSession, corpusVecs: DataFrame, dir: String): Unit = graft.Reliable.scoped {
+    val v = graft.Reliable.owned(corpusVecs.select(col("vec_id"), col("v")))
     AnnIndex.writeVectors(s, v, s"$dir/ann")
     v.write.mode("overwrite").parquet(s"$dir/vecs")
   }
@@ -92,49 +92,27 @@ object IngestionGate {
   /** The pure decision: which of `batch(doc_id, text)` would the gate
     * admit right now, against the CURRENT index state? No writes — this
     * is the serve-latency path IndexBench times, and the unit the
-    * mutating [[gateBatch]] composes.
+    * mutating [[gateBatch]] composes. The result is lazy over the
+    * call's batch-sized checkpoints and those of the stage calls
+    * ([[graft.Reliable.owned]]): they belong to the caller's
+    * [[graft.Reliable.scoped]] block, or to the session if none is open.
     */
-  def decide(s: SparkSession, cfg: Config, batch: DataFrame): DataFrame =
-    graft.Jobs.labeled(s, "ingestion-gate: decide")(decideWithHandles(s, cfg, batch)._1)
-
-  /** [[decide]] plus the internal eager checkpoints the lazy result
-    * reads through (round 18, the r17 block-accretion advice): the
-    * result frame is lazy over batch-sized internal checkpoints (`b0`,
-    * the selfDedup sigs/b, the semantic selfDom), so a caller that
-    * RE-MATERIALIZES the decision — [[gateBatch]] checkpoints it per
-    * intake batch — must release them or a long stream accretes a
-    * batch-count of session-lifetime executor blocks. Callers that
-    * serve the lazy frame directly own the handles' lifetime. The
-    * known residual (recorded, not hidden): the per-stage serve calls
-    * ([[DedupIndex.queryBatch]]'s bSigs/pairs, the score batches)
-    * checkpoint their own batch-sized internals, which the result is
-    * also lazy over; those release only at session end.
-    */
-  private[graft] def decideWithHandles(s: SparkSession, cfg: Config,
-      batch: DataFrame): (DataFrame, Seq[DataFrame]) = {
-    val handles = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val b0 = batch.localCheckpoint(true) // batch-sized; read by every check
-    handles += b0
+  def decide(s: SparkSession, cfg: Config, batch: DataFrame): DataFrame = graft.Jobs.labeled(s, "ingestion-gate: decide") {
+    val b0 = graft.Reliable.owned(batch) // batch-sized; read by every check
     // optional stage 0: batch-self near-dup pass (see object doc) — the
     // SAME banded join + signature verification the index check runs,
     // pointed at the batch's own bands; each verified pair keeps its min
     // doc_id, so a self-colliding batch admits one representative
     val b = if (!cfg.selfDedup) b0 else {
-      val sigs = TextOps.sigsOf(b0).localCheckpoint(true)
-      handles += sigs
+      val sigs = graft.Reliable.owned(TextOps.sigsOf(b0))
       val bands = TextOps.bandsOf(sigs)
-      val agree = (1 to 16).map { i =>
-        when(element_at(col("sa.sig"), i) === element_at(col("sb.sig"), i), 1).otherwise(0)
-      }.reduce(_ + _)
       val selfDups = DedupIndex.candidatePairs(s, bands, bands, tag = "gate-self")
         .join(sigs.as("sa"), col("batch_id") === col("sa.doc_id"))
         .join(sigs.as("sb"), col("corpus_id") === col("sb.doc_id"))
-        .filter(round(agree / lit(16.0), 6) >= cfg.maxJaccard &&
+        .filter(TextOps.estJaccard >= cfg.maxJaccard &&
           col("corpus_id") < col("batch_id"))
         .select(col("batch_id").as("doc_id")).distinct()
-      val bd = b0.join(selfDups, Seq("doc_id"), "left_anti").localCheckpoint(true)
-      handles += bd
-      bd
+      graft.Reliable.owned(b0.join(selfDups, Seq("doc_id"), "left_anti"))
     }
     val dups = DedupIndex.queryBatch(s, cfg.dedupDir, b)
       .filter(col("est_jaccard") >= cfg.maxJaccard)
@@ -181,25 +159,21 @@ object IngestionGate {
         // both join sides are the batch.
         val cents = MetaScalar.open(s, s"$sd/ann/centroids")
           .select(col("cid"), col("cv"))
-        // caller-owned materialization (round-17 advice): the sweep's
-        // cap reads its input three times (pass 1 + both pair sides),
-        // so checkpoint the batch-sized assignment ONCE here, run the
-        // kernel with materialize=false, pin the (tiny) dominated-id
-        // set eagerly, and RELEASE the assignment — per-batch calls on
-        // a long intake stream must not accrete session-lifetime blocks
-        // through the guard's internal default.
+        // the sweep's cap reads its input three times (pass 1 + both
+        // pair sides), so checkpoint the batch-sized assignment ONCE,
+        // pin the (tiny) dominated-id set eagerly, and release the
+        // assignment before the call returns
         val basg = Advanced20.assignCosine(
           corpusClean.select(col("doc_id").as("vec_id"), col("v")), cents)
           .localCheckpoint(true)
-        val selfDom = Advanced20.dominatedBy(basg, cfg.semanticTau,
-            tag = "gate-semself", materialize = false)
-          .select(col("vec_id").as("doc_id")).localCheckpoint(true)
-        handles += selfDom
+        val selfDom = graft.Reliable.owned(Advanced20.dominatedBy(basg,
+            cfg.semanticTau, tag = "gate-semself")
+          .select(col("vec_id").as("doc_id")))
         graft.Reliable.release(basg)
         corpusClean.join(selfDom, Seq("doc_id"), "left_anti")
       }
     }
-    (admitted, handles.toSeq)
+    admitted
   }
 
   /** One full gate pass: decide, land the admitted documents in the
@@ -213,18 +187,18 @@ object IngestionGate {
     * FIRST and the marker lands LAST: a crash between the two replays
     * into a duplicate sink row at worst, which [[accepted]] heals on
     * read — the same torn-write seam and heal the index family uses.
+    *
+    * Every checkpoint the pass and its stage calls make is released on
+    * return ([[graft.Reliable.scoped]]), except the returned admitted
+    * frame, which the caller owns.
     */
-  def gateBatch(s: SparkSession, cfg: Config, batch: DataFrame): DataFrame = {
-    val (dec, handles) = decideWithHandles(s, cfg, batch)
-    val decided = dec.localCheckpoint(true)
-    // decided is a materialized copy: decide()'s internal batch-sized
-    // checkpoints have no consumer past this point — release them here
-    // so per-batch calls on a long intake stream don't accrete them for
-    // the session lifetime (round 18, the r17 advice; the serve calls'
-    // own internals are the documented residual — decideWithHandles doc)
-    handles.foreach(graft.Reliable.release)
+  def gateBatch(s: SparkSession, cfg: Config, batch: DataFrame): DataFrame = graft.Reliable.scoped {
+    val decided = graft.Reliable.owned(decide(s, cfg, batch))
     // pruned to the batch ids' sig buckets, not a corpus-wide scan
     val done = DedupIndex.doneIds(s, cfg.dedupDir, decided)
+    // `fresh` is the eager checkpoint handed to the caller — CALLER-
+    // OWNED, outside this call's scope: a long-running intake loop that
+    // drops each batch's result should Reliable.release it when done
     val fresh = decided.join(done, Seq("doc_id"), "left_anti").localCheckpoint(true)
     fresh.write.mode("append").parquet(cfg.acceptedDir)
     // semantic layout absorbs the admissions BEFORE the done-marker
@@ -232,20 +206,11 @@ object IngestionGate {
     // holds, the vecs store dedups on read), so the NEXT batch
     // semantically dedups against this one
     cfg.semanticDir.foreach { sd =>
-      val fv = fresh.select(col("doc_id").as("vec_id"), col("v"))
-        .localCheckpoint(true)
+      val fv = graft.Reliable.owned(fresh.select(col("doc_id").as("vec_id"), col("v")))
       fv.write.mode("append").parquet(s"$sd/vecs")
       AnnIndex.append(s, s"$sd/ann", fv)
-      graft.Reliable.release(fv) // both consumers (store + index) have written
     }
     DedupIndex.append(s, cfg.dedupDir, fresh)
-    // `fresh` is the eager checkpoint handed to the caller — CALLER-
-    // OWNED: a long-running intake loop that drops each batch's result
-    // should Reliable.release it when done. `decided` has no consumer
-    // past it — release here (the round-17 block-accretion discipline;
-    // decide()'s internals were released above once `decided`
-    // materialized).
-    graft.Reliable.release(decided)
     fresh
   }
 
@@ -277,8 +242,8 @@ object IngestionGate {
     * baseline bit-for-bit) and that each stage's alarm moves under its
     * own drift.
     */
-  def monitor(s: SparkSession, cfg: Config, batch: DataFrame): DataFrame = {
-    val b = batch.localCheckpoint(true) // batch-sized; read once per stage
+  def monitor(s: SparkSession, cfg: Config, batch: DataFrame): DataFrame = graft.Reliable.scoped {
+    val b = graft.Reliable.owned(batch) // batch-sized; read once per stage
     def shape(df: DataFrame, stage: String, n: String, m: String,
         t: String): DataFrame =
       df.select(lit(stage).as("stage"), col("side"), col(n).as("n"),
@@ -371,9 +336,9 @@ object IngestionGate {
     */
   def maintain(s: SparkSession, cfg: Config, batch: DataFrame,
       corpusDocs: DataFrame, policy: MaintainPolicy = MaintainPolicy(),
-      annProbes: Option[DataFrame] = None): DataFrame = {
+      annProbes: Option[DataFrame] = None): DataFrame = graft.Reliable.scoped {
     import s.implicits._
-    val b = batch.localCheckpoint(true)
+    val b = graft.Reliable.owned(batch)
     val docsB = b.select(col("doc_id"), col("text"))
     // ms_rebuild/ms_gate carry the exact-vs-sampled gate-mode cost
     // split; only the ANN cycle fills them. Consumers read this frame
@@ -392,8 +357,8 @@ object IngestionGate {
         "semanticDir is set but the batch has no `v` embedding column")
       val store = MetaScalar.open(s, s"$sd/vecs")
       val bv = b.select(col("doc_id").as("vec_id"), col("v"))
-      val probes = annProbes.getOrElse(store.orderBy(col("vec_id")).limit(16)
-        .select(col("vec_id").as("qid"), col("v"))).localCheckpoint(true)
+      val probes = graft.Reliable.owned(annProbes.getOrElse(store.orderBy(col("vec_id"))
+        .limit(16).select(col("vec_id").as("qid"), col("v"))))
       // BY-NAME into annCycle, so a healthy batch never pays the sizing.
       // A policy-bounded shortlist switches to the sampled-probe gate.
       val r = RetrainFlow.annCycle(s, s"$sd/ann", store, bv, probes,
@@ -499,13 +464,10 @@ object IngestionGate {
     val batchSigs = sigs.filter(col("doc_id") >= 400)
     val pairs = DedupIndex.candidatePairs(s,
       TextOps.bandsOf(corpusSigs), TextOps.bandsOf(batchSigs))
-    val agree = (1 to 16).map { i =>
-      when(element_at(col("sa.sig"), i) === element_at(col("sb.sig"), i), 1).otherwise(0)
-    }.reduce(_ + _)
     val dup = pairs
       .join(sigs.as("sa"), col("batch_id") === col("sa.doc_id"))
       .join(sigs.as("sb"), col("corpus_id") === col("sb.doc_id"))
-      .select(col("batch_id").as("doc_id"), round(agree / lit(16.0), 6).as("est"))
+      .select(col("batch_id").as("doc_id"), TextOps.estJaccard.as("est"))
       .filter(col("est") >= 0.5)
       .select(col("doc_id")).distinct()
     val docs = Tables.documents(s, d)

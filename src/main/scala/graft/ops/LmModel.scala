@@ -119,9 +119,9 @@ object LmModel {
   private def countTables(docs0: DataFrame): (DataFrame, DataFrame) = {
     // spread a skinny scan/checkpoint input before tokenizing (round 19)
     val docs = graft.Spread.lazyAuto(docs0)
-    val uni = docs.select(explode(split(col("text"), " ")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .localCheckpoint() // feeds both marginal joins + the total, once
+    // feeds both marginal joins + the total, once
+    val uni = graft.Reliable.owned(docs.select(explode(split(col("text"), " ")).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("c")))
     val bi = transitions(docs)
       .groupBy(col("gram")).agg(count(lit(1)).as("c12"))
     (bi, uni)
@@ -197,9 +197,9 @@ object LmModel {
     * share one corpus aggregation.
     */
   def write(s: SparkSession, docs: DataFrame, dir: String,
-      bucketsOverride: Option[Int] = None): Unit = {
+      bucketsOverride: Option[Int] = None): Unit = graft.Reliable.scoped {
     val (bi0, uni) = countTables(docs)
-    val bi = bi0.localCheckpoint(true)
+    val bi = graft.Reliable.owned(bi0)
     writeTables(s, dir, bi, uni, bucketsOverride.getOrElse(
       Tombstones.bucketsFor(bi.count(), GramsPerBucket)))
   }
@@ -214,7 +214,7 @@ object LmModel {
     * [[Release.upgradeLmModel]] measures this against a fresh retrain.
     */
   def upgrade(s: SparkSession, dir: String, addDocs: DataFrame,
-      removeDocs: DataFrame): Unit = {
+      removeDocs: DataFrame): Unit = graft.Reliable.scoped {
     Tombstones.readBuckets(s, dir) // the format gate
     def delta(docs: DataFrame, sign: Int): (DataFrame, DataFrame) = {
       val (bi, uni) = countTables(docs)
@@ -223,14 +223,14 @@ object LmModel {
     }
     val (addBi, addUni) = delta(addDocs, 1)
     val (remBi, remUni) = delta(removeDocs, -1)
-    val bi = MetaScalar.open(s, s"$dir/bigrams").select(col("gram"), col("c12"))
+    val bi = graft.Reliable.owned(MetaScalar.open(s, s"$dir/bigrams").select(col("gram"), col("c12"))
       .unionByName(addBi).unionByName(remBi)
       .groupBy(col("gram")).agg(sum(col("c12")).as("c12"))
-      .filter(col("c12") > 0).localCheckpoint(true)
-    val uni = MetaScalar.open(s, s"$dir/unigrams").select(col("w"), col("c"))
+      .filter(col("c12") > 0))
+    val uni = graft.Reliable.owned(MetaScalar.open(s, s"$dir/unigrams").select(col("w"), col("c"))
       .unionByName(addUni).unionByName(remUni)
       .groupBy(col("w")).agg(sum(col("c")).as("c"))
-      .filter(col("c") > 0).localCheckpoint(true)
+      .filter(col("c") > 0))
     // re-derive the sized count from the MERGED table — the rewrite is
     // total anyway, so a model that grew across releases keeps its
     // bytes-per-bucket bound instead of inheriting v1's count forever
@@ -250,9 +250,9 @@ object LmModel {
     */
   def scoreBatch(s: SparkSession, dir: String, docs: DataFrame): DataFrame = graft.Jobs.labeled(s, "lm-model: scoreBatch") {
     val nB = Tombstones.readBuckets(s, dir) // the format gate
-    val t = transitions(graft.Spread.batch(docs))
-      .withColumn("w2", split(col("gram"), " ").getItem(1))
-      .localCheckpoint() // batch-sized; feeds bucket discovery + the score join
+    // batch-sized; feeds bucket discovery + the score join
+    val t = graft.Reliable.owned(transitions(graft.Spread.batch(docs))
+      .withColumn("w2", split(col("gram"), " ").getItem(1)))
     val (bg, bw) = bucketsOf(t, nB)
     def pruned(table: String, bkts: Seq[Int]): DataFrame =
       MetaScalar.open(s, s"$dir/$table").filter(col("bkt").isin(bkts: _*))
@@ -320,9 +320,10 @@ object LmModel {
     * the old distribution would alert wrong) — re-run this after each
     * release roll.
     */
-  def writeScoreStats(s: SparkSession, dir: String, docs: DataFrame): Unit =
+  def writeScoreStats(s: SparkSession, dir: String, docs: DataFrame): Unit = graft.Reliable.scoped {
     docStats(scoreBatch(s, dir, docs))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/scorestats")
+  }
 
   /** CORPUS-DRIFT MONITOR — the LM analog of
     * [[AnnIndex.quantizationDrift]] (q204) and the other half of the

@@ -101,24 +101,9 @@ object LshGuard {
     * doc; `cap = Int.MaxValue` (the specs' uncapped comparison arm) is
     * an explicit passthrough, since no bucket can exceed it.
     *
-    * `materialize` (round 16 — the r15 verdict's carried perf item):
-    * both passes consume `df`, so an UN-materialized input recomputes
-    * its whole lineage twice — for a per-run band table (crossJoin ×
-    * planes → aggregate) that double build was the measured steady
-    * constant behind q35/q161's r15 flags. Default true `localCheckpoint`s
-    * the input once so pass 1 and the probe read one set of blocks; pass
-    * false when the caller already materialized it (Shared / Reliable /
-    * an explicit checkpoint), when the input is a bare columnar scan
-    * deliberately cheaper to read twice than to copy (the serve-path
-    * corpus-sized skinny tables; the embeddings scans behind q133 and
-    * the pipeline's semantic stage — round-17 A/B), or on PER-BATCH
-    * serve paths ([[DedupIndex.candidatePairs]], the gate's
-    * self-sweeps): the internal checkpoint is never unpersisted, so a
-    * per-intake-batch call under the default accretes session-lifetime
-    * executor blocks (round-17 advice). A caller that must materialize
-    * an expensive input on a repeated path owns the checkpoint AND its
-    * release ([[graft.Reliable.release]]) — the gate's semantic
-    * self-sweep pattern.
+    * Both passes read `df`: a caller whose input is expensive to
+    * recompute materializes it first (as [[VectorSearch.nearDupPairs]]
+    * does its band table).
     *
     * Null bucket keys cap like any other bucket: the threshold join is
     * null-safe (`<=>`), mirroring the oracle's `PARTITION BY` (SQL
@@ -127,14 +112,12 @@ object LshGuard {
     * into a quadratic self-join (round-16 advice fix).
     */
   def capBuckets(s: SparkSession, df: DataFrame, bucketKeys: Seq[String],
-      orderCol: String, cap: Int = BucketCap, tag: String,
-      materialize: Boolean = true): DataFrame = {
+      orderCol: String, cap: Int = BucketCap, tag: String): DataFrame = {
     if (cap == Int.MaxValue) return df
     ensureListener(s)
-    val in = if (materialize) df.localCheckpoint(true) else df
     // pass 1: per-bucket (member count, cap-th smallest id) — bounded-heap
     // aggregate, partial state ≤ cap values per bucket per task
-    val th = in.groupBy(bucketKeys.map(col): _*)
+    val th = df.groupBy(bucketKeys.map(col): _*)
       .agg(count(lit(1)).as("graft_bucket_n"),
         org.apache.spark.sql.GraftPlanBridge.column(
           graft.functions.KthSmallest(
@@ -148,7 +131,7 @@ object LshGuard {
         Seq(col("graft_bucket_n"), col("graft_bucket_thr")): _*)
     val hotCond = bucketKeys.map(k => col(k) <=> col(s"graft_hot_$k"))
       .reduce(_ && _)
-    in.join(hot, hotCond, "left_outer")
+    df.join(hot, hotCond, "left_outer")
       .observe(s"graft.lsh.drops.$tag#${serial.incrementAndGet()}",
         coalesce(sum(when(col(orderCol).cast("long") > col("graft_bucket_thr"), 1L)),
           lit(0L)).as("dropped"),

@@ -42,7 +42,7 @@ object QualityModel {
   /** Train on `docs(doc_id, text, …)` and persist under `dir`.
     * Overwrites.
     */
-  def write(s: SparkSession, docs: DataFrame, dir: String): Unit = {
+  def write(s: SparkSession, docs: DataFrame, dir: String): Unit = graft.Reliable.scoped {
     // a retrain-in-place only overwrites $dir/model, so any persisted
     // scorestats baseline would survive describing the PREVIOUS model's
     // score distribution — [[scoreDrift]] would then alert wrong instead
@@ -50,7 +50,7 @@ object QualityModel {
     // operator re-runs [[writeScoreStats]] after each retrain.
     val ss = new org.apache.hadoop.fs.Path(s"$dir/scorestats")
     ss.getFileSystem(s.sparkContext.hadoopConfiguration).delete(ss, true)
-    val raw = Advanced15.lqcRawFeatures(docs).localCheckpoint()
+    val raw = graft.Reliable.owned(Advanced15.lqcRawFeatures(docs))
     val (nL, mus) = Advanced15.lqcMeans(raw)
     val x = raw.select(col("y"),
       (col("r1") - mus(0)).as("f1"), (col("r2") - mus(1)).as("f2"),

@@ -37,9 +37,7 @@ object Quantizer {
   private def emb(s: SparkSession, d: String): DataFrame = {
     // spread the single-file scan before the Lloyd distance passes
     // (round 19, guide §2.5) — the trainers otherwise run one-task
-    graft.Spread.lazyAuto(
-      Tables.embeddings(s, d).select(col("vec_id"),
-        graft.functions.VectorFunctions.asDouble(col("embedding")).as("v")))
+    graft.Spread.lazyAuto(Tables.vectors(s, d))
   }
 
   /** (keys…, b, sv): each vector split into 4 contiguous 16-dim blocks —

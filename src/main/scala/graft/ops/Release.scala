@@ -119,14 +119,14 @@ object Release {
     * tokenization, one model-table-sized merge — never a corpus scan.
     */
   def upgradeLmModel(s: SparkSession, dir: String, oldCorpus: DataFrame,
-      newCorpus: DataFrame, d: Delta): Unit = {
+      newCorpus: DataFrame, d: Delta): Unit = graft.Reliable.scoped {
     val gone = d.removed.unionByName(d.changed).select(col("id").as("doc_id"))
     val freshIds = d.added.unionByName(d.changed).select(col("id").as("doc_id"))
     // batch-sized materialization: LmModel.upgrade scans each delta side
     // twice (bigram + unigram counts) — without the checkpoint each scan
     // would re-run the semi-join over the full snapshot
-    val rem = oldCorpus.join(gone, Seq("doc_id"), "left_semi").localCheckpoint(true)
-    val add = newCorpus.join(freshIds, Seq("doc_id"), "left_semi").localCheckpoint(true)
+    val rem = graft.Reliable.owned(oldCorpus.join(gone, Seq("doc_id"), "left_semi"))
+    val add = graft.Reliable.owned(newCorpus.join(freshIds, Seq("doc_id"), "left_semi"))
     LmModel.upgrade(s, dir, addDocs = add, removeDocs = rem)
   }
 
@@ -342,13 +342,11 @@ object Release {
       |FROM codes c JOIN asg a USING (vec_id)
       |ORDER BY vec_id, b""".stripMargin) { (s, d) =>
     val v1 = graft.Shared.materialized(s, s"relver-emb-v1@$d") {
-      Tables.embeddings(s, d).select(col("vec_id"),
-          graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
+      Tables.vectors(s, d)
         .filter(col("vec_id") % 17 =!= 5)
     }
     val v2 = graft.Shared.materialized(s, s"relver-emb-v2@$d") {
-      Tables.embeddings(s, d).select(col("vec_id"),
-          graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
+      Tables.vectors(s, d)
         .filter(col("vec_id") % 19 =!= 3)
         .withColumn("v",
           when(col("vec_id") % 13 === 0, transform(col("v"), x => x + lit(0.25)))

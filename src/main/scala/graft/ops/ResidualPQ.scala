@@ -32,11 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object ResidualPQ {
 
-  private def embV(s: SparkSession, d: String): DataFrame = {
-    Tables.embeddings(s, d).select(col("vec_id"),
-      graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
-  }
-
   private def cent(s: SparkSession, d: String): DataFrame =
     Quantizer.ivfCentroids(s, d).select(col("cid").as("c_id"), col("cv"))
 
@@ -46,7 +41,7 @@ object ResidualPQ {
   private def residuals(s: SparkSession, d: String): DataFrame = {
     val assigned = Advanced2.ivfAffinity(s, d)
       .filter(col("crank") === 1).select(col("vec_id"), col("c_id"))
-    embV(s, d).join(assigned, Seq("vec_id"))
+    Tables.vectors(s, d).join(assigned, Seq("vec_id"))
       .join(broadcast(cent(s, d)), Seq("c_id"))
       .select(col("vec_id"), VecSub.vecSub(col("v"), col("cv")).as("v"))
   }
@@ -124,7 +119,7 @@ object ResidualPQ {
       .select(col("qid"), col("probe_c_id").as("c_id"),
         col("a.vec_id").as("cand")).distinct()
     // per-probe query residuals → one distance table per (query, list)
-    val e = embV(s, d)
+    val e = Tables.vectors(s, d)
     val qres = probes
       .join(e.select(col("vec_id").as("qid"), col("v").as("qv")), Seq("qid"))
       .join(broadcast(cent(s, d)), Seq("c_id"))

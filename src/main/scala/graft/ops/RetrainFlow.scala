@@ -394,9 +394,7 @@ object RetrainFlow {
   private def sharedAnnCycle(s: SparkSession, d: String): (String, Boolean, Long, Boolean) = {
     import s.implicits._
     val row = graft.Shared.materialized(s, s"retrain-cycle@$d") {
-      val e = graft.Tables.embeddings(s, d).select(col("vec_id"),
-        graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
-        .localCheckpoint(true)
+      val e = graft.Tables.vectors(s, d).localCheckpoint(true)
       val dir = graft.TempDirs.create("graft-rtcycle") + "/ann"
       linkCloneDir(s, Advanced20.sharedFixedIndexDir(s, d), dir)
       val batch = e.select((col("vec_id") + 1000000000L).as("vec_id"),
@@ -485,8 +483,7 @@ object RetrainFlow {
       |  (al.alarm_ppm > 1500000 AND rec.post_ppm <= 1500000) AS swapped
       |FROM top, al, rec ORDER BY qid, rnk""").stripMargin) { (s, d) =>
     val (dir, alarmed, ppm, swapped) = sharedAnnCycle(s, d)
-    val e = graft.Tables.embeddings(s, d).select(col("vec_id"),
-      graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
+    val e = graft.Tables.vectors(s, d)
     val store = e.unionByName(e.select((col("vec_id") + 1000000000L).as("vec_id"),
       expr("transform(v, x -> x * 1.5d + 0.25d)").as("v")))
     val probes = e.filter(col("vec_id") < 16)

@@ -105,10 +105,9 @@ object TextIndex {
     // are batch-sized by the serve contract, so the checkpoint is
     // bounded; the corpus-sized build (mode = overwrite) keeps the
     // recompute — a corpus × ~100-token table must not land in block
-    // storage. Released on every exit, a failed write included (no lazy
-    // consumer survives the writes).
+    // storage. The checkpoint belongs to [[append]]'s scope.
     val t0 = toks(graft.Spread.lazyAuto(docs))
-    val t = if (mode == "append") t0.localCheckpoint(true) else t0
+    val t = if (mode == "append") graft.Reliable.owned(t0) else t0
     def stamp(df: DataFrame): DataFrame = df.withColumn("ep", lit(ep))
     // Repartition by the partition column before every dynamic-
     // partitioned write (round 18, guide §6): without it each write
@@ -121,16 +120,14 @@ object TextIndex {
     // anti-join target), so a crash mid-batch leaves at worst orphan
     // postings/positions for doc_ids absent from doclens — invisible to
     // BM25 only if the replay re-writes them, which the marker ensures.
-    try {
-      stamp(t.groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf")))
-        .withColumn("bkt", bktCol(nB)).transform(Layout.writeByBucket(_, col("bkt")))
-        .write.partitionBy("bkt").mode(mode).parquet(s"$dir/postings")
-      stamp(t.select(col("term"), col("doc_id"), col("pos")))
-        .withColumn("bkt", bktCol(nB)).transform(Layout.writeByBucket(_, col("bkt")))
-        .write.partitionBy("bkt").mode(mode).parquet(s"$dir/positions")
-      stamp(t.groupBy(col("doc_id")).agg(count(lit(1)).as("dl")))
-        .write.mode(mode).parquet(s"$dir/doclens")
-    } finally if (mode == "append") graft.Reliable.release(t)
+    stamp(t.groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf")))
+      .withColumn("bkt", bktCol(nB)).transform(Layout.writeByBucket(_, col("bkt")))
+      .write.partitionBy("bkt").mode(mode).parquet(s"$dir/postings")
+    stamp(t.select(col("term"), col("doc_id"), col("pos")))
+      .withColumn("bkt", bktCol(nB)).transform(Layout.writeByBucket(_, col("bkt")))
+      .write.partitionBy("bkt").mode(mode).parquet(s"$dir/positions")
+    stamp(t.groupBy(col("doc_id")).agg(count(lit(1)).as("dl")))
+      .write.mode(mode).parquet(s"$dir/doclens")
   }
 
   /** doclens rows whose epoch postdates their id's newest tombstone —
@@ -170,7 +167,7 @@ object TextIndex {
     * bucket count ([[bucketsFor]]), persisted for its lifetime.
     */
   def writeDocs(s: SparkSession, docs: DataFrame, dir: String,
-      bucketsOverride: Option[Int] = None): Unit = {
+      bucketsOverride: Option[Int] = None): Unit = graft.Reliable.scoped {
     val nB = bucketsOverride.getOrElse(
       Tombstones.bucketsFor(docs.count(), DocsPerBucket))
     Tombstones.writeMeta(s, dir, nB)
@@ -247,19 +244,19 @@ object TextIndex {
     * materializes [[load]]'s defensive dedup, permanently healing any
     * torn-append rows. Run when the tombstone set outgrows a broadcast.
     */
-  def compact(s: SparkSession, dir: String): Index = {
+  def compact(s: SparkSession, dir: String): Index = graft.Reliable.scoped {
     Tombstones.ledger(s, dir).foreach { _ =>
       val live = load(s, dir) // tombstones already folded, rows deduped
       // the rewrite restarts epoch history at 0 (no tombstones survive it)
       def ep0(df: DataFrame): DataFrame = df.withColumn("ep", lit(0L))
       // localCheckpoint so each rewrite doesn't race its own input scan
-      ep0(live.postings).localCheckpoint(true)
+      graft.Reliable.owned(ep0(live.postings))
         .transform(Layout.writeByBucket(_, col("bkt")))
         .write.partitionBy("bkt").mode("overwrite").parquet(s"$dir/postings")
-      ep0(live.positions).localCheckpoint(true)
+      graft.Reliable.owned(ep0(live.positions))
         .transform(Layout.writeByBucket(_, col("bkt")))
         .write.partitionBy("bkt").mode("overwrite").parquet(s"$dir/positions")
-      ep0(live.doclens).localCheckpoint(true)
+      graft.Reliable.owned(ep0(live.doclens))
         .write.mode("overwrite").parquet(s"$dir/doclens")
       Tombstones.dropLedger(s, dir)
       Tombstones.writeEpoch(s, dir, 0L)
@@ -280,21 +277,23 @@ object TextIndex {
     * re-appends at a fresh epoch (its dead rows stay invisible behind
     * the tombstone).
     */
-  def append(s: SparkSession, dir: String, docs: DataFrame): Index = graft.Jobs.labeled(s, "text-index: append") {
-    val nB = Tombstones.readBuckets(s, dir) // the format gate
-    val done = liveDoclens(s, dir).select(col("doc_id"))
-    val ep = Tombstones.bumpEpoch(s, dir)
-    // batch-sized materialization: writeBatch runs THREE writes, and
-    // without the checkpoint each one lazily re-runs the anti-join and
-    // whatever lineage `docs` carries (for Release upgrades, a semi-join
-    // over the full new corpus — re-scanned 3x, the term that kept the
-    // upgrade rebuild-priced). Same recipe as [[DedupIndex.append]];
-    // released on every exit, like writeBatch's token checkpoint.
-    val fresh = docs.join(done, Seq("doc_id"), "left_anti").localCheckpoint(true)
-    try writeBatch(fresh, dir, "append", ep, nB)
-    finally graft.Reliable.release(fresh)
-    refreshStats(s, dir)
-    load(s, dir)
+  def append(s: SparkSession, dir: String, docs: DataFrame): Index = graft.Reliable.scoped {
+    graft.Jobs.labeled(s, "text-index: append") {
+      val nB = Tombstones.readBuckets(s, dir) // the format gate
+      val done = liveDoclens(s, dir).select(col("doc_id"))
+      val ep = Tombstones.bumpEpoch(s, dir)
+      // batch-sized materialization: writeBatch runs THREE writes, and
+      // without the checkpoint each one lazily re-runs the anti-join and
+      // whatever lineage `docs` carries (for Release upgrades, a semi-join
+      // over the full new corpus — re-scanned 3x, the term that kept the
+      // upgrade rebuild-priced). Same recipe as [[DedupIndex.append]];
+      // released when the call returns or fails, like writeBatch's
+      // token checkpoint.
+      val fresh = graft.Reliable.owned(docs.join(done, Seq("doc_id"), "left_anti"))
+      writeBatch(fresh, dir, "append", ep, nB)
+      refreshStats(s, dir)
+      load(s, dir)
+    }
   }
 
   /** BM25 top-k over the loaded index: (rnk, doc_id, bm25), q146's

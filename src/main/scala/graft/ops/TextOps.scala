@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.{Det, Q, Tables}
 import graft.functions.NGrams
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis + deduplication family over `documents` — the
@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
 object TextOps {
 
   /** doc → space tokens, as a named column `toks`. */
-  private def withToks(df: DataFrame): DataFrame =
+  private[ops] def withToks(df: DataFrame): DataFrame =
     df.withColumn("toks", split(col("text"), " "))
 
   /** Exact deduplication: content-hash groups with a deterministic
@@ -173,7 +173,7 @@ object TextOps {
       // template shared corpus-wide) would make this self-join quadratic
       // inside its bucket — cap membership, with observed drop counts
       val capped = LshGuard.capBuckets(s, bands, Seq("b", "s1", "s2"),
-        "doc_id", tag = "minhash", materialize = false)
+        "doc_id", tag = "minhash")
       val pairs = capped.as("a")
         .join(capped.as("b"),
           col("a.b") === col("b.b") && col("a.s1") === col("b.s1") &&
@@ -184,6 +184,16 @@ object TextOps {
       graft.Reliable.release(bands)
       pairs
     }
+
+  /** Estimated Jaccard of the joined signatures `sa.sig` and `sb.sig`:
+    * the share of their 16 positions that agree, rounded to 6 decimals.
+    * A flat sum of 16 element_at comparisons stays inside whole-stage
+    * codegen; the aggregate(zip_with(...)) form runs interpreted per row
+    * in Spark 4.1 (lambda HOFs have no doGenCode).
+    */
+  private[ops] val estJaccard: Column = round((1 to 16).map { i =>
+    when(element_at(col("sa.sig"), i) === element_at(col("sb.sig"), i), 1).otherwise(0)
+  }.reduce(_ + _) / lit(16.0), 6)
 
   /** Shared DuckDB oracle preamble — the MinHash/LSH subtree (toks →
     * distinct 3-gram shingles → 28-bit md5-prefix hash → 16-min
@@ -266,17 +276,11 @@ object TextOps {
     // 100 TB of documents this is gigabytes, not terabytes.
     val sigs = minhashSigs(s, d)
     val cand = minhashCandidates(s, d)
-    // Signature agreement as a flat sum of 16 element_at comparisons —
-    // stays inside whole-stage codegen. The aggregate(zip_with(...)) form
-    // runs interpreted per row in Spark 4.1 (lambda HOFs have no doGenCode).
-    val agree = (1 to 16).map { i =>
-      when(element_at(col("sa.sig"), i) === element_at(col("sb.sig"), i), 1).otherwise(0)
-    }.reduce(_ + _)
     cand
       .join(sigs.as("sa"), col("da") === col("sa.doc_id"))
       .join(sigs.as("sb"), col("db") === col("sb.doc_id"))
       .select(col("da"), col("db"),
-        round(agree / lit(16.0), 6).as("est_jaccard"))
+        estJaccard.as("est_jaccard"))
       .orderBy(col("da"), col("db"))
   }
 

@@ -2,8 +2,7 @@ package graft.ops
 
 import graft.{Q, Tables}
 import graft.functions.{CosineSim, DotProduct}
-import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -27,10 +26,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object VectorSearch {
 
-  private[ops] def emb(s: SparkSession, d: String): DataFrame = {
-    Tables.embeddings(s, d).select(col("vec_id"), asDouble(col("embedding")).as("v"))
-  }
-
   private def cosExpr(a: String, b: String) =
     round(CosineSim.cosine(col(a), col(b)), 6)
 
@@ -50,7 +45,7 @@ object VectorSearch {
       |  FROM sims) t
       |WHERE rank <= 5
       |ORDER BY q_id, rank""".stripMargin) { (s, d) =>
-    val e = emb(s, d)
+    val e = Tables.vectors(s, d)
     val q = e.select(col("vec_id").as("q_id"), col("v").as("qv")).filter(col("q_id") < 10)
     val sims = e.crossJoin(broadcast(q))
       .filter(col("q_id") =!= col("vec_id"))
@@ -103,7 +98,7 @@ object VectorSearch {
       |  FROM sims) t
       |WHERE rank <= 3
       |ORDER BY q_id, rank""".stripMargin) { (s, d) =>
-    val e = emb(s, d)
+    val e = Tables.vectors(s, d)
     val planes = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("p_id"), col("v").as("pv"))
     // (vec_id, band, band-signature): one narrow scan × 8 broadcast planes,
@@ -123,7 +118,7 @@ object VectorSearch {
     // hot-bucket guard on the corpus side (queries keep all their bands):
     // a dominant-direction bucket can't flood every query's candidate set
     val capped = LshGuard.capBuckets(s, bands, Seq("b", "bsig"), "vec_id",
-      tag = "annlsh", materialize = false)
+      tag = "annlsh")
     // OR-amplification: a pair qualifies if ANY band collides → distinct.
     val cand = broadcast(qBands).join(capped.as("c"),
         col("qb") === col("c.b") && col("qsig") === col("c.bsig") &&
@@ -232,6 +227,7 @@ object VectorSearch {
         when(DotProduct.dot(col("v"), col("pv")) > 0, 1).otherwise(0).as("bit"))
       .groupBy(col("vec_id"), expr(s"p_id div $bandBits").cast("long").as("b"))
       .agg(sum(expr(s"shiftleft(bit, CAST(p_id % $bandBits AS INT))")).as("bsig"))
+      .localCheckpoint(true) // read by the cap's two passes
     // hot-bucket guard: embeddings clustered around a dominant direction
     // share one (b, bsig) bucket — cap membership before the self-join so
     // a degenerate bucket can't go quadratic (drops are observed+logged)
@@ -287,7 +283,7 @@ object VectorSearch {
       |WHERE list_dot_product(a.v, b.v)
       |    / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= 0.4
       |ORDER BY da, db""".stripMargin) { (s, d) =>
-    nearDupPairsAuto(emb(s, d), nBands = 4, threshold = 0.4)
+    nearDupPairsAuto(Tables.vectors(s, d), nBands = 4, threshold = 0.4)
       .orderBy(col("da"), col("db"))
   }
 
@@ -309,7 +305,7 @@ object VectorSearch {
       |WHERE list_dot_product(a.v, b.v)
       |    / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= 0.4
       |ORDER BY da, db""".stripMargin) { (s, d) =>
-    val e = emb(s, d).filter(col("vec_id") < 300)
+    val e = Tables.vectors(s, d).filter(col("vec_id") < 300)
     val a = e.select(col("vec_id").as("da"), col("v").as("va"))
     val b = e.select(col("vec_id").as("db"), col("v").as("vb"))
     a.crossJoin(broadcast(b))

@@ -69,13 +69,14 @@ class GlobalOrderSpec extends SparkSuite {
     assert(rt.totalSum == acc)
   }
 
-  test("release() frees the phase-1 checkpoint: no net executor-storage growth across repeated calls") {
+  test("a Reliable.scoped caller frees every phase-1 checkpoint of repeated calls") {
     // serve-session storage hygiene (round-15): each two-phase call
-    // checkpoints its ranged layout; without release() a long-lived
-    // session accumulates one retained block set per call
+    // checkpoints its ranged layout; a caller's scope releases it, and
+    // without one a long-lived session accumulates one retained block
+    // set per call
     val df = (1 to 5000).map(i => (i.toLong, (i * 2654435761L) % 997))
       .toDF("id", "v").repartition(4).localCheckpoint(true)
-    // Track the HANDLES' OWN checkpoint RDD ids (the LogicalRDD leaves of
+    // Track the results' OWN checkpoint RDD ids (the LogicalRDD leaves of
     // each result, minus the input's) — a global getPersistentRDDs COUNT
     // races with sibling suites, whose own Reliable.release calls (round
     // 16) legitimately unpersist their blocks mid-test.
@@ -85,19 +86,19 @@ class GlobalOrderSpec extends SparkSuite {
       }.toSet
     val inputIds = leafIds(df)
     def persistedIds = spark.sparkContext.getPersistentRDDs.keySet
-    val handles = (1 to 5).map { _ =>
-      val rt = GlobalOrder.rankAndRunningSumT(df, Seq($"v", $"id"), $"v",
-        "rnk", "cum")
-      assert(rt.df.count() == 5000L) // consumer materializes, THEN releases
-      rt
+    var own = Set.empty[Int]
+    Reliable.scoped {
+      (1 to 5).foreach { _ =>
+        val rt = GlobalOrder.rankAndRunningSumT(df, Seq($"v", $"id"), $"v",
+          "rnk", "cum")
+        assert(rt.df.count() == 5000L) // consumer materializes, THEN releases
+        own ++= leafIds(rt.df) -- inputIds
+      }
+      assert(own.size >= 5, s"expected >=5 distinct phase-1 checkpoints, got $own")
+      assert(own.subsetOf(persistedIds), s"checkpoints not retained: $own vs $persistedIds")
     }
-    val own = handles.flatMap(h => leafIds(h.df)).toSet -- inputIds
-    assert(own.size >= 5, s"expected >=5 distinct phase-1 checkpoints, got $own")
-    assert(own.subsetOf(persistedIds), s"checkpoints not retained: $own vs $persistedIds")
-    handles.foreach(_.release())
-    handles.foreach(_.release()) // idempotent
     val leaked = persistedIds.intersect(own)
-    assert(leaked.isEmpty, s"release() left retained blocks: $leaked")
+    assert(leaked.isEmpty, s"the scope left retained blocks: $leaked")
   }
 
   test("ntileFromRank reproduces SQL NTILE exactly, including n < buckets and remainders") {

@@ -102,4 +102,77 @@ class ReliableCheckpointSpec extends SparkSuite {
       "default mode must not record or rename failures")
     assert(Reliable.diagnose(e).isEmpty)
   }
+
+  // ------------------------------------------------ Reliable.scoped / owned
+
+  private def frame(n: Int) = (1 to n).map(_.toLong).toDF("id")
+  private def rddIds(df: org.apache.spark.sql.DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collectLeaves().collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.toSet
+  private def persisted(df: org.apache.spark.sql.DataFrame): Boolean =
+    rddIds(df).subsetOf(spark.sparkContext.getPersistentRDDs.keySet)
+
+  test("scoped releases its owned frames on normal return and on exception") {
+    var kept: org.apache.spark.sql.DataFrame = null
+    val sum = Reliable.scoped {
+      kept = Reliable.owned(frame(100))
+      assert(persisted(kept), "owned frame not persisted inside its scope")
+      kept.agg(org.apache.spark.sql.functions.sum("id")).collect()(0).getLong(0)
+    }
+    assert(sum == 5050L)
+    assert(!persisted(kept), "scope left its frame persisted after returning")
+    var failed: org.apache.spark.sql.DataFrame = null
+    intercept[IllegalStateException] {
+      Reliable.scoped {
+        failed = Reliable.owned(frame(10))
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(!persisted(failed), "scope left its frame persisted after throwing")
+  }
+
+  test("a nested scope releases only its own frames") {
+    Reliable.scoped {
+      val outer = Reliable.owned(frame(20))
+      var inner: org.apache.spark.sql.DataFrame = null
+      Reliable.scoped { inner = Reliable.owned(frame(30)) }
+      assert(!persisted(inner), "inner scope kept its frame")
+      assert(persisted(outer), "inner scope released the outer scope's frame")
+      assert(outer.count() == 20L)
+    }
+  }
+
+  test("owned with no scope open persists for the session, like localCheckpoint") {
+    val df = Reliable.owned(frame(40))
+    assert(persisted(df))
+    assert(df.count() == 40L)
+    Reliable.release(df)
+  }
+
+  test("a scope on one thread does not release frames owned on another") {
+    var other: org.apache.spark.sql.DataFrame = null
+    Reliable.scoped {
+      val t = new Thread(() => { other = Reliable.owned(frame(50)) })
+      t.start(); t.join()
+    }
+    assert(other != null && persisted(other),
+      "a scope released a frame owned on a different thread")
+    Reliable.release(other)
+  }
+
+  test("debugReleases: a lazy frame read after its scope closed raises the named error") {
+    spark.conf.set(Reliable.DebugKey, "true")
+    try {
+      val lazyReader = Reliable.scoped {
+        Reliable.owned(frame(1000)).selectExpr("sum(id) AS s") // escapes the scope
+      }
+      val e = intercept[Reliable.ReleasedBlockReadException] {
+        Reliable.withDiagnosis { lazyReader.collect() }
+      }
+      assert(e.getMessage.contains("released at"), e.getMessage)
+      assert(e.getMessage.contains("ReliableCheckpointSpec"),
+        s"diagnosis does not name the scope's call site: ${e.getMessage}")
+    } finally spark.conf.unset(Reliable.DebugKey)
+  }
 }
