@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Lineage truncation for ITERATIVE operators (connected components,
   * PageRank, BPE training), with a resilience escape hatch.
@@ -145,43 +145,87 @@ object Reliable {
         }
     }
 
+  // The frames one scope owns. Branches of [[Jobs.concurrently]] add to
+  // their caller's scope from their own threads, so adds are concurrent.
+  private type Frames = java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
+
   // The scopes open on the current thread, innermost first. A plain
   // ThreadLocal, not a DynamicVariable: an inheritable value would leak
   // into pool threads created inside a scope, whose frames would then
-  // register with a scope that closes without waiting for them.
-  private val scopes = new ThreadLocal[List[scala.collection.mutable.ArrayBuffer[DataFrame]]] {
-    override def initialValue(): List[scala.collection.mutable.ArrayBuffer[DataFrame]] = Nil
+  // register with a scope that closes without waiting for them. The one
+  // hand-off is [[Jobs.concurrently]], which blocks until its branches end.
+  private val scopes = new ThreadLocal[List[Frames]] {
+    override def initialValue(): List[Frames] = Nil
+  }
+
+  /** The scopes open on this thread, for [[inScopes]] on another thread. */
+  private[graft] def openScopes: List[Frames] = scopes.get
+
+  /** Run `body` with `open` (another thread's [[openScopes]]) as this
+    * thread's open scopes: what `body` [[owned]]s registers with that
+    * thread's innermost scope. The other thread must not close the scope
+    * before `body` returns.
+    */
+  private[graft] def inScopes[A](open: List[Frames])(body: => A): A = {
+    val prev = scopes.get
+    scopes.set(open)
+    try body finally scopes.set(prev)
   }
 
   /** A call's intermediate: `df.localCheckpoint(true)`, owned by the
     * innermost [[scoped]] block open on this thread, which releases it
     * when the block exits. With no scope open the blocks live for the
-    * session, as a plain `localCheckpoint` does.
+    * session, as a plain `localCheckpoint` does. The checkpoint's RDD
+    * (and its job) carry the caller's call site, not this file's.
     */
-  def owned(df: DataFrame): DataFrame = adopt(df.localCheckpoint(true))
+  def owned(df: DataFrame): DataFrame =
+    adopt(atCallerSite(df.sparkSession)(df.localCheckpoint(true)))
+
+  /** Run `body` with the SparkContext call site set to the first stack
+    * frame outside this object and the pass-through helpers that own on
+    * their caller's behalf ([[Spread.materialized]]), then restore the
+    * previous call site.
+    */
+  private def atCallerSite[A](s: SparkSession)(body: => A): A = {
+    val sc = s.sparkContext
+    def here(e: StackTraceElement) =
+      Seq("graft.Reliable", "graft.Spread").contains(e.getClassName.stripSuffix("$"))
+    val caller = Thread.currentThread.getStackTrace.dropWhile(!here(_)).dropWhile(here)
+    if (caller.isEmpty) body
+    else {
+      val keys = Seq("callSite.short", "callSite.long")
+      val prev = keys.map(sc.getLocalProperty)
+      sc.setLocalProperty(keys(0),
+        s"localCheckpoint at ${caller.head.getFileName}:${caller.head.getLineNumber}")
+      sc.setLocalProperty(keys(1), caller.mkString("\n"))
+      try body
+      finally keys.zip(prev).foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    }
+  }
 
   /** Register an already-checkpointed frame with the innermost open
     * scope (for a [[checkpoint]] that must stay reliable under
     * [[ConfKey]]); returns it unchanged.
     */
   private[graft] def adopt(checkpointed: DataFrame): DataFrame = {
-    scopes.get.headOption.foreach(_ += checkpointed)
+    scopes.get.headOption.foreach(_.add(checkpointed))
     checkpointed
   }
 
   /** Run `body`, then [[release]] every frame [[owned]] inside it on
-    * this thread, whether `body` returns or throws. A nested scope
-    * releases only its own frames. `body`'s result must not read an
-    * owned frame lazily: return `Unit`, a frame over written files, a
-    * driver-local frame, or a checkpoint the caller owns.
+    * this thread or on a [[Jobs.concurrently]] branch it forked, whether
+    * `body` returns or throws. A nested scope releases only its own
+    * frames. `body`'s result must not read an owned frame lazily: return
+    * `Unit`, a frame over written files, a driver-local frame, or a
+    * checkpoint the caller owns.
     */
   def scoped[A](body: => A): A = {
-    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val frames = new Frames
     scopes.set(frames :: scopes.get)
     try body
     finally {
       scopes.set(scopes.get.tail)
-      frames.foreach(release)
+      frames.forEach(release)
     }
   }
 

@@ -62,11 +62,11 @@ object Spread {
     df.repartition(math.max(1, df.sparkSession.sparkContext.defaultParallelism))
 
   /** Materialize `df` at healthy parallelism: spread-if-narrow, then
-    * localCheckpoint, then spread-if-the-blocks-landed-skinny (the
-    * second probe is free — a checkpoint is a leaf). For build inputs
-    * that are consumed by several passes (Lloyd training, multi-table
-    * writes).
+    * checkpoint ([[Reliable.owned]], so the caller's scope releases it),
+    * then spread-if-the-blocks-landed-skinny (the second probe is free —
+    * a checkpoint is a leaf). For build inputs that are consumed by
+    * several passes (Lloyd training, multi-table writes).
     */
   def materialized(df: DataFrame): DataFrame =
-    lazyAuto(lazyAuto(df).localCheckpoint(true))
+    lazyAuto(Reliable.owned(lazyAuto(df)))
 }

@@ -563,7 +563,7 @@ object Advanced20 {
     // executor otherwise kills the job at exactly the corpus sizes this
     // scaled path exists for)
     val e = graft.Reliable.checkpoint(Tables.vectors(s, d))
-    val cents = AnnIndex.scaledSampleCentroids(e, k, perList)
+    val cents = AnnIndex.scaledSampleCentroids(e, e.count(), k, perList)
     dominatedBy(graft.Reliable.checkpoint(assignCosine(e, cents)), tau)
       .orderBy(col("vec_id"))
   }

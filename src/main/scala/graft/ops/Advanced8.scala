@@ -401,13 +401,22 @@ object Advanced8 {
     */
   private[ops] def pqAssign(s: SparkSession, d: String): DataFrame =
     graft.Shared.materialized(s, s"pq-assign@$d") {
-      val sub = Quantizer.subBlocks(Tables.vectors(s, d))
-      sub.join(broadcast(Quantizer.pqCodebook(s, d)), Seq("b"))
-        .select(col("vec_id"), col("b"),
-          (distMicro(col("sv"), col("cv")) * 100 + col("cid")).as("pk"))
-        .groupBy(col("vec_id"), col("b"))
-        .agg(min(col("pk")).as("mk"))
+      packedMin(Tables.vectors(s, d), Quantizer.pqCodebook(s, d))
     }
+
+  /** The packed-min table (vec_id, b, mk) of `batch(vec_id, v, …)`
+    * against a trained `codebook(b, cid, cv)` — the ONE PQ encode: a
+    * vector block's code is `mk % 100` and its quantization error in
+    * micro units `mk div 100`. [[pqAssign]] is this over the corpus;
+    * [[AnnIndex]]'s builds and appends derive codes and errors from it.
+    */
+  private[ops] def packedMin(batch: DataFrame, codebook: DataFrame): DataFrame =
+    Quantizer.subBlocks(batch.select(col("vec_id"), col("v")))
+      .join(broadcast(codebook), Seq("b"))
+      .select(col("vec_id"), col("b"),
+        (distMicro(col("sv"), col("cv")) * 100 + col("cid")).as("pk"))
+      .groupBy(col("vec_id"), col("b"))
+      .agg(min(col("pk")).as("mk"))
 
   /** Shared oracle CTE: packed per-(vector, block) candidate distances
     * over the trained codebook — expects `sub` and [[Quantizer.pqFinal]]

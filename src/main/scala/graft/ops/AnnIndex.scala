@@ -73,25 +73,26 @@ object AnnIndex {
     * non-degenerate sizing, since the md5-prefix sample membership and
     * the seeded Lloyd are both DuckDB-replayable. `nListsOverride` pins
     * an explicit list count (still sample-trained) for tuned
-    * deployments.
+    * deployments. `n` comes from the corpus's parquet footers (a
+    * `count()` job only when they cannot say).
     */
   def writeScaled(s: SparkSession, d: String, dir: String,
       nListsOverride: Option[Int] = None): Unit = {
-    val e = graft.Tables.vectors(s, d).localCheckpoint()
-    val n = e.count()
+    val e = graft.Tables.vectors(s, d)
+    val n = MetaScalar.scanRowCount(graft.Tables.embeddings(s, d)).getOrElse(e.count())
     val nLists = nListsOverride.getOrElse(math.max(16L, math.min(65536L,
       math.ceil(math.sqrt(n.toDouble)).toLong)).toInt)
-    writeCore(s, d, dir, scaledSampleCentroids(e, nLists, perList = 50L))
+    writeCore(s, d, dir, scaledSampleCentroids(e, n, nLists, perList = 50L))
   }
 
   /** The sample-trained Lloyd behind [[writeScaled]], with explicit
     * sizing so q160 can gate it at a non-degenerate small-n setting.
     * Lloyd is iters·|train|·k distance evaluations — training on the
     * full corpus would be iters·n·√n. Train on a deterministic
-    * ~`perList`-vectors-per-list hash sample (the standard IVF recipe;
-    * membership by the shared md5-prefix hash the split/sampling
-    * queries use, so a DuckDB oracle computes the SAME sample) and pay
-    * n·k once, at the final full-corpus assignment.
+    * ~`perList`-vectors-per-list hash sample of the `n` vectors of `e`
+    * (the standard IVF recipe; membership by the shared md5-prefix hash
+    * the split/sampling queries use, so a DuckDB oracle computes the
+    * SAME sample) and pay n·k once, at the final full-corpus assignment.
     *
     * The seed renumber (dense 0-based ids in vec_id order) runs as a
     * DISTRIBUTED sort + `zipWithIndex`, not a global window: indices
@@ -99,10 +100,11 @@ object AnnIndex {
     * them — so the result is deterministic AND no single task ever
     * holds the whole sample (at the 65536-list clamp the sample is
     * ~3.3M vectors, past what a one-partition window should sort).
+    * The sample is [[graft.Reliable.owned]]: the returned centroids read
+    * it lazily, so consume them inside the caller's scope.
     */
-  private[ops] def scaledSampleCentroids(e: DataFrame, nLists: Int,
+  private[ops] def scaledSampleCentroids(e: DataFrame, n: Long, nLists: Int,
       perList: Long): DataFrame = {
-    val n = e.count()
     val mod = math.max(1L, n / (perList * nLists))
     val sorted = e
       .filter(expr(
@@ -114,10 +116,10 @@ object AnnIndex {
       org.apache.spark.sql.types.StructField("vec_id",
         org.apache.spark.sql.types.LongType, nullable = false),
       sorted.schema("v")))
-    val sample = e.sparkSession.createDataFrame(
+    val sample = graft.Reliable.owned(e.sparkSession.createDataFrame(
       sorted.rdd.zipWithIndex.map { case (row, i) =>
         org.apache.spark.sql.Row(i, row.get(1))
-      }, schema).localCheckpoint()
+      }, schema))
     Quantizer.trainCentroids(sample, nLists, Quantizer.Iters)
   }
 
@@ -137,46 +139,25 @@ object AnnIndex {
       .select(col("vec_id"), col("c_id"))
   }
 
-  /** 4-byte PQ codes for `batch(vec_id, v)` against a trained
-    * `codebook(b, cid, cv)` — the packed-minimum argmin ([[Advanced8]]'s
-    * pk = dist_micro·100 + cid recipe), shared by [[writeVectors]] and
-    * [[append]] so build-time and append-time codes are one definition.
+  /** 4-byte PQ codes (vec_id, b, code) from a packed-min table
+    * ([[Advanced8.packedMin]]): the winning sub-centroid of each block.
     */
-  private def encodeVectors(batch: DataFrame, codebook: DataFrame): DataFrame =
-    Quantizer.subBlocks(batch.select(col("vec_id"), col("v")))
-      .join(broadcast(codebook), Seq("b"))
-      .select(col("vec_id"), col("b"),
-        (Advanced8.distMicro(col("sv"), col("cv")) * 100 +
-          col("cid")).as("pk"))
-      .groupBy(col("vec_id"), col("b"))
-      .agg(min(col("pk")).as("mk"))
-      .select(col("vec_id"), col("b"), (col("mk") % 100).cast("int").as("code"))
+  private def codesOf(packed: DataFrame): DataFrame =
+    packed.select(col("vec_id"), col("b"), (col("mk") % 100).cast("int").as("code"))
 
-  /** Per-vector PQ quantization error in micro units: Σ over blocks of
-    * the encode argmin's distance — the SAME packed-min recipe
-    * [[encodeVectors]] ranks by (pk = dist_micro·100 + cid, so
-    * `mk div 100` is exactly the winning block's distance), i.e. what
-    * the ADC serve path loses per vector under these quantizers.
+  /** 1-row (n_vecs, mean_err_micro, p95_err_micro) over the per-vector
+    * PQ quantization error of a packed-min table — Σ over blocks of the
+    * encode argmin's distance (`mk div 100`), i.e. what the ADC serve
+    * path loses per vector under these quantizers — with the
+    * [[DriftStats]] kernel (half-up mean, exact rank-selected p95 via
+    * GlobalOrder's two-phase rank: no single-partition window, totals
+    * ride out of the partials fold for free). p95, the HIGH tail:
+    * encode error drifts UP.
     */
-  private def perVectorErrMicro(batch: DataFrame, codebook: DataFrame): DataFrame =
-    Quantizer.subBlocks(batch.select(col("vec_id"), col("v")))
-      .join(broadcast(codebook), Seq("b"))
-      .select(col("vec_id"), col("b"),
-        (Advanced8.distMicro(col("sv"), col("cv")) * 100 +
-          col("cid")).as("pk"))
-      .groupBy(col("vec_id"), col("b"))
-      .agg(min(col("pk")).as("mk"))
-      .groupBy(col("vec_id"))
-      .agg(sum(expr("mk div 100")).as("err_micro"))
-
-  /** 1-row (n_vecs, mean_err_micro, p95_err_micro) over per-vector
-    * errors — the [[DriftStats]] kernel (half-up mean, exact
-    * rank-selected p95 via GlobalOrder's two-phase rank: no
-    * single-partition window, totals ride out of the partials fold
-    * for free). p95, the HIGH tail: encode error drifts UP.
-    */
-  private def errStats(errs: DataFrame): DataFrame =
-    DriftStats.stats(errs, col("err_micro"), col("vec_id"), 95,
+  private def errStats(packed: DataFrame): DataFrame =
+    DriftStats.stats(
+      packed.groupBy(col("vec_id")).agg(sum(expr("mk div 100")).as("err_micro")),
+      col("err_micro"), col("vec_id"), 95,
       "n_vecs", "mean_err_micro", "p95_err_micro")
 
   /** The ONE index build path (round 9): persist `centroids`, the
@@ -185,52 +166,80 @@ object AnnIndex {
     * PARTITIONED by list id — the IVF inverted lists as directories, so
     * probe-time pruning is physical — and (round 14) the build-time
     * `quantstats` baseline [[quantizationDrift]] compares appends to.
+    *
+    * Two phases of independent chains ([[graft.Jobs.concurrently]]):
+    * the coarse chain (train `centroids` → write → `assigned`) beside
+    * the PQ chain (codebook → write → the corpus's packed-min table,
+    * [[Advanced8.pqAssign]], built once); then `codes` beside
+    * `quantstats`, both read from that one packed-min table. `centroids`
+    * is by-name so its training runs on the coarse branch, and the
+    * scope releases what that training checkpoints ([[writeScaled]]'s
+    * sample) when the build ends.
     */
   private def writeCore(s: SparkSession, d: String, dir: String,
-      centroids: DataFrame): Unit = {
-    centroids.write.mode("overwrite").parquet(s"$dir/centroids")
-    Quantizer.pqCodebook(s, d)
-      .write.mode("overwrite").parquet(s"$dir/codebook")
-    val e = graft.Spread.lazyAuto(graft.Tables.vectors(s, d))
+      centroids: => DataFrame): Unit = graft.Reliable.scoped {
+    val Seq(assigned, packed) = graft.Jobs.concurrently(s)(
+      () => graft.Jobs.labeled(s, "ann-index: write/coarse") {
+        centroids.write.mode("overwrite").parquet(s"$dir/centroids")
+        writeAssigned(s, graft.Spread.lazyAuto(graft.Tables.vectors(s, d)), dir)
+      },
+      () => graft.Jobs.labeled(s, "ann-index: write/pq") {
+        Quantizer.pqCodebook(s, d).write.mode("overwrite").parquet(s"$dir/codebook")
+        Advanced8.pqAssign(s, d)
+      })
+    writeCodesAndStats(s, assigned, packed, dir)
+  }
+
+  /** Write `assigned` for `e(vec_id, v)` against the `centroids` already
+    * persisted under `dir`; returns the persisted table.
+    */
+  private def writeAssigned(s: SparkSession, e: DataFrame, dir: String): DataFrame = {
     val cent = MetaScalar.open(s, s"$dir/centroids")
       .select(col("cid").as("c_id"), col("cv"))
-    assignVectors(e, cent)
-      .write.mode("overwrite").parquet(s"$dir/assigned")
-    Advanced8.pqAssign(s, d)
-      .select(col("vec_id"), col("b"), (col("mk") % 100).cast("int").as("code"))
-      .join(MetaScalar.open(s, s"$dir/assigned"), Seq("vec_id"))
-      .transform(Layout.writeByBucket(_, col("c_id")))
-      .write.partitionBy("c_id").mode("overwrite").parquet(s"$dir/codes")
-    errStats(perVectorErrMicro(e, MetaScalar.open(s, s"$dir/codebook")))
-      .write.mode("overwrite").parquet(s"$dir/quantstats")
+    assignVectors(e, cent).write.mode("overwrite").parquet(s"$dir/assigned")
+    MetaScalar.open(s, s"$dir/assigned")
   }
+
+  /** The second build phase: `codes` laid out by list beside the
+    * `quantstats` baseline, both from one materialized packed-min table.
+    */
+  private def writeCodesAndStats(s: SparkSession, assigned: DataFrame,
+      packed: DataFrame, dir: String): Unit =
+    graft.Jobs.concurrently(s)(
+      () => graft.Jobs.labeled(s, "ann-index: write/codes") {
+        codesOf(packed).join(assigned, Seq("vec_id"))
+          .transform(Layout.writeByBucket(_, col("c_id")))
+          .write.partitionBy("c_id").mode("overwrite").parquet(s"$dir/codes")
+      },
+      () => graft.Jobs.labeled(s, "ann-index: write/quantstats") {
+        errStats(packed).write.mode("overwrite").parquet(s"$dir/quantstats")
+      })
 
   /** Build and persist an index over an EXPLICIT vector frame
     * `e0(vec_id, v)`, training both quantizers on exactly those vectors
     * (the fixed 16-list / 4×8-codebook q49/q108 recipe) — the
     * corpus-versioning entry point: [[Release]] builds v1 indexes from
     * filtered snapshots, and q166 gates the upgrade path against an
-    * oracle that trains fresh. Same layout and serve paths as [[write]];
-    * replaces anything at `dir`, including a previous tombstone ledger.
+    * oracle that trains fresh. Same layout, phases and serve paths as
+    * [[write]]; replaces anything at `dir`, including a previous
+    * tombstone ledger.
     */
-  def writeVectors(s: SparkSession, e0: DataFrame, dir: String): Unit = {
+  def writeVectors(s: SparkSession, e0: DataFrame, dir: String): Unit = graft.Reliable.scoped {
     // materialize at healthy parallelism: the frame feeds two Lloyd
-    // trainers, the assignment, the encode and the error stats (round 19)
+    // trainers, the assignment and the encode (round 19)
     val e = graft.Spread.materialized(e0.select(col("vec_id"), col("v")))
-    Quantizer.trainCentroids(e, 16, Quantizer.Iters)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    Quantizer.trainPqBlocks(Quantizer.subBlocks(e), 8, Quantizer.Iters)
-      .write.mode("overwrite").parquet(s"$dir/codebook")
-    val cent = MetaScalar.open(s, s"$dir/centroids")
-      .select(col("cid").as("c_id"), col("cv"))
-    assignVectors(e, cent)
-      .write.mode("overwrite").parquet(s"$dir/assigned")
-    encodeVectors(e, MetaScalar.open(s, s"$dir/codebook"))
-      .join(MetaScalar.open(s, s"$dir/assigned"), Seq("vec_id"))
-      .transform(Layout.writeByBucket(_, col("c_id")))
-      .write.partitionBy("c_id").mode("overwrite").parquet(s"$dir/codes")
-    errStats(perVectorErrMicro(e, MetaScalar.open(s, s"$dir/codebook")))
-      .write.mode("overwrite").parquet(s"$dir/quantstats")
+    val Seq(assigned, packed) = graft.Jobs.concurrently(s)(
+      () => graft.Jobs.labeled(s, "ann-index: write/coarse") {
+        Quantizer.trainCentroids(e, 16, Quantizer.Iters)
+          .write.mode("overwrite").parquet(s"$dir/centroids")
+        writeAssigned(s, e, dir)
+      },
+      () => graft.Jobs.labeled(s, "ann-index: write/pq") {
+        Quantizer.trainPqBlocks(Quantizer.subBlocks(e), 8, Quantizer.Iters)
+          .write.mode("overwrite").parquet(s"$dir/codebook")
+        graft.Reliable.owned(Advanced8.packedMin(e, MetaScalar.open(s, s"$dir/codebook")))
+      })
+    writeCodesAndStats(s, assigned, packed, dir)
     Tombstones.dropLedger(s, dir)
   }
 
@@ -314,7 +323,7 @@ object AnnIndex {
     val ix = load(s, dir)
     val cent = ix.centroids.select(col("cid").as("c_id"), col("cv"))
     val newAssigned = assignVectors(batch, cent)
-    val newCodes = encodeVectors(batch, ix.codebook)
+    val newCodes = codesOf(Advanced8.packedMin(batch, ix.codebook))
     // ids already COMPLETE in codes (all blocks present): the groupBy is
     // confined to batch-sized data by the semi-join, so replay cost is
     // O(batch), not O(index)
@@ -549,7 +558,7 @@ object AnnIndex {
     val ix = load(s, dir)
     MetaScalar.open(s, s"$dir/quantstats").withColumn("side", lit("baseline"))
       .select(cols: _*)
-      .unionByName(errStats(perVectorErrMicro(batch, ix.codebook))
+      .unionByName(errStats(Advanced8.packedMin(batch, ix.codebook))
         .withColumn("side", lit("batch")).select(cols: _*))
   }
 
@@ -653,7 +662,7 @@ object AnnIndex {
       |FROM cents c LEFT JOIN cnt USING (cid)
       |ORDER BY cid""".stripMargin) { (s, d) =>
     val e = graft.Tables.vectors(s, d).localCheckpoint()
-    val cents = scaledSampleCentroids(e, nLists = 32, perList = 2L)
+    val cents = scaledSampleCentroids(e, e.count(), nLists = 32, perList = 2L)
     val counts = Quantizer.assignFull(e, cents)
       .groupBy(col("cid")).agg(count(lit(1)).as("n"))
     cents.join(counts, Seq("cid"), "left")

@@ -130,15 +130,17 @@ object DedupIndex {
     * lifetime.
     */
   def write(s: SparkSession, docs: DataFrame, dir: String,
-      bucketsOverride: Option[Int] = None): Index = graft.Reliable.scoped {
-    val sigs = graft.Reliable.owned(TextOps.sigsOf(docs))
-    val nB = bucketsOverride.getOrElse(
-      Tombstones.bucketsFor(sigs.count(), DocsPerBucket))
-    Tombstones.writeMeta(s, dir, nB)
-    writeBatch(sigs, dir, "overwrite", nB, 0L)
-    Tombstones.dropLedger(s, dir)
-    Tombstones.writeEpoch(s, dir, 0L)
-    load(s, dir)
+      bucketsOverride: Option[Int] = None): Index = graft.Jobs.labeled(s, "dedup-index: write") {
+    graft.Reliable.scoped {
+      val sigs = graft.Reliable.owned(TextOps.sigsOf(docs))
+      val nB = bucketsOverride.getOrElse(
+        Tombstones.bucketsFor(sigs.count(), DocsPerBucket))
+      Tombstones.writeMeta(s, dir, nB)
+      writeBatch(sigs, dir, "overwrite", nB, 0L)
+      Tombstones.dropLedger(s, dir)
+      Tombstones.writeEpoch(s, dir, 0L)
+      load(s, dir)
+    }
   }
 
   /** Load the live index: both tables folded against the tombstone

@@ -604,18 +604,15 @@ object IngestionGate {
       // dirs. The serving artifact is identical to the sequential build —
       // only wall-clock changes.
       def corpus = Tables.documents(s, d).filter(col("doc_id") < 400)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val builds = Seq(
-        Future(DedupIndex.write(s, corpus, s"$tmp/dix")),
-        Future(LmModel.write(s, corpus, s"$tmp/lm")),
-        Future(QualityModel.write(s, corpus, s"$tmp/qm")),
-        Future(writeSemantic(s,
+      graft.Jobs.concurrently(s)(
+        () => DedupIndex.write(s, corpus, s"$tmp/dix"),
+        () => LmModel.write(s, corpus, s"$tmp/lm"),
+        () => QualityModel.write(s, corpus, s"$tmp/qm"),
+        () => writeSemantic(s,
           Tables.embeddings(s, d).filter(col("vec_id") < 400)
             .select(col("vec_id"),
               graft.functions.VectorFunctions.asDouble(col("embedding")).as("v")),
-          s"$tmp/sem")))
-      builds.foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
+          s"$tmp/sem"))
       Seq(tmp).toDF("dir")
     }.collect()(0).getString(0)
   }

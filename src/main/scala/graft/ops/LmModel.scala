@@ -177,17 +177,19 @@ object LmModel {
     Tombstones.writeMeta(s, dir, nB)
     val tot = uni.agg(coalesce(sum(col("c")), lit(0L)).as("n"))
     // repartition by the partition column before the dynamic-partitioned
-    // writes (round 18, guide §6): one file per bucket, not tasks x buckets
-    enrich(bi, uni, tot).withColumn("bkt", bktOf(col("gram"), nB))
-      .transform(Layout.writeByBucket(_, col("bkt")))
-      .write.partitionBy("bkt").mode("overwrite").parquet(s"$dir/bigrams")
-    uni.crossJoin(broadcast(tot))
-      .select(col("w"), col("c"),
-        Det.halfUpDiv(col("c") * Micro, col("n")).as("p_uni"))
-      .withColumn("bkt", bktOf(col("w"), nB))
-      .transform(Layout.writeByBucket(_, col("bkt")))
-      .write.partitionBy("bkt").mode("overwrite").parquet(s"$dir/unigrams")
-    tot.coalesce(1).write.mode("overwrite").parquet(s"$dir/total")
+    // writes (round 18, guide §6): one file per bucket, not tasks x buckets.
+    // The three tables are independent writes and run side by side.
+    graft.Jobs.concurrently(s)(
+      () => enrich(bi, uni, tot).withColumn("bkt", bktOf(col("gram"), nB))
+        .transform(Layout.writeByBucket(_, col("bkt")))
+        .write.partitionBy("bkt").mode("overwrite").parquet(s"$dir/bigrams"),
+      () => uni.crossJoin(broadcast(tot))
+        .select(col("w"), col("c"),
+          Det.halfUpDiv(col("c") * Micro, col("n")).as("p_uni"))
+        .withColumn("bkt", bktOf(col("w"), nB))
+        .transform(Layout.writeByBucket(_, col("bkt")))
+        .write.partitionBy("bkt").mode("overwrite").parquet(s"$dir/unigrams"),
+      () => tot.coalesce(1).write.mode("overwrite").parquet(s"$dir/total"))
   }
 
   /** Train on `docs` and persist under `dir`, gram-hash partitioned
@@ -197,11 +199,13 @@ object LmModel {
     * share one corpus aggregation.
     */
   def write(s: SparkSession, docs: DataFrame, dir: String,
-      bucketsOverride: Option[Int] = None): Unit = graft.Reliable.scoped {
-    val (bi0, uni) = countTables(docs)
-    val bi = graft.Reliable.owned(bi0)
-    writeTables(s, dir, bi, uni, bucketsOverride.getOrElse(
-      Tombstones.bucketsFor(bi.count(), GramsPerBucket)))
+      bucketsOverride: Option[Int] = None): Unit = graft.Jobs.labeled(s, "lm-model: write") {
+    graft.Reliable.scoped {
+      val (bi0, uni) = countTables(docs)
+      val bi = graft.Reliable.owned(bi0)
+      writeTables(s, dir, bi, uni, bucketsOverride.getOrElse(
+        Tombstones.bucketsFor(bi.count(), GramsPerBucket)))
+    }
   }
 
   /** Roll the persisted model to a corpus release by exact count

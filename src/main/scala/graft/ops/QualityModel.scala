@@ -42,24 +42,26 @@ object QualityModel {
   /** Train on `docs(doc_id, text, …)` and persist under `dir`.
     * Overwrites.
     */
-  def write(s: SparkSession, docs: DataFrame, dir: String): Unit = graft.Reliable.scoped {
-    // a retrain-in-place only overwrites $dir/model, so any persisted
-    // scorestats baseline would survive describing the PREVIOUS model's
-    // score distribution — [[scoreDrift]] would then alert wrong instead
-    // of failing loudly. Delete it (LmModel.writeTables' contract); the
-    // operator re-runs [[writeScoreStats]] after each retrain.
-    val ss = new org.apache.hadoop.fs.Path(s"$dir/scorestats")
-    ss.getFileSystem(s.sparkContext.hadoopConfiguration).delete(ss, true)
-    val raw = graft.Reliable.owned(Advanced15.lqcRawFeatures(docs))
-    val (nL, mus) = Advanced15.lqcMeans(raw)
-    val x = raw.select(col("y"),
-      (col("r1") - mus(0)).as("f1"), (col("r2") - mus(1)).as("f2"),
-      (col("r3") - mus(2)).as("f3"))
-    val w = Advanced15.lqcTrain(x, nL)
-    import s.implicits._
-    Seq((w(0), w(1), w(2), w(3), mus(0), mus(1), mus(2), nL))
-      .toDF("w1", "w2", "w3", "wb", "m1", "m2", "m3", "n")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/model")
+  def write(s: SparkSession, docs: DataFrame, dir: String): Unit = graft.Jobs.labeled(s, "quality-model: write") {
+    graft.Reliable.scoped {
+      // a retrain-in-place only overwrites $dir/model, so any persisted
+      // scorestats baseline would survive describing the PREVIOUS model's
+      // score distribution — [[scoreDrift]] would then alert wrong instead
+      // of failing loudly. Delete it (LmModel.writeTables' contract); the
+      // operator re-runs [[writeScoreStats]] after each retrain.
+      val ss = new org.apache.hadoop.fs.Path(s"$dir/scorestats")
+      ss.getFileSystem(s.sparkContext.hadoopConfiguration).delete(ss, true)
+      val raw = graft.Reliable.owned(Advanced15.lqcRawFeatures(docs))
+      val (nL, mus) = Advanced15.lqcMeans(raw)
+      val x = raw.select(col("y"),
+        (col("r1") - mus(0)).as("f1"), (col("r2") - mus(1)).as("f2"),
+        (col("r3") - mus(2)).as("f3"))
+      val w = Advanced15.lqcTrain(x, nL)
+      import s.implicits._
+      Seq((w(0), w(1), w(2), w(3), mus(0), mus(1), mus(2), nL))
+        .toDF("w1", "w2", "w3", "wb", "m1", "m2", "m3", "n")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/model")
+    }
   }
 
   /** Score `docs(doc_id, text, …)` against the persisted model:

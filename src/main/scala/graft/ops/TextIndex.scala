@@ -116,16 +116,19 @@ object TextIndex {
     // taxing every later load's footer reads, the upgrade clones, and
     // the write commit itself); with it each bucket is exactly one
     // file per batch, and AQE sizes the shuffle to the batch.
-    // doclens is written LAST: it is [[append]]'s done-marker (the
-    // anti-join target), so a crash mid-batch leaves at worst orphan
-    // postings/positions for doc_ids absent from doclens — invisible to
-    // BM25 only if the replay re-writes them, which the marker ensures.
-    stamp(t.groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf")))
-      .withColumn("bkt", bktCol(nB)).transform(Layout.writeByBucket(_, col("bkt")))
-      .write.partitionBy("bkt").mode(mode).parquet(s"$dir/postings")
-    stamp(t.select(col("term"), col("doc_id"), col("pos")))
-      .withColumn("bkt", bktCol(nB)).transform(Layout.writeByBucket(_, col("bkt")))
-      .write.partitionBy("bkt").mode(mode).parquet(s"$dir/positions")
+    // postings and positions are independent writes and run side by
+    // side; doclens is written LAST, after both: it is [[append]]'s
+    // done-marker (the anti-join target), so a crash mid-batch leaves at
+    // worst orphan postings/positions for doc_ids absent from doclens —
+    // invisible to BM25 only if the replay re-writes them, which the
+    // marker ensures.
+    graft.Jobs.concurrently(docs.sparkSession)(
+      () => stamp(t.groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf")))
+        .withColumn("bkt", bktCol(nB)).transform(Layout.writeByBucket(_, col("bkt")))
+        .write.partitionBy("bkt").mode(mode).parquet(s"$dir/postings"),
+      () => stamp(t.select(col("term"), col("doc_id"), col("pos")))
+        .withColumn("bkt", bktCol(nB)).transform(Layout.writeByBucket(_, col("bkt")))
+        .write.partitionBy("bkt").mode(mode).parquet(s"$dir/positions"))
     stamp(t.groupBy(col("doc_id")).agg(count(lit(1)).as("dl")))
       .write.mode(mode).parquet(s"$dir/doclens")
   }
@@ -164,12 +167,13 @@ object TextIndex {
   /** [[write]] over an explicit `docs(doc_id, text, …)` frame — the
     * corpus-versioning entry point ([[Release]] fixtures build v1
     * indexes from filtered snapshots). The layout gets a corpus-sized
-    * bucket count ([[bucketsFor]]), persisted for its lifetime.
+    * bucket count ([[bucketsFor]]; the count read from the parquet
+    * footers when `docs` is a bare scan), persisted for its lifetime.
     */
   def writeDocs(s: SparkSession, docs: DataFrame, dir: String,
       bucketsOverride: Option[Int] = None): Unit = graft.Reliable.scoped {
-    val nB = bucketsOverride.getOrElse(
-      Tombstones.bucketsFor(docs.count(), DocsPerBucket))
+    val nB = bucketsOverride.getOrElse(Tombstones.bucketsFor(
+      MetaScalar.scanRowCount(docs).getOrElse(docs.count()), DocsPerBucket))
     Tombstones.writeMeta(s, dir, nB)
     writeBatch(docs, dir, "overwrite", 0L, nB)
     Tombstones.dropLedger(s, dir)

@@ -101,6 +101,19 @@ class CallScopeSpec extends SparkSuite {
     assert(left.isEmpty, s"LmModel.write left checkpoints persisted: $left")
   }
 
+  test("AnnIndex.writeScaled and writeVectors, each in a caller's scope, leave only the Shared entries across 20 calls") {
+    val base = Files.createTempDirectory("graft-scope-ann").toString
+    val vecs = Tables.vectors(spark, sf0001).filter(col("vec_id") < 300)
+    val before = persisted
+    (1 to 20).foreach(_ => Reliable.scoped(AnnIndex.writeScaled(spark, sf0001, s"$base/scaled")))
+    (1 to 20).foreach(_ => Reliable.scoped(AnnIndex.writeVectors(spark, vecs, s"$base/vecs")))
+    // the session-lifetime PQ codebook and corpus encode writeScaled shares
+    val shared = Seq("pq-cb", "pq-assign").flatMap(k =>
+      rddIds(Shared.materialized(spark, s"$k@$sf0001")(fail(s"$k was not shared"))))
+    val left = persisted -- before -- shared
+    assert(left.isEmpty, s"the ANN writes left checkpoints persisted: $left")
+  }
+
   test("the serve calls, each collected in a caller's scope, leave nothing persisted") {
     val base = Files.createTempDirectory("graft-scope-serve").toString
     AnnIndex.writeScaled(spark, sf0001, s"$base/ann")

@@ -150,6 +150,25 @@ class ReliableCheckpointSpec extends SparkSuite {
     Reliable.release(df)
   }
 
+  test("an owned checkpoint names its caller as its creation site") {
+    val sc = spark.sparkContext
+    Reliable.scoped {
+      val df = Reliable.owned(frame(60))
+      def sites(f: org.apache.spark.sql.DataFrame) = f.queryExecution.analyzed.collectLeaves().collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.toString
+      }
+      assert(sites(df).nonEmpty && sites(df).forall(_.contains("at localCheckpoint at ReliableCheckpointSpec.scala:")),
+        s"owned RDD does not name the calling file: ${sites(df)}")
+      // a pass-through helper that owns for its caller names that caller
+      val spread = Spread.materialized(frame(70))
+      assert(sites(spread).nonEmpty && sites(spread).forall(_.contains("at localCheckpoint at ReliableCheckpointSpec.scala:")),
+        s"Spread.materialized's checkpoint does not name its caller: ${sites(spread)}")
+    }
+    assert(sc.getLocalProperty("callSite.short") == null &&
+      sc.getLocalProperty("callSite.long") == null,
+      "owned must restore the previous call site")
+  }
+
   test("a scope on one thread does not release frames owned on another") {
     var other: org.apache.spark.sql.DataFrame = null
     Reliable.scoped {

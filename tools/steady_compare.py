@@ -8,7 +8,7 @@ medians are the numbers stable enough to gate on.
 
 Usage:
     python3 tools/steady_compare.py OLD.json NEW.json [--threshold 1.3]
-                                    [--floor 0.15]
+                                    [--floor 0.15] [--cpus N]
 
 A query only FAILS the gate when its ratio exceeds the threshold AND its
 new steady time exceeds the floor — sub-150 ms medians are scheduler
@@ -21,8 +21,18 @@ Accepts either the driver's BENCH_r{N}.json wrapper (reads .parsed) or a
 raw one-line bench JSON (as printed by graft.Bench, possibly embedded in
 captured stdout — the last '{"metric":...}' line wins).
 
+Steady times depend on the core count (parallel-friendly queries run
+1.3-1.5x slower at 4 cores than at 32), so each side's core count is
+printed and the gate refuses to compare two runs at different counts:
+compare a 4-core run (every main's default) against a 4-core baseline
+such as BENCH_r19_c4.json. A wrapper carries its `cpus`; a raw bench
+JSON carries none, so give the count it ran at (graft.Bench's
+SPARK_GRAFT_CPUS, default 4) with --cpus N. The gate also refuses when
+one side's count is known and the other's is not.
+
 Exit code 1 if any shared query's steady time regressed beyond the
-threshold, 0 otherwise (new/missing queries are reported, not failed).
+threshold, 2 if the core counts differ or only one is known, 0
+otherwise (new/missing queries are reported, not failed).
 """
 import json
 import re
@@ -30,25 +40,26 @@ import sys
 
 
 def load_bench(path):
+    """(bench JSON, core count or None) of a wrapper or raw bench output."""
     text = open(path).read()
     try:
         doc = json.loads(text)
         if isinstance(doc, dict) and "parsed" in doc:
-            return doc["parsed"] or {}
+            return doc["parsed"] or {}, doc.get("cpus")
         if isinstance(doc, dict):
-            return doc
+            return doc, None
     except json.JSONDecodeError:
         pass
     # captured stdout: find the last metric line
     lines = [l for l in text.splitlines() if l.lstrip().startswith('{"metric"')]
     if not lines:
         raise SystemExit(f"{path}: no bench JSON found")
-    return json.loads(lines[-1].strip())
+    return json.loads(lines[-1].strip()), None
 
 
 def main():
     argv = sys.argv[1:]
-    thr, floor = 1.3, 0.15
+    thr, floor, raw_cpus = 1.3, 0.15, None
     args = []
     i = 0
     while i < len(argv):
@@ -67,6 +78,13 @@ def main():
                 floor = float(argv[(i := i + 1)])
             else:
                 raise SystemExit("--floor needs a value\n" + __doc__)
+        elif a == "--cpus" or a.startswith("--cpus="):
+            if "=" in a:
+                raw_cpus = int(a.split("=", 1)[1])
+            elif i + 1 < len(argv):
+                raw_cpus = int(argv[(i := i + 1)])
+            else:
+                raise SystemExit("--cpus needs a value\n" + __doc__)
         elif a.startswith("--"):
             raise SystemExit(f"unknown flag {a}\n" + __doc__)
         else:
@@ -74,7 +92,21 @@ def main():
         i += 1
     if len(args) != 2:
         raise SystemExit(__doc__)
-    old, new = (load_bench(p) for p in args)
+    (old, cpus_o), (new, cpus_n) = (load_bench(p) for p in args)
+    cpus_o = raw_cpus if cpus_o is None else cpus_o
+    cpus_n = raw_cpus if cpus_n is None else cpus_n
+    print(f"cpus: old {cpus_o if cpus_o is not None else 'unknown'}, "
+          f"new {cpus_n if cpus_n is not None else 'unknown'}")
+    if (cpus_o is None) != (cpus_n is None):
+        print("REFUSED: one run's core count is unknown; give a raw bench "
+              "JSON's count with --cpus N (graft.Bench's SPARK_GRAFT_CPUS, "
+              "default 4).")
+        return 2
+    if cpus_o != cpus_n:
+        print(f"REFUSED: the runs used different core counts ({cpus_o} vs "
+              f"{cpus_n}); steady times are not comparable across them. "
+              f"Compare against a baseline recorded at {cpus_n} cores.")
+        return 2
     so, sn = old.get("steady", {}), new.get("steady", {})
     shared = sorted(set(so) & set(sn))
     regressions = []
