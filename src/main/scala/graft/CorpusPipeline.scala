@@ -225,7 +225,7 @@ object CorpusPipeline {
     // train grams, the anti-join's left side) — without materialization the
     // whole quality→dedup→purge→mixture chain would replan and re-execute
     // per consumer (the q77/q103 multiple-subtree lesson).
-    val assigned = mixed.withColumn("split", ops.Advanced5.splitLabel)
+    val assigned = mixed.withColumn("split", ops.Curation.splitLabel)
       .localCheckpoint()
     // Staging relief (round 16 — the 100× 8g memory knee): once
     // `assigned` is materialized, every later stage reads it (or the
@@ -284,7 +284,7 @@ object CorpusPipeline {
     // counts, provenance-locked to BpeTrainer).
     val shippedToks = back.select(col("source"), explode(split(col("text"), " ")).as("tok"))
     val bpeTokens = shippedToks
-      .join(broadcast(ops.Advanced11.bpeVocabCounts(shippedToks)), Seq("tok"))
+      .join(broadcast(ops.Tokenization.bpeVocabCounts(shippedToks)), Seq("tok"))
       .groupBy(col("source"))
       .agg(sum(col("n_bpe")).as("bpe_tokens"))
     val card = back.groupBy(col("source")).agg(
@@ -299,7 +299,7 @@ object CorpusPipeline {
       .join(bpeTokens, Seq("source"), "left")
       .na.fill(0L, Seq("bpe_tokens"))
     card.coalesce(1).write.mode("overwrite").parquet(s"$outDir-report/card")
-    val drift = ops.Advanced9.ksBetween(
+    val drift = ops.Curation.ksBetween(
       raw.select(col("n_chars")), back.select(col("n_chars")), "n_chars")
     drift.coalesce(1).write.mode("overwrite").parquet(s"$outDir-report/drift")
     val ks = spark.read.parquet(s"$outDir-report/drift")

@@ -182,16 +182,16 @@ object IndexBench {
     {
       val qm = queries.select(col("qid"), col("v").as("qv"))
       timed("maxsim_brute_16q") {
-        ops.Advanced16.lateInteractionTopK(e, qm, 10).count()
+        ops.Retrieval.lateInteractionTopK(e, qm, 10).count()
       }
-      val bfM = ops.Advanced16.lateInteractionTopK(e, qm, 10)
+      val bfM = ops.Retrieval.lateInteractionTopK(e, qm, 10)
         .select(col("qid"), col("cand"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       timed("maxsim_indexed_16q") {
-        ops.Advanced16.maxSimRerank(spark, annS, e, queries, k = 10,
+        ops.Retrieval.maxSimRerank(spark, annS, e, queries, k = 10,
           frac = 0.15, shortlistPerProbe = 64, excludeSelf = true).count()
       }
-      val ixM = ops.Advanced16.maxSimRerank(spark, annS, e, queries, k = 10,
+      val ixM = ops.Retrieval.maxSimRerank(spark, annS, e, queries, k = 10,
           frac = 0.15, shortlistPerProbe = 64, excludeSelf = true)
         .select(col("qid"), col("cand"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -264,11 +264,11 @@ object IndexBench {
       // partitioned lists DO concentrate MaxSim winners, so the shortlist
       // path recovers the brute MaxSim ranking the isotropic row can't.
       val qmP = qP.select(col("qid"), col("v").as("qv"))
-      val bfMP = ops.Advanced16.lateInteractionTopK(eP, qmP, 10)
+      val bfMP = ops.Retrieval.lateInteractionTopK(eP, qmP, 10)
         .select(col("qid"), col("cand"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val slPP = math.max(64, slK / math.max(1, AnnIndex.autoNprobe(annP, 0.15)))
-      val ixMP = ops.Advanced16.maxSimRerank(spark, annP, eP, qP, k = 10,
+      val ixMP = ops.Retrieval.maxSimRerank(spark, annP, eP, qP, k = 10,
           frac = 0.15, shortlistPerProbe = slPP, excludeSelf = true)
         .select(col("qid"), col("cand"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -736,12 +736,12 @@ object IndexBench {
       if (forms.forall(_.contains(name))) body
     var t0 = System.nanoTime()
     form("fixed") {
-    val f16 = ops.Advanced20.semanticDedup.run(spark, sfDir).count()
+    val f16 = ops.Dedup.semanticDedup.run(spark, sfDir).count()
     println(f"IXBENCH semdedup_fixed16             ${(System.nanoTime() - t0) / 1e9}%.3f s (flagged=$f16)")
     }
     form("scaled") {
     t0 = System.nanoTime()
-    val fsc = ops.Advanced20.semanticDedupScaled(spark, sfDir).count()
+    val fsc = ops.Dedup.semanticDedupScaled(spark, sfDir).count()
     println(f"IXBENCH semdedup_scaled_sqrtn        ${(System.nanoTime() - t0) / 1e9}%.3f s (flagged=$fsc)")
     }
     form("ivf") {
@@ -753,7 +753,7 @@ object IndexBench {
     AnnIndex.writeScaled(spark, sfDir, s"$tmp/sdix")
     println(f"IXBENCH semdedup_ivf_build           ${(System.nanoTime() - t0) / 1e9}%.3f s (amortized serving artifact)")
     t0 = System.nanoTime()
-    val fix = ops.Advanced20.semanticDedupFromIndex(spark, sfDir, s"$tmp/sdix").count()
+    val fix = ops.Dedup.semanticDedupFromIndex(spark, sfDir, s"$tmp/sdix").count()
     println(f"IXBENCH semdedup_ivf_sweep           ${(System.nanoTime() - t0) / 1e9}%.3f s (flagged=$fix)")
     // Intake-gate serve latency: a 5% re-ingested batch (id-shifted
     // exact dups) gated against the persisted index — |batch|·k
@@ -765,7 +765,7 @@ object IndexBench {
       .withColumn("vec_id", col("vec_id") + 1000000000L).localCheckpoint()
     val nb = batch.count()
     t0 = System.nanoTime()
-    val ng = ops.Advanced20.semanticDedupBatch(spark, s"$tmp/sdix", batch, ev).count()
+    val ng = ops.Dedup.semanticDedupBatch(spark, s"$tmp/sdix", batch, ev).count()
     println(f"IXBENCH semdedup_intake_gate         ${(System.nanoTime() - t0) / 1e9}%.3f s (caught=$ng of $nb)")
     }
     form("degenerate") {
@@ -785,7 +785,7 @@ object IndexBench {
       .select(col("id").as("vec_id"), lit(0).as("c_id"), u.as("v"))
       .localCheckpoint()
     t0 = System.nanoTime()
-    val nd = ops.Advanced20.dominatedBy(degenerate, 0.4).count()
+    val nd = ops.Dedup.dominatedBy(degenerate, 0.4).count()
     println(f"IXBENCH semdedup_degenerate_${degenN / 1000}%dk    ${(System.nanoTime() - t0) / 1e9}%.3f s " +
       f"(flagged=$nd of cap 4096; uncapped = ${degenN.toDouble * degenN / 2}%.1e pairs)")
     }

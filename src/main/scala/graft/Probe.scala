@@ -8,7 +8,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 /** Dev probe over named registry queries, on the same session (and the
   * same top-k rewrite) Bench runs:
   *
-  *   runMain graft.Probe <plan|time|final|jobs> <dataDir> <query...> [k=v ...]
+  *   runMain graft.Probe <plan|time|final|jobs> <dataDir> <query...|all> [k=v ...]
+  *
+  * `all` stands for every registered query name, in sorted order.
   *
   *  - `plan`  — the formatted static physical plan (PLANS.md dumps).
   *  - `time`  — a warm run, then 3 timed runs per query, after one
@@ -32,10 +34,11 @@ object Probe {
   }
 
   def main(args: Array[String]): Unit = {
-    val usage = "usage: graft.Probe <plan|time|final|jobs> <dataDir> <query...> [k=v ...]"
+    val usage = "usage: graft.Probe <plan|time|final|jobs> <dataDir> <query...|all> [k=v ...]"
     require(args.length >= 3 && Set("plan", "time", "final", "jobs")(args(0)), usage)
     val Array(mode, dir) = args.take(2)
-    val (confArgs, names) = args.drop(2).toSeq.partition(_.contains("="))
+    val (confArgs, named) = args.drop(2).toSeq.partition(_.contains("="))
+    val names = if (named == Seq("all")) SparkEntry.queries.keys.toSeq.sorted else named
     require(confArgs.isEmpty || mode == "time", s"k=v confs apply to time mode only; $usage")
     val spark = Tune.session()
     plans.TopKRewriteInstall.ensureInstalled(spark)

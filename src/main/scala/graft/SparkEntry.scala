@@ -14,20 +14,15 @@ object SparkEntry {
     ops.Analytics.specs ++ ops.Clean.specs ++ ops.Dimensional.specs ++
       ops.Joins.specs ++ ops.Quality.specs ++ ops.Events.specs ++
       ops.TextOps.specs ++ ops.VectorSearch.specs ++ ops.Multimodal.specs ++
-      ops.Advanced.specs ++ ops.Advanced2.specs ++ ops.Stats.specs ++
-      ops.StreamingBatch.specs ++ ops.RangeJoin.specs ++ ops.Typed.specs ++
-      ops.DedupClusters.specs ++ ops.NativeTopK.specs ++ ops.SqlInterface.specs ++
-      ops.Sampling.specs ++ ops.Nested.specs ++ ops.ProductAnalytics.specs ++
-      ops.Incremental.specs ++ ops.Chunking.specs ++ ops.Advanced3.specs ++
-      ops.Advanced4.specs ++ ops.Advanced5.specs ++ ops.Advanced6.specs ++
-      ops.Advanced7.specs ++ ops.Advanced8.specs ++ ops.Advanced9.specs ++
-      ops.Advanced10.specs ++ ops.Advanced11.specs ++ ops.Advanced12.specs ++
-      ops.ResidualPQ.specs ++ ops.Advanced13.specs ++ ops.Advanced14.specs ++
-      ops.SnapshotDiff.specs ++ ops.DedupIndex.specs ++ ops.Advanced15.specs ++
+      ops.Stats.specs ++ ops.StreamingBatch.specs ++ ops.RangeJoin.specs ++
+      ops.Typed.specs ++ ops.DedupClusters.specs ++ ops.NativeTopK.specs ++
+      ops.SqlInterface.specs ++ ops.Sampling.specs ++ ops.Nested.specs ++
+      ops.ProductAnalytics.specs ++ ops.Incremental.specs ++ ops.Chunking.specs ++
+      ops.SqlSurface.specs ++ ops.Retrieval.specs ++ ops.Tokenization.specs ++
+      ops.Dedup.specs ++ ops.Curation.specs ++ ops.Packing.specs ++
+      ops.ResidualPQ.specs ++ ops.SnapshotDiff.specs ++ ops.DedupIndex.specs ++
       ops.AnnIndex.specs ++ ops.IngestionGate.specs ++ ops.QualityModel.specs ++
-      ops.LmModel.specs ++ ops.Release.specs ++ ops.Advanced16.specs ++
-      ops.Advanced17.specs ++ ops.Advanced18.specs ++ ops.Advanced19.specs ++
-      ops.Advanced20.specs ++ ops.RetrainFlow.specs
+      ops.LmModel.specs ++ ops.Release.specs ++ ops.RetrainFlow.specs
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * Generate+element_at pair expansion (codegen'd — no interpreted
   * lambdas) feeding a freq-weighted pair count, a top-window collect to
   * the driver, and one merge application per selected rule via the
-  * SHARED sweep kernel ([[graft.ops.Advanced11.mergeSweeps]] — trainer
+  * SHARED sweep kernel ([[graft.ops.Tokenization.mergeSweeps]] — trainer
   * and encoder apply rules through one definition, so the provenance
   * lock is structural; see its scaladoc for the sweep-vs-token-greedy
   * semantics note). State localCheckpoints every 8 applied merges:
@@ -81,7 +81,7 @@ import org.apache.spark.sql.functions._
 object BpeTrainer {
 
   /** Learn `numMerges` merge rules from a text column; returns them in
-    * rank order (the order [[graft.ops.Advanced11.BpeMerges]]-style
+    * rank order (the order [[graft.ops.Tokenization.BpeMerges]]-style
     * apply tables consume). Stops early if no pair occurs twice.
     * `maxBatch` = 1 recovers the one-merge-per-job trainer exactly (the
     * batched result is identical either way; 1 is for A/B tests).
@@ -113,7 +113,7 @@ object BpeTrainer {
     var vocab = df
       .select(explode(split(col(textCol), " ")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("freq"))
-      .select(graft.ops.Advanced11.spacedSymbols(col("tok")).as("seq"), col("freq"))
+      .select(graft.ops.Tokenization.spacedSymbols(col("tok")).as("seq"), col("freq"))
       .transform(graft.Reliable.checkpoint)
     // Exact driver-side symbol alphabet: initial distinct symbols once
     // (alphabet-sized — tiny), then every applied merge string.
@@ -149,7 +149,7 @@ object BpeTrainer {
         val batch = selectBatch(top.toIndexedSeq, knownSymbols,
           math.min(maxBatch, want), windowFull = top.length == window, exact)
         val applied = batch.foldLeft(col("seq")) { case (c, (a, b)) =>
-          graft.ops.Advanced11.mergeSweeps(c, a, b)
+          graft.ops.Tokenization.mergeSweeps(c, a, b)
         }
         vocab = vocab.select(applied.as("seq"), col("freq"))
         merges ++= batch

@@ -79,11 +79,25 @@ object AnnIndex {
   def writeScaled(s: SparkSession, d: String, dir: String,
       nListsOverride: Option[Int] = None): Unit = {
     val e = graft.Tables.vectors(s, d)
-    val n = MetaScalar.scanRowCount(graft.Tables.embeddings(s, d)).getOrElse(e.count())
-    val nLists = nListsOverride.getOrElse(math.max(16L, math.min(65536L,
-      math.ceil(math.sqrt(n.toDouble)).toLong)).toInt)
+    val n = MetaScalar.rows(graft.Tables.embeddings(s, d))
+    val nLists = nListsOverride.getOrElse(scaledLists(n))
     writeCore(s, d, dir, scaledSampleCentroids(e, n, nLists, perList = 50L))
   }
+
+  /** The √n list count of a scaled IVF layout over `n` vectors, clamped
+    * to [16, 65536]: [[writeScaled]]'s sizing, and the cluster count of
+    * [[Dedup.semanticDedupScaled]].
+    */
+  private[ops] def scaledLists(n: Long): Int =
+    math.max(16L, math.min(65536L, math.ceil(math.sqrt(n.toDouble)).toLong)).toInt
+
+  /** Shortlist per list that covers `rows` vectors spread over `lists`
+    * lists, ceil(rows / lists) — an exact gate's cover: the union corpus
+    * of [[IngestionGate.exactShortlist]], RetrainFlow's 16-list cycles.
+    * Long until the final clamp, so multi-billion `rows` cannot overflow.
+    */
+  private[ops] def perListCover(rows: Long, lists: Long): Int =
+    math.min((rows + lists - 1L) / lists, Int.MaxValue.toLong).toInt
 
   /** The sample-trained Lloyd behind [[writeScaled]], with explicit
     * sizing so q160 can gate it at a non-degenerate small-n setting.
@@ -140,7 +154,7 @@ object AnnIndex {
   }
 
   /** 4-byte PQ codes (vec_id, b, code) from a packed-min table
-    * ([[Advanced8.packedMin]]): the winning sub-centroid of each block.
+    * ([[Retrieval.packedMin]]): the winning sub-centroid of each block.
     */
   private def codesOf(packed: DataFrame): DataFrame =
     packed.select(col("vec_id"), col("b"), (col("mk") % 100).cast("int").as("code"))
@@ -170,7 +184,7 @@ object AnnIndex {
     * Two phases of independent chains ([[graft.Jobs.concurrently]]):
     * the coarse chain (train `centroids` → write → `assigned`) beside
     * the PQ chain (codebook → write → the corpus's packed-min table,
-    * [[Advanced8.pqAssign]], built once); then `codes` beside
+    * [[Retrieval.pqAssign]], built once); then `codes` beside
     * `quantstats`, both read from that one packed-min table. `centroids`
     * is by-name so its training runs on the coarse branch, and the
     * scope releases what that training checkpoints ([[writeScaled]]'s
@@ -185,7 +199,7 @@ object AnnIndex {
       },
       () => graft.Jobs.labeled(s, "ann-index: write/pq") {
         Quantizer.pqCodebook(s, d).write.mode("overwrite").parquet(s"$dir/codebook")
-        Advanced8.pqAssign(s, d)
+        Retrieval.pqAssign(s, d)
       })
     writeCodesAndStats(s, assigned, packed, dir)
   }
@@ -207,9 +221,8 @@ object AnnIndex {
       packed: DataFrame, dir: String): Unit =
     graft.Jobs.concurrently(s)(
       () => graft.Jobs.labeled(s, "ann-index: write/codes") {
-        codesOf(packed).join(assigned, Seq("vec_id"))
-          .transform(Layout.writeByBucket(_, col("c_id")))
-          .write.partitionBy("c_id").mode("overwrite").parquet(s"$dir/codes")
+        Layout.writeBucketed(codesOf(packed).join(assigned, Seq("vec_id")),
+          "c_id", "overwrite", s"$dir/codes")
       },
       () => graft.Jobs.labeled(s, "ann-index: write/quantstats") {
         errStats(packed).write.mode("overwrite").parquet(s"$dir/quantstats")
@@ -237,7 +250,7 @@ object AnnIndex {
       () => graft.Jobs.labeled(s, "ann-index: write/pq") {
         Quantizer.trainPqBlocks(Quantizer.subBlocks(e), 8, Quantizer.Iters)
           .write.mode("overwrite").parquet(s"$dir/codebook")
-        graft.Reliable.owned(Advanced8.packedMin(e, MetaScalar.open(s, s"$dir/codebook")))
+        graft.Reliable.owned(Retrieval.packedMin(e, MetaScalar.open(s, s"$dir/codebook")))
       })
     writeCodesAndStats(s, assigned, packed, dir)
     Tombstones.dropLedger(s, dir)
@@ -289,9 +302,7 @@ object AnnIndex {
       // localCheckpoint so the rewrite doesn't race its own input scan
       graft.Reliable.owned(live.assigned)
         .write.mode("overwrite").parquet(s"$dir/assigned")
-      graft.Reliable.owned(live.codes)
-        .transform(Layout.writeByBucket(_, col("c_id")))
-        .write.partitionBy("c_id").mode("overwrite").parquet(s"$dir/codes")
+      Layout.writeBucketed(graft.Reliable.owned(live.codes), "c_id", "overwrite", s"$dir/codes")
       Tombstones.dropLedger(s, dir)
     }
     load(s, dir)
@@ -323,7 +334,7 @@ object AnnIndex {
     val ix = load(s, dir)
     val cent = ix.centroids.select(col("cid").as("c_id"), col("cv"))
     val newAssigned = assignVectors(batch, cent)
-    val newCodes = codesOf(Advanced8.packedMin(batch, ix.codebook))
+    val newCodes = codesOf(Retrieval.packedMin(batch, ix.codebook))
     // ids already COMPLETE in codes (all blocks present): the groupBy is
     // confined to batch-sized data by the semi-join, so replay cost is
     // O(batch), not O(index)
@@ -333,10 +344,8 @@ object AnnIndex {
       .agg(countDistinct(col("b")).as("nb"))
       .filter(col("nb") === CodeBlocks)
       .select(col("vec_id"))
-    newCodes.join(codeIds, Seq("vec_id"), "left_anti")
-      .join(newAssigned, Seq("vec_id"))
-      .transform(Layout.writeByBucket(_, col("c_id")))
-      .write.partitionBy("c_id").mode("append").parquet(s"$dir/codes")
+    Layout.writeBucketed(newCodes.join(codeIds, Seq("vec_id"), "left_anti")
+      .join(newAssigned, Seq("vec_id")), "c_id", "append", s"$dir/codes")
     val assignedIds = MetaScalar.open(s, s"$dir/assigned").select(col("vec_id"))
     newAssigned.join(assignedIds, Seq("vec_id"), "left_anti")
       .write.mode("append").parquet(s"$dir/assigned")
@@ -391,7 +400,7 @@ object AnnIndex {
     val dtab = Quantizer.subBlocks(queries.select(col("qid"), col("v")), Seq("qid"))
       .join(broadcast(ix.codebook), Seq("b"))
       .select(col("qid").as("dqid"), col("b").as("db"), col("cid"),
-        Advanced8.distMicro(col("sv"), col("cv")).as("dm"))
+        Retrieval.distMicro(col("sv"), col("cv")).as("dm"))
     // probed list ids, collected once: the codes scan prunes to those
     // PARTITION directories — the physical "read only probed lists"
     val probedLists = graft.Jobs.distinctRows(probes.select(col("c_id"))).map(_.get(0))
@@ -431,7 +440,7 @@ object AnnIndex {
     * grows. Deriving nprobe from the persisted list count holds the
     * fraction, and therefore coverage, steady across corpus sizes; the
     * centroid count is read from the parquet footers
-    * ([[MetaScalar.scanRowCount]]), not by a Spark job. Probe
+    * ([[MetaScalar.rows]]), not by a Spark job. Probe
     * cost stays sub-linear: probed rows ≈ frac · n while candidate
     * lists lengthen as √n. Coverage is the ONLY recall surface nprobe
     * controls: the round-11 10x measurement (BENCH.md) showed raw ADC
@@ -443,7 +452,7 @@ object AnnIndex {
     * held fraction.
     */
   def autoNprobe(ix: Index, frac: Double): Int = {
-    val n = MetaScalar.scanRowCount(ix.centroids).getOrElse(ix.centroids.count())
+    val n = MetaScalar.rows(ix.centroids)
     math.max(1L, math.min(n, math.ceil(frac * n).toLong)).toInt
   }
 
@@ -506,7 +515,7 @@ object AnnIndex {
     // regime. Results are bit-identical (the q209/q169 oracles and
     // RetrainFlowSpec gate both paths).
     val exactCover = frac >= 0.999 &&
-      shortK.toLong >= MetaScalar.scanRowCount(ix.assigned).getOrElse(ix.assigned.count())
+      shortK.toLong >= MetaScalar.rows(ix.assigned)
     val short =
       if (exactCover)
         probeCandidates(ix, queries, np, excludeSelf, allowed)._2
@@ -526,7 +535,7 @@ object AnnIndex {
     val er = withQ
       .join(vectors.select(col("vec_id").as("cand"), col("v").as("cv3")), Seq("cand"))
       .select(col("qid"), col("cand"),
-        Advanced8.distMicro(col("qv2"), col("cv3")).as("edist_micro"))
+        Retrieval.distMicro(col("qv2"), col("cv3")).as("edist_micro"))
     val wR = Window.partitionBy(col("qid")).orderBy(col("edist_micro"), col("cand"))
     er.withColumn("rnk", row_number().over(wR))
       .filter(col("rnk") <= k)
@@ -558,7 +567,7 @@ object AnnIndex {
     val ix = load(s, dir)
     MetaScalar.open(s, s"$dir/quantstats").withColumn("side", lit("baseline"))
       .select(cols: _*)
-      .unionByName(errStats(Advanced8.packedMin(batch, ix.codebook))
+      .unionByName(errStats(Retrieval.packedMin(batch, ix.codebook))
         .withColumn("side", lit("batch")).select(cols: _*))
   }
 
@@ -579,7 +588,7 @@ object AnnIndex {
     "q204_quantizer_drift",
     (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       |${Quantizer.pqTrainCtes(8, "e")},
-      |${Advanced8.pqPkCteSql},
+      |${Retrieval.pqPkCteSql},
       |bmk AS (SELECT vec_id, b, MIN(pk) AS mk FROM pk GROUP BY vec_id, b),
       |bev AS (SELECT vec_id, CAST(SUM(mk // 100) AS BIGINT) AS err FROM bmk GROUP BY vec_id),
       |bt AS (SELECT vec_id, list_transform(v, x -> x * 1.5 + 0.25) AS v
@@ -589,7 +598,7 @@ object AnnIndex {
       |  FROM bt CROSS JOIN (VALUES (0),(1),(2),(3)) bb(b)),
       |tpk AS (
       |  SELECT s.vec_id, s.b,
-      |    ${Advanced8.distMicroSql("sv", "cv")} * 100 + cid AS pk
+      |    ${Retrieval.distMicroSql("sv", "cv")} * 100 + cid AS pk
       |  FROM tsub s JOIN ${Quantizer.pqFinal} USING (b)),
       |tmk AS (SELECT vec_id, b, MIN(pk) AS mk FROM tpk GROUP BY vec_id, b),
       |tev AS (SELECT vec_id, CAST(SUM(mk // 100) AS BIGINT) AS err FROM tmk GROUP BY vec_id),
@@ -618,7 +627,7 @@ object AnnIndex {
       |  SELECT 'batch' AS side, ts.n_vecs, ts.mean_err_micro, tp.p95_err_micro
       |  FROM ts, tp)
       |ORDER BY side""").stripMargin) { (s, d) =>
-    val dir = Advanced20.sharedFixedIndexDir(s, d)
+    val dir = Dedup.sharedFixedIndexDir(s, d)
     val batch = graft.Tables.embeddings(s, d)
       .filter(col("vec_id") % 10 === 7)
       .select(col("vec_id"),
@@ -714,12 +723,12 @@ object AnnIndex {
       |${Quantizer.ivfProbeCtes(math.ceil(0.2 * 32).toInt, 5)},
       |${Quantizer.ivfCandCte(keepListId = false)},
       |${Quantizer.pqTrainCtes(8)},
-      |${Advanced8.pqPkCteSql},
+      |${Retrieval.pqPkCteSql},
       |codes AS (SELECT vec_id, b, CAST(MIN(pk) % 100 AS INTEGER) AS code
       |          FROM pk GROUP BY vec_id, b),
       |dtab AS (
       |  SELECT s.vec_id AS qid, b, cid,
-      |    ${Advanced8.distMicroSql("sv", "cv")} AS dm
+      |    ${Retrieval.distMicroSql("sv", "cv")} AS dm
       |  FROM sub s JOIN ${Quantizer.pqFinal} USING (b) WHERE s.vec_id < 5),
       |ad AS (
       |  SELECT x.qid, x.cand, CAST(SUM(d.dm) AS BIGINT) AS adist_micro
@@ -765,12 +774,12 @@ object AnnIndex {
       |${Quantizer.ivfProbeCtes(math.ceil(0.2 * 32).toInt, 5)},
       |${Quantizer.ivfCandCte(keepListId = false)},
       |${Quantizer.pqTrainCtes(8)},
-      |${Advanced8.pqPkCteSql},
+      |${Retrieval.pqPkCteSql},
       |codes AS (SELECT vec_id, b, CAST(MIN(pk) % 100 AS INTEGER) AS code
       |          FROM pk GROUP BY vec_id, b),
       |dtab AS (
       |  SELECT s.vec_id AS qid, b, cid,
-      |    ${Advanced8.distMicroSql("sv", "cv")} AS dm
+      |    ${Retrieval.distMicroSql("sv", "cv")} AS dm
       |  FROM sub s JOIN ${Quantizer.pqFinal} USING (b) WHERE s.vec_id < 5),
       |ad AS (
       |  SELECT x.qid, x.cand, CAST(SUM(d.dm) AS BIGINT) AS adist_micro
@@ -785,7 +794,7 @@ object AnnIndex {
       |  FROM ad QUALIFY srnk <= ${64 * math.ceil(0.2 * 32).toInt}),
       |er AS (
       |  SELECT sh.qid, sh.cand,
-      |    ${Advanced8.distMicroSql("q.v", "c.v")} AS edist_micro
+      |    ${Retrieval.distMicroSql("q.v", "c.v")} AS edist_micro
       |  FROM short sh JOIN e q ON q.vec_id = sh.qid JOIN e c ON c.vec_id = sh.cand),
       |r AS (
       |  SELECT qid, cand, edist_micro,

@@ -114,12 +114,10 @@ object DedupIndex {
     // layout carried ~4× the files, taxing every load's footer reads,
     // the release-upgrade clones, and the write commits themselves.
     // bands first, sigs LAST: sigs is append's done-marker (see object doc)
-    TextOps.bandsOf(sigs).withColumn("ep", lit(ep))
-      .withColumn("bkt", bktCol(nB)).transform(Layout.writeByBucket(_, col("bkt")))
-      .write.partitionBy("bkt").mode(mode).parquet(s"$dir/bands")
-    sigs.withColumn("ep", lit(ep)).withColumn("sbkt", sbktCol(nB))
-      .transform(Layout.writeByBucket(_, col("sbkt")))
-      .write.partitionBy("sbkt").mode(mode).parquet(s"$dir/sigs")
+    Layout.writeBucketed(TextOps.bandsOf(sigs).withColumn("ep", lit(ep))
+      .withColumn("bkt", bktCol(nB)), "bkt", mode, s"$dir/bands")
+    Layout.writeBucketed(sigs.withColumn("ep", lit(ep)).withColumn("sbkt", sbktCol(nB)),
+      "sbkt", mode, s"$dir/sigs")
   }
 
   /** Build the index from `docs(doc_id, text)`, replacing anything at
@@ -213,14 +211,11 @@ object DedupIndex {
     Tombstones.ledger(s, dir).foreach { _ =>
       val live = load(s, dir)
       // the rewrite restarts epoch history at 0 (no tombstones survive it)
-      graft.Reliable.owned(live.bands.dropDuplicates("doc_id", "b")
-          .withColumn("ep", lit(0L)))
-        .transform(Layout.writeByBucket(_, col("bkt")))
-        .write.partitionBy("bkt").mode("overwrite").parquet(s"$dir/bands")
-      graft.Reliable.owned(live.sigs.select(col("doc_id"), col("sig")).dropDuplicates("doc_id")
-          .withColumn("ep", lit(0L)).withColumn("sbkt", sbktCol(live.buckets)))
-        .transform(Layout.writeByBucket(_, col("sbkt")))
-        .write.partitionBy("sbkt").mode("overwrite").parquet(s"$dir/sigs")
+      Layout.writeBucketed(graft.Reliable.owned(live.bands.dropDuplicates("doc_id", "b")
+          .withColumn("ep", lit(0L))), "bkt", "overwrite", s"$dir/bands")
+      Layout.writeBucketed(graft.Reliable.owned(live.sigs.select(col("doc_id"), col("sig"))
+          .dropDuplicates("doc_id").withColumn("ep", lit(0L))
+          .withColumn("sbkt", sbktCol(live.buckets))), "sbkt", "overwrite", s"$dir/sigs")
       Tombstones.dropLedger(s, dir)
       Tombstones.writeEpoch(s, dir, 0L)
     }

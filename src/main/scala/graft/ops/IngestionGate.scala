@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * [[LmModel]], (3) optionally classifier-scored against the persisted
   * [[QualityModel]], (4, round 14, optional) SEMANTIC-dup-checked
   * against a persisted [[AnnIndex]] via
-  * [[Advanced20.semanticDedupBatch]] — the rejection class stages 1–3
+  * [[Dedup.semanticDedupBatch]] — the rejection class stages 1–3
   * cannot catch: a paraphrase or re-render that is lexically novel but
   * embedding-near-identical to a corpus member — and finally the
   * survivors are appended to the dedup index AND the semantic layout
@@ -48,7 +48,7 @@ import org.apache.spark.sql.functions._
   * when the semantic stage is on, a batch-self SEMANTIC sweep after it
   * (the batch's vectors assigned with the index's frozen centroids and
   * swept against themselves through the capped
-  * [[Advanced20.dominatedBy]] kernel), so two same-batch paraphrases
+  * [[Dedup.dominatedBy]] kernel), so two same-batch paraphrases
   * also collapse to the min-doc_id representative.
   *
   * Streaming form: run [[gateBatch]] inside `foreachBatch`
@@ -68,7 +68,7 @@ object IngestionGate {
     * layout (frozen-quantizer AnnIndex + raw vector store); batches
     * must then carry a `v` embedding column, and a doc whose embedding
     * is dominated by any live corpus vector at cosine ≥ `semanticTau`
-    * is rejected ([[Advanced20.semanticDedupBatch]]'s capped
+    * is rejected ([[Dedup.semanticDedupBatch]]'s capped
     * cluster-confined sweep — O(batch·k + cluster slices), never a
     * corpus scan).
     */
@@ -140,7 +140,7 @@ object IngestionGate {
       // on read (dropDuplicates), same as the accepted sink.
       require(batch.columns.contains("v"),
         "semanticDir is set but the batch has no `v` embedding column")
-      val dominated = Advanced20.semanticDedupBatch(s, s"$sd/ann",
+      val dominated = Dedup.semanticDedupBatch(s, s"$sd/ann",
           lexAdmitted.select(col("doc_id").as("vec_id"), col("v")),
           MetaScalar.open(s, s"$sd/vecs").dropDuplicates("vec_id"),
           cfg.semanticTau)
@@ -154,7 +154,7 @@ object IngestionGate {
         // intra-batch hole, now closed the same way: the batch's own
         // vectors assigned with the index's FROZEN centroids, swept
         // against THEMSELVES through the capped cluster-confined
-        // kernel (min doc_id survives — [[Advanced20.dominatedBy]],
+        // kernel (min doc_id survives — [[Dedup.dominatedBy]],
         // so the cap and drop-logging apply here too). Still O(batch):
         // both join sides are the batch.
         val cents = MetaScalar.open(s, s"$sd/ann/centroids")
@@ -163,10 +163,10 @@ object IngestionGate {
         // pair sides), so checkpoint the batch-sized assignment ONCE,
         // pin the (tiny) dominated-id set eagerly, and release the
         // assignment before the call returns
-        val basg = Advanced20.assignCosine(
+        val basg = Dedup.assignCosine(
           corpusClean.select(col("doc_id").as("vec_id"), col("v")), cents)
           .localCheckpoint(true)
-        val selfDom = graft.Reliable.owned(Advanced20.dominatedBy(basg,
+        val selfDom = graft.Reliable.owned(Dedup.dominatedBy(basg,
             cfg.semanticTau, tag = "gate-semself")
           .select(col("vec_id").as("doc_id")))
         graft.Reliable.release(basg)
@@ -296,16 +296,14 @@ object IngestionGate {
     * serving index's ACTUAL list count (round-16 advice — the old 2n/16
     * hardcoded writeVectors' fixed-16 layout and overflowed Int at
     * multi-billion n; Long until the final clamp). The list and store
-    * counts are footer row counts ([[MetaScalar.scanRowCount]]); only a
+    * counts are footer row counts ([[MetaScalar.rows]]); only a
     * store that is more than a bare scan, and the batch, are counted by
     * Spark.
     */
   private[graft] def exactShortlist(s: SparkSession, sd: String, store: DataFrame,
       bv: DataFrame): Int = {
-    val cents = MetaScalar.open(s, s"$sd/ann/centroids")
-    val nLists = math.max(1L, MetaScalar.scanRowCount(cents).getOrElse(cents.count()))
-    val union = MetaScalar.scanRowCount(store).getOrElse(store.count()) + bv.count()
-    math.min((union + nLists - 1L) / nLists, Int.MaxValue.toLong).toInt
+    val nLists = math.max(1L, MetaScalar.rows(MetaScalar.open(s, s"$sd/ann/centroids")))
+    AnnIndex.perListCover(MetaScalar.rows(store) + bv.count(), nLists)
   }
 
   /** Close the loop [[monitor]] → [[RetrainFlow]]: read each configured
@@ -428,7 +426,7 @@ object IngestionGate {
       |  JOIN sigs sb ON sb.doc_id = corpus_id
       |  WHERE ROUND(list_sum(list_transform(range(1, 17),
       |    i -> CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END)) / 16.0, 6) >= 0.5),
-      |""" + Advanced15.lmOracleCore(
+      |""" + Tokenization.lmOracleCore(
         "(SELECT doc_id, text FROM documents WHERE doc_id < 400)") +
       s""",
       |bx AS (SELECT doc_id, unnest(string_split(text,' ')) AS tok,
@@ -438,9 +436,9 @@ object IngestionGate {
       |          lead(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS w2 FROM bx),
       |sc AS (SELECT g.doc_id,
       |         CASE WHEN e.p_cond IS NOT NULL
-      |              THEN ${Advanced15.hudSql("9 * e.p_cond + e.p_uni", "10")}
-      |              ELSE ${Advanced15.hudSql(
-                       s"COALESCE(${Advanced15.hudSql("u2b.c * 1000000", "t0.n")}, 0)", "10")}
+      |              THEN ${Tokenization.hudSql("9 * e.p_cond + e.p_uni", "10")}
+      |              ELSE ${Tokenization.hudSql(
+                       s"COALESCE(${Tokenization.hudSql("u2b.c * 1000000", "t0.n")}, 0)", "10")}
       |         END AS s
       |       FROM bbg g
       |       LEFT JOIN bie e ON e.w1 = g.w1 AND e.w2 = g.w2
@@ -515,9 +513,9 @@ object IngestionGate {
     * gates' third stages cannot drift.
     */
   private def lqcStageCteSql: String =
-    Advanced15.lqcOraclePrefix(
+    Curation.lqcOraclePrefix(
       "(SELECT * FROM documents WHERE doc_id < 400)").stripPrefix("WITH ") + {
-      val (r1s, r2s, r3s) = Advanced15.lqcRawSql
+      val (r1s, r2s, r3s) = Curation.lqcRawSql
       s""",
       |qraw AS (
       |  SELECT doc_id,
@@ -527,7 +525,7 @@ object IngestionGate {
       |  FROM documents WHERE doc_id >= 400),
       |qx AS (SELECT doc_id, r1 - m1 AS f1, r2 - m2 AS f2, r3 - m3 AS f3
       |       FROM qraw CROSS JOIN mu),
-      |qs AS (SELECT doc_id, (${Advanced15.SigSql}) AS score_ppm
+      |qs AS (SELECT doc_id, (${Curation.SigSql}) AS score_ppm
       |       FROM qx CROSS JOIN w3t)""".stripMargin
     }
 
@@ -540,18 +538,18 @@ object IngestionGate {
       |WHERE q.score_ppm >= 500000
       |ORDER BY doc_id""".stripMargin)) { (s, d) =>
     val docs = Tables.documents(s, d)
-    val raw = Advanced15.lqcRawFeatures(docs.filter(col("doc_id") < 400))
+    val raw = Curation.lqcRawFeatures(docs.filter(col("doc_id") < 400))
       .localCheckpoint()
-    val (nL, mus) = Advanced15.lqcMeans(raw)
+    val (nL, mus) = Curation.lqcMeans(raw)
     val x = raw.select(col("y"),
       (col("r1") - mus(0)).as("f1"), (col("r2") - mus(1)).as("f2"),
       (col("r3") - mus(2)).as("f3"))
-    val w = Advanced15.lqcTrain(x, nL)
-    val qs = Advanced15.lqcRawFeatures(docs.filter(col("doc_id") >= 400))
+    val w = Curation.lqcTrain(x, nL)
+    val qs = Curation.lqcRawFeatures(docs.filter(col("doc_id") >= 400))
       .select(col("doc_id"),
         (col("r1") - mus(0)).as("f1"), (col("r2") - mus(1)).as("f2"),
         (col("r3") - mus(2)).as("f3"))
-      .select(col("doc_id"), Advanced15.lqcSig(w).as("score_ppm"))
+      .select(col("doc_id"), Curation.lqcSig(w).as("score_ppm"))
       .filter(col("score_ppm") >= 500000L)
     liveDecide12(s, d)
       .join(qs, Seq("doc_id"))
@@ -575,9 +573,9 @@ object IngestionGate {
        |      WHERE vec_id >= 400 AND vec_id < 500),
        |${Quantizer.centroidTrainCtes(16, "ce")},
        |cent AS (SELECT cid AS c_id, cv AS centv FROM ${Quantizer.centFinal}),
-       |${Advanced20.assignCteSql("casg", "ce")},
+       |${Dedup.assignCteSql("casg", "ce")},
        |${LshGuard.capCteSql("mcap", "casg", Seq("vec_id", "c_id"), Seq("c_id"), "vec_id")},
-       |${Advanced20.assignCteSql("basg", "be")},
+       |${Dedup.assignCteSql("basg", "be")},
        |semdom AS (
        |  SELECT DISTINCT b.vec_id AS doc_id
        |  FROM basg b

@@ -1,12 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** Shared write-layout helpers for the persisted-index family. */
 object Layout {
 
-  /** Repartition by a layout's partition column with a PINNED partition
-    * count before a dynamic-partitioned write (round 19, guide §2.5/§6).
+  /** Write `df` to `path` partitioned by its `bucket` column, one file
+    * per bucket per write, after a repartition by that column with a
+    * PINNED partition count (round 19, guide §2.5/§6).
     *
     * Round 18 added `repartition(col(bucket))` so each bucket is exactly
     * one file per batch — but an UN-numbered repartition is an
@@ -23,7 +25,7 @@ object Layout {
     * scale 32 tasks each write ~2 of 64 bucket files; on a 2000-core
     * cluster a 4096-bucket corpus build spreads ~2 buckets per slot.
     */
-  def writeByBucket(df: DataFrame, bucket: Column): DataFrame =
-    df.repartition(
-      math.max(1, df.sparkSession.sparkContext.defaultParallelism), bucket)
+  def writeBucketed(df: DataFrame, bucket: String, mode: String, path: String): Unit =
+    df.repartition(math.max(1, df.sparkSession.sparkContext.defaultParallelism), col(bucket))
+      .write.partitionBy(bucket).mode(mode).parquet(path)
 }

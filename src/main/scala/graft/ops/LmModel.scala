@@ -180,15 +180,12 @@ object LmModel {
     // writes (round 18, guide §6): one file per bucket, not tasks x buckets.
     // The three tables are independent writes and run side by side.
     graft.Jobs.concurrently(s)(
-      () => enrich(bi, uni, tot).withColumn("bkt", bktOf(col("gram"), nB))
-        .transform(Layout.writeByBucket(_, col("bkt")))
-        .write.partitionBy("bkt").mode("overwrite").parquet(s"$dir/bigrams"),
-      () => uni.crossJoin(broadcast(tot))
+      () => Layout.writeBucketed(enrich(bi, uni, tot).withColumn("bkt", bktOf(col("gram"), nB)),
+        "bkt", "overwrite", s"$dir/bigrams"),
+      () => Layout.writeBucketed(uni.crossJoin(broadcast(tot))
         .select(col("w"), col("c"),
           Det.halfUpDiv(col("c") * Micro, col("n")).as("p_uni"))
-        .withColumn("bkt", bktOf(col("w"), nB))
-        .transform(Layout.writeByBucket(_, col("bkt")))
-        .write.partitionBy("bkt").mode("overwrite").parquet(s"$dir/unigrams"),
+        .withColumn("bkt", bktOf(col("w"), nB)), "bkt", "overwrite", s"$dir/unigrams"),
       () => tot.coalesce(1).write.mode("overwrite").parquet(s"$dir/total"))
   }
 
@@ -358,7 +355,7 @@ object LmModel {
 
   /** One persisted full-corpus model (+ scorestats baseline) per
     * (session, corpus), shared through [[graft.Shared]] — the
-    * [[Advanced20.sharedFixedIndexDir]] pattern (the cached frame is
+    * [[Dedup.sharedFixedIndexDir]] pattern (the cached frame is
     * just the 1-row dir name).
     */
   private def sharedLmDir(s: SparkSession, d: String): String = {
@@ -394,12 +391,12 @@ object LmModel {
     */
   val lmDrift = Q(
     "q207_lm_drift",
-    (s"""WITH ${Advanced15.lmOracleCore("documents")},
+    (s"""WITH ${Tokenization.lmOracleCore("documents")},
       |sc0 AS (SELECT g.doc_id,
       |         CASE WHEN e.p_cond IS NOT NULL
-      |              THEN ${Advanced15.hudSql("9 * e.p_cond + e.p_uni", "10")}
-      |              ELSE ${Advanced15.hudSql(
-                     s"COALESCE(${Advanced15.hudSql("u2b.c * 1000000", "t0.n")}, 0)", "10")}
+      |              THEN ${Tokenization.hudSql("9 * e.p_cond + e.p_uni", "10")}
+      |              ELSE ${Tokenization.hudSql(
+                     s"COALESCE(${Tokenization.hudSql("u2b.c * 1000000", "t0.n")}, 0)", "10")}
       |         END AS s
       |        FROM cbg g
       |        LEFT JOIN bie e ON e.w1 = g.w1 AND e.w2 = g.w2
@@ -426,9 +423,9 @@ object LmModel {
       |          lead(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS w2 FROM btx),
       |sc1 AS (SELECT g.doc_id,
       |         CASE WHEN e.p_cond IS NOT NULL
-      |              THEN ${Advanced15.hudSql("9 * e.p_cond + e.p_uni", "10")}
-      |              ELSE ${Advanced15.hudSql(
-                     s"COALESCE(${Advanced15.hudSql("u2b.c * 1000000", "t0.n")}, 0)", "10")}
+      |              THEN ${Tokenization.hudSql("9 * e.p_cond + e.p_uni", "10")}
+      |              ELSE ${Tokenization.hudSql(
+                     s"COALESCE(${Tokenization.hudSql("u2b.c * 1000000", "t0.n")}, 0)", "10")}
       |         END AS s
       |        FROM bbg g
       |        LEFT JOIN bie e ON e.w1 = g.w1 AND e.w2 = g.w2
@@ -467,7 +464,7 @@ object LmModel {
       |v2 AS (SELECT doc_id,
       |    CASE WHEN doc_id % 13 = 0 THEN 'rev ' || text ELSE text END AS text
       |  FROM base WHERE doc_id % 19 != 3),
-      |${Advanced15.lmOracleCore("v2")},
+      |${Tokenization.lmOracleCore("v2")},
       |probe AS (SELECT doc_id, text FROM v2 WHERE doc_id % 23 = 7
       |          UNION ALL
       |          SELECT doc_id + 100000 AS doc_id, text FROM base
@@ -478,16 +475,16 @@ object LmModel {
       |          lead(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS w2 FROM bx),
       |sc AS (SELECT g.doc_id,
       |         CASE WHEN e.p_cond IS NOT NULL
-      |              THEN ${Advanced15.hudSql("9 * e.p_cond + e.p_uni", "10")}
-      |              ELSE ${Advanced15.hudSql(
-                       s"COALESCE(${Advanced15.hudSql("u2b.c * 1000000", "t0.n")}, 0)", "10")}
+      |              THEN ${Tokenization.hudSql("9 * e.p_cond + e.p_uni", "10")}
+      |              ELSE ${Tokenization.hudSql(
+                       s"COALESCE(${Tokenization.hudSql("u2b.c * 1000000", "t0.n")}, 0)", "10")}
       |         END AS s
       |       FROM bbg g
       |       LEFT JOIN bie e ON e.w1 = g.w1 AND e.w2 = g.w2
       |       LEFT JOIN uni u2b ON u2b.w = g.w2
       |       CROSS JOIN tot t0
       |       WHERE g.w2 IS NOT NULL)
-      |${Advanced15.LmAggTail}""").stripMargin) { (s, d) =>
+      |${Tokenization.LmAggTail}""").stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d).select(col("doc_id"),
       concat(col("text"), lit(" t"), col("doc_id").cast("string")).as("text"))
     val v1 = docs.filter(col("doc_id") % 17 =!= 5).localCheckpoint()

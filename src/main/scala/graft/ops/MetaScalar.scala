@@ -161,13 +161,15 @@ object MetaScalar {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** [[rowCount]] of `df` when its analyzed plan is a bare parquet scan
-    * of one flat directory — the sizing probe behind
-    * [[AnnIndex.autoNprobe]] and the exact-cover gate — and None for any
-    * other plan (a filter, a join such as a folded tombstone ledger, a
-    * partitioned or multi-path scan), where the caller counts instead.
+  /** Row count of `df`: the footer count ([[rowCount]]) when its analyzed
+    * plan is a bare parquet scan of one flat directory — the sizing probe
+    * behind [[AnnIndex.autoNprobe]] and the exact-cover gate — and a
+    * `count()` job for any other plan (a filter, a join such as a folded
+    * tombstone ledger, a partitioned or multi-path scan).
     */
-  def scanRowCount(df: DataFrame): Option[Long] = df.queryExecution.analyzed match {
+  def rows(df: DataFrame): Long = scanRowCount(df).getOrElse(df.count())
+
+  private def scanRowCount(df: DataFrame): Option[Long] = df.queryExecution.analyzed match {
     case r: LogicalRelation => r.relation match {
       case h: HadoopFsRelation if h.fileFormat.isInstanceOf[ParquetFileFormat] &&
           h.partitionSchema.isEmpty && h.location.rootPaths.size == 1 =>

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * center-on-the-batch implementation would break).
   *
   * All arithmetic is the ONE q157/q158 recipe
-  * ([[Advanced15.lqcRawFeatures]]/[[Advanced15.lqcSig]] — exact
+  * ([[Curation.lqcRawFeatures]]/[[Curation.lqcSig]] — exact
   * micro-unit integers, hard sigmoid), so the spec pins the persisted
   * [[scoreBatch]]'s per-source funnel BIT-IDENTICAL to the live q158 on
   * the training corpus. The keep decision is q158's deterministic
@@ -51,12 +51,12 @@ object QualityModel {
       // operator re-runs [[writeScoreStats]] after each retrain.
       val ss = new org.apache.hadoop.fs.Path(s"$dir/scorestats")
       ss.getFileSystem(s.sparkContext.hadoopConfiguration).delete(ss, true)
-      val raw = graft.Reliable.owned(Advanced15.lqcRawFeatures(docs))
-      val (nL, mus) = Advanced15.lqcMeans(raw)
+      val raw = graft.Reliable.owned(Curation.lqcRawFeatures(docs))
+      val (nL, mus) = Curation.lqcMeans(raw)
       val x = raw.select(col("y"),
         (col("r1") - mus(0)).as("f1"), (col("r2") - mus(1)).as("f2"),
         (col("r3") - mus(2)).as("f3"))
-      val w = Advanced15.lqcTrain(x, nL)
+      val w = Curation.lqcTrain(x, nL)
       import s.implicits._
       Seq((w(0), w(1), w(2), w(3), mus(0), mus(1), mus(2), nL))
         .toDF("w1", "w2", "w3", "wb", "m1", "m2", "m3", "n")
@@ -80,11 +80,11 @@ object QualityModel {
       }
     val w = m.take(4).toArray
     val mus = m.drop(4).toArray
-    val centered = Advanced15.lqcRawFeatures(docs).select(col("doc_id"),
+    val centered = Curation.lqcRawFeatures(docs).select(col("doc_id"),
       (col("r1") - mus(0)).as("f1"), (col("r2") - mus(1)).as("f2"),
       (col("r3") - mus(2)).as("f3"))
     centered
-      .select(col("doc_id"), Advanced15.lqcSig(w).as("score_ppm"),
+      .select(col("doc_id"), Curation.lqcSig(w).as("score_ppm"),
         expr("CAST(conv(substr(md5(CAST(doc_id AS STRING)), 25, 7), 16, 10) AS BIGINT) % 1000000")
           .as("hv"))
       .select(col("doc_id"), col("score_ppm"),
@@ -105,9 +105,9 @@ object QualityModel {
     */
   val incrementalQualityScore = Q(
     "q162_incremental_quality_score",
-    (Advanced15.lqcOraclePrefix(
+    (Curation.lqcOraclePrefix(
       "(SELECT * FROM documents WHERE doc_id < 400)") + {
-      val (r1s, r2s, r3s) = Advanced15.lqcRawSql
+      val (r1s, r2s, r3s) = Curation.lqcRawSql
       s""",
       |braw AS (
       |  SELECT doc_id,
@@ -117,26 +117,26 @@ object QualityModel {
       |  FROM documents WHERE doc_id >= 400),
       |bx AS (SELECT doc_id, r1 - m1 AS f1, r2 - m2 AS f2, r3 - m3 AS f3
       |       FROM braw CROSS JOIN mu),
-      |scj AS (SELECT doc_id, (${Advanced15.SigSql}) AS score_ppm,
+      |scj AS (SELECT doc_id, (${Curation.SigSql}) AS score_ppm,
       |         ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 25, 7))::BIGINT
       |           % 1000000 AS hv
       |        FROM bx CROSS JOIN w3t)
       |SELECT doc_id, CAST(score_ppm AS BIGINT) AS score_ppm,
-      |  hv < ${Advanced15.hudSql("score_ppm", "2")} AS keep
+      |  hv < ${Tokenization.hudSql("score_ppm", "2")} AS keep
       |FROM scj ORDER BY doc_id""" }).stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
-    val raw = Advanced15.lqcRawFeatures(docs.filter(col("doc_id") < 400))
+    val raw = Curation.lqcRawFeatures(docs.filter(col("doc_id") < 400))
       .localCheckpoint()
-    val (nL, mus) = Advanced15.lqcMeans(raw)
+    val (nL, mus) = Curation.lqcMeans(raw)
     val x = raw.select(col("y"),
       (col("r1") - mus(0)).as("f1"), (col("r2") - mus(1)).as("f2"),
       (col("r3") - mus(2)).as("f3"))
-    val w = Advanced15.lqcTrain(x, nL)
-    Advanced15.lqcRawFeatures(docs.filter(col("doc_id") >= 400))
+    val w = Curation.lqcTrain(x, nL)
+    Curation.lqcRawFeatures(docs.filter(col("doc_id") >= 400))
       .select(col("doc_id"),
         (col("r1") - mus(0)).as("f1"), (col("r2") - mus(1)).as("f2"),
         (col("r3") - mus(2)).as("f3"))
-      .select(col("doc_id"), Advanced15.lqcSig(w).as("score_ppm"),
+      .select(col("doc_id"), Curation.lqcSig(w).as("score_ppm"),
         expr("CAST(conv(substr(md5(CAST(doc_id AS STRING)), 25, 7), 16, 10) AS BIGINT) % 1000000")
           .as("hv"))
       .select(col("doc_id"), col("score_ppm"),
@@ -213,10 +213,10 @@ object QualityModel {
     */
   val qualityDrift = Q(
     "q208_quality_drift",
-    (Advanced15.lqcOraclePrefix("documents") + {
-      val (r1s, r2s, r3s) = Advanced15.lqcRawSql
+    (Curation.lqcOraclePrefix("documents") + {
+      val (r1s, r2s, r3s) = Curation.lqcRawSql
       s""",
-      |bsc AS (SELECT doc_id, (${Advanced15.SigSql}) AS score_ppm
+      |bsc AS (SELECT doc_id, (${Curation.SigSql}) AS score_ppm
       |        FROM x CROSS JOIN w3t),
       |bs AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
       |         CAST((2 * SUM(score_ppm) + COUNT(*)) // (2 * COUNT(*)) AS BIGINT)
@@ -238,7 +238,7 @@ object QualityModel {
       |  FROM tdoc),
       |tx AS (SELECT doc_id, r1 - m1 AS f1, r2 - m2 AS f2, r3 - m3 AS f3
       |       FROM traw CROSS JOIN mu),
-      |tsc AS (SELECT doc_id, (${Advanced15.SigSql}) AS score_ppm
+      |tsc AS (SELECT doc_id, (${Curation.SigSql}) AS score_ppm
       |        FROM tx CROSS JOIN w3t),
       |ts AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
       |         CAST((2 * SUM(score_ppm) + COUNT(*)) // (2 * COUNT(*)) AS BIGINT)

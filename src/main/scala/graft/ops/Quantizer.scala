@@ -50,10 +50,22 @@ object Quantizer {
         struct(lit(b).as("b"), expr(s"slice(v, ${16 * b + 1}, 16)").as("sv"))): _*)).as("x"): _*)
       .select(keys.map(col) :+ col("x.b").as("b") :+ col("x.sv").as("sv"): _*)
 
-  /** One assignment pass, full vectors: nearest centroid per vector by
-    * rounded L2² with cid tie-break. Struct-min argmin → the partial
-    * aggregate collapses k candidate rows to 1 before the shuffle
-    * (q80's plan shape).
+  /** One assignment pass, full vectors: (vec_id, cid, v, dist), the
+    * nearest centroid per vector by rounded L2² with cid tie-break.
+    *
+    * Argmin as min(struct(dist, cid)): the k candidate rows for one vector
+    * are produced in the SAME task (the broadcast join preserves the scan
+    * partitioning), so the PARTIAL aggregate collapses k rows to 1 before
+    * the shuffle — the shuffle carries one row per vector, never k. (Struct
+    * mins plan as SortAggregate — struct buffers are not hash-aggregable —
+    * which costs a local sort, same as the row_number/WindowGroupLimit
+    * alternative; the map-side collapse is the property that matters at
+    * fleet scale.) Struct comparison orders by (dist, cid) — the oracles'
+    * ROW_NUMBER tie-break. ||v||² hoists to one dot per VECTOR and ||c||²
+    * to one per CENTROID (inside the broadcast build), so the k-wide inner
+    * loop computes a single dot product per pair — (vv - 2·v·c) + cc
+    * associates exactly like the oracles' inline form, so the rounded dist
+    * is bit-identical.
     */
   private[ops] def assignFull(e: DataFrame, cent: DataFrame): DataFrame = {
     val eVv = e.withColumn("vv", DotProduct.dot(col("v"), col("v")))
@@ -63,11 +75,13 @@ object Quantizer {
           col("cid")).as("dc"))
       .groupBy(col("vec_id"))
       .agg(min(col("dc")).as("m"), first(col("v")).as("v")) // v constant per vec_id
-      .select(col("m.cid").as("cid"), col("v"))
+      .select(col("vec_id"), col("m.cid").as("cid"), col("v"), col("m.dist").as("dist"))
   }
 
-  /** Decimal-exact centroid recompute (order-independent, so the oracle's
-    * centroids are bit-identical — q80's m1/c1 shape).
+  /** Decimal-exact centroid recompute, (cid, v…) → (cid, cv): a per-dim
+    * decimal average, order-independent, so the oracles' centroids are
+    * bit-identical. k×dim rows: the transform lambda is interpreted but
+    * runs over k arrays.
     */
   private def recomputeFull(asg: DataFrame): DataFrame =
     asg.select(col("cid"), posexplode(col("v")).as(Seq("dim", "val")))

@@ -234,7 +234,7 @@ object Release {
   val textReleaseUpgrade = Q(
     "q164_text_release_upgrade",
     s"""WITH $docV2Cte,
-      |${Advanced13.bm25AggCtes(Advanced13.BmQueryTerms, "v2")},
+      |${Retrieval.bm25AggCtes(Retrieval.BmQueryTerms, "v2")},
       |r AS (
       |  SELECT doc_id, bm25,
       |    CAST(ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id) AS INTEGER) AS rnk
@@ -245,7 +245,7 @@ object Release {
       TextIndex.writeDocs(s, v1, p)
     }
     val ix = upgradeTextIndex(s, dir, v2, docsDelta(s, d))
-    TextIndex.search(s, ix, Advanced13.BmQueryTerms, 20)
+    TextIndex.search(s, ix, Retrieval.BmQueryTerms, 20)
   }
 
   /** [[upgradeDedupIndex]] under the hard gate: v1 built by
@@ -332,7 +332,7 @@ object Release {
       |  FROM v2 CROSS JOIN (VALUES (0),(1),(2),(3)) bb(b)),
       |pk2 AS (
       |  SELECT s.vec_id, s.b,
-      |    ${Advanced8.distMicroSql("sv", "cv")} * 100 + cid AS pk
+      |    ${Retrieval.distMicroSql("sv", "cv")} * 100 + cid AS pk
       |  FROM sub2 s JOIN ${Quantizer.pqFinal} USING (b)),
       |codes AS (
       |  SELECT vec_id, b, CAST(MIN(pk) % 100 AS INTEGER) AS code

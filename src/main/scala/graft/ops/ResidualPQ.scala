@@ -39,7 +39,7 @@ object ResidualPQ {
     * coarse centroid — one broadcast join + one codegen'd subtract.
     */
   private def residuals(s: SparkSession, d: String): DataFrame = {
-    val assigned = Advanced2.ivfAffinity(s, d)
+    val assigned = Retrieval.ivfAffinity(s, d)
       .filter(col("crank") === 1).select(col("vec_id"), col("c_id"))
     Tables.vectors(s, d).join(assigned, Seq("vec_id"))
       .join(broadcast(cent(s, d)), Seq("c_id"))
@@ -63,7 +63,7 @@ object ResidualPQ {
       Quantizer.subBlocks(residuals(s, d))
         .join(broadcast(resCodebook(s, d)), Seq("b"))
         .select(col("vec_id"), col("b"),
-          (Advanced8.distMicro(col("sv"), col("cv")) * 100 +
+          (Retrieval.distMicro(col("sv"), col("cv")) * 100 +
             col("cid")).as("pk"))
         .groupBy(col("vec_id"), col("b"))
         .agg(min(col("pk")).as("mk"))
@@ -82,7 +82,7 @@ object ResidualPQ {
        |  SELECT e.vec_id, list_transform(range(1, 65), i -> v[i] - centv[i]) AS rv
        |  FROM e JOIN assigned a ON a.vec_id = e.vec_id JOIN cent c ON c.c_id = a.c_id),
        |${Quantizer.pqTrainCtes(8, "res", "rv")},
-       |${Advanced8.pqPkCteSql},
+       |${Retrieval.pqPkCteSql},
        |codes AS (SELECT vec_id, b, CAST(MIN(pk) % 100 AS INTEGER) AS code
        |          FROM pk GROUP BY vec_id, b),
        |qres AS (
@@ -93,7 +93,7 @@ object ResidualPQ {
        |  FROM qres CROSS JOIN (VALUES (0),(1),(2),(3)) bb(b)),
        |dtab AS (
        |  SELECT qid, c_id, b, cid,
-       |    ${Advanced8.distMicroSql("sv", "cv")} AS dm
+       |    ${Retrieval.distMicroSql("sv", "cv")} AS dm
        |  FROM qrsub JOIN ${Quantizer.pqFinal} USING (b)),
        |ad AS (
        |  SELECT x.qid, x.cand, CAST(SUM(d.dm) AS BIGINT) AS adist_micro
@@ -109,7 +109,7 @@ object ResidualPQ {
        |  FROM ad QUALIFY rnk <= 3)
        |SELECT qid, rnk, cand, adist_micro / 1000000.0 AS approx_dist
        |FROM r ORDER BY qid, rnk""".stripMargin) { (s, d) =>
-    val aff = Advanced2.ivfAffinity(s, d)
+    val aff = Retrieval.ivfAffinity(s, d)
     val assigned = aff.filter(col("crank") === 1).select(col("vec_id"), col("c_id"))
     val probes = aff.filter(col("crank") <= 2 && col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("c_id"))
@@ -127,7 +127,7 @@ object ResidualPQ {
     val dtab = Quantizer.subBlocks(qres, Seq("qid", "c_id"))
       .join(broadcast(resCodebook(s, d)), Seq("b"))
       .select(col("qid"), col("c_id"), col("b"), col("cid"),
-        Advanced8.distMicro(col("sv"), col("cv")).as("dm"))
+        Retrieval.distMicro(col("sv"), col("cv")).as("dm"))
     val ad = candp.as("x")
       .join(resCodes(s, d).as("cd"), col("cd.vec_id") === col("x.cand"))
       .join(broadcast(dtab.as("dt")),

@@ -382,7 +382,7 @@ object RetrainFlow {
     * embeddings table, regime-shift batch (every vector re-ingested
     * under the q204 affine drift with shifted ids), [[annCycle]] with a
     * corpus-covering gate shortlist — cached as a 1-row (dir, alarmed,
-    * alarm_ppm, swapped) frame, the [[Advanced20.sharedFixedIndexDir]]
+    * alarm_ppm, swapped) frame, the [[Dedup.sharedFixedIndexDir]]
     * sharing pattern. The v1 index is a [[copyDir]] CLONE of that
     * session-shared fixed-16 layout (round 16 — the r15 verdict's
     * one-shot item): [[AnnIndex.write]] and [[AnnIndex.writeVectors]]
@@ -396,12 +396,12 @@ object RetrainFlow {
     val row = graft.Shared.materialized(s, s"retrain-cycle@$d") {
       val e = graft.Tables.vectors(s, d).localCheckpoint(true)
       val dir = graft.TempDirs.create("graft-rtcycle") + "/ann"
-      linkCloneDir(s, Advanced20.sharedFixedIndexDir(s, d), dir)
+      linkCloneDir(s, Dedup.sharedFixedIndexDir(s, d), dir)
       val batch = e.select((col("vec_id") + 1000000000L).as("vec_id"),
         expr("transform(v, x -> x * 1.5d + 0.25d)").as("v"))
       val probes = e.filter(col("vec_id") < 16)
         .select(col("vec_id").as("qid"), col("v"))
-      val spp = ((2 * e.count() + 15) / 16).toInt
+      val spp = AnnIndex.perListCover(2 * e.count(), 16)
       val r = annCycle(s, dir, e, batch, probes, k = 10, frac = 1.0,
         shortlistPerProbe = spp)
       Seq((dir, r.alarmed, r.alarmPpm, r.swapped))
@@ -427,7 +427,7 @@ object RetrainFlow {
     "q209_retrain_cycle",
     (s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       |${Quantizer.pqTrainCtes(8, "e")},
-      |${Advanced8.pqPkCteSql},
+      |${Retrieval.pqPkCteSql},
       |bmk AS (SELECT vec_id, b, MIN(pk) AS mk FROM pk GROUP BY vec_id, b),
       |bev AS (SELECT vec_id, CAST(SUM(mk // 100) AS BIGINT) AS err FROM bmk GROUP BY vec_id),
       |bp AS (SELECT err AS p95 FROM (
@@ -441,7 +441,7 @@ object RetrainFlow {
       |  FROM bt CROSS JOIN (VALUES (0),(1),(2),(3)) bb(b)),
       |tpk AS (
       |  SELECT s.vec_id, s.b,
-      |    ${Advanced8.distMicroSql("sv", "cv")} * 100 + cid AS pk
+      |    ${Retrieval.distMicroSql("sv", "cv")} * 100 + cid AS pk
       |  FROM tsub s JOIN ${Quantizer.pqFinal} USING (b)),
       |tmk AS (SELECT vec_id, b, MIN(pk) AS mk FROM tpk GROUP BY vec_id, b),
       |tev AS (SELECT vec_id, CAST(SUM(mk // 100) AS BIGINT) AS err FROM tmk GROUP BY vec_id),
@@ -455,7 +455,7 @@ object RetrainFlow {
       |${Quantizer.pqTrainCtes(8, "u", "v", "nw")},
       |npk AS (
       |  SELECT s.vec_id, s.b,
-      |    ${Advanced8.distMicroSql("sv", "cv")} * 100 + cid AS pk
+      |    ${Retrieval.distMicroSql("sv", "cv")} * 100 + cid AS pk
       |  FROM nwsub s JOIN ${Quantizer.pqFinalP("nw")} USING (b)),
       |nmk AS (SELECT vec_id, b, MIN(pk) AS mk FROM npk GROUP BY vec_id, b),
       |nev AS (SELECT vec_id, CAST(SUM(mk // 100) AS BIGINT) AS err FROM nmk GROUP BY vec_id),
@@ -471,7 +471,7 @@ object RetrainFlow {
       |        FROM nbp, ntp),
       |pr AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 16),
       |er AS (SELECT qid, u.vec_id AS cand,
-      |         ${Advanced8.distMicroSql("qv", "u.v")} AS edist_micro
+      |         ${Retrieval.distMicroSql("qv", "u.v")} AS edist_micro
       |       FROM pr, u),
       |top AS (SELECT qid, cand, edist_micro,
       |          CAST(ROW_NUMBER() OVER (PARTITION BY qid
@@ -488,7 +488,7 @@ object RetrainFlow {
       expr("transform(v, x -> x * 1.5d + 0.25d)").as("v")))
     val probes = e.filter(col("vec_id") < 16)
       .select(col("vec_id").as("qid"), col("v"))
-    val spp = ((2 * e.count() + 15) / 16).toInt
+    val spp = AnnIndex.perListCover(2 * e.count(), 16)
     AnnIndex.searchRerank(s, AnnIndex.load(s, dir), store, probes, k = 10,
       frac = 1.0, shortlistPerProbe = spp)
       .withColumn("alarm_ppm", lit(ppm))

@@ -29,7 +29,7 @@ import org.apache.spark.sql.types.DecimalType
   * posting-list-sized, never corpus-sized; df comes from the filtered
   * postings (count per term — postings are unique per (term, doc)), and
   * avgdl from the one-row stats table. The arithmetic is
-  * [[Advanced13]]'s exactly (same idf/saturation columns, same 6-decimal
+  * [[Retrieval]]'s exactly (same idf/saturation columns, same 6-decimal
   * round, same DECIMAL sum), so TextIndexSpec proves saved-index search
   * BIT-IDENTICAL to live q146.
   *
@@ -123,12 +123,10 @@ object TextIndex {
     // invisible to BM25 only if the replay re-writes them, which the
     // marker ensures.
     graft.Jobs.concurrently(docs.sparkSession)(
-      () => stamp(t.groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf")))
-        .withColumn("bkt", bktCol(nB)).transform(Layout.writeByBucket(_, col("bkt")))
-        .write.partitionBy("bkt").mode(mode).parquet(s"$dir/postings"),
-      () => stamp(t.select(col("term"), col("doc_id"), col("pos")))
-        .withColumn("bkt", bktCol(nB)).transform(Layout.writeByBucket(_, col("bkt")))
-        .write.partitionBy("bkt").mode(mode).parquet(s"$dir/positions"))
+      () => Layout.writeBucketed(stamp(t.groupBy(col("term"), col("doc_id"))
+        .agg(count(lit(1)).as("tf"))).withColumn("bkt", bktCol(nB)), "bkt", mode, s"$dir/postings"),
+      () => Layout.writeBucketed(stamp(t.select(col("term"), col("doc_id"), col("pos")))
+        .withColumn("bkt", bktCol(nB)), "bkt", mode, s"$dir/positions"))
     stamp(t.groupBy(col("doc_id")).agg(count(lit(1)).as("dl")))
       .write.mode(mode).parquet(s"$dir/doclens")
   }
@@ -173,7 +171,7 @@ object TextIndex {
   def writeDocs(s: SparkSession, docs: DataFrame, dir: String,
       bucketsOverride: Option[Int] = None): Unit = graft.Reliable.scoped {
     val nB = bucketsOverride.getOrElse(Tombstones.bucketsFor(
-      MetaScalar.scanRowCount(docs).getOrElse(docs.count()), DocsPerBucket))
+      MetaScalar.rows(docs), DocsPerBucket))
     Tombstones.writeMeta(s, dir, nB)
     writeBatch(docs, dir, "overwrite", 0L, nB)
     Tombstones.dropLedger(s, dir)
@@ -254,12 +252,10 @@ object TextIndex {
       // the rewrite restarts epoch history at 0 (no tombstones survive it)
       def ep0(df: DataFrame): DataFrame = df.withColumn("ep", lit(0L))
       // localCheckpoint so each rewrite doesn't race its own input scan
-      graft.Reliable.owned(ep0(live.postings))
-        .transform(Layout.writeByBucket(_, col("bkt")))
-        .write.partitionBy("bkt").mode("overwrite").parquet(s"$dir/postings")
-      graft.Reliable.owned(ep0(live.positions))
-        .transform(Layout.writeByBucket(_, col("bkt")))
-        .write.partitionBy("bkt").mode("overwrite").parquet(s"$dir/positions")
+      Layout.writeBucketed(graft.Reliable.owned(ep0(live.postings)), "bkt", "overwrite",
+        s"$dir/postings")
+      Layout.writeBucketed(graft.Reliable.owned(ep0(live.positions)), "bkt", "overwrite",
+        s"$dir/positions")
       graft.Reliable.owned(ep0(live.doclens))
         .write.mode("overwrite").parquet(s"$dir/doclens")
       Tombstones.dropLedger(s, dir)
@@ -313,7 +309,7 @@ object TextIndex {
       .join(ix.doclens, Seq("doc_id"))
       .crossJoin(broadcast(stats))
       .select(col("doc_id"),
-        round(Advanced13.bmIdf * Advanced13.bmTfNorm, 6).as("sc"))
+        round(Retrieval.bmIdf * Retrieval.bmTfNorm, 6).as("sc"))
       .groupBy(col("doc_id"))
       .agg(sum(col("sc").cast(DecimalType(28, 6))).cast("double").as("bm25"))
       .withColumn("rnk", row_number().over(wk))
@@ -329,7 +325,7 @@ object TextIndex {
     * posting-list sizes, never the corpus. This is q149's 100 TB form.
     */
   def phraseSearch(s: SparkSession, ix: Index, phrase: Seq[String]): DataFrame =
-    Advanced14.phraseHits(
+    Retrieval.phraseHits(
       ix.positions.filter(col("bkt").isin(bucketsOf(s, phrase, ix.buckets): _*)),
       phrase).orderBy(col("doc_id"))
 }

@@ -161,7 +161,7 @@ object Tombstones {
     val p = s"$dir/tombstones"
     epoch.fold(ids)(e => ids.withColumn("te", lit(e)))
       .repartition(1).write.mode("append").parquet(p)
-    MetaScalar.rowCount(s, p).getOrElse(s.read.parquet(p).count()) >= autoCompactAt
+    MetaScalar.rows(MetaScalar.open(s, p)) >= autoCompactAt
   }
 
   /** Drop the ledger — after a `compact` folded it, or before a `write`

@@ -45,7 +45,7 @@ class Advanced10Spec extends SparkSuite {
   }
 
   test("fuzzy join <=2: blocked join equals the naive cross join") {
-    val got = ops.Advanced10.fuzzyJoin2.run(spark, dir).collect()
+    val got = ops.SqlSurface.fuzzyJoin2.run(spark, dir).collect()
       .map(r => (r.getAs[String]("probe"), r.getAs[Long]("c_custkey"),
         r.getAs[Int]("dist"))).toSet
     // naive oracle computed in-test: every (probe, customer) pair
@@ -83,7 +83,7 @@ class Advanced10Spec extends SparkSuite {
         u -> (last8.size.toLong,
           last8.zipWithIndex.map { case ((_, _, c), k) => c * decay(k) }.sum)
       }
-    val got = ops.Advanced10.ewmaEngagement.run(spark, sf0001).collect()
+    val got = ops.SqlSurface.ewmaEngagement.run(spark, sf0001).collect()
       .map(r => r.getAs[Long]("user_id") ->
         (r.getAs[Long]("n_recent"), r.getAs[Long]("ewma_scaled"))).toMap
     assert(got == expected)
@@ -91,7 +91,7 @@ class Advanced10Spec extends SparkSuite {
   }
 
   test("mad outliers: per-type accounting holds and thresholds behave") {
-    val rows = ops.Advanced10.madOutliers.run(spark, sf0001).collect()
+    val rows = ops.SqlSurface.madOutliers.run(spark, sf0001).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Long]("n_outliers") < r.getAs[Long]("n"))
@@ -117,7 +117,7 @@ class Advanced10Spec extends SparkSuite {
   }
 
   test("bpe pairs: only within-token adjacent pairs, counts match a hand tally") {
-    val rows = ops.Advanced10.bpeMergePairs.run(spark, dir).collect()
+    val rows = ops.Tokenization.bpeMergePairs.run(spark, dir).collect()
       .map(r => r.getAs[String]("pair") -> r.getAs[Long]("n"))
     assert(rows.nonEmpty)
     // never a cross-token pair: every pair is 2 chars, no whitespace
@@ -133,7 +133,7 @@ class Advanced10Spec extends SparkSuite {
   }
 
   test("inverted index: postings are capped, sorted, and df-consistent") {
-    val rows = ops.Advanced10.invertedIndex.run(spark, dir).collect()
+    val rows = ops.Retrieval.invertedIndex.run(spark, dir).collect()
     assert(rows.length > 0 && rows.length <= 20)
     rows.foreach { r =>
       val posts = r.getAs[String]("postings").split(",").map(_.toLong)
@@ -147,7 +147,7 @@ class Advanced10Spec extends SparkSuite {
   }
 
   test("sketch overlap tracks exact overlap on known shared content") {
-    val est = ops.Advanced10.sourceOverlapSketch.run(spark, dir).collect()
+    val est = ops.Curation.sourceOverlapSketch.run(spark, dir).collect()
       .map(r => (r.getAs[String]("src_a"), r.getAs[String]("src_b")) ->
         ((r.getAs[Long]("n_shared"),
           r.getAs[Boolean]("a_ok") && r.getAs[Boolean]("b_ok")

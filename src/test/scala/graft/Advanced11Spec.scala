@@ -47,7 +47,7 @@ class Advanced11Spec extends SparkSuite {
 
   test("q130 full moment matrix matches the treeAggregate Gram kernel") {
     val m = PCA.secondMoment(Tables.embeddings(spark, sf0001), "embedding", 64)
-    val rows = ops.Advanced11.fullMoments.run(spark, sf0001).collect()
+    val rows = ops.Retrieval.fullMoments.run(spark, sf0001).collect()
     assert(rows.length == 64 * 65 / 2)
     rows.foreach { r =>
       val (i, j) = (r.getAs[Int]("i"), r.getAs[Int]("j"))
@@ -65,7 +65,7 @@ class Advanced11Spec extends SparkSuite {
       .select(col("doc_id"), col("n_chars")).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_chars")).toMap
     val byCluster = clusters.groupBy(_._2).map { case (rep, ms) => rep -> ms.map(_._1) }
-    val got = ops.Advanced11.clusterKeepBest.run(spark, sf0001).collect()
+    val got = ops.Dedup.clusterKeepBest.run(spark, sf0001).collect()
     assert(got.map(_.getAs[Long]("cluster_rep")).toSet == byCluster.keySet)
     got.foreach { r =>
       val members = byCluster(r.getAs[Long]("cluster_rep"))
@@ -94,7 +94,7 @@ class Advanced11Spec extends SparkSuite {
   }
 
   test("q133 drops within-cluster near-dups only (cluster confinement)") {
-    val got = ops.Advanced11.semdedupPrune.run(spark, semDir).collect()
+    val got = ops.Dedup.semdedupPrune.run(spark, semDir).collect()
       .map(r => r.getAs[Int]("label") ->
         (r.getAs[Long]("n_vecs"), r.getAs[Long]("n_dropped"), r.getAs[Long]("n_kept")))
       .toMap
@@ -107,7 +107,7 @@ class Advanced11Spec extends SparkSuite {
     // fixpoint in rank order — the same semantics the engine's 3-sweep
     // replace chain implements (FunctionLaws proves 3 sweeps reach the
     // fixpoint on this alphabet)
-    def encode(w: String): Seq[String] = SweepBpe.encode(w, ops.Advanced11.BpeMerges)
+    def encode(w: String): Seq[String] = SweepBpe.encode(w, ops.Tokenization.BpeMerges)
     // the table's hierarchy actually fires on real words
     assert(encode("customer") == Seq("c", "u", "st", "o", "mer"))
     assert(encode("spark") == Seq("s", "par", "k"))
@@ -118,7 +118,7 @@ class Advanced11Spec extends SparkSuite {
       id -> (toks.length.toLong, toks.map(encode(_).length.toLong).sum)
     }.toMap
     val chars = docs.map { case (id, toks) => id -> toks.map(_.length.toLong).sum }.toMap
-    val got = ops.Advanced11.bpeEncode.run(spark, sf0001).collect()
+    val got = ops.Tokenization.bpeEncode.run(spark, sf0001).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("n_words"), r.getAs[Long]("n_bpe_tokens"))).toMap
     assert(got == want)
@@ -130,7 +130,7 @@ class Advanced11Spec extends SparkSuite {
 
   test("q139 packs by recomputed BPE counts with the greedy cumsum rule") {
     def encode(w: String): Long =
-      SweepBpe.encode(w, ops.Advanced11.BpeMerges).length.toLong
+      SweepBpe.encode(w, ops.Tokenization.BpeMerges).length.toLong
     val docs = Tables.documents(spark, sf0001)
       .select(col("doc_id"), col("lang"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1),
@@ -144,7 +144,7 @@ class Advanced11Spec extends SparkSuite {
       }.groupBy(_._1).map { case (k, xs) =>
         (k, (xs.size.toLong, xs.map(_._2).sum))
       }
-    val got = ops.Advanced11.bpePacking.run(spark, sf0001).collect()
+    val got = ops.Tokenization.bpePacking.run(spark, sf0001).collect()
       .map(r => (r.getAs[String]("lang"), r.getAs[Long]("pack_id")) ->
         (r.getAs[Long]("n_docs"), r.getAs[Long]("n_bpe_tokens"))).toMap
     assert(got == want)
@@ -157,7 +157,7 @@ class Advanced11Spec extends SparkSuite {
 
   test("q183 fertility matches a pure-Scala recompute and stays >= 1 token/word") {
     def encode(w: String): Long =
-      SweepBpe.encode(w, ops.Advanced11.BpeMerges).length.toLong
+      SweepBpe.encode(w, ops.Tokenization.BpeMerges).length.toLong
     val docs = Tables.documents(spark, sf0001)
       .select(col("doc_id"), col("lang"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getAs[String]("text").split(" ")))
@@ -167,7 +167,7 @@ class Advanced11Spec extends SparkSuite {
       lang -> (ds.length.toLong, words, bpe,
         (2 * bpe * 1000000 + words) / (2 * words))
     }
-    val got = ops.Advanced11.bpeFertility.run(spark, sf0001).collect()
+    val got = ops.Tokenization.bpeFertility.run(spark, sf0001).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toMap
     assert(got == want, s"fertility diverges:\n  got=$got\n  want=$want")
@@ -198,7 +198,7 @@ class Advanced11Spec extends SparkSuite {
       .map { case (k, ds) =>
         k -> (ds.length.toLong, ds.count(_._4.exists(trainSpans)).toLong)
       }
-    val got = ops.Advanced11.splitContamination.run(spark, sf0001).collect()
+    val got = ops.Curation.splitContamination.run(spark, sf0001).collect()
       .map(r => (r.getAs[String]("source"), r.getAs[String]("split")) ->
         (r.getAs[Long]("n_docs"), r.getAs[Long]("n_contaminated")))
       .toMap

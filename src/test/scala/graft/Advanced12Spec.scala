@@ -23,7 +23,7 @@ class Advanced12Spec extends SparkSuite {
   }
 
   test("q136 conserves the budget and redistributes saturated shares") {
-    val rows = ops.Advanced12.tokenBudget.run(spark, skewDir).collect()
+    val rows = ops.Curation.tokenBudget.run(spark, skewDir).collect()
       .map(r => r.getAs[String]("source") ->
         (r.getAs[Long]("n_toks"), r.getAs[Long]("allocated"), r.getAs[Double]("rate")))
       .toMap
@@ -48,7 +48,7 @@ class Advanced12Spec extends SparkSuite {
         pad(ds.sortBy(_._1).map(_._3).toSeq),
         pad(ds.sortBy(d => (d._3, d._1)).map(_._3).toSeq))
     }
-    val got = ops.Advanced12.paddingWaste.run(spark, sf0001).collect()
+    val got = ops.Packing.paddingWaste.run(spark, sf0001).collect()
       .map(r => r.getAs[String]("lang") ->
         (r.getAs[Long]("pad_naive"), r.getAs[Long]("pad_sorted"))).toMap
     assert(got == want)
@@ -68,7 +68,7 @@ class Advanced12Spec extends SparkSuite {
       (i.toLong, Seq.fill(k)("w").mkString(" "), "zz", "s0", k.toLong)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$d/documents.parquet")
-    val r = ops.Advanced12.paddingWaste.run(spark, d).collect().head
+    val r = ops.Packing.paddingWaste.run(spark, d).collect().head
     assert(r.getAs[Long]("pad_naive") == 594L)
     assert(r.getAs[Long]("pad_sorted") == 693L)
     assert(r.getAs[Double]("saving") == -0.167)
@@ -83,7 +83,7 @@ class Advanced12Spec extends SparkSuite {
       val thr = sorted((ds.length + 9) / 10 - 1)
       src -> (ds.length.toLong, thr, ds.count(_._3 > thr).toLong)
     }
-    val got = ops.Advanced12.adaptiveQualityGate.run(spark, sf0001).collect()
+    val got = ops.Curation.adaptiveQualityGate.run(spark, sf0001).collect()
       .map(r => r.getAs[String]("source") ->
         (r.getAs[Long]("n_docs"), r.getAs[Long]("threshold_chars"),
           r.getAs[Long]("n_kept"), r.getAs[Long]("n_dropped")))
@@ -112,7 +112,7 @@ class Advanced12Spec extends SparkSuite {
       (5L, "echo echo echo echo echo echo echo echo", "en", "s0", 40L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     docs.coalesce(1).write.parquet(s"$d/documents.parquet")
-    val got = ops.Advanced12.exactSubstrScrub.run(spark, d).collect()
+    val got = ops.Dedup.exactSubstrScrub.run(spark, d).collect()
       .map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getString(3))).toMap
     // docs 0/1: the boilerplate's 7 tokens are covered by cross-doc

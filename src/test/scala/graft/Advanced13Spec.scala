@@ -13,14 +13,14 @@ class Advanced13Spec extends SparkSuite {
   import spark.implicits._
 
   test("q145 SQ8 codes are bytes and reconstruction error is within half a step") {
-    val codes = ops.Advanced13.sqCodes(spark, sf0001)
+    val codes = ops.Retrieval.sqCodes(spark, sf0001)
     val flat = codes.select(posexplode(col("cv")).as(Seq("i", "c")))
     val bad = flat.filter(col("c") < 0 || col("c") > 255 || col("c") =!= round(col("c")))
     assert(bad.count() == 0, "codes must be integer-valued in [0, 255]")
 
     // decode(c) = mn + c*(mx-mn)/255 must sit within half a quantization
     // step of the original value, per dimension.
-    val params = ops.Advanced13.sqParams(spark, sf0001)
+    val params = ops.Retrieval.sqParams(spark, sf0001)
     val emb = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
     val err = emb.join(codes.select(col("vec_id"), col("cv")), Seq("vec_id"))
@@ -47,7 +47,7 @@ class Advanced13Spec extends SparkSuite {
           .orderBy(col("dist"), col("cand"))))
       .filter(col("rnk") <= 3)
       .select(col("qid"), col("cand")).as[(Long, Long)].collect().toSet
-    val sq = ops.Advanced13.sq8Search.run(spark, sf0001)
+    val sq = ops.Retrieval.sq8Search.run(spark, sf0001)
       .select(col("qid"), col("cand")).as[(Long, Long)].collect().toSet
     val recall = (exact intersect sq).size.toDouble / exact.size
     // 8 bits/dimension is a high-fidelity quantizer: on the isotropic
@@ -70,7 +70,7 @@ class Advanced13Spec extends SparkSuite {
   }
 
   test("q146 BM25 ranks by idf spread, tf saturation, and length norm") {
-    val rows = ops.Advanced13.bm25.run(spark, bmDir).collect()
+    val rows = ops.Retrieval.bm25.run(spark, bmDir).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("bm25")).toMap
     // the lone 'dup' doc wins on idf despite identical tf and length
     assert(rows(0L) > rows.filterKeys(_ != 0L).values.max,

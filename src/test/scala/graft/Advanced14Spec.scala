@@ -12,7 +12,7 @@ class Advanced14Spec extends SparkSuite {
   import spark.implicits._
 
   test("q147 fuses exactly 1/(60+r) per retriever and agrees with q146 ranks") {
-    val rows = ops.Advanced14.hybridRrf.run(spark, sf0001).collect()
+    val rows = ops.Retrieval.hybridRrf.run(spark, sf0001).collect()
     assert(rows.nonEmpty && rows.length <= 10)
     def contrib(r: Any): BigDecimal = r match {
       case null => BigDecimal(0)
@@ -33,7 +33,7 @@ class Advanced14Spec extends SparkSuite {
         (a.getDouble(2) == b.getDouble(2) && a.getLong(1) < b.getLong(1)))
     case _ => }
     // lexical ranks carried in the fusion agree with standalone q146
-    val bmRanks = ops.Advanced13.bm25.run(spark, sf0001).collect()
+    val bmRanks = ops.Retrieval.bm25.run(spark, sf0001).collect()
       .map(r => r.getLong(1) -> r.getInt(0)).toMap
     rows.filter(r => r.get(3) != null && r.getInt(3) <= 10).foreach { r =>
       assert(bmRanks.get(r.getLong(1)).contains(r.getInt(3)),
@@ -57,7 +57,7 @@ class Advanced14Spec extends SparkSuite {
     val toks = docs.select($"doc_id",
       posexplode(split($"text", " ")).as(Seq("pos", "term")))
     def hits(phrase: String*): Map[Long, Long] =
-      ops.Advanced14.phraseHits(toks, phrase).collect()
+      ops.Retrieval.phraseHits(toks, phrase).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(hits("table", "hash") == Map(0L -> 2L, 4L -> 2L))
     assert(hits("a", "a") == Map(1L -> 3L), "overlapping starts all count")
@@ -78,14 +78,14 @@ class Advanced14Spec extends SparkSuite {
       (2L, 97L), (2L, 96L), (2L, 95L),
       (3L, 30L), (3L, 32L), (3L, 94L))
       .toDF("qid", "cand")
-    val got = ops.Advanced14.rankingMetrics(ranking, truth, 3)
+    val got = ops.Retrieval.rankingMetrics(ranking, truth, 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).sortBy(_._1)
     assert(got.sameElements(Seq(
       (1L, 0.5, 0.333333), (2L, 0.0, 0.0), (3L, 1.0, 0.666667))), got.toSeq)
   }
 
   test("q150 on real data: self-excluded SQ8 eval, metrics in range") {
-    val rows = ops.Advanced14.retrievalEval.run(spark, sf0001).collect()
+    val rows = ops.Retrieval.retrievalEval.run(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     assert(rows.map(_._1).toSeq == Seq(0L, 1L, 2L, 3L, 4L))
     rows.foreach { case (qid, rr, rec) =>
@@ -100,7 +100,7 @@ class Advanced14Spec extends SparkSuite {
   }
 
   test("q148 equals an independently-built same-label exact ranking") {
-    val got = ops.Advanced14.filteredAnn.run(spark, sf0001)
+    val got = ops.Retrieval.filteredAnn.run(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     // independent construction: crossJoin then filter (vs the impl's
     // equi-join on label), same semantics, different plan

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Advanced15
+import graft.ops.{Curation, Tokenization}
 import org.apache.spark.sql.functions._
 
 /** Round-9 curation ops: the bigram-LM scorer's signals behave like an
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 class Advanced15Spec extends SparkSuite {
 
   test("q154: every transition score is a valid ppm and docs full of corpus-common transitions outscore word salad") {
-    val out = Advanced15.bigramLmScore.run(spark, sf0001).cache()
+    val out = Tokenization.bigramLmScore.run(spark, sf0001).cache()
     val n = out.count()
     assert(n > 0)
     // ppm bounds: a transition score is a convex mix of two probabilities
@@ -29,7 +29,7 @@ class Advanced15Spec extends SparkSuite {
   }
 
   test("q155: guarded split never leaks, naive split is a strict superset of leakage, and splits partition the corpus") {
-    val out = Advanced15.splitLeakageGuard.run(spark, sf0001).cache()
+    val out = Curation.splitLeakageGuard.run(spark, sf0001).cache()
     val rows = out.collect()
     assert(rows.nonEmpty && rows.length <= 3)
     val guarded = rows.head.getAs[Long]("guarded_leak_pairs")
@@ -43,13 +43,13 @@ class Advanced15Spec extends SparkSuite {
   }
 
   test("q155 determinism: rerunning assigns every document the identical split") {
-    val a = Advanced15.splitLeakageGuard.run(spark, sf0001).collect()
-    val b = Advanced15.splitLeakageGuard.run(spark, sf0001).collect()
+    val a = Curation.splitLeakageGuard.run(spark, sf0001).collect()
+    val b = Curation.splitLeakageGuard.run(spark, sf0001).collect()
     assert(a.toSeq == b.toSeq)
   }
 
   test("q156: temperature sampling flattens the language mix toward n^(1/2) shares") {
-    val out = Advanced15.temperatureMixture.run(spark, sf0001).cache()
+    val out = Curation.temperatureMixture.run(spark, sf0001).cache()
     val rows = out.collect()
     assert(rows.length >= 2)
     // weights are exact integer square roots of the language sizes
@@ -78,7 +78,7 @@ class Advanced15Spec extends SparkSuite {
   }
 
   test("q157: the distilled linear scorer actually learns — accuracy beats the class prior by a wide margin") {
-    val r = Advanced15.linearQualityClassifier.run(spark, sf0001).collect()(0)
+    val r = Curation.linearQualityClassifier.run(spark, sf0001).collect()(0)
     val (tp, fp, tn, fn) = (r.getAs[Long]("tp"), r.getAs[Long]("fp"),
       r.getAs[Long]("tn"), r.getAs[Long]("fn"))
     val n = tp + fp + tn + fn
@@ -96,13 +96,13 @@ class Advanced15Spec extends SparkSuite {
   }
 
   test("q157 determinism: retraining yields identical weights and confusion") {
-    val a = Advanced15.linearQualityClassifier.run(spark, sf0001).collect().toSeq
-    val b = Advanced15.linearQualityClassifier.run(spark, sf0001).collect().toSeq
+    val a = Curation.linearQualityClassifier.run(spark, sf0001).collect().toSeq
+    val b = Curation.linearQualityClassifier.run(spark, sf0001).collect().toSeq
     assert(a == b)
   }
 
   test("q158: sampling follows the learned score — every source keeps roughly mean_score/2 and never more than all") {
-    val rows = Advanced15.qualityWeightedSample.run(spark, sf0001).collect()
+    val rows = Curation.qualityWeightedSample.run(spark, sf0001).collect()
     assert(rows.length >= 2)
     rows.foreach { r =>
       val n = r.getAs[Long]("n_docs"); val k = r.getAs[Long]("n_sampled")
@@ -131,7 +131,7 @@ class Advanced15Spec extends SparkSuite {
         ((1L << 25) - 1) * ((1L << 25) - 1) - 1) filter (_ >= 0)
     val got = probes.toDF("x")
       .select(org.apache.spark.sql.functions.col("x"),
-        Advanced15.isqrt(org.apache.spark.sql.functions.col("x")).as("r"))
+        Curation.isqrt(org.apache.spark.sql.functions.col("x")).as("r"))
       .collect()
     got.foreach { row =>
       val (x, r) = (row.getLong(0), row.getLong(1))

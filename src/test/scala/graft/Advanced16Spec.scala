@@ -32,13 +32,13 @@ class Advanced16Spec extends SparkSuite {
         .take(10).zipWithIndex
         .map { case ((_, c, s), i) => (qid, i + 1, c, s) }
     }.toSet
-    val got = ops.Advanced16.lateInteraction.run(spark, sf0001).collect()
+    val got = ops.Retrieval.lateInteraction.run(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
     assert(got == want, s"MaxSim diverges from reference:\n  extra=${got -- want}\n  missing=${want -- got}")
   }
 
   test("q171 shortlist containment + measured recall floor vs exact full-dim top-5") {
-    val rows = ops.Advanced16.matryoshkaRerank.run(spark, sf0001).collect()
+    val rows = ops.Retrieval.matryoshkaRerank.run(spark, sf0001).collect()
     assert(rows.length == 8 * 5)
     // every re-ranked candidate must genuinely come from the prefix
     // shortlist: its psim must be >= the 40th-best prefix sim per query
@@ -75,7 +75,7 @@ class Advanced16Spec extends SparkSuite {
   }
 
   test("q172 manifest partitions the corpus and is order/partitioning-invariant") {
-    val m = ops.Advanced16.shardManifest.run(spark, sf0001).collect()
+    val m = ops.Packing.shardManifest.run(spark, sf0001).collect()
     assert(m.map(_.getLong(0)).toSeq == (0L until 16L),
       "all 16 shards must be non-empty at sf0.001")
     val docs = Tables.documents(spark, sf0001)
@@ -88,13 +88,13 @@ class Advanced16Spec extends SparkSuite {
     shuffled.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     for (t <- Seq("embeddings")) // loader only touches documents, but keep the dir valid
       Tables.table(spark, sf0001, t).limit(1).write.mode("overwrite").parquet(s"$dir/$t.parquet")
-    val m2 = ops.Advanced16.shardManifest.run(spark, dir).collect()
+    val m2 = ops.Packing.shardManifest.run(spark, dir).collect()
     assert(m.map(_.toSeq).toSeq == m2.map(_.toSeq).toSeq,
       "manifest changed under repartition/reorder")
   }
 
   test("q173 packs to the budget tightly: next-ranked doc would overflow") {
-    val packed = ops.Advanced16.contextPack.run(spark, sf0001).collect()
+    val packed = ops.Packing.contextPack.run(spark, sf0001).collect()
     assert(packed.nonEmpty)
     // re-run the pack with an unbounded budget to recover the full
     // shortlist, then check tightness per query
@@ -109,7 +109,7 @@ class Advanced16Spec extends SparkSuite {
       .withColumn("rnk", row_number().over(wr)).filter($"rnk" <= 20)
     val toks = Tables.documents(spark, sf0001)
       .select($"doc_id", size(split($"text", " ")).cast("long").as("n_toks"))
-    val full = ops.Advanced16.packContext(short, toks, Int.MaxValue)
+    val full = ops.Packing.packContext(short, toks, Int.MaxValue)
       .select($"qid", $"rnk", $"cum_toks").collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
     packed.groupBy(_.getLong(0)).foreach { case (qid, qr) =>
@@ -125,7 +125,7 @@ class Advanced16Spec extends SparkSuite {
   }
 
   test("q178 served MaxSim scores match the driver reference and rank correctly") {
-    val got = ops.Advanced16.scaledMaxSim.run(spark, sf0001).collect()
+    val got = ops.Retrieval.scaledMaxSim.run(spark, sf0001).collect()
     assert(got.length == 5 * 3, s"5 queries x top-3, got ${got.length}")
     val vecs = Tables.embeddings(spark, sf0001)
       .select($"vec_id", $"embedding".cast("array<double>"))
@@ -155,7 +155,7 @@ class Advanced16Spec extends SparkSuite {
   }
 
   test("q174 NDCG identities: idcg is the closed-form constant, dcg <= idcg, ndcg in (0,1]") {
-    val rows = ops.Advanced16.ndcgEval.run(spark, sf0001).collect()
+    val rows = ops.Retrieval.ndcgEval.run(spark, sf0001).collect()
     assert(rows.length == 8)
     // idcg = sum_{r=1..5} round((6-r)/log2(r+1), 6) — a data-independent
     // constant while the full ranking always yields 5 truth rows

@@ -36,7 +36,7 @@ class Advanced17Spec extends SparkSuite {
         mx1 * 1.0 / tot1 <= 0.20 && mx2 * 1.0 / tot2 <= 0.20 &&
           dup3 * 1.0 / tot3 <= 0.30)
     }.toSet
-    val got = ops.Advanced17.repetitionRules.run(spark, sf0001).collect()
+    val got = ops.Curation.repetitionRules.run(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3),
         r.getDouble(4), r.getBoolean(5))).toSet
     assert(got == want,
@@ -49,7 +49,7 @@ class Advanced17Spec extends SparkSuite {
       (1L, "x y x y x y"),                     // top tok 3/6, top bigram 3/5, dup tri 4/4
       (2L, (1 to 30).map(i => s"t$i").mkString(" "))) // fully diverse: passes
       .toDF("doc_id", "text")
-    val got = ops.Advanced17.repetitionProfile(docs).collect()
+    val got = ops.Curation.repetitionProfile(docs).collect()
       .map(r => r.getLong(0) -> r).toMap
     assert(got(0L).getLong(1) == 3 && got(0L).getLong(2) == 5)   // mx1/tot1
     assert(got(0L).getLong(3) == 2 && got(0L).getLong(4) == 4)   // mx2/tot2
@@ -73,7 +73,7 @@ class Advanced17Spec extends SparkSuite {
         .take(3).zipWithIndex
         .map { case ((t, tf, dfc, s), i) => (id, i + 1, t, tf.toLong, dfc.toLong, s) }
     }.toSet
-    val got = ops.Advanced17.tfIdf.run(spark, sf0001).collect()
+    val got = ops.Tokenization.tfIdf.run(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3),
         r.getLong(4), r.getDouble(5))).toSet
     assert(got == want,
@@ -81,7 +81,7 @@ class Advanced17Spec extends SparkSuite {
     // identity: a term present in EVERY doc has idf = ln(1) = exactly 0
     val docs = Seq((0L, "common alpha"), (1L, "common beta"), (2L, "common common gamma"))
       .toDF("doc_id", "text")
-    val scores = ops.Advanced17.tfIdfKeywords(docs, 3).collect()
+    val scores = ops.Tokenization.tfIdfKeywords(docs, 3).collect()
       .map(r => (r.getString(2), r.getDouble(5)))
     assert(scores.filter(_._1 == "common").forall(_._2 == 0.0),
       "ubiquitous term must score exactly 0")
@@ -92,20 +92,20 @@ class Advanced17Spec extends SparkSuite {
     // sizes 64..1 over 4 shards: each even+odd pass pair contributes the
     // same total to every shard, so all four sums are exactly equal
     val toks = (1L to 64L).map(i => (i, 65L - i)).toDF("doc_id", "n_toks")
-    val sums = ops.Advanced17.snakeShards(toks, 4)
+    val sums = ops.Packing.snakeShards(toks, 4)
       .groupBy($"shard").agg(sum($"n_toks").as("s")).collect()
       .map(r => r.getLong(1)).toSet
     assert(sums == Set(520L), s"snake must balance 1..64 exactly, got $sums")
     // determinism: assignment is a pure function of (n_toks, doc_id)
-    val a = ops.Advanced17.snakeShards(toks, 4)
+    val a = ops.Packing.snakeShards(toks, 4)
       .select($"doc_id", $"shard").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    val b = ops.Advanced17.snakeShards(toks.repartition(7), 4)
+    val b = ops.Packing.snakeShards(toks.repartition(7), 4)
       .select($"doc_id", $"shard").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(a == b, "shard assignment changed under repartition")
   }
 
   test("q177 beats hash sharding's token spread on the real corpus") {
-    val rows = ops.Advanced17.balancedShards.run(spark, sf0001).collect()
+    val rows = ops.Packing.balancedShards.run(spark, sf0001).collect()
     assert(rows.map(_.getInt(0)).toSeq == (0 until 16))
     val docs = Tables.documents(spark, sf0001)
     assert(rows.map(_.getLong(1)).sum == docs.count(), "shards partition the corpus")

@@ -23,7 +23,7 @@ class Advanced18Spec extends SparkSuite {
         (id, i, i * 48, chunk.length, md5hex(chunk.mkString(" ")))
       }
     }.toSet
-    val got = ops.Advanced18.chunking.run(spark, sf0001).collect()
+    val got = ops.Packing.chunking.run(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getString(4))).toSet
     assert(got == want,
       s"chunking diverges:\n  extra=${(got -- want).take(5)}\n  missing=${(want -- got).take(5)}")
@@ -37,7 +37,7 @@ class Advanced18Spec extends SparkSuite {
       (3L, (1 to 160).map(i => s"t$i").mkString(" ")),
       (4L, "solo"))
       .toDF("doc_id", "text")
-    val got = ops.Advanced18.chunkDocs(docs, 64, 48).collect()
+    val got = ops.Packing.chunkDocs(docs, 64, 48).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .groupBy(_._1)
     assert(got(1L).length == 1 && got(1L).head._4 == 64)
@@ -52,7 +52,7 @@ class Advanced18Spec extends SparkSuite {
   }
 
   test("q180 packing conserves tokens, fills every non-tail sequence exactly, splits correctly") {
-    val rows = ops.Advanced18.sequencePack.run(spark, sf0001).collect()
+    val rows = ops.Packing.sequencePack.run(spark, sf0001).collect()
     val seqIds = rows.map(_.getLong(0))
     assert(seqIds.toSeq == seqIds.min.to(seqIds.max), "sequence ids are dense")
     val total = Tables.documents(spark, sf0001)
@@ -64,7 +64,7 @@ class Advanced18Spec extends SparkSuite {
     assert(rows.last.getLong(2) <= 128)
     // a doc fragment count law: sum over seqs of n_split_docs counts each
     // boundary-crossing doc once per sequence it only partially fills
-    val frags = ops.Advanced18.packSequences(
+    val frags = ops.Packing.packSequences(
       Tables.documents(spark, sf0001)
         .select($"doc_id", size(split($"text", " ")).cast("long").as("n_toks")), 128)
     val byDoc = frags.groupBy($"doc_id")
@@ -74,7 +74,7 @@ class Advanced18Spec extends SparkSuite {
   }
 
   test("q181 curriculum bins quartile the LM scores monotonically and match a driver NTILE") {
-    val rows = ops.Advanced18.curriculumBins.run(spark, sf0001).collect()
+    val rows = ops.Curation.curriculumBins.run(spark, sf0001).collect()
     val sizes = rows.groupBy(_.getInt(3)).view.mapValues(_.length).toMap
     assert(sizes.keySet == Set(1, 2, 3, 4))
     assert(sizes.values.max - sizes.values.min <= 1, s"ntile sizes must differ by <=1: $sizes")
@@ -83,7 +83,7 @@ class Advanced18Spec extends SparkSuite {
       assert(byBin(b).min >= byBin(b + 1).max,
         s"bin $b must not score below bin ${b + 1}")
     // replay SQL NTILE on the driver over the q154 scores
-    val scored = ops.Advanced15.bigramLmScore.run(spark, sf0001)
+    val scored = ops.Tokenization.bigramLmScore.run(spark, sf0001)
       .select($"doc_id", $"mean_ppm").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val n = scored.length
@@ -106,11 +106,11 @@ class Advanced18Spec extends SparkSuite {
       (src, unis.length.toLong, unis.distinct.length.toLong,
         bis.length.toLong, bis.distinct.length.toLong)
     }.toSet
-    val got = ops.Advanced18.ngramDiversity.run(spark, sf0001).collect()
+    val got = ops.Tokenization.ngramDiversity.run(spark, sf0001).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(4), r.getLong(5))).toSet
     assert(got == want, s"diversity diverges:\n  extra=${got -- want}\n  missing=${want -- got}")
     // ratio identities
-    ops.Advanced18.ngramDiversity.run(spark, sf0001).collect().foreach { r =>
+    ops.Tokenization.ngramDiversity.run(spark, sf0001).collect().foreach { r =>
       assert(r.getDouble(3) > 0 && r.getDouble(3) <= 1.0)
       assert(r.getDouble(6) >= r.getDouble(3),
         "bigrams are near-unique on diverse text: distinct2 >= distinct1 here")
@@ -131,7 +131,7 @@ class Advanced18Spec extends SparkSuite {
       case (h, occ) if occ.map(_._1).distinct.length > 1 =>
         (h, occ.length.toLong, occ.map(_._1).distinct.length.toLong, occ.map(_._1).min)
     }.toSet
-    val got = ops.Advanced18.boilerplateSpans.run(spark, sf0001).collect()
+    val got = ops.Dedup.boilerplateSpans.run(spark, sf0001).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(got == want,
       s"boilerplate diverges:\n  extra=${(got -- want).take(3)}\n  missing=${(want -- got).take(3)}")
@@ -141,7 +141,7 @@ class Advanced18Spec extends SparkSuite {
 
   test("q180 hand-built packing: spans and splits land where arithmetic says") {
     val toks = Seq((0L, 100L), (1L, 50L), (2L, 6L), (3L, 100L)).toDF("doc_id", "n_toks")
-    val frags = ops.Advanced18.packSequences(toks, 128).collect()
+    val frags = ops.Packing.packSequences(toks, 128).collect()
       .map(r => (r.getLong(0), r.getLong(4), r.getLong(5))) // doc, seq_id, contrib
       .toSet
     // doc0 [0,100) -> seq0:100; doc1 [100,150) -> seq0:28, seq1:22;

@@ -22,7 +22,7 @@ class Advanced19Spec extends SparkSuite {
       (src, ds.length.toLong, kept.length.toLong, (ds.length - kept.length).toLong,
         kept.map(_._3).sum, kept.last._1)
     }.toSet
-    val got = ops.Advanced19.sourceCaps.run(spark, sf0001).collect()
+    val got = ops.Curation.sourceCaps.run(spark, sf0001).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getString(5))).toSet
     assert(got == want,
@@ -55,7 +55,7 @@ class Advanced19Spec extends SparkSuite {
     val want = rec.map { case (src, n, d, rep, eff) =>
       (src, n, d, rep, eff, (2L * eff * 1000000L + tot) / (2L * tot))
     }.toSet
-    val got = ops.Advanced19.epochRecipe.run(spark, sf0001).collect()
+    val got = ops.Curation.epochRecipe.run(spark, sf0001).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3),
         r.getLong(4), r.getLong(5))).toSet
     assert(got == want,

@@ -11,7 +11,7 @@ class Advanced20Spec extends SparkSuite {
   import spark.implicits._
 
   test("q188 admits a prefix of the score ranking and stops exactly at the budget") {
-    val rows = ops.Advanced20.budgetSelection.run(spark, sf0001).collect()
+    val rows = ops.Curation.budgetSelection.run(spark, sf0001).collect()
     assert(rows.nonEmpty)
     val cums = rows.map(_.getLong(3))
     // inclusive running sums are strictly increasing and within budget
@@ -52,7 +52,7 @@ class Advanced20Spec extends SparkSuite {
       def at(p: Long) = sorted(((p * n + 99) / 100 - 1).toInt)
       (src, n, at(50), at(90), at(99))
     }.toSet
-    val got = ops.Advanced20.lengthPercentiles.run(spark, sf0001).collect()
+    val got = ops.Curation.lengthPercentiles.run(spark, sf0001).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .toSet
     assert(got == want)
@@ -63,7 +63,7 @@ class Advanced20Spec extends SparkSuite {
   }
 
   test("q190 matrix is canonical and consistent with the q32 candidate report") {
-    val matrix = ops.Advanced20.crossSourceDups.run(spark, sf0001).collect()
+    val matrix = ops.Dedup.crossSourceDups.run(spark, sf0001).collect()
       .map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
     matrix.keys.foreach { case (a, b) => assert(a <= b, s"($a,$b) not canonical") }
     // recount from q32's pair-level report joined to sources
@@ -89,14 +89,14 @@ class Advanced20Spec extends SparkSuite {
         cum += c
         (i + 1L, t, c, cum, (2 * cum * 1000000L + tot) / (2 * tot))
     }.toSet
-    val got = ops.Advanced20.vocabCoverage.run(spark, sf0001).collect()
+    val got = ops.Tokenization.vocabCoverage.run(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(got.toSet == want)
     assert(got.last._4 == tot && got.last._5 == 1000000L)
   }
 
   test("q193 degree histogram conserves pair endpoints and matches a q32 recount") {
-    val rows = ops.Advanced20.dupDegrees.run(spark, sf0001).collect()
+    val rows = ops.Dedup.dupDegrees.run(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val pairs = ops.TextOps.minhashLsh.run(spark, sf0001).collect()
       .filter(_.getDouble(2) >= 0.5).map(r => (r.getLong(0), r.getLong(1)))
@@ -110,7 +110,7 @@ class Advanced20Spec extends SparkSuite {
   }
 
   test("q194 per-source fill: every source within budget, next-ranked doc overflows") {
-    val byRow = ops.Advanced20.sourceBudgetFill.run(spark, sf0001).collect()
+    val byRow = ops.Curation.sourceBudgetFill.run(spark, sf0001).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
     assert(byRow.nonEmpty)
     byRow.values.foreach { case (_, toks, _) => assert(toks <= 2000) }
@@ -132,13 +132,13 @@ class Advanced20Spec extends SparkSuite {
   }
 
   test("q195 sweep matches the materialized q180 packing at every swept length") {
-    val sweep = ops.Advanced20.packingSweep.run(spark, sf0001).collect()
+    val sweep = ops.Packing.packingSweep.run(spark, sf0001).collect()
       .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
         r.getLong(5), r.getLong(6))).toMap
     val toks = Tables.documents(spark, sf0001)
       .select($"doc_id", size(split($"text", " ")).cast("long").as("n_toks"))
     for (len <- Seq(64, 128, 256)) {
-      val frags = ops.Advanced18.packSequences(toks, len)
+      val frags = ops.Packing.packSequences(toks, len)
         .select($"doc_id", $"seq_id", $"contrib", $"n_toks").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       val (nDocs, nSeqs, nFrags, nCross, nCrossDocs, tailFill) = sweep(len)
@@ -160,14 +160,14 @@ class Advanced20Spec extends SparkSuite {
     val sorted = lens.sortBy(t => (t._2, t._1)).map(_._2)
     val n = sorted.length.toLong
     def at(p: Long) = sorted(((p * n + 99) / 100 - 1).toInt)
-    val r = ops.Advanced20.globalPercentiles.run(spark, sf0001).collect()
+    val r = ops.Curation.globalPercentiles.run(spark, sf0001).collect()
     assert(r.length == 1)
     assert((r(0).getLong(0), r(0).getLong(1), r(0).getLong(2), r(0).getLong(3)) ==
       (n, at(50), at(90), at(99)))
   }
 
   test("q199 semantic dedup: every flagged vector is dominated by its reported lower-id partner") {
-    val rows = ops.Advanced20.semanticDedup.run(spark, sf0001).collect()
+    val rows = ops.Dedup.semanticDedup.run(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3), r.getLong(4)))
     assert(rows.nonEmpty)
     val vecs = Tables.embeddings(spark, sf0001)

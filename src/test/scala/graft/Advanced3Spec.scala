@@ -31,14 +31,14 @@ class Advanced3Spec extends SparkSuite {
   }
 
   test("boilerplate: repeated-bigram doc is 'boiler', varied doc is 'clean'") {
-    val bands = ops.Advanced3.boilerplate.run(spark, dir).collect()
+    val bands = ops.Dedup.boilerplate.run(spark, dir).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("band")).toMap
     assert(bands(0L) == "boiler")
     assert(bands(1L) == "clean")
   }
 
   test("lsh verify: exact-dup pair is confirmed with true jaccard 1.0") {
-    val rows = ops.Advanced3.lshVerify.run(spark, dir).collect()
+    val rows = ops.Dedup.lshVerify.run(spark, dir).collect()
     val pair = rows.find(r => r.getAs[Long]("da") == 2L && r.getAs[Long]("db") == 3L)
     assert(pair.isDefined, s"expected candidate (2,3) in ${rows.toSeq}")
     assert(pair.get.getAs[Double]("jaccard") == 1.0)
@@ -46,7 +46,7 @@ class Advanced3Spec extends SparkSuite {
   }
 
   test("corpus purge drops exactly one of the duplicate pair, keeps the rest") {
-    val byLang = ops.Advanced3.corpusPurge.run(spark, dir).collect()
+    val byLang = ops.Dedup.corpusPurge.run(spark, dir).collect()
       .map(r => r.getAs[String]("lang") ->
         (r.getAs[Long]("n_docs"), r.getAs[Long]("n_dropped"), r.getAs[Long]("n_kept"))).toMap
     assert(byLang("en") == ((4L, 1L, 3L)), s"en counts: ${byLang("en")}")
@@ -54,7 +54,7 @@ class Advanced3Spec extends SparkSuite {
   }
 
   test("embedding centroids: per-label elementwise mean in long format") {
-    val c = ops.Advanced3.embeddingCentroids.run(spark, dir).collect()
+    val c = ops.Retrieval.embeddingCentroids.run(spark, dir).collect()
       .map(r => (r.getAs[Int]("label"), r.getAs[Int]("pos")) -> r.getAs[Double]("centroid_v"))
       .toMap
     assert(c((0, 0)) == 2.0 && c((0, 1)) == 1.0 && c((0, 2)) == 2.0)
@@ -62,7 +62,7 @@ class Advanced3Spec extends SparkSuite {
   }
 
   test("grouping sets: three lattices present and grand total reconciles") {
-    val rows = ops.Advanced3.groupingSets.run(spark, sf0001).collect()
+    val rows = ops.SqlSurface.groupingSets.run(spark, sf0001).collect()
     val byGid = rows.groupBy(_.getAs[Int]("gid"))
     assert(byGid.keySet == Set(1, 2, 3), s"gids: ${byGid.keySet}")
     val grand = byGid(3).head.getAs[Long]("n_orders")
@@ -71,7 +71,7 @@ class Advanced3Spec extends SparkSuite {
   }
 
   test("string agg csv is sorted and stable under repartitioning") {
-    val r = ops.Advanced3.stringAgg.run(spark, sf0001).collect()
+    val r = ops.SqlSurface.stringAgg.run(spark, sf0001).collect()
     r.foreach { row =>
       val parts = row.getAs[String]("nations_csv").split(",").toSeq
       assert(parts == parts.sorted, s"unsorted csv for ${row.getAs[String]("r_name")}")
@@ -80,7 +80,7 @@ class Advanced3Spec extends SparkSuite {
   }
 
   test("subqueries: per-nation counts reconcile with the customer table") {
-    val rows = ops.Advanced3.subqueries.run(spark, sf0001).collect()
+    val rows = ops.SqlSurface.subqueries.run(spark, sf0001).collect()
     val total = spark.read.parquet(s"$sf0001/customer.parquet").count()
     assert(rows.map(_.getAs[Long]("n_customers")).sum == total)
     rows.foreach { r =>
@@ -90,7 +90,7 @@ class Advanced3Spec extends SparkSuite {
   }
 
   test("window ranks: dense_rank bounded, percent_rank/cume_dist in [0,1]") {
-    val rows = ops.Advanced3.windowRanks.run(spark, sf0001).collect()
+    val rows = ops.SqlSurface.windowRanks.run(spark, sf0001).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Int]("d_rank") >= 1 && r.getAs[Int]("d_rank") <= 3)

@@ -32,7 +32,7 @@ class Advanced4Spec extends SparkSuite {
   }
 
   test("q77: banded pairs == brute-force pairs (exactness, not approximation)") {
-    val banded = ops.Advanced4.simhashNeardup.run(spark, dir).collect()
+    val banded = ops.Dedup.simhashNeardup.run(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     // The exact dup (0,1) must appear at hamming 0; doc 4 (disjoint vocab)
     // must never pair with 0/1/2 under hamming <= 1.
@@ -42,7 +42,7 @@ class Advanced4Spec extends SparkSuite {
   }
 
   test("q77 exactness on real data: banding finds every brute-force pair (sf0.001)") {
-    val banded = ops.Advanced4.simhashNeardup.run(spark, sf0001).collect()
+    val banded = ops.Dedup.simhashNeardup.run(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exhaustive = brute(sf0001)
     assert(exhaustive == banded, {
@@ -53,7 +53,7 @@ class Advanced4Spec extends SparkSuite {
 
   /** Brute-force hamming<=1 pairs from the same 60-bit signatures. */
   private def brute(d: String): Set[(Long, Long)] = {
-    val sigs = ops.Advanced4.simhash60(Tables.documents(spark, d))
+    val sigs = ops.Dedup.simhash60(Tables.documents(spark, d))
     val s = sigs.as("a").join(sigs.as("b"), col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id"), col("b.doc_id"),
         expr("CAST(bit_count(a.simhash ^ b.simhash) AS INT)").as("h"))
@@ -62,21 +62,21 @@ class Advanced4Spec extends SparkSuite {
   }
 
   test("q78: heavy token repetition is flagged, diverse text is not") {
-    val r = ops.Advanced4.repetitionQuality.run(spark, dir).collect()
+    val r = ops.Curation.repetitionQuality.run(spark, dir).collect()
       .map(x => x.getAs[Long]("doc_id") -> x.getAs[String]("verdict")).toMap
     assert(r(3L) == "repetitive") // 'spark' is 7/8 of the tokens
     assert(r(0L) == "ok")         // all-distinct tokens
   }
 
   test("q79: the dominant bigram ranks first for its language") {
-    val r = ops.Advanced4.bigramStats.run(spark, dir).collect()
+    val r = ops.Tokenization.bigramStats.run(spark, dir).collect()
     val enTop = r.filter(x => x.getAs[String]("lang") == "en" && x.getAs[Int]("rnk") == 1).head
     assert(enTop.getAs[String]("bigram") == "spark spark") // 6 occurrences in doc 3
     assert(enTop.getAs[Long]("cnt") == 6L)
   }
 
   test("q80: k-means separates the two crafted clusters") {
-    val r = ops.Advanced4.kmeansLloyd.run(spark, dir).collect()
+    val r = ops.Retrieval.kmeansLloyd.run(spark, dir).collect()
     assert(r.map(_.getAs[Long]("n_members")).sum == 12L)
     assert(r.forall(_.getAs[Double]("inertia") >= 0.0))
     // Two well-separated clusters: no final centroid can hold members of
@@ -88,7 +88,7 @@ class Advanced4Spec extends SparkSuite {
   }
 
   test("q81: buckets are balanced within segment and ordered by value") {
-    val r = ops.Advanced4.quantileBuckets.run(spark, sf0001).collect()
+    val r = ops.SqlSurface.quantileBuckets.run(spark, sf0001).collect()
     val bySeg = r.groupBy(_.getAs[String]("c_mktsegment"))
     bySeg.foreach { case (seg, rows) =>
       val ns = rows.map(_.getAs[Long]("n"))

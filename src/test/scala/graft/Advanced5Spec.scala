@@ -45,20 +45,20 @@ class Advanced5Spec extends SparkSuite {
   }
 
   test("q84: navigation picks first/second/last by total (date, orderkey) order") {
-    val c1 = ops.Advanced5.windowNavigation.run(spark, dir)
+    val c1 = ops.SqlSurface.windowNavigation.run(spark, dir)
       .filter(col("o_custkey") === 1L).collect().head
     // Customer 1 order history sorted: (01-01,102,10), (01-01,103,20), (01-02,101,50)
     assert((c1.getLong(1), c1.getDouble(2), c1.getDouble(3), c1.getDouble(4))
       == ((3L, 10.0, 20.0, 50.0)))
     // Customer 2: one order — second_price is null → skipped via getDouble?
-    val c2 = ops.Advanced5.windowNavigation.run(spark, dir)
+    val c2 = ops.SqlSurface.windowNavigation.run(spark, dir)
       .filter(col("o_custkey") === 2L).collect().head
     assert(c2.getLong(1) == 1L && c2.getDouble(2) == 99.0 && c2.isNullAt(3)
       && c2.getDouble(4) == 99.0)
   }
 
   test("q85: map lookup returns 0 (not an ANSI error) for absent status keys") {
-    val rows = ops.Advanced5.mapFunctions.run(spark, dir).collect()
+    val rows = ops.SqlSurface.mapFunctions.run(spark, dir).collect()
       .map(r => r.getString(0) -> ((r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap
     // AUTO: orders 102,103,201 open + 101 finished; no pending anywhere.
@@ -68,7 +68,7 @@ class Advanced5Spec extends SparkSuite {
   }
 
   test("q86: set algebra uses distinct semantics and exact half-split") {
-    val rows = ops.Advanced5.arraySetOps.run(spark, dir).collect()
+    val rows = ops.SqlSurface.arraySetOps.run(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4),
         r.getInt(5), r.getDouble(6)))).toMap
     assert(rows(0L) == ((4, 4, 2, 6, 2, 0.3333)))
@@ -77,7 +77,7 @@ class Advanced5Spec extends SparkSuite {
   }
 
   test("q87: split is exhaustive, deterministic across reruns, and ~90/5/5") {
-    val out = ops.Advanced5.datasetSplit.run(spark, sf0001)
+    val out = ops.Curation.datasetSplit.run(spark, sf0001)
     val counts = out.groupBy(col("split")).agg(sum(col("n_docs")).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val total = counts.values.sum
@@ -86,12 +86,12 @@ class Advanced5Spec extends SparkSuite {
     assert(counts("train") > counts.getOrElse("val", 0L))
     assert(counts("train") > counts.getOrElse("test", 0L))
     // Determinism: a rerun (fresh plan) lands every doc identically.
-    val again = ops.Advanced5.datasetSplit.run(spark, sf0001).collect().toSeq
+    val again = ops.Curation.datasetSplit.run(spark, sf0001).collect().toSeq
     assert(again == out.collect().toSeq)
   }
 
   test("q88: balance ties break by custkey; negatives order correctly") {
-    val rows = ops.Advanced5.argMinMax.run(spark, dir).collect()
+    val rows = ops.SqlSurface.argMinMax.run(spark, dir).collect()
       .map(r => r.getString(0) -> ((r.getString(1), r.getDouble(2), r.getString(3),
         r.getDouble(4)))).toMap
     // AUTO: 500.0 tie between custkey 1 and 2 → max_by takes custkey 2;

@@ -36,7 +36,7 @@ class Advanced6Spec extends SparkSuite {
   }
 
   test("q89: melt places each stat in its (segment, stat) cell") {
-    val rows = ops.Advanced6.unpivotStats.run(spark, dir).collect()
+    val rows = ops.SqlSurface.unpivotStats.run(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
     assert(rows(("AUTO", "min_price")) == 10.0)
     assert(rows(("AUTO", "max_price")) == 30.0)
@@ -46,7 +46,7 @@ class Advanced6Spec extends SparkSuite {
   }
 
   test("q90: bloom prefilter drops the fingerprint dup, keeps the new doc") {
-    val kept = ops.Advanced6.bloomPrefilter.run(spark, dir).collect().map(_.getLong(0)).toSet
+    val kept = ops.Dedup.bloomPrefilter.run(spark, dir).collect().map(_.getLong(0)).toSet
     assert(kept == Set(401L), s"got $kept")
   }
 
@@ -61,7 +61,7 @@ class Advanced6Spec extends SparkSuite {
       .filter(!BloomFilters.mightContain(bloom, col("fp"))).count()
     assert(misses == 0L)
     // the bloom-path result must equal the plain anti-join exactly
-    val viaBloom = ops.Advanced6.bloomPrefilter.run(spark, sf0001)
+    val viaBloom = ops.Dedup.bloomPrefilter.run(spark, sf0001)
       .collect().map(_.getLong(0)).toSeq
     val plain = Tables.documents(spark, sf0001)
       .select(col("doc_id"), array_join(slice(split(col("text"), " "), 1, 4), " ").as("fp"))
@@ -72,7 +72,7 @@ class Advanced6Spec extends SparkSuite {
   }
 
   test("q91: full-rate sources keep everything; reduced rates actually prune") {
-    val rows = ops.Advanced6.sourceMixture.run(spark, sf0001).collect()
+    val rows = ops.Curation.sourceMixture.run(spark, sf0001).collect()
       .map(r => r.getString(0) -> ((r.getDouble(1), r.getLong(2), r.getLong(3)))).toMap
     rows.foreach { case (src, (rate, before, after)) =>
       assert(after <= before, s"$src gained docs")

@@ -27,7 +27,7 @@ class Advanced7Spec extends SparkSuite {
   }
 
   test("q92: ISO weekday, leap-month last_day, translate/lpad shapes") {
-    val r = ops.Advanced7.calendarStrings.run(spark, dir).collect().head
+    val r = ops.SqlSurface.calendarStrings.run(spark, dir).collect().head
     val byName = r.schema.fieldNames.zipWithIndex.toMap
     assert(r.getInt(byName("iso_dow")) == 7) // Sunday
     assert(r.getDate(byName("month_end")).toString == "2024-02-29")
@@ -38,7 +38,7 @@ class Advanced7Spec extends SparkSuite {
   }
 
   test("q93: matchless doc keeps a (null, null) row; positions are 0-based") {
-    val rows = ops.Advanced7.explodeOuter.run(spark, dir).collect()
+    val rows = ops.SqlSurface.explodeOuter.run(spark, dir).collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getInt(1)),
         Option(r.getString(2))))
     assert(rows.contains((0L, None, None)), s"outer row missing: ${rows.toSeq}")

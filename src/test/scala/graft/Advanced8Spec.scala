@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Advanced8
+import graft.ops.{Curation, Retrieval, SqlSurface}
 import org.apache.spark.sql.functions._
 
 /** Semantic properties of the round-4 batch (the oracle hash-checks the
@@ -10,7 +10,7 @@ class Advanced8Spec extends SparkSuite {
   import spark.implicits._
 
   test("q98 SCD2: versions are dense per customer and intervals chain") {
-    val iv = Advanced8.scd2Intervals.run(spark, sf0001).cache()
+    val iv = SqlSurface.scd2Intervals.run(spark, sf0001).cache()
     // versions 1..n per customer with exactly one open interval (eff_to null)
     val perCust = iv.groupBy($"o_custkey")
       .agg(count(lit(1)).as("n"), max($"version").as("maxv"),
@@ -30,7 +30,7 @@ class Advanced8Spec extends SparkSuite {
   }
 
   test("q99 windowed dedup: kept + dropped reconciles with raw event counts") {
-    val dd = Advanced8.windowDedup.run(spark, sf0001)
+    val dd = SqlSurface.windowDedup.run(spark, sf0001)
     val raw = Tables.events(spark, sf0001)
       .groupBy($"user_id", $"event_type").agg(count(lit(1)).as("n_raw"))
     val j = dd.join(raw, Seq("user_id", "event_type"))
@@ -39,7 +39,7 @@ class Advanced8Spec extends SparkSuite {
   }
 
   test("q100 forward-fill: every missing value after the first observation fills") {
-    val ff = Advanced8.forwardFill.run(spark, sf0001)
+    val ff = SqlSurface.forwardFill.run(spark, sf0001)
     // unfillable rows are exactly the error-events preceding a user's first
     // measurement; sanity: fills never exceed misses, and some fills happen
     val agg = ff.agg(sum($"n_missing").as("miss"), sum($"n_filled").as("fill"))
@@ -48,7 +48,7 @@ class Advanced8Spec extends SparkSuite {
   }
 
   test("q101 reweighting: factors are inversely ordered by source size") {
-    val rw = Advanced8.mixtureReweight.run(spark, sf0001).collect()
+    val rw = Curation.mixtureReweight.run(spark, sf0001).collect()
     val bySize = rw.sortBy(_.getAs[Long]("toks"))
     val factors = bySize.map(_.getAs[Double]("repeat_factor"))
     assert(factors.zip(factors.tail).forall { case (a, b) => a >= b },
@@ -57,7 +57,7 @@ class Advanced8Spec extends SparkSuite {
 
   test("q109 ADC search: recall@3 vs the exact L2 top-3 is non-degenerate") {
     import graft.functions.{DotProduct, VectorFunctions}
-    val adc = Advanced8.pqAdcSearch.run(spark, sf0001)
+    val adc = Retrieval.pqAdcSearch.run(spark, sf0001)
       .select($"qid", $"cand").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
     val e = Tables.embeddings(spark, sf0001)
@@ -81,7 +81,7 @@ class Advanced8Spec extends SparkSuite {
 
   test("q140 IVF+ADC: candidates confined to probed lists; recall vs exact") {
     import graft.functions.{CosineSim, DotProduct, VectorFunctions}
-    val res = Advanced8.ivfAdcSearch.run(spark, sf0001)
+    val res = Retrieval.ivfAdcSearch.run(spark, sf0001)
       .select($"qid", $"cand").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
     val e = Tables.embeddings(spark, sf0001)
@@ -143,7 +143,7 @@ class Advanced8Spec extends SparkSuite {
     // re-rank) must repair ADC's in-shortlist ranking errors and land at
     // the probe ceiling: every true neighbor inside a probed list that
     // ADC shortlists is recovered exactly.
-    val rr = Advanced8.ivfAdcRerank.run(spark, sf0001)
+    val rr = Retrieval.ivfAdcRerank.run(spark, sf0001)
       .select($"qid", $"cand").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
     val rerank = exact.map { case (qid, ex) =>
@@ -171,7 +171,7 @@ class Advanced8Spec extends SparkSuite {
   }
 
   test("q110 blocked fuzzy join equals the naive cross join") {
-    val blocked = Advanced8.fuzzyJoin.run(spark, sf0001)
+    val blocked = SqlSurface.fuzzyJoin.run(spark, sf0001)
     val cust = Tables.customer(spark, sf0001).select($"c_custkey", $"c_name")
     val probes = cust.filter(pmod($"c_custkey", lit(97)) === 0)
       .select(concat(substring($"c_name", 1, 1), substring($"c_name", 3, 1000)).as("probe"))
@@ -185,7 +185,7 @@ class Advanced8Spec extends SparkSuite {
   }
 
   test("q105 winsorize: mean stays within the clip bounds") {
-    val w = Advanced8.winsorize.run(spark, sf0001)
+    val w = SqlSurface.winsorize.run(spark, sf0001)
     assert(w.filter($"winsor_mean" < $"lo" || $"winsor_mean" > $"hi").isEmpty)
     assert(w.filter($"n_lo" + $"n_hi" > $"n").isEmpty)
   }

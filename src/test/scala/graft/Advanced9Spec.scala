@@ -35,7 +35,7 @@ class Advanced9Spec extends SparkSuite {
   }
 
   test("token commonness: all-singleton doc has rarest_freq 1 and mean 1.0") {
-    val rows = ops.Advanced9.tokenCommonness.run(spark, dir).collect()
+    val rows = ops.Tokenization.tokenCommonness.run(spark, dir).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("rarest_freq"), r.getAs[Double]("mean_tok_freq"))).toMap
     assert(rows(3L) == (1L, 1.0))
@@ -43,7 +43,7 @@ class Advanced9Spec extends SparkSuite {
   }
 
   test("pagerank: candidate graph nodes get positive, symmetric ranks") {
-    val rows = ops.Advanced9.pagerank.run(spark, dir).collect()
+    val rows = ops.Dedup.pagerank.run(spark, dir).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("degree"), r.getAs[Double]("pagerank"))).toMap
     // docs 0, 1, 4 form a 3-clique (dup pair + superset) -> a regular
@@ -52,7 +52,7 @@ class Advanced9Spec extends SparkSuite {
   }
 
   test("pmi collocations: 'new york' is the only bigram with support >= 5") {
-    val rows = ops.Advanced9.pmiCollocations.run(spark, dir).collect()
+    val rows = ops.Tokenization.pmiCollocations.run(spark, dir).collect()
     assert(rows.length == 1)
     assert(rows.head.getAs[String]("gr") == "new york")
     assert(rows.head.getAs[Long]("nxy") == 8L)
@@ -60,7 +60,7 @@ class Advanced9Spec extends SparkSuite {
   }
 
   test("embedding moments: hand-computed second moments match") {
-    val m = ops.Advanced9.embeddingMoments.run(spark, dir).collect()
+    val m = ops.Retrieval.embeddingMoments.run(spark, dir).collect()
       .map(r => (r.getAs[Int]("i"), r.getAs[Int]("j")) -> r.getAs[Double]("m2")).toMap
     assert(m.size == 36)
     assert(m((0, 0)) == 5.0) // (1 + 9) / 2
@@ -72,7 +72,7 @@ class Advanced9Spec extends SparkSuite {
   }
 
   test("dup spans: exact dup 100%, superset 7/8, unique doc 0%") {
-    val pct = ops.Advanced9.dupSpanFraction.run(spark, dir).collect()
+    val pct = ops.Dedup.dupSpanFraction.run(spark, dir).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("dup_pct")).toMap
     assert(pct(0L) == 100.0)
     assert(pct(1L) == 100.0)
@@ -81,7 +81,7 @@ class Advanced9Spec extends SparkSuite {
   }
 
   test("oov rate: singleton-token doc is 100% OOV, base doc has 2 OOV tokens") {
-    val rows = ops.Advanced9.oovRate.run(spark, dir).collect()
+    val rows = ops.Tokenization.oovRate.run(spark, dir).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("n_oov"), r.getAs[Double]("oov_pct"))).toMap
     assert(rows(3L) == (3L, 100.0))
@@ -91,7 +91,7 @@ class Advanced9Spec extends SparkSuite {
   }
 
   test("containment: exact dup pair has cont 1.0 both ways; superset pair is asymmetric") {
-    val rows = ops.Advanced9.containment.run(spark, dir).collect()
+    val rows = ops.Dedup.containment.run(spark, dir).collect()
       .map(r => (r.getAs[Long]("da"), r.getAs[Long]("db")) ->
         (r.getAs[Double]("cont_a"), r.getAs[Double]("cont_b")))
     val m = rows.toMap
@@ -126,7 +126,7 @@ class Advanced9Spec extends SparkSuite {
   }
 
   test("dataset card: hand-computed per-source stats") {
-    val m = ops.Advanced9.datasetCard.run(spark, dir).collect()
+    val m = ops.Curation.datasetCard.run(spark, dir).collect()
       .map(r => r.getAs[String]("source") -> r).toMap
     val misc1 = m("misc1") // docs 0 (57), 2 (58), 4 (68)
     assert(misc1.getAs[Long]("n_docs") == 3L)
@@ -139,7 +139,7 @@ class Advanced9Spec extends SparkSuite {
   }
 
   test("ks drift: disjoint length distributions give KS = 1.0 on the two largest sources") {
-    val r = ops.Advanced9.ksDrift.run(spark, dir).collect()
+    val r = ops.Curation.ksDrift.run(spark, dir).collect()
     assert(r.length == 1)
     assert(r.head.getAs[String]("src_a") == "ksa")
     assert(r.head.getAs[String]("src_b") == "ksb")
@@ -150,14 +150,14 @@ class Advanced9Spec extends SparkSuite {
   test("ksBetween: decimal-exact stat; an empty side yields 0.0, not null") {
     val a = Seq(1L, 2L, 3L, 4L).toDF("n_chars")
     val b = Seq(3L, 4L, 5L, 6L).toDF("n_chars")
-    val r = ops.Advanced9.ksBetween(a, b, "n_chars").collect().head
+    val r = ops.Curation.ksBetween(a, b, "n_chars").collect().head
     assert((r.getAs[Long]("n_a"), r.getAs[Long]("n_b")) == ((4L, 4L)))
     assert(r.getAs[Double]("ks_stat") == 0.5) // D = max|ECDF diff| = 2/4
     // one side empty: D is vacuously 0 and the stat must be a real 0.0
     // (a null here NPEs CorpusPipeline's run-report getAs[Double])
-    val e1 = ops.Advanced9.ksBetween(a.limit(0), b, "n_chars").collect().head
+    val e1 = ops.Curation.ksBetween(a.limit(0), b, "n_chars").collect().head
     assert((e1.getAs[Long]("n_a"), e1.getAs[Double]("ks_stat")) == ((0L, 0.0)))
-    val e2 = ops.Advanced9.ksBetween(a.limit(0), b.limit(0), "n_chars").collect().head
+    val e2 = ops.Curation.ksBetween(a.limit(0), b.limit(0), "n_chars").collect().head
     assert((e2.getAs[Long]("n_b"), e2.getAs[Double]("ks_stat")) == ((0L, 0.0)))
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.DotProduct
-import graft.ops.{Advanced8, AnnIndex}
+import graft.ops.{AnnIndex, Retrieval}
 import org.apache.spark.sql.functions._
 
 /** The index-build / search-job separation (round 6): the trained
@@ -23,7 +23,7 @@ class AnnIndexSpec extends SparkSuite {
         excludeSelf = true)
       .orderBy($"qid", $"rnk")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-    val want = Advanced8.ivfAdcSearch.run(spark, sf0001)
+    val want = Retrieval.ivfAdcSearch.run(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     assert(got.nonEmpty && got.sameElements(want),
       s"index search diverged from live path:\n got ${got.toSeq}\nwant ${want.toSeq}")

@@ -77,8 +77,8 @@ class AqeSkewSpec extends SparkSuite {
       s.sparkContext.setJobGroup(group, "AQE skew rehearsal")
       assert(ops.DedupClusters.dedupClusters.run(s, skewDir).count() >= 300,
         "hot template cluster missing")
-      assert(ops.Advanced8.sourceOverlap.run(s, skewDir).count() > 0)
-      assert(ops.Advanced9.dupSpanFraction.run(s, skewDir).count() > 0)
+      assert(ops.Curation.sourceOverlap.run(s, skewDir).count() > 0)
+      assert(ops.Dedup.dupSpanFraction.run(s, skewDir).count() > 0)
       s.sparkContext.clearJobGroup()
       // Drain (round-6 advice fix — the old "recs.size stable for 4
       // polls" heuristic could under-collect on a slow bus): the bus is

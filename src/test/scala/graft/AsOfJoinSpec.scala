@@ -38,14 +38,14 @@ class AsOfJoinSpec extends SparkSuite {
   }
 
   test("native as-of output is identical to the union-marker q43 (sf0.001)") {
-    val native = ops.Advanced.nativeAsof.run(spark, sf0001).collect().toSeq
-    val marker = ops.Advanced.asofJoin.run(spark, sf0001).collect().toSeq
+    val native = ops.SqlSurface.nativeAsof.run(spark, sf0001).collect().toSeq
+    val marker = ops.SqlSurface.asofJoin.run(spark, sf0001).collect().toSeq
     assert(native == marker,
       s"diverged: ${native.diff(marker).take(3)} vs ${marker.diff(native).take(3)}")
   }
 
   test("plan: AsOfJoin exec, per-side exchanges, no SMJ/cartesian fallback") {
-    val p = ops.Advanced.nativeAsof.run(spark, sf0001)
+    val p = ops.SqlSurface.nativeAsof.run(spark, sf0001)
       .queryExecution.executedPlan.toString
     assert(p.contains("AsOfJoin"), p.take(2000))
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"), p.take(2000))

@@ -4,7 +4,7 @@ import graft.functions.BpeTrainer
 import org.apache.spark.sql.functions._
 
 /** Single-machine reference implementation of the engine's SWEEP merge
-  * semantics (see `Advanced11.mergeSweeps`' scaladoc): one pass merges
+  * semantics (see `Tokenization.mergeSweeps`' scaladoc): one pass merges
   * leftmost-non-overlapping occurrences WITH boundary consumption — a
   * merge bars the immediately following pair from starting a match in
   * the same pass (its leading sentinel was consumed by the replacement);
@@ -178,8 +178,8 @@ class BpeTrainerSpec extends SparkSuite {
   test("q135's applied table is what training on its corpus produces") {
     val trained = BpeTrainer.train(
       Tables.documents(spark, "/root/testdata/sf0.01"), "text", 10)
-    assert(trained == ops.Advanced11.BpeMerges,
-      s"q135 applies ${ops.Advanced11.BpeMerges} but training its corpus " +
+    assert(trained == ops.Tokenization.BpeMerges,
+      s"q135 applies ${ops.Tokenization.BpeMerges} but training its corpus " +
         s"produces $trained — update BpeMerges to the trained table")
   }
 

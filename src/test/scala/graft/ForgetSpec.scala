@@ -82,7 +82,7 @@ class ForgetSpec extends SparkSuite {
     val ixDel = TextIndex.load(spark, tixDir)
     val got = TextIndex.search(spark, ixDel, Seq("dup", "vector", "spark"), 10)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
-    val want = ops.Advanced13.bm25.run(spark, cdir)
+    val want = ops.Retrieval.bm25.run(spark, cdir)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     assert(got.nonEmpty && got.sameElements(want),
       s"post-delete search != complement rebuild:\n got ${got.toSeq}\nwant ${want.toSeq}")

@@ -87,11 +87,11 @@ class FunctionLawsSpec extends SparkSuite {
     def sweep(s: String, a: String, b: String): String =
       s.replace(s" $a $b ", s" ${a + b} ")
     def threeSweeps(w: String): String =
-      ops.Advanced11.BpeMerges.foldLeft(" " + w.map(_.toString).mkString(" ") + " ") {
+      ops.Tokenization.BpeMerges.foldLeft(" " + w.map(_.toString).mkString(" ") + " ") {
         case (s, (a, b)) => sweep(sweep(sweep(s, a, b), a, b), a, b)
       }
     def fixpoint(w: String): String =
-      ops.Advanced11.BpeMerges.foldLeft(" " + w.map(_.toString).mkString(" ") + " ") {
+      ops.Tokenization.BpeMerges.foldLeft(" " + w.map(_.toString).mkString(" ") + " ") {
         case (s, (a, b)) =>
           Iterator.iterate(s)(sweep(_, a, b)).sliding(2)
             .collectFirst { case Seq(x, y) if x == y => x }.get

@@ -35,7 +35,7 @@ class LayoutSpec extends SparkSuite {
   }
 
   test("every 4096-key z-block confines both dimensions to a 64-wide quadrant") {
-    val rows = ops.Advanced20.zorderKey.run(spark, sf0001).collect()
+    val rows = ops.SqlSurface.zorderKey.run(spark, sf0001).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getLong(3) - r.getLong(2) <= 63, s"x span in zbucket ${r.getLong(0)}")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Advanced15, LmModel}
+import graft.ops.{LmModel, Tokenization}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -19,7 +19,7 @@ class LmModelSpec extends SparkSuite {
   }
 
   test("saved-model scoreBatch is bit-identical to live q154 on the training corpus") {
-    val live = Advanced15.bigramLmScore.run(spark, sf0001)
+    val live = Tokenization.bigramLmScore.run(spark, sf0001)
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     val served = LmModel.scoreBatch(spark, dir, Tables.documents(spark, sf0001))
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
@@ -68,7 +68,7 @@ class LmModelSpec extends SparkSuite {
 
   test("q159 (live incremental scoring) is bit-identical to a persisted write + scoreBatch roundtrip") {
     val docs = Tables.documents(spark, sf0001)
-    val live = Advanced15.incrementalLmScore.run(spark, sf0001).collect().toSeq
+    val live = Tokenization.incrementalLmScore.run(spark, sf0001).collect().toSeq
     val d2 = Files.createTempDirectory("graft_lm_rt").toString
     LmModel.write(spark, docs.filter(col("doc_id") < 400), d2)
     val served = LmModel.scoreBatch(spark, d2, docs.filter(col("doc_id") >= 400))

@@ -65,20 +65,25 @@ class MetaScalarSpec extends SparkSuite {
       .write.mode("append").parquet(s"$dir/flat")
     assert(MetaScalar.rowCount(spark, s"$dir/flat") ===
       Some(spark.read.parquet(s"$dir/flat").count()))
-    // scanRowCount: the same count for a bare scan of the dir; None for
-    // any plan beyond the scan (a filter, a folded tombstone ledger)
+    // rows: the same count for a bare scan of the dir, read from the
+    // footers with no Spark job; a count() job for any plan beyond the
+    // scan (a filter, a folded tombstone ledger)
     val scan = spark.read.parquet(s"$dir/flat")
-    assert(MetaScalar.scanRowCount(scan) === Some(scan.count()))
-    assert(MetaScalar.scanRowCount(scan.filter(col("doc_id") > 2)).isEmpty)
-    assert(MetaScalar.scanRowCount(
-      scan.join(Seq(2L).toDF("doc_id"), Seq("doc_id"), "left_anti")).isEmpty)
+    val (bare, bareJobs) = jobsDuring(MetaScalar.rows(scan))
+    assert(bare === scan.count() && bareJobs === 0)
+    val filtered = scan.filter(col("doc_id") > 2)
+    val (kept, keptJobs) = jobsDuring(MetaScalar.rows(filtered))
+    assert(kept === filtered.count() && keptJobs > 0)
+    val folded = scan.join(Seq(2L).toDF("doc_id"), Seq("doc_id"), "left_anti")
+    assert(MetaScalar.rows(folded) === folded.count())
     // empty-but-existing dir shape is not written by this repo; absent → None
     assert(MetaScalar.rowCount(spark, s"$dir/absent").isEmpty)
     // partitioned layout (subdirectories) → None, caller falls back
     Seq((1L, 0), (2L, 1)).toDF("doc_id", "bkt")
       .write.partitionBy("bkt").mode("overwrite").parquet(s"$dir/part")
     assert(MetaScalar.rowCount(spark, s"$dir/part").isEmpty)
-    assert(MetaScalar.scanRowCount(spark.read.parquet(s"$dir/part")).isEmpty)
+    val (parted, partJobs) = jobsDuring(MetaScalar.rows(spark.read.parquet(s"$dir/part")))
+    assert(parted === 2L && partJobs > 0)
   }
 
   test("rowCount skips hidden files, as Spark's reader does") {

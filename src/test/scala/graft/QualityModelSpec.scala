@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Advanced15, QualityModel}
+import graft.ops.{Curation, QualityModel}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -28,7 +28,7 @@ class QualityModelSpec extends SparkSuite {
         count(when(col("keep"), 1)).as("n_sampled"))
       .orderBy(col("source"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    val live = Advanced15.qualityWeightedSample.run(spark, sf0001)
+    val live = Curation.qualityWeightedSample.run(spark, sf0001)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(served.nonEmpty && served.sameElements(live),
       s"persisted funnel diverged:\n got ${served.toSeq}\nwant ${live.toSeq}")

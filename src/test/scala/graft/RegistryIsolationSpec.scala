@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Advanced13, AnnIndex, ResidualPQ, VectorSearch}
+import graft.ops.{AnnIndex, ResidualPQ, Retrieval, VectorSearch}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** Library calls build graft kernels as Catalyst expressions directly and
@@ -23,7 +23,7 @@ class RegistryIsolationSpec extends SparkSuite {
       VectorSearch.annBruteForce.run(spark, sf0001),
       AnnIndex.search(spark, ix, queries, nprobe = 2, k = 3).orderBy($"qid", $"rnk"),
       ResidualPQ.ivfPqResidual.run(spark, sf0001),
-      Advanced13.sq8Search.run(spark, sf0001)
+      Retrieval.sq8Search.run(spark, sf0001)
     ).map(_.collect().toSeq)
 
     val before = calls()

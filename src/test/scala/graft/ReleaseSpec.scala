@@ -34,7 +34,7 @@ class ReleaseSpec extends SparkSuite {
     v2.write.parquet(s"$cdir/documents.parquet")
     val got = TextIndex.search(spark, ix, Seq("dup", "vector", "spark"), 10)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
-    val want = ops.Advanced13.bm25.run(spark, cdir)
+    val want = ops.Retrieval.bm25.run(spark, cdir)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     assert(got.nonEmpty && got.sameElements(want),
       s"upgraded index != fresh v2 build:\n got ${got.toSeq}\nwant ${want.toSeq}")

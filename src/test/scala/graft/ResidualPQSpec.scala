@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{DotProduct, VecSub}
-import graft.ops.{Advanced8, ResidualPQ}
+import graft.ops.{ResidualPQ, Retrieval}
 import org.apache.spark.sql.functions._
 
 /** The point of residual encoding (q144, round 6): residuals against
@@ -26,7 +26,7 @@ class ResidualPQSpec extends SparkSuite {
 
   test("residual codes quantize with materially less error than raw-vector codes") {
     // raw-vector PQ error: q108's per-vector err column (micro-units / 1e6)
-    val rawErr = Advanced8.pqEncode.run(spark, sf0001)
+    val rawErr = Retrieval.pqEncode.run(spark, sf0001)
       .agg(sum($"err")).head().getDouble(0)
     // residual PQ error: the shared code table's per-block err_micro
     val resErr = ResidualPQ.resCodes(spark, sf0001)
@@ -99,7 +99,7 @@ class ResidualPQSpec extends SparkSuite {
       .select($"qid", $"cand").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
     // raw-code ADC results (q140) on the same probes/codes budget
-    val raw = Advanced8.ivfAdcSearch.run(spark, sf0001)
+    val raw = Retrieval.ivfAdcSearch.run(spark, sf0001)
       .select($"qid", $"cand").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
     def recall(m: Map[Long, Set[Long]]): Double = {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{AnnIndex, Advanced20, LshGuard}
+import graft.ops.{AnnIndex, Dedup, LshGuard}
 
 /** Hot-cluster guard evidence for the SEMANTIC sweep family (round-14
   * verdict item 1): `dominatedBy` — the kernel shared by q199/q200/q202
@@ -30,7 +30,7 @@ class SemanticGuardSpec extends SparkSuite {
   }
 
   test("degenerate cluster: pair volume bounded by cap(cap-1)/2, dedup inside the cap intact") {
-    val rows = Advanced20.dominatedBy(identicalCluster(3000), 0.4, cap = 64)
+    val rows = Dedup.dominatedBy(identicalCluster(3000), 0.4, cap = 64)
       .orderBy($"vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getLong(4)))
     // only the 64 retained members sweep: 63 dominated rows, and inside
@@ -60,7 +60,7 @@ class SemanticGuardSpec extends SparkSuite {
   }
 
   test("without the cap the same fixture goes quadratic (fixture honesty)") {
-    val rows = Advanced20.dominatedBy(identicalCluster(400), 0.4, cap = Int.MaxValue)
+    val rows = Dedup.dominatedBy(identicalCluster(400), 0.4, cap = Int.MaxValue)
       .collect()
     assert(rows.map(_.getLong(2)).sum == 400L * 399 / 2,
       "uncapped degenerate cluster must produce the full quadratic pair set")
@@ -69,10 +69,10 @@ class SemanticGuardSpec extends SparkSuite {
   test("default cap is non-binding on real testdata (oracle-protecting)") {
     val e = Tables.embeddings(spark, sf0001).select($"vec_id",
       graft.functions.VectorFunctions.asDouble($"embedding").as("v"))
-    val assigned = Advanced20.assignCosine(e,
+    val assigned = Dedup.assignCosine(e,
       ops.Quantizer.ivfCentroids(spark, sf0001)).localCheckpoint(true)
-    val capped = Advanced20.dominatedBy(assigned, 0.4)
-    val uncapped = Advanced20.dominatedBy(assigned, 0.4, cap = Int.MaxValue)
+    val capped = Dedup.dominatedBy(assigned, 0.4)
+    val uncapped = Dedup.dominatedBy(assigned, 0.4, cap = Int.MaxValue)
     assert(capped.exceptAll(uncapped).isEmpty && uncapped.exceptAll(capped).isEmpty,
       "default cap changed results on the test corpus")
   }
@@ -88,7 +88,7 @@ class SemanticGuardSpec extends SparkSuite {
     AnnIndex.writeVectors(spark, corpus, dir)
     // intake batch: 5 more copies of u — semantic dups of the hot cluster
     val batch = (1000 until 1005).map(i => (i.toLong, u.toSeq)).toDF("vec_id", "v")
-    val out = Advanced20.semanticDedupBatch(spark, dir, batch, corpus,
+    val out = Dedup.semanticDedupBatch(spark, dir, batch, corpus,
       tau = 0.4, cap = 16).collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getDouble(3)))
     // every batch copy is caught (exact-dup detection inside the cap),

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Advanced20, AnnIndex}
+import graft.ops.{AnnIndex, Dedup}
 import java.nio.file.Files
 
 /** The round-13 semantic-dedup serve tier, spec-pinned (round-14 verdict
@@ -29,7 +29,7 @@ class SemanticServeSpec extends SparkSuite {
       val batchIds = Tables.embeddings(spark, sf)
         .filter($"vec_id" % 10 === 7)
         .select($"vec_id").collect().map(_.getLong(0)).toSet
-      val flagged = Advanced20.semanticDedupIntake.run(spark, sf)
+      val flagged = Dedup.semanticDedupIntake.run(spark, sf)
         .collect().map(_.getLong(0)).toSet
       assert(flagged.nonEmpty,
         s"$sf: the REJECTED branch no longer fires — the regenerated corpus has " +
@@ -49,7 +49,7 @@ class SemanticServeSpec extends SparkSuite {
     val ix = Files.createTempDirectory("graft-semserve-ix").toString
     AnnIndex.writeVectors(spark, vecs.toDF("vec_id", "v"), ix)
     def sweep(): List[(Long, Long, Long)] =
-      Advanced20.semanticDedupFromIndex(spark, d, ix, tau = 0.95)
+      Dedup.semanticDedupFromIndex(spark, d, ix, tau = 0.95)
         .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(4))).toList
     assert(sweep() == List((50L, 1L, 0L), (51L, 2L, 0L)),
       "fresh index: both copies dominated by the original")
@@ -69,7 +69,7 @@ class SemanticServeSpec extends SparkSuite {
     val novel = spread(31, 1)(0)._2
     val batch = Seq((1000L, corpus(3)._2), (1001L, novel)).toDF("vec_id", "v")
     def gate(): Array[(Long, Long, Double, Long)] =
-      Advanced20.semanticDedupBatch(spark, ix, batch, corpusDf, tau = 0.95)
+      Dedup.semanticDedupBatch(spark, ix, batch, corpusDf, tau = 0.95)
         .collect().map(r => (r.getLong(0), r.getLong(2), r.getDouble(3), r.getLong(4)))
     val out = gate()
     assert(out.length == 1 && out(0)._1 == 1000L,

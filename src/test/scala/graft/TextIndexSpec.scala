@@ -20,7 +20,7 @@ class TextIndexSpec extends SparkSuite {
     val ix = TextIndex.load(spark, dir)
     val got = TextIndex.search(spark, ix, terms, 10)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
-    val want = ops.Advanced13.bm25.run(spark, sf0001)
+    val want = ops.Retrieval.bm25.run(spark, sf0001)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     assert(got.nonEmpty && got.sameElements(want),
       s"index search diverged from live path:\n got ${got.toSeq}\nwant ${want.toSeq}")
@@ -45,7 +45,7 @@ class TextIndexSpec extends SparkSuite {
       .write.parquet(s"$cdir/documents.parquet")
     val got = TextIndex.search(spark, ix2, terms, 10)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
-    val want = ops.Advanced13.bm25.run(spark, cdir)
+    val want = ops.Retrieval.bm25.run(spark, cdir)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     assert(got.sameElements(want),
       s"post-append search diverged from union rebuild:\n got ${got.toSeq}\nwant ${want.toSeq}")
@@ -61,7 +61,7 @@ class TextIndexSpec extends SparkSuite {
     val ix = TextIndex.load(spark, dir)
     val hits = TextIndex.phraseSearch(spark, ix, Seq("table", "hash"))
     val got = hits.collect().map(r => (r.getLong(0), r.getLong(1)))
-    val want = ops.Advanced14.phraseSearch.run(spark, sf0001)
+    val want = ops.Retrieval.phraseSearch.run(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.nonEmpty && got.sameElements(want),
       s"indexed phrase search diverged:\n got ${got.toSeq}\nwant ${want.toSeq}")
@@ -157,7 +157,7 @@ class TextIndexSpec extends SparkSuite {
       .write.parquet(s"$cdir/documents.parquet")
     val got = TextIndex.search(spark, TextIndex.load(spark, dir), terms, 10)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
-    val want = ops.Advanced13.bm25.run(spark, cdir)
+    val want = ops.Retrieval.bm25.run(spark, cdir)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     assert(got.nonEmpty && got.sameElements(want),
       s"streamed index diverged from union rebuild:\n got ${got.toSeq}\nwant ${want.toSeq}")
@@ -214,7 +214,7 @@ class TextIndexSpec extends SparkSuite {
       .unionByName(revised).write.parquet(s"$cdir/documents.parquet")
     val got = TextIndex.search(spark, ix, terms, 10)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
-    val want = ops.Advanced13.bm25.run(spark, cdir)
+    val want = ops.Retrieval.bm25.run(spark, cdir)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     assert(got.nonEmpty && got.sameElements(want),
       s"epoch re-append diverged from rebuild:\n got ${got.toSeq}\nwant ${want.toSeq}")
@@ -258,7 +258,7 @@ class TextIndexSpec extends SparkSuite {
       .write.parquet(s"$cdir/documents.parquet")
     val got = TextIndex.search(spark, ix, terms, 10)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
-    val want = ops.Advanced13.bm25.run(spark, cdir)
+    val want = ops.Retrieval.bm25.run(spark, cdir)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     assert(got.sameElements(want),
       s"healed index diverged from union rebuild:\n got ${got.toSeq}\nwant ${want.toSeq}")
