@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.SparkSession
 
 /** How a call launches its Spark jobs.
   *
@@ -77,20 +76,4 @@ object Jobs {
         pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
       }
     }
-
-  /** The distinct rows of a small-cardinality frame (bucket ids, list
-    * ids) on the driver, without the exchange `distinct().collect()`
-    * plans: duplicates are removed per partition, then again on the
-    * driver, so the driver receives at most (distinct rows × partitions)
-    * rows. A frame that is already driver-local (a projection of a
-    * local relation) is collected without launching a job. Row order is
-    * unspecified.
-    */
-  def distinctRows(df: DataFrame): Seq[Row] = {
-    val rows = df.queryExecution.optimizedPlan match {
-      case _: LocalRelation => df.collect()
-      case _ => df.mapPartitions(_.toSet.iterator)(Encoders.row(df.schema)).collect()
-    }
-    rows.toSeq.distinct
-  }
 }

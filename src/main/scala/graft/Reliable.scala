@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** Lineage truncation for ITERATIVE operators (connected components,
   * PageRank, BPE training), with a resilience escape hatch.
@@ -22,7 +22,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * It is also the one owner of a call's intermediate checkpoints:
   * [[owned]] registers them with the innermost [[scoped]] block, which
-  * [[release]]s them when the block exits.
+  * [[release]]s them when the block exits. [[ownedObserving]] is its
+  * companion for a call that also needs a small summary of the frame
+  * (the partition ids a later read prunes to): the summary is observed
+  * in the checkpoint's own job, so it costs no second job.
   */
 object Reliable {
 
@@ -180,6 +183,27 @@ object Reliable {
     */
   def owned(df: DataFrame): DataFrame =
     adopt(atCallerSite(df.sparkSession)(df.localCheckpoint(true)))
+
+  /** [[owned]], plus `metrics` (aggregate columns, as for
+    * `Dataset.observe`) evaluated over `df`'s rows in the checkpoint's
+    * own eager job — no second job over the frame the call has just
+    * materialized. Returns the checkpoint and the one observed row, in
+    * `metrics` order. An empty frame observes the aggregates' empty
+    * values (an empty `collect_set`, a null `max`). The row is read off
+    * the checkpointed plan's own metrics as soon as the checkpoint
+    * returns, not through an `Observation`, whose `future` completes
+    * only when the listener bus delivers the query's end event
+    * (`Observation.getRow` is not public either).
+    */
+  def ownedObserving(df: DataFrame, metric: Column, metrics: Column*): (DataFrame, Row) = {
+    val name = s"graft.observed#${observations.incrementAndGet()}"
+    val observed = df.observe(name, metric, metrics: _*)
+    val ck = owned(observed)
+    (ck, observed.queryExecution.observedMetrics(name))
+  }
+
+  // observation names must be unique within one plan
+  private val observations = new java.util.concurrent.atomic.AtomicLong()
 
   /** Run `body` with the SparkContext call site set to the first stack
     * frame outside this object and the pass-through helpers that own on

@@ -352,6 +352,39 @@ object AnnIndex {
     load(s, dir)
   }
 
+  /** The probe front of [[search]]: each query's `nprobe` nearest lists
+    * by cosine (the affinity recipe), as probes(qid, c_id). Factored with
+    * [[candidatesOf]] so the exact-cover fast path in [[searchRerank]]
+    * reuses the IDENTICAL candidate semantics (probe rule,
+    * self-exclusion, allow-list, DISTINCT) without paying the ADC stage.
+    */
+  private[ops] def probesOf(ix: Index, queries: DataFrame, nprobe: Int): DataFrame = {
+    val cent = ix.centroids.select(col("cid").as("c_id"), col("cv"))
+    val wAff = Window.partitionBy(col("qid")).orderBy(col("ca").desc, col("c_id"))
+    queries.crossJoin(broadcast(cent))
+      .select(col("qid"), col("c_id"),
+        round(CosineSim.cosine(col("v"), col("cv")), 6).as("ca"))
+      .withColumn("crank", row_number().over(wAff))
+      .filter(col("crank") <= nprobe)
+      .select(col("qid"), col("c_id"))
+  }
+
+  /** The candidates of `probes(qid, c_id)`: every live member of a probed
+    * list, minus the query itself under `excludeSelf`, confined to
+    * `allowed`, as DISTINCT candp(qid, cand).
+    */
+  private def candidatesOf(ix: Index, probes: DataFrame, excludeSelf: Boolean,
+      allowed: Option[DataFrame]): DataFrame = {
+    val candBase = broadcast(probes.withColumnRenamed("c_id", "probe_c_id"))
+      .join(ix.assigned.as("a"), col("probe_c_id") === col("a.c_id"))
+      .select(col("qid"), col("a.vec_id").as("cand"))
+    val candSelf = if (excludeSelf) candBase.filter(col("cand") =!= col("qid"))
+      else candBase
+    allowed.fold(candSelf) { a =>
+      candSelf.join(a.select(col("vec_id").as("cand")), Seq("cand"), "left_semi")
+    }.distinct()
+  }
+
   /** ADC top-k over the loaded index for external query vectors
     * `queries(qid, v: array<double>)`: q140's plan shape — probes and
     * distance tables broadcast, the code scan joins the candidate list
@@ -360,50 +393,28 @@ object AnnIndex {
     * (`vec_id`) — the ACL/tenant/label filter of q148, applied to the
     * candidate ids BEFORE any code is read, so the ADC scan is confined
     * to probed-list ∩ allow-list members (never a post-filter that
-    * k-starves the result).
+    * k-starves the result). The result reads the call's probe
+    * checkpoint lazily ([[graft.Reliable.owned]]): it belongs to the
+    * caller's [[graft.Reliable.scoped]] block, or to the session if none
+    * is open.
     */
-  /** The probe + candidate front of [[search]], factored so the
-    * exact-cover fast path in [[searchRerank]] can reuse the IDENTICAL
-    * candidate semantics (probe rule, self-exclusion, allow-list,
-    * DISTINCT) without paying the ADC stage. Returns (probes(qid, c_id),
-    * candp(qid, cand)).
-    */
-  private def probeCandidates(ix: Index, queries: DataFrame,
-      nprobe: Int, excludeSelf: Boolean,
-      allowed: Option[DataFrame]): (DataFrame, DataFrame) = {
-    val cent = ix.centroids.select(col("cid").as("c_id"), col("cv"))
-    // probe the nprobe nearest lists by cosine (the affinity recipe)
-    val wAff = Window.partitionBy(col("qid")).orderBy(col("ca").desc, col("c_id"))
-    val probes = queries.crossJoin(broadcast(cent))
-      .select(col("qid"), col("c_id"),
-        round(CosineSim.cosine(col("v"), col("cv")), 6).as("ca"))
-      .withColumn("crank", row_number().over(wAff))
-      .filter(col("crank") <= nprobe)
-      .select(col("qid"), col("c_id"))
-    val candBase = broadcast(probes.withColumnRenamed("c_id", "probe_c_id"))
-      .join(ix.assigned.as("a"), col("probe_c_id") === col("a.c_id"))
-      .select(col("qid"), col("a.vec_id").as("cand"))
-    val candSelf = if (excludeSelf) candBase.filter(col("cand") =!= col("qid"))
-      else candBase
-    val candp = allowed.fold(candSelf) { a =>
-      candSelf.join(a.select(col("vec_id").as("cand")), Seq("cand"), "left_semi")
-    }.distinct()
-    (probes, candp)
-  }
-
   def search(s: SparkSession, ix: Index, queries: DataFrame, nprobe: Int,
       k: Int, excludeSelf: Boolean = false,
       allowed: Option[DataFrame] = None): DataFrame = graft.Jobs.labeled(s, "ann-index: search") {
-    val (probes, candp) =
-      probeCandidates(ix, queries, nprobe, excludeSelf, allowed)
+    // the probes, checkpointed once: the candidate join and the codes
+    // scan's partition pruning both read them, and the list ids the scan
+    // prunes to are observed in the checkpoint's own job (the physical
+    // "read only probed lists", with no second pass over the centroid
+    // cross join and its top-nprobe window)
+    val (probes, seen) = graft.Reliable.ownedObserving(
+      probesOf(ix, queries, nprobe), collect_set(col("c_id")))
+    val probedLists = seen.getSeq[Any](0)
+    val candp = candidatesOf(ix, probes, excludeSelf, allowed)
     // per-query block-distance table to the codebook
     val dtab = Quantizer.subBlocks(queries.select(col("qid"), col("v")), Seq("qid"))
       .join(broadcast(ix.codebook), Seq("b"))
       .select(col("qid").as("dqid"), col("b").as("db"), col("cid"),
         Retrieval.distMicro(col("sv"), col("cv")).as("dm"))
-    // probed list ids, collected once: the codes scan prunes to those
-    // PARTITION directories — the physical "read only probed lists"
-    val probedLists = graft.Jobs.distinctRows(probes.select(col("c_id"))).map(_.get(0))
     // Candidate-confined code rows, deduped per (cand, block): a torn
     // append heals by re-writing a vector's full block set next to its
     // stale partial rows (see [[append]]), and those leftovers are exact
@@ -509,7 +520,8 @@ object AnnIndex {
     // code join, distance aggregation and rank window are dead work the
     // exact re-rank below recomputes anyway. Skip straight from the
     // candidate set (IDENTICAL probe/self/allow-list/DISTINCT semantics
-    // via probeCandidates) to the exact re-rank. The membership count
+    // via probesOf/candidatesOf, the probes left lazy: the final plan
+    // reads them once) to the exact re-rank. The membership count
     // comes from the assigned table's parquet footers; only a
     // tombstone-folded table pays a count(), and only in the all-lists
     // regime. Results are bit-identical (the q209/q169 oracles and
@@ -518,7 +530,7 @@ object AnnIndex {
       shortK.toLong >= MetaScalar.rows(ix.assigned)
     val short =
       if (exactCover)
-        probeCandidates(ix, queries, np, excludeSelf, allowed)._2
+        candidatesOf(ix, probesOf(ix, queries, np), excludeSelf, allowed)
       else search(s, ix, queries, np, shortK, excludeSelf, allowed)
         .select(col("qid"), col("cand"))
     // The broadcast hints hold for SERVE-sized shortlists (the static

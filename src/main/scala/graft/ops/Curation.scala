@@ -186,14 +186,13 @@ object Curation {
     // Materialize the per-source vocabulary ONCE: without the checkpoint
     // the scan→ngrams→distinct subtree plans four times (both self-join
     // sides and both size branches) — 4x the corpus pass at any scale.
-    val g = Tables.documents(s, d)
+    val g = graft.Reliable.owned(Tables.documents(s, d)
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= 3)
       .select(col("source"), explode(NGrams.ngrams(col("toks"), 3)).as("gr"))
       .select(col("source"),
         expr("CAST(conv(substr(md5(gr), 1, 15), 16, 10) AS BIGINT)").as("gh"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val sz = g.groupBy(col("source")).agg(count(lit(1)).as("n"))
     val ov = g.as("a")
       .join(g.as("b"), col("a.gh") === col("b.gh") && col("a.source") < col("b.source"))
@@ -285,8 +284,8 @@ object Curation {
     // materialize the joined domain counts once: both the totals and the
     // windowed ECDF read it (totals come from a plain sum of d — NOT a
     // max over the windowed cumsums, which would re-run the window)
-    val d = ca.join(cb, Seq("v"), "full_outer").na.fill(0L, Seq("ca", "cb"))
-      .localCheckpoint()
+    val d = graft.Reliable.owned(
+      ca.join(cb, Seq("v"), "full_outer").na.fill(0L, Seq("ca", "cb")))
     val tot = d.agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"))
     val w = Window.orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -391,12 +390,11 @@ object Curation {
     // One distinct per-source vocabulary pass feeds BOTH sides: the HLL
     // sketches (the scale path under check) and the exact counts (the
     // in-query oracle twin). Checkpointed so the subtree plans once.
-    val g = Tables.documents(s, d)
+    val g = graft.Reliable.owned(Tables.documents(s, d)
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= 3)
       .select(col("source"), explode(NGrams.ngrams(col("toks"), 3)).as("gr"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val sk = g.groupBy(col("source"))
       .agg(hll_sketch_agg(xxhash64(col("gr"))).as("sk"),
         count(lit(1)).as("n"),
@@ -676,14 +674,13 @@ object Curation {
     // groupBy); Spark does not dedup common subplans, so materialize the
     // narrow 4-column table once (the q32 multi-branch-base pattern)
     // instead of scanning + label-joining the corpus three times.
-    val sp = Tables.documents(s, d).select(col("doc_id"))
+    val sp = graft.Reliable.owned(Tables.documents(s, d).select(col("doc_id"))
       .join(broadcast(labels), col("doc_id") === col("node"), "left")
       .select(col("doc_id"),
         coalesce(col("label"), col("doc_id")).as("rep"))
       .select(col("doc_id"), col("rep"),
         splitName(splitBucket("doc_id")).as("naive_split"),
-        splitName(splitBucket("rep")).as("split"))
-      .localCheckpoint()
+        splitName(splitBucket("rep")).as("split")))
     val edges = TextOps.minhashCandidates(s, d)
     val leak = edges
       .join(sp.select(col("doc_id"), col("naive_split").as("na"),
@@ -963,8 +960,7 @@ object Curation {
   private def trainedModel(s: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, Array[Long]) = {
     val x = graft.Shared.materialized(s, s"lqc-centered@$d") {
-      val raw = lqcRawFeatures(Tables.documents(s, d), Seq("source"))
-        .localCheckpoint()
+      val raw = graft.Reliable.owned(lqcRawFeatures(Tables.documents(s, d), Seq("source")))
       val (nL, mus) = lqcMeans(raw)
       raw.select(col("doc_id"), col("source"), col("y"), lit(nL).as("n"),
         (col("r1") - mus(0)).as("f1"), (col("r2") - mus(1)).as("f2"),
@@ -1140,9 +1136,9 @@ object Curation {
       |SELECT doc_id, n_trans, mean_ppm,
       |  CAST(NTILE($CurriculumBins) OVER (ORDER BY mean_ppm DESC, doc_id) AS INTEGER) AS bin
       |FROM agg ORDER BY doc_id""").stripMargin) { (s, d) =>
-    val scored = Tokenization.bigramLmScore.run(s, d)
-      .select(col("doc_id"), col("n_trans"), col("mean_ppm"))
-      .localCheckpoint(true) // feeds rank partials + total + output: 3 reads
+    // feeds rank partials + total + output: 3 reads
+    val scored = graft.Reliable.owned(Tokenization.bigramLmScore.run(s, d)
+      .select(col("doc_id"), col("n_trans"), col("mean_ppm")))
     val ranked = GlobalOrder.rank(scored,
       Seq(col("mean_ppm").desc, col("doc_id")), "__rnk")
     val n = scored.agg(count(lit(1)).as("__n"))

@@ -188,7 +188,7 @@ object Dedup {
     // simhash projection plans TWICE (once per join side) — at corpus
     // scale that's 2x the whole signature pass. After the checkpoint both
     // sides read the (tiny: one long per doc) sig table.
-    val sigs = simhash60(Tables.documents(s, d)).localCheckpoint()
+    val sigs = graft.Reliable.owned(simhash60(Tables.documents(s, d)))
     val bandMask = (1L << 30) - 1
     val bands = sigs.select(col("doc_id"), col("simhash"),
       posexplode(array(

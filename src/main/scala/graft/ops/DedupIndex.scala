@@ -76,32 +76,48 @@ object DedupIndex {
     */
   private[graft] val DocsPerBucket = 160000L
 
-  private def bktCol(nB: Int): Column =
-    pmod(xxhash64(col("b"), col("s1"), col("s2")), lit(nB.toLong)).cast("int")
+  /** The band bucket of a (b, s1, s2) band — the ONE spelling of the
+    * hash, used by the write side (over a band table's columns) and by
+    * [[bandBuckets]] (over a signature row's bands).
+    */
+  private[ops] def bktCol(nB: Int, b: Column = col("b"), s1: Column = col("s1"),
+      s2: Column = col("s2")): Column =
+    pmod(xxhash64(b, s1, s2), lit(nB.toLong)).cast("int")
 
-  private def sbktCol(nB: Int): Column =
-    pmod(xxhash64(col("doc_id")), lit(nB.toLong)).cast("int")
+  private[ops] def sbktCol(nB: Int, id: Column = col("doc_id")): Column =
+    pmod(xxhash64(id), lit(nB.toLong)).cast("int")
+
+  /** Aggregate, over a signature table (doc_id, sig), to the distinct
+    * band buckets its [[TextOps.bandsOf]] rows fall in — for
+    * [[graft.Reliable.ownedObserving]], so the bucket set comes out of
+    * the signatures' own checkpoint job. One set per band index, each
+    * ≤ `nB` values, so the observed state is layout-bounded, not
+    * batch-sized.
+    */
+  private[ops] def bandBuckets(nB: Int): Column =
+    array_distinct(flatten(array(TextOps.bandValues.zipWithIndex.map {
+      case ((s1, s2), b) => collect_set(bktCol(nB, lit(b), s1, s2))
+    }: _*)))
+
+  /** Aggregate to the distinct sig buckets of the ids in `id` — the
+    * partitions of `sigs/` that hold them ([[graft.Reliable.ownedObserving]]).
+    */
+  private[ops] def sigBuckets(nB: Int, id: Column = col("doc_id")): Column =
+    collect_set(sbktCol(nB, id))
 
   /** Ids of `ids` already present AND LIVE in the sigs done-marker:
     * the pruned O(batch) replay check shared by [[append]] and the
-    * ingestion gate's sink-side marker. A tombstoned id is NOT done (it
-    * re-appends at a fresh epoch).
+    * ingestion gate's sink-side marker. `sbkts` is the [[sigBuckets]]
+    * set of `ids`, observed where `ids` was checkpointed. A tombstoned
+    * id is NOT done (it re-appends at a fresh epoch).
     */
   private[graft] def doneIds(s: SparkSession, dir: String,
-      ids: DataFrame): DataFrame =
+      ids: DataFrame, sbkts: Seq[Int]): DataFrame =
     Tombstones.liveByEpoch(
-        pruneSigs(MetaScalar.open(s, s"$dir/sigs"), Tombstones.readBuckets(s, dir), ids),
+        MetaScalar.open(s, s"$dir/sigs").filter(col("sbkt").isin(sbkts: _*)),
         Tombstones.tombMax(s, dir, "doc_id"), "doc_id")
       .join(ids.select(col("doc_id")), Seq("doc_id"), "left_semi")
       .select(col("doc_id"))
-
-  /** Prune the sigs read to the partitions holding `ids` —
-    * driver-bounded (≤ the layout's bucket count distinct values).
-    */
-  private def pruneSigs(sigs: DataFrame, nB: Int, ids: DataFrame): DataFrame = {
-    val wanted = graft.Jobs.distinctRows(ids.select(sbktCol(nB).as("sbkt"))).map(_.getInt(0))
-    sigs.filter(col("sbkt").isin(wanted: _*))
-  }
 
   /** Write one batch of signatures, every band/sig row stamped with
     * epoch `ep`.
@@ -165,15 +181,16 @@ object DedupIndex {
   def append(s: SparkSession, dir: String, docs: DataFrame): Index = graft.Reliable.scoped {
     graft.Jobs.labeled(s, "dedup-index: append") {
       val nB = Tombstones.readBuckets(s, dir) // the format gate
-      val sigs = graft.Jobs.labeled(s, "dedup-index: append/sigsOf") {
+      val (sigs, seen) = graft.Jobs.labeled(s, "dedup-index: append/sigsOf") {
         // the intake batch is serve-contract sized: one batch-bounded
         // exchange spreads the shingle hashing off its arrival
         // partitioning (round 19, guide §2.5)
-        graft.Reliable.owned(TextOps.sigsOf(graft.Spread.batch(docs)))
+        graft.Reliable.ownedObserving(TextOps.sigsOf(graft.Spread.batch(docs)),
+          sigBuckets(nB))
       }
       // done-marker check reads only the batch ids' sig buckets; "done"
       // means LIVE, so a deferred-deleted id re-appends
-      val done = doneIds(s, dir, sigs)
+      val done = doneIds(s, dir, sigs, seen.getSeq[Int](0))
       val fresh = graft.Jobs.labeled(s, "dedup-index: append/fresh") {
         graft.Reliable.owned(sigs.join(done, Seq("doc_id"), "left_anti"))
       }
@@ -243,9 +260,11 @@ object DedupIndex {
     // pruned BUCKETS (≈ corpus/buckets × named dirs — 20-80M rows at a
     // 20M-doc corpus, measured 14-35 s/query); confined, it sorts only
     // rows matching the batch's ≤8·|batch| signatures. The batch side
-    // is serve-contract bounded, so its distinct triple set broadcasts.
+    // is serve-contract bounded, so its triples broadcast as they are: a
+    // semi join's build side needs no dedup, and a distinct would cost
+    // an exchange and a job.
     val confined = corpusBands.join(
-      broadcast(batchBands.select(col("b"), col("s1"), col("s2")).distinct()),
+      broadcast(batchBands.select(col("b"), col("s1"), col("s2"))),
       Seq("b", "s1", "s2"), "left_semi")
     val capped = LshGuard.capBuckets(s, confined, Seq("b", "s1", "s2"),
       "doc_id", tag = tag)
@@ -263,27 +282,27 @@ object DedupIndex {
     * xxhash64 expression the write side used), the shared candidate
     * join, then estimated Jaccard from signature agreement (q32's flat
     * 16-comparison codegen'd form; the corpus sigs read is confined to
-    * candidate ids). Returns (batch_id, corpus_id, est_jaccard) in total
-    * order.
+    * candidate ids). Both bucket sets are observed in the job that
+    * checkpoints their frame (the batch signatures, the candidate
+    * pairs), so the call collects nothing of its own. Returns
+    * (batch_id, corpus_id, est_jaccard) in total order.
     */
   def queryBatch(s: SparkSession, dir: String, batch: DataFrame): DataFrame = graft.Jobs.labeled(s, "dedup-index: queryBatch") {
     val ix = load(s, dir) // the format gate; carries the persisted bucket count
-    val bSigs = graft.Jobs.labeled(s, "dedup-index: queryBatch/sigsOf") {
+    val (bSigs, bkts) = graft.Jobs.labeled(s, "dedup-index: queryBatch/sigsOf") {
       // batch-contract spread, as in [[append]] (round 19)
-      graft.Reliable.owned(TextOps.sigsOf(graft.Spread.batch(batch)))
+      graft.Reliable.ownedObserving(TextOps.sigsOf(graft.Spread.batch(batch)),
+        bandBuckets(ix.buckets))
     }
     val bBands = TextOps.bandsOf(bSigs)
-    val bkts = graft.Jobs.distinctRows(bBands.select(bktCol(ix.buckets).as("bkt")))
-      .map(_.getInt(0)) // ≤ buckets values per partition, driver-bounded
-    val corpusBands = ix.bands.filter(col("bkt").isin(bkts: _*))
+    val corpusBands = ix.bands.filter(col("bkt").isin(bkts.getSeq[Int](0): _*))
     // candidate-sized (cap-bounded) — checkpointed because the pair set
-    // is consumed twice: once to name the sig buckets it needs, once in
-    // the verification join itself
-    val pairs = graft.Jobs.labeled(s, "dedup-index: queryBatch/pairs") {
-      graft.Reliable.owned(candidatePairs(s, corpusBands, bBands))
+    // is read by the verification join after its sig buckets are known
+    val (pairs, sbkts) = graft.Jobs.labeled(s, "dedup-index: queryBatch/pairs") {
+      graft.Reliable.ownedObserving(candidatePairs(s, corpusBands, bBands),
+        sigBuckets(ix.buckets, col("corpus_id")))
     }
-    val corpusSigs = pruneSigs(ix.sigs, ix.buckets,
-      pairs.select(col("corpus_id").as("doc_id")))
+    val corpusSigs = ix.sigs.filter(col("sbkt").isin(sbkts.getSeq[Int](0): _*))
     pairs
       .join(bSigs.as("sa"), col("batch_id") === col("sa.doc_id"))
       .join(corpusSigs.as("sb"), col("corpus_id") === col("sb.doc_id"))

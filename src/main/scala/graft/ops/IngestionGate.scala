@@ -22,6 +22,11 @@ import org.apache.spark.sql.functions._
   * object doc); the semantic index keeps its FROZEN quantizers on
   * append ([[AnnIndex.append]]'s standard serve contract).
   *
+  * Stages (1) and (2) are independent verdicts over the same batch: they
+  * run side by side ([[graft.Jobs.concurrently]]), the LM scoring every
+  * document of the batch, and a document is admitted iff it is in
+  * neither's reject set; (3) and (4) then see only those survivors.
+  *
   * Every stage is O(batch + pruned index slice): the dedup check is the
   * band-bucket-pruned [[DedupIndex.queryBatch]], the score is the
   * gram-bucket-pruned [[LmModel.scoreBatch]], and the append is
@@ -92,8 +97,12 @@ object IngestionGate {
   /** The pure decision: which of `batch(doc_id, text)` would the gate
     * admit right now, against the CURRENT index state? No writes — this
     * is the serve-latency path IndexBench times, and the unit the
-    * mutating [[gateBatch]] composes. The result is lazy over the
-    * call's batch-sized checkpoints and those of the stage calls
+    * mutating [[gateBatch]] composes. The dedup check and the LM
+    * score both read the whole batch and run at once; the admitted set
+    * is the batch minus the near-dups, semi-joined to the LM passing
+    * set (an LM score is per document, so this is the set scoring only
+    * the novel docs would pass). The result is lazy over the call's
+    * batch-sized checkpoints and those of the stage calls
     * ([[graft.Reliable.owned]]): they belong to the caller's
     * [[graft.Reliable.scoped]] block, or to the session if none is open.
     */
@@ -114,16 +123,22 @@ object IngestionGate {
         .select(col("batch_id").as("doc_id")).distinct()
       graft.Reliable.owned(b0.join(selfDups, Seq("doc_id"), "left_anti"))
     }
-    val dups = DedupIndex.queryBatch(s, cfg.dedupDir, b)
-      .filter(col("est_jaccard") >= cfg.maxJaccard)
-      .select(col("batch_id").as("doc_id")).distinct()
-    val novel = b.join(dups, Seq("doc_id"), "left_anti")
-    // semi-join on the passing scores: a doc the LM could not score
-    // (no transitions) is absent from scoreBatch's output and rejected
-    val passing = LmModel.scoreBatch(s, cfg.lmDir, novel)
-      .filter(col("mean_ppm") >= cfg.minMeanPpm)
-      .select(col("doc_id"))
-    val lmAdmitted = novel.join(passing, Seq("doc_id"), "left_semi")
+    // the dedup and LM verdicts over the same batch, side by side: an LM
+    // score is per document, so scoring all of `b` (not just its novel
+    // docs) admits the same set, and neither verdict waits for the other.
+    // Both stay lazy past their calls' own checkpoints; the final plan
+    // reads each once.
+    val Seq(dups, passing) = graft.Jobs.concurrently(s)(
+      () => DedupIndex.queryBatch(s, cfg.dedupDir, b)
+        .filter(col("est_jaccard") >= cfg.maxJaccard)
+        .select(col("batch_id").as("doc_id")),
+      // a doc the LM could not score (no transitions) is absent from
+      // scoreBatch's output, so the semi join below rejects it
+      () => LmModel.scoreBatch(s, cfg.lmDir, b)
+        .filter(col("mean_ppm") >= cfg.minMeanPpm)
+        .select(col("doc_id")))
+    val lmAdmitted = b.join(dups, Seq("doc_id"), "left_anti")
+      .join(passing, Seq("doc_id"), "left_semi")
     val lexAdmitted = cfg.qualityDir.fold(lmAdmitted) { qd =>
       // third stage: the persisted classifier — a joinless projection
       // of the survivors, so the extra stage costs one batch pass
@@ -193,9 +208,11 @@ object IngestionGate {
     * frame, which the caller owns.
     */
   def gateBatch(s: SparkSession, cfg: Config, batch: DataFrame): DataFrame = graft.Reliable.scoped {
-    val decided = graft.Reliable.owned(decide(s, cfg, batch))
-    // pruned to the batch ids' sig buckets, not a corpus-wide scan
-    val done = DedupIndex.doneIds(s, cfg.dedupDir, decided)
+    // pruned to the admitted ids' sig buckets (observed as `decided` is
+    // checkpointed), not a corpus-wide scan
+    val (decided, seen) = graft.Reliable.ownedObserving(decide(s, cfg, batch),
+      DedupIndex.sigBuckets(Tombstones.readBuckets(s, cfg.dedupDir)))
+    val done = DedupIndex.doneIds(s, cfg.dedupDir, decided, seen.getSeq[Int](0))
     // `fresh` is the eager checkpoint handed to the caller — CALLER-
     // OWNED, outside this call's scope: a long-running intake loop that
     // drops each batch's result should Reliable.release it when done

@@ -86,22 +86,19 @@ object LmModel {
     */
   private[graft] val GramsPerBucket = 1000000L
 
-  private def bktOf(c: Column, nB: Int): Column =
+  private[ops] def bktOf(c: Column, nB: Int): Column =
     pmod(xxhash64(c), lit(nB.toLong)).cast("int")
 
-  /** Distinct partition buckets of the batch's grams and w2 tokens under
-    * the SAME xxhash64 expression the write side uses — one job with no
-    * exchange, and the two sets are collected SEPARATELY (each ≤ nB ≤
-    * 4096 rows per partition): collecting distinct (bg, bw) PAIRS would
-    * be nB²-bounded, a driver hazard once the count is model-sized.
+  /** Aggregates, over a transition frame (gram, w2), to the distinct
+    * partition buckets of its grams and of its w2 tokens under the SAME
+    * xxhash64 expression the write side uses — observed in the
+    * transitions' own checkpoint job ([[graft.Reliable.ownedObserving]]).
+    * The two sets stay SEPARATE (each ≤ nB ≤ 4096 values): distinct
+    * (bg, bw) PAIRS would be nB²-bounded, a driver hazard once the count
+    * is model-sized.
     */
-  private def bucketsOf(trans: DataFrame, nB: Int): (Seq[Int], Seq[Int]) = {
-    val rows = graft.Jobs.distinctRows(
-      trans.select(bktOf(col("gram"), nB).as("b"), lit(0).as("side"))
-        .unionByName(trans.select(bktOf(col("w2"), nB).as("b"), lit(1).as("side"))))
-    (rows.filter(_.getInt(1) == 0).map(_.getInt(0)),
-      rows.filter(_.getInt(1) == 1).map(_.getInt(0)))
-  }
+  private[ops] def bucketSets(nB: Int): (Column, Column) =
+    (collect_set(bktOf(col("gram"), nB)), collect_set(bktOf(col("w2"), nB)))
 
   /** The corpus transition stream: codegen'd 2-grams ("w1 w2") —
     * unambiguous since split-on-space tokens cannot contain the
@@ -247,18 +244,20 @@ object LmModel {
     * pruned model slice): one batch transition pass (checkpointed — the
     * batch is read once), bucket-pruned model scans reading only the
     * baked ppm columns (column pruning skips the count pages),
-    * AQE-chosen joins.
+    * AQE-chosen joins. The bucket sets are observed in the transitions'
+    * checkpoint job, so discovery costs no job of its own.
     */
   def scoreBatch(s: SparkSession, dir: String, docs: DataFrame): DataFrame = graft.Jobs.labeled(s, "lm-model: scoreBatch") {
     val nB = Tombstones.readBuckets(s, dir) // the format gate
-    // batch-sized; feeds bucket discovery + the score join
-    val t = graft.Reliable.owned(transitions(graft.Spread.batch(docs))
-      .withColumn("w2", split(col("gram"), " ").getItem(1)))
-    val (bg, bw) = bucketsOf(t, nB)
-    def pruned(table: String, bkts: Seq[Int]): DataFrame =
-      MetaScalar.open(s, s"$dir/$table").filter(col("bkt").isin(bkts: _*))
-    val bie = pruned("bigrams", bg).select(col("gram"), col("p_cond"), col("p_uni"))
-    val uniP = pruned("unigrams", bw).select(col("w"), col("p_uni"))
+    // batch-sized; its checkpoint job observes the bucket sets, and the
+    // score join reads it
+    val (gramBkts, wordBkts) = bucketSets(nB)
+    val (t, seen) = graft.Reliable.ownedObserving(transitions(graft.Spread.batch(docs))
+      .withColumn("w2", split(col("gram"), " ").getItem(1)), gramBkts, wordBkts)
+    def pruned(table: String, i: Int): DataFrame =
+      MetaScalar.open(s, s"$dir/$table").filter(col("bkt").isin(seen.getSeq[Int](i): _*))
+    val bie = pruned("bigrams", 0).select(col("gram"), col("p_cond"), col("p_uni"))
+    val uniP = pruned("unigrams", 1).select(col("w"), col("p_uni"))
     scoreTransitions(bie, uniP, t)
   }
 

@@ -778,11 +778,10 @@ object Retrieval {
     // and AQE's exchange reuse won't dedupe the tokenize pass (q103's
     // vocabulary-pass precedent).
     val docs = Tables.documents(s, d)
-    val tf = docs
+    val tf = graft.Reliable.owned(docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .filter(col("term").isin(terms: _*))
-      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val dl = docs.select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("dl"))
     val gt = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("n_toks"))

@@ -25,13 +25,17 @@ import org.apache.spark.sql.types.DecimalType
   * predates the current format and must be rebuilt with [[write]].
   *
   * [[search]] filters `postings` by the query terms FIRST — an `IN`
-  * predicate that reaches the parquet scan, so serve cost is
-  * posting-list-sized, never corpus-sized; df comes from the filtered
-  * postings (count per term — postings are unique per (term, doc)), and
-  * avgdl from the one-row stats table. The arithmetic is
-  * [[Retrieval]]'s exactly (same idf/saturation columns, same 6-decimal
-  * round, same DECIMAL sum), so TextIndexSpec proves saved-index search
-  * BIT-IDENTICAL to live q146.
+  * predicate that reaches the parquet scan, so the postings read is
+  * posting-list-sized; df comes from the filtered postings (count per
+  * term — postings are unique per (term, doc)), and avgdl from the
+  * one-row stats table. The document lengths are NOT pruned: [[load]]
+  * builds `doclens` as a `dropDuplicates("doc_id")` over the whole flat
+  * `doclens/` table, so every search reads all of it (no partition
+  * filter) and shuffles every document's row before joining the
+  * matching postings — an O(#docs) read and exchange per query. The
+  * arithmetic is [[Retrieval]]'s exactly (same idf/saturation columns,
+  * same 6-decimal round, same DECIMAL sum), so TextIndexSpec proves
+  * saved-index search BIT-IDENTICAL to live q146.
   *
   * [[append]] adds a document batch by appending batch-local postings
   * and doclens and refreshing the one-row stats from the batch's own
@@ -47,8 +51,11 @@ import org.apache.spark.sql.types.DecimalType
   * per corpus build, PARTITIONED by a corpus-sized term hash (64-way
   * floor; [[Tombstones.bucketsFor]], persisted in `meta/`), so a query's term
   * predicate prunes to its buckets' directories before any file is
-  * opened; doclens is #docs rows; stats is one row. Serving never scans
-  * the corpus.
+  * opened; stats is one row. doclens is #docs rows, and today BM25
+  * serving reads and shuffles all of them (see above): serving never
+  * re-tokenizes the corpus, but its cost is not posting-list-bounded
+  * until doclens is doc-bucketed and pruned to the matching ids, as
+  * [[DedupIndex]]'s `sigs` is.
   */
 object TextIndex {
 
@@ -86,12 +93,12 @@ object TextIndex {
 
   /** Partition buckets of the query terms — computed with the SAME
     * xxhash64 expression the write side uses, via a row-per-term local
-    * projection the optimizer folds into a local relation (no scan, no
-    * shuffle, no job).
+    * projection the optimizer folds into a local relation, whose collect
+    * runs on the driver (no scan, no shuffle, no job).
     */
   private def bucketsOf(s: SparkSession, terms: Seq[String], nB: Int): Seq[Int] = {
     import s.implicits._
-    graft.Jobs.distinctRows(terms.toDF("term").select(bktCol(nB).as("b"))).map(_.getInt(0))
+    terms.toDF("term").select(bktCol(nB)).collect().map(_.getInt(0)).toSeq.distinct
   }
 
   /** Write one batch, every row stamped with epoch `ep`. */

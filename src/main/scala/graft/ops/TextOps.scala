@@ -141,12 +141,18 @@ object TextOps {
     * live candidate join and [[DedupIndex]]'s persisted band table.
     */
   private[ops] def bandsOf(sigs: DataFrame): DataFrame = {
-    val bandStructs = array((0 until 8).map(b =>
-      struct(element_at(col("sig"), 2 * b + 1).as("s1"),
-        element_at(col("sig"), 2 * b + 2).as("s2"))): _*)
+    val bandStructs = array(bandValues.map { case (s1, s2) =>
+      struct(s1.as("s1"), s2.as("s2")) }: _*)
     sigs.select(col("doc_id"), posexplode(bandStructs).as(Seq("b", "bs")))
       .select(col("doc_id"), col("b"), col("bs.s1").as("s1"), col("bs.s2").as("s2"))
   }
+
+  /** Band `b`'s two signature values, (s1, s2), for b = 0 until 8 over
+    * a `sig` column — the band structure [[bandsOf]] flattens, for a
+    * caller that needs a per-band value on the signature row itself.
+    */
+  private[ops] val bandValues: Seq[(Column, Column)] = (0 until 8).map(b =>
+    (element_at(col("sig"), 2 * b + 1), element_at(col("sig"), 2 * b + 2)))
 
   /** MinHash signature table (doc_id, sig: array of 16 longs), shared by
     * q32 (candidate report) and q57 (cluster resolution) via [[graft.Shared]].

@@ -139,10 +139,29 @@ class CallScopeSpec extends SparkSuite {
       "IngestionGate.decide" -> (() => IngestionGate.decide(spark, gate, docs)))
     for ((name, call) <- calls) {
       val before = persisted
-      val rows = Reliable.scoped(call().collect())
+      val (rows, during) = Reliable.scoped {
+        val r = call().collect()
+        (r, persisted -- before)
+      }
       assert(rows.nonEmpty, s"$name returned nothing")
+      // search's result reads its probes checkpoint: the scope is what
+      // releases it
+      if (name == "AnnIndex.search")
+        assert(during.nonEmpty, "AnnIndex.search made no probes checkpoint")
       val left = persisted -- before
       assert(left.isEmpty, s"$name left checkpoints persisted: $left")
+    }
+  }
+
+  test("registered queries that checkpoint an intermediate leave nothing persisted in a caller's scope") {
+    val sc = spark.sparkContext
+    for (q <- Seq(ops.Dedup.simhashNeardup, ops.Curation.sourceOverlap)) {
+      Reliable.scoped(q.run(spark, sf0001).collect()) // first run: any session-shared input
+      val before = sc.getPersistentRDDs.size
+      val rows = Reliable.scoped(q.run(spark, sf0001).collect())
+      assert(rows.nonEmpty, s"${q.name} returned nothing")
+      assert(sc.getPersistentRDDs.size == before,
+        s"${q.name} left ${sc.getPersistentRDDs.size - before} checkpoints persisted")
     }
   }
 }

@@ -291,14 +291,4 @@ class MetaScalarSpec extends SparkSuite {
     assert(qmJobs === 0)
     assert(scored.count() === batch.count())
   }
-
-  test("distinctRows: the distinct set in one job (no exchange); a local relation launches none") {
-    val df = spark.range(0, 1000, 1, 4).select((col("id") % 7).as("b"))
-    val (rows, jobs) = jobsDuring(Jobs.distinctRows(df))
-    assert(rows.map(_.getLong(0)).sorted === (0L until 7L))
-    assert(jobs === 1)
-    val (local, localJobs) = jobsDuring(Jobs.distinctRows(Seq(1, 2, 2, 3).toDF("b")))
-    assert(localJobs === 0)
-    assert(local.map(_.getInt(0)).sorted === Seq(1, 2, 3))
-  }
 }

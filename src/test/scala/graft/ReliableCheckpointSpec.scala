@@ -143,6 +143,24 @@ class ReliableCheckpointSpec extends SparkSuite {
     }
   }
 
+  test("ownedObserving observes in the checkpoint's own job, and its checkpoint belongs to the scope") {
+    import org.apache.spark.sql.functions.{col, collect_set, max}
+    val df = spark.range(0, 1000, 1, 4).select((col("id") % 7).as("b"))
+    var ck: org.apache.spark.sql.DataFrame = null
+    val (row, jobs) = jobsDuring(Reliable.scoped {
+      val (c, r) = Reliable.ownedObserving(df, collect_set(col("b")), max(col("b")))
+      ck = c
+      assert(persisted(c))
+      r
+    })
+    assert(row.getSeq[Long](0).sorted == (0L until 7L) && row.getLong(1) == 6L)
+    assert(jobs == 1, "the observation must run in the checkpoint's own job")
+    assert(!persisted(ck), "the scope kept the observed checkpoint")
+    val empty = Reliable.scoped(Reliable.ownedObserving(df.filter(col("b") < 0),
+      collect_set(col("b")), max(col("b")))._2)
+    assert(empty.getSeq[Long](0).isEmpty && empty.isNullAt(1))
+  }
+
   test("owned with no scope open persists for the session, like localCheckpoint") {
     val df = Reliable.owned(frame(40))
     assert(persisted(df))
